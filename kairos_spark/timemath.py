@@ -5,6 +5,12 @@ as pure functions: relative (seconds-since-epoch) buckets and Gregorian
 calendar buckets encoded as strftime-style integers (daily ``%Y%m%d``,
 weekly ``%Y%U``, monthly ``%Y%m``, yearly ``%Y``).
 
+Each calculator also owns the stored-key encoding of the long-format
+``i_time`` / ``r_time`` columns (``key`` / ``key_of`` / ``key_time``):
+relative steps store the bucket-start epoch seconds, Gregorian steps
+store the strftime code (the ``bucket_expr`` encoding written by
+``kairos_spark.ingest``).
+
 Deliberate deviation from the reference: the reference converts buckets
 back to timestamps with ``time.mktime`` (local timezone,
 timeseries.py:206) while bucketing with ``utcfromtimestamp``
@@ -83,6 +89,18 @@ class RelativeTime:
 
     def normalize(self, timestamp: float, steps: int = 0) -> int:
         return self.from_bucket(self.to_bucket(timestamp, steps))
+
+    def key(self, timestamp: float, steps: int = 0) -> int:
+        """Stored key of ``timestamp``'s bucket: its start in seconds."""
+        return self.normalize(timestamp, steps)
+
+    def key_of(self, bucket: int) -> int:
+        """Bucket index → stored key."""
+        return self.from_bucket(bucket)
+
+    def key_time(self, key: int) -> int:
+        """Stored key → bucket-start timestamp (identity here)."""
+        return key
 
     def step_size(self, t0: float | None = None, t1: float | None = None) -> int:
         """Seconds covered by one bucket, or by the closed bucket range
@@ -195,6 +213,18 @@ class GregorianTime:
 
     def normalize(self, timestamp: float, steps: int = 0) -> int:
         return self.from_bucket(self.to_bucket(timestamp, steps))
+
+    def key(self, timestamp: float, steps: int = 0) -> int:
+        """Stored key of ``timestamp``'s bucket: its strftime code."""
+        return self.to_bucket(timestamp, steps)
+
+    def key_of(self, bucket: int) -> int:
+        """Bucket index → stored key (the index is the code)."""
+        return bucket
+
+    def key_time(self, key: int) -> int:
+        """Stored key → bucket-start timestamp."""
+        return self.from_bucket(key)
 
     def step_size(self, t0: float, t1: float | None = None) -> int:
         """Variable-length step: whole days between bucket starts × 86400

@@ -5,26 +5,42 @@ series / iterate / list / properties / delete / delete_all / expire``,
 five series types, condense / collapse / transforms, multi-name merge,
 ±N insert fan-out, retention.
 
-Two layers:
-- ``*_df`` methods return DataFrames (the scale path — nothing collects,
-  plans stay inside Catalyst; aggregation output is ~buckets×names rows
-  regardless of input size).
-- The reference-shaped methods (``get``/``series``/``iterate``) collect
-  that small aggregated result and shape it into the reference's
-  ``OrderedDict`` forms — collection happens strictly AFTER aggregation,
-  so the driver only ever sees final bucket rows.
+Two read paths; ``get`` and ``series`` pick one per call:
+- The engine path: ``get_df`` / ``series_df`` return DataFrames (the
+  scale path — nothing collects, plans stay inside Catalyst; aggregation
+  output is ~buckets×names rows regardless of input size), and
+  ``get`` / ``series`` collect that small aggregated result and shape it
+  into the reference's ``OrderedDict`` forms. Callable transforms run on
+  the collected containers.
+- The driver-side pipeline (``_get_hooked`` / ``_series_hooked``): the
+  reference's sequence acquire (``fetch`` → ``process_row``) → join per
+  time slot → condense (fine intervals only) → collapse → transform,
+  over Python containers.
 
-Storage is raw-append long format (see kairos_spark.ingest). A memory
+The rule (``_hooked``): a read takes the driver-side pipeline iff it
+passes ``fetch``, ``process_row``, ``join_rows`` over several names, or
+a callable ``condense`` / ``collapse``. Only ``fetch``, ``process_row``
+and ``join_rows`` need each name's containers apart; otherwise the
+pipeline acquires its data with one engine read (native multi-name
+join). Unless ``fetch`` takes over, the cluster does all scanning and
+aggregation on both paths.
+
+Storage is raw-append long format (see kairos_spark.ingest), with the
+stored-key encoding owned by the ``timemath`` calculators. A memory
 store backs unit tests; a parquet store (partitioned by ``interval``)
-backs persistence. At cluster scale the parquet store's delete/expire
-rewrites correspond to Delta ``DELETE WHERE`` / partition drops
-(SURVEY.md §4).
+backs persistence. Both offer ``append_rows`` / ``append_df`` /
+``scan`` / ``rewrite(predicate)``. At cluster scale the parquet store's
+delete/expire rewrites correspond to Delta ``DELETE WHERE`` / partition
+drops (SURVEY.md §4).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import itertools
+import operator
+import shutil
 import time as _time
 from collections import OrderedDict
 
@@ -78,20 +94,22 @@ def long_schema(value_type: str = "double") -> T.StructType:
 class _MemoryStore:
     """Driver-held rows; DataFrame materialized per read. Unit-test scale."""
 
-    def __init__(self):
+    def __init__(self, spark: SparkSession, schema: T.StructType):
+        self.spark, self.schema = spark, schema
         self.rows: list[tuple] = []
 
-    def append(self, rows):
+    def append_rows(self, rows):
         self.rows.extend(rows)
 
-    def scan(self, spark, schema):
-        return spark.createDataFrame(self.rows, schema=schema)
+    def append_df(self, df: DataFrame):
+        self.rows.extend(tuple(r) for r in df.collect())
 
-    def delete_where(self, keep):
-        self.rows = [r for r in self.rows if keep(r)]
+    def scan(self) -> DataFrame:
+        return self.spark.createDataFrame(self.rows, schema=self.schema)
 
-    def truncate(self):
-        self.rows = []
+    def rewrite(self, predicate):
+        """Keep the rows matching ``predicate`` (one small Spark job)."""
+        self.rows = [tuple(r) for r in self.scan().where(predicate).collect()]
 
 
 class _ParquetStore:
@@ -99,26 +117,27 @@ class _ParquetStore:
     on a real deployment this store is a Delta table and those become
     ``DELETE WHERE`` + ``OPTIMIZE ZORDER BY (name, i_time)``."""
 
-    def __init__(self, path: str):
-        self.path = path
-        self._exists = False
+    def __init__(self, spark: SparkSession, schema: T.StructType, path: str):
+        self.spark, self.schema, self.path = spark, schema, path
+
+    def append_rows(self, rows):
+        self.append_df(self.spark.createDataFrame(rows, schema=self.schema))
 
     def append_df(self, df: DataFrame):
         df.write.mode("append").partitionBy("interval").parquet(self.path)
-        self._exists = True
 
-    def scan(self, spark, schema):
+    def scan(self) -> DataFrame:
         try:
-            return spark.read.schema(schema).parquet(self.path)
+            return self.spark.read.schema(self.schema).parquet(self.path)
         except Exception:
-            return spark.createDataFrame([], schema=schema)
+            return self.spark.createDataFrame([], schema=self.schema)
 
-    def rewrite(self, spark, schema, predicate):
-        df = self.scan(spark, schema).where(predicate)
+    def rewrite(self, predicate):
+        """Keep the rows matching ``predicate``: write them aside, then
+        swap the directory in."""
+        df = self.scan().where(predicate)
         tmp = self.path.rstrip("/") + ".__rewrite__"
         df.write.mode("overwrite").partitionBy("interval").parquet(tmp)
-        import shutil
-
         shutil.rmtree(self.path, ignore_errors=True)
         shutil.move(tmp, self.path)
 
@@ -157,24 +176,13 @@ class Timeseries:
                 )
             else:
                 path = handle.path
-        self._store = _ParquetStore(path) if path else _MemoryStore()
+        self._store = (
+            _ParquetStore(spark, self.schema, path) if path
+            else _MemoryStore(spark, self.schema)
+        )
         self._seq = itertools.count()
 
     # ------------------------------------------------------------------ write
-
-    def _stored_keys(self, cfg: IntervalConfig, timestamp: float) -> tuple[int, int]:
-        """(i_time, r_time) stored keys for one event timestamp."""
-        if is_gregorian(cfg.step):
-            i_time = cfg.i_calc.to_bucket(timestamp)
-        else:
-            i_time = cfg.i_calc.normalize(timestamp)
-        if cfg.coarse:
-            r_time = COARSE_SENTINEL
-        elif is_gregorian(cfg.resolution):
-            r_time = cfg.r_calc.to_bucket(timestamp)
-        else:
-            r_time = cfg.r_calc.normalize(timestamp)
-        return i_time, r_time
 
     _PY_COERCE = {
         T.DoubleType: float,
@@ -223,8 +231,8 @@ class Timeseries:
                 # (parity: redis_backend.py:146-148)
                 if cfg.steps and cfg.i_calc.ttl(cfg.steps, ts) == 0:
                     continue
-                i_time, r_time = self._stored_keys(cfg, ts)
-                rows.append((str(name), iname, i_time, r_time, next(self._seq), value))
+                r_time = COARSE_SENTINEL if cfg.coarse else cfg.r_calc.key(ts)
+                rows.append((str(name), iname, cfg.i_calc.key(ts), r_time, next(self._seq), value))
         return rows
 
     _UNSET = object()
@@ -266,24 +274,17 @@ class Timeseries:
         self._append_rows(rows)
 
     def _append_rows(self, rows):
-        if isinstance(self._store, _MemoryStore):
-            self._store.append(rows)
-        else:
-            self._store.append_df(self.spark.createDataFrame(rows, schema=self.schema))
+        self._store.append_rows(rows)
 
     def ingest_df(self, df: DataFrame, name_col="name", ts_col="ts", value_col="value", fanout=0):
         """Scale-path bulk ingest: bucketize an event DataFrame (map-only,
         no driver loop) and append."""
-        long_df = bucketize(df, self.intervals, name_col, ts_col, value_col, fanout)
-        if isinstance(self._store, _MemoryStore):
-            self._store.append([tuple(r) for r in long_df.collect()])
-        else:
-            self._store.append_df(long_df)
+        self._store.append_df(bucketize(df, self.intervals, name_col, ts_col, value_col, fanout))
 
     # ------------------------------------------------------------------- scan
 
     def scan(self) -> DataFrame:
-        return self._store.scan(self.spark, self.schema)
+        return self._store.scan()
 
     def _read_cast(self, col):
         return self.read_func(col) if self.read_func else col
@@ -295,7 +296,7 @@ class Timeseries:
             # the reference applies read_func per row read in every
             # _process_row (kairos/timeseries.py:365, 823-826)
             df = df.withColumn("value", self._read_cast(F.col("value")))
-        if isinstance(names, (list, tuple, set)):
+        if _is_multi(names):
             names = list(names)
             df = df.where(F.col("name").isin(names))
             # name-argument order drives join precedence for order-
@@ -392,9 +393,8 @@ class Timeseries:
         cfg = require_interval(self.intervals, interval)
         if timestamp is None:
             timestamp = _time.time()
-        i_key, _ = self._stored_keys(cfg, timestamp)
-        df = self._filtered(name, interval).where(F.col("i_time") == i_key)
-        multi = isinstance(name, (list, tuple, set))
+        df = self._filtered(name, interval).where(F.col("i_time") == cfg.i_calc.key(timestamp))
+        multi = _is_multi(name)
 
         if cfg.coarse:
             return self._aggregate(
@@ -421,8 +421,9 @@ class Timeseries:
 
         Customized-read hooks (parity: README.rst:623-749): ``condense``
         may be a callable receiving the r-keyed OrderedDict of
-        containers; ``join_rows`` a callable merging the per-name
-        containers of one time slot (applied in name-argument order);
+        containers (fine intervals only); ``join_rows`` a callable
+        merging the per-name containers of one time slot (applied in
+        name-argument order, before condense);
         ``fetch(df, name, interval, i_bucket)`` replaces the engine's
         scan+aggregate for the bucket (df = the raw long-format scan),
         returning ``{r_bucket: data}`` (fine) or ``{None: data}``
@@ -436,39 +437,11 @@ class Timeseries:
             condense = condensed
         if timestamp is None:
             timestamp = _time.time()
-        if fetch is not None or process_row is not None:
+        if _hooked(name, join_rows, fetch, process_row, condense):
             return self._get_hooked(
                 name, cfg, interval, timestamp, condense, transform,
                 join_rows, fetch, process_row,
             )
-        if callable(condense) and condense is not True:
-            fine = self.get(name, interval, timestamp, condense=False, join_rows=join_rows)
-            i_key, _ = self._stored_keys(cfg, timestamp)
-            data = condense(fine)
-            shaped = OrderedDict([(self._key_ts(cfg.i_calc, i_key), data)])
-            if transform:
-                step = cfg.i_calc.step_size(timestamp)
-                return OrderedDict(
-                    (k, _apply_callable_transforms(self.ops, v, transform, step))
-                    for k, v in shaped.items()
-                )
-            return shaped
-        if join_rows is not None and isinstance(name, (list, tuple, set)):
-            per_name = [
-                self.get(n, interval, timestamp, condense=condense) for n in name
-            ]
-            keys = sorted({k for res in per_name for k in res})
-            shaped = OrderedDict(
-                (k, join_rows([res.get(k) for res in per_name])) for k in keys
-            )
-            if transform:
-                coarse_like = cfg.coarse or bool(condense)
-                step = (cfg.i_calc if coarse_like else cfg.r_calc).step_size(timestamp)
-                shaped = OrderedDict(
-                    (k, _apply_callable_transforms(self.ops, v, transform, step))
-                    for k, v in shaped.items()
-                )
-            return shaped
         callables = _has_callables(transform)
         df_transform = None if callables else transform
         df = self.get_df(name, interval, timestamp, condense, df_transform)
@@ -479,82 +452,78 @@ class Timeseries:
         calc = cfg.i_calc if coarse_like else cfg.r_calc
         shaped = OrderedDict()
         for row in sorted(rows, key=lambda r: r[key_col]):
-            shaped[self._key_ts(calc, row[key_col])] = _row_payload(row, self.ops, df_transform, self._value_py())
+            shaped[calc.key_time(row[key_col])] = _row_payload(row, self.ops, df_transform, self._value_py())
         if coarse_like and not shaped:
-            i_key, _ = self._stored_keys(cfg, timestamp)
-            shaped[self._key_ts(cfg.i_calc, i_key)] = _empty_payload(
-                self.ops, df_transform, multi=isinstance(name, (list, tuple, set))
+            shaped[cfg.i_calc.normalize(timestamp)] = _empty_payload(
+                self.ops, df_transform, multi=_is_multi(name)
             )
         if callables:
-            step = (cfg.i_calc if coarse_like else cfg.r_calc).step_size(timestamp)
-            shaped = OrderedDict(
-                (k, _apply_callable_transforms(self.ops, v, transform, step))
-                for k, v in shaped.items()
-            )
+            step = calc.step_size(timestamp)
+            shaped = _transformed(self.ops, shaped, transform, lambda _k: step)
         return shaped
 
-    def _key_ts(self, calc, stored_key):
-        """Stored key → result-dict timestamp (from_bucket semantics)."""
-        if is_gregorian(getattr(calc, "step", None)):
-            return calc.from_bucket(stored_key)
-        return stored_key
-
-    # --------------------------------------------- customized-read hooks
+    # ------------------------------------------ driver-side read pipeline
 
     def _get_hooked(
         self, name, cfg, interval, timestamp, condense, transform,
         join_rows, fetch, process_row,
     ) -> OrderedDict:
-        """`get` with fetch/process_row overrides — mirrors the
-        reference's threading (timeseries.py:576-611; hooks applied per
-        name, then join, then condense, then transform)."""
-        if isinstance(name, (list, tuple, set)):
+        """The driver-side `get` pipeline, in the reference's order
+        (timeseries.py:576-611): acquire (fetch + process_row), join
+        names per slot, condense fine data, transform."""
+        if _per_name(name, join_rows, fetch, process_row):
             per = [
-                self._get_hooked(
-                    n, cfg, interval, timestamp, False, None, None, fetch, process_row
-                )
+                self._get_base_hooked(n, cfg, interval, timestamp, fetch, process_row)
                 for n in name
             ]
-            join = join_rows or self.ops.py_join
             # get results are flat even for fine data (timeseries.py:591-593)
-            rval = _join_results(per, True, join)
+            rval = _join_results(per, True, join_rows or self.ops.py_join)
         else:
             rval = self._get_base_hooked(name, cfg, interval, timestamp, fetch, process_row)
-        step = (cfg.i_calc if cfg.coarse else cfg.r_calc).step_size(timestamp)
+        calc = cfg.i_calc if cfg.coarse else cfg.r_calc
         if condense and not cfg.coarse:
             fold = condense if callable(condense) else self.ops.py_condense
-            i_key, _ = self._stored_keys(cfg, timestamp)
-            rval = OrderedDict([(self._key_ts(cfg.i_calc, i_key), fold(rval))])
-            step = cfg.i_calc.step_size(timestamp)
+            rval = OrderedDict([(cfg.i_calc.normalize(timestamp), fold(rval))])
+            calc = cfg.i_calc
         if transform:
-            rval = OrderedDict(
-                (k, _apply_callable_transforms(self.ops, v, transform, step))
-                for k, v in rval.items()
-            )
+            step = calc.step_size(timestamp)
+            rval = _transformed(self.ops, rval, transform, lambda _k: step)
         return rval
 
-    def _hook_proc(self, process_row):
-        """The per-container processing step under hooks. This port's
-        ``read_func`` is a Column→Column cast applied at scan (not a
-        Python scalar function like the reference's), so the native
-        ``py_process_row`` fallback never receives it: on the engine
-        path read_func has already run JVM-side; on the fetch path the
-        data never passed through the engine, so casting is the fetch
-        callable's responsibility."""
-        return process_row or (lambda d: self.ops.py_process_row(d, None))
-
-    def _get_base_hooked(self, name, cfg, interval, timestamp, fetch, process_row):
-        """Single-name bucket acquisition under hooks (sql_backend.py:
-        189-212): custom fetch replaces the read entirely; otherwise the
-        cluster aggregates natively — with the scan-side read_func
-        suppressed only when a custom process_row takes over that role.
+    def _engine_read(self, process_row, read, *args):
+        """Engine acquisition under hooks: ``read(*args)`` with the
+        scan-side read_func suppressed when a custom process_row takes
+        over that role. This port's ``read_func`` is a Column→Column
+        cast applied at scan, so the engine's containers already carry
+        the native cast + read_func, and without a custom process_row
+        they pass through as they are.
 
         NOTE: the suppression temporarily mutates ``self.read_func``
         (restored in finally) — hooked reads on a shared Timeseries are
         not reentrant/thread-safe, matching the reference library's
         single-threaded facade contract."""
-        proc = self._hook_proc(process_row)
+        saved = self.read_func
+        if process_row is not None:
+            self.read_func = None
+        try:
+            return read(*args)
+        finally:
+            self.read_func = saved
+
+    def _fetch_proc(self, process_row):
+        """Per-container processing of fetched data: a custom
+        process_row, else the native ``py_process_row`` without
+        read_func (fetched data never passed through the engine, so
+        casting is the fetch callable's responsibility)."""
+        return process_row or (lambda d: self.ops.py_process_row(d, None))
+
+    def _get_base_hooked(self, name, cfg, interval, timestamp, fetch, process_row):
+        """Bucket acquisition under hooks (sql_backend.py:189-212): a
+        custom fetch replaces the read entirely for one name; otherwise
+        one engine read aggregates natively (several names joined by the
+        engine when no per-name hook needs them apart)."""
         if fetch is not None:
+            proc = self._fetch_proc(process_row)
             i_bucket = cfg.i_calc.to_bucket(timestamp)
             raw = fetch(self.scan(), str(name), interval, i_bucket)
             if cfg.coarse:
@@ -565,87 +534,61 @@ class Timeseries:
             for r_bucket in sorted(raw or {}):
                 out[cfg.r_calc.from_bucket(r_bucket)] = proc(raw[r_bucket])
             return out
-        saved = self.read_func
-        if process_row is not None:
-            self.read_func = None
-        try:
-            base = self.get(name, interval, timestamp=timestamp)
-        finally:
-            self.read_func = saved
+        base = self._engine_read(process_row, self.get, name, interval, timestamp)
+        if process_row is None:
+            return base
         # gap-filled empties skip process_row (reference _get applies it
         # only to rows that exist, sql_backend.py:203-210)
-        return OrderedDict((k, proc(v) if v else v) for k, v in base.items())
+        return OrderedDict((k, process_row(v) if v else v) for k, v in base.items())
 
     def _series_hooked(
         self, name, cfg, interval, start, end, steps, condense, collapse,
         transform, join_rows, fetch, process_row,
     ) -> OrderedDict:
-        """`series` with fetch/process_row/join_rows overrides — exact
-        port of the reference's sequencing (timeseries.py:640-722:
-        per-name base → join → per-interval condense → collapse →
-        transform, with the reference's step-size choices)."""
+        """The driver-side `series` pipeline, in the reference's order
+        (timeseries.py:640-722): acquire → join → per-interval condense
+        → collapse → transform. Collapse implies condense, is keyed by
+        the range's first bucket and spans the whole range, as in
+        ``series_df``."""
         buckets = self._bucket_range(cfg, start, end, steps)
         if collapse:
             condense = condense or True
-        if isinstance(name, (list, tuple, set)):
+        if _per_name(name, join_rows, fetch, process_row):
             per = [
                 self._series_base_hooked(n, cfg, interval, start, end, steps, buckets, fetch, process_row)
                 for n in name
             ]
-            join = join_rows or self.ops.py_join
-            rval = _join_results(per, cfg.coarse, join)
+            rval = _join_results(per, cfg.coarse, join_rows or self.ops.py_join)
         else:
             rval = self._series_base_hooked(
                 name, cfg, interval, start, end, steps, buckets, fetch, process_row
             )
-        if not cfg.coarse:
-            if condense:
-                fold = condense if callable(condense) else self.ops.py_condense
-                for key in list(rval):
-                    data = fold(rval[key])
-                    if transform and not collapse:
-                        data = _apply_callable_transforms(
-                            self.ops, data, transform, cfg.i_calc.step_size(key)
-                        )
-                    rval[key] = data
-            elif transform:
-                for _i_ts, resolutions in rval.items():
-                    for r_ts in list(resolutions):
-                        resolutions[r_ts] = _apply_callable_transforms(
-                            self.ops, resolutions[r_ts], transform, cfg.r_calc.step_size(r_ts)
-                        )
-        if cfg.coarse or collapse:
-            if collapse:
-                fold = (
-                    collapse if callable(collapse)
-                    else condense if callable(condense)
-                    else self.ops.py_condense
-                )
-                data = fold(rval)
-                keys = list(rval) or [self._key_ts(cfg.i_calc, self._stored_i_values(cfg, buckets)[0])]
-                if transform:
-                    data = _apply_callable_transforms(
-                        self.ops, data, transform,
-                        cfg.i_calc.step_size(keys[0], keys[-1]),
-                    )
-                rval = OrderedDict([(keys[0], data)])
-            elif transform:
-                for key in list(rval):
-                    rval[key] = _apply_callable_transforms(
-                        self.ops, rval[key], transform, cfg.i_calc.step_size(key)
-                    )
+        if condense and not cfg.coarse:
+            fold = condense if callable(condense) else self.ops.py_condense
+            rval = OrderedDict((k, fold(v)) for k, v in rval.items())
+        if collapse:
+            fold = (
+                collapse if callable(collapse)
+                else condense if callable(condense)
+                else self.ops.py_condense
+            )
+            rval = OrderedDict([(cfg.i_calc.from_bucket(buckets[0]), fold(rval))])
+        if transform:
+            rval = self._transform_series(
+                cfg, rval, transform, buckets, collapse, nested=not (cfg.coarse or condense)
+            )
         return rval
 
     def _series_base_hooked(
         self, name, cfg, interval, start, end, steps, buckets, fetch, process_row
     ) -> OrderedDict:
-        """Single-name range acquisition under hooks (sql_backend.py:
-        214-246): ``fetch(df, name, interval, start_bucket, end_bucket)``
-        returns ``{i_bucket: data}`` (coarse) or ``{i_bucket: {r_bucket:
-        data}}`` (fine); coarse results gap-fill every bucket. See
-        ``_get_base_hooked`` for the read_func / reentrancy contract."""
-        proc = self._hook_proc(process_row)
+        """Range acquisition under hooks (sql_backend.py:214-246):
+        ``fetch(df, name, interval, start_bucket, end_bucket)`` returns
+        ``{i_bucket: data}`` (coarse) or ``{i_bucket: {r_bucket: data}}``
+        (fine); coarse results gap-fill every bucket. See
+        ``_get_base_hooked`` / ``_engine_read`` for the engine read."""
         if fetch is not None:
+            proc = self._fetch_proc(process_row)
             raw = fetch(self.scan(), str(name), interval, buckets[0], buckets[-1]) or {}
             rval = OrderedDict()
             if cfg.coarse:
@@ -661,17 +604,13 @@ class Timeseries:
                         inner[cfg.r_calc.from_bucket(rb)] = proc(raw[b][rb])
                     rval[cfg.i_calc.from_bucket(b)] = inner
             return rval
-        saved = self.read_func
-        if process_row is not None:
-            self.read_func = None
-        try:
-            base = self.series(name, interval, start, end, steps)
-        finally:
-            self.read_func = saved
+        base = self._engine_read(process_row, self.series, name, interval, start, end, steps)
+        if process_row is None:
+            return base
         if cfg.coarse:
-            return OrderedDict((k, proc(v) if v else v) for k, v in base.items())
+            return OrderedDict((k, process_row(v) if v else v) for k, v in base.items())
         return OrderedDict(
-            (i_ts, OrderedDict((r_ts, proc(v)) for r_ts, v in inner.items()))
+            (i_ts, OrderedDict((r_ts, process_row(v)) for r_ts, v in inner.items()))
             for i_ts, inner in base.items()
         )
 
@@ -701,11 +640,6 @@ class Timeseries:
             end_ts = start_ts
         return cfg.i_calc.buckets(start_ts, end_ts)
 
-    def _stored_i_values(self, cfg, buckets):
-        if is_gregorian(cfg.step):
-            return buckets
-        return [cfg.i_calc.from_bucket(b) for b in buckets]
-
     def series_df(
         self, name, interval, start=None, end=None, steps=None,
         condense=False, collapse=False, transform=None,
@@ -717,7 +651,9 @@ class Timeseries:
         if collapse:
             condense = True
         buckets = self._bucket_range(cfg, start, end, steps)
-        i_values = self._stored_i_values(cfg, buckets)
+        i_values = [cfg.i_calc.key_of(b) for b in buckets]
+        # weekly %Y%U codes are not contiguous across a year end, so
+        # Gregorian ranges filter on the listed keys
         df = self._filtered(name, interval).where(
             F.col("i_time").between(min(i_values), max(i_values))
             if not is_gregorian(cfg.step)
@@ -727,16 +663,11 @@ class Timeseries:
         if collapse:
             # one output row keyed by the first bucket; step_size spans the
             # whole range (kairos/timeseries.py:706-713)
-            first_key = i_values[0]
-            span = cfg.i_calc.step_size(
-                cfg.i_calc.from_bucket(buckets[0]) if is_gregorian(cfg.step) else i_values[0],
-                cfg.i_calc.from_bucket(buckets[-1]) if is_gregorian(cfg.step) else i_values[-1],
-            )
-            keyed = df.withColumn("__collapse", F.lit(first_key))
+            keyed = df.withColumn("__collapse", F.lit(i_values[0]))
             out = self._aggregate(
                 keyed, cfg, ["__collapse"], ["i_time", "r_time", "__prio", "insert_seq"],
                 condense_gauge=not cfg.coarse,
-                transform=transform, step_size=F.lit(span),
+                transform=transform, step_size=F.lit(_range_span(cfg, buckets)),
             )
             return out.withColumnRenamed("__collapse", "i_time")
 
@@ -744,7 +675,7 @@ class Timeseries:
             agg = self._aggregate(
                 df, cfg, ["i_time"], ["r_time", "__prio", "insert_seq"],
                 condense_gauge=condense and not cfg.coarse,
-                gauge_join=cfg.coarse and isinstance(name, (list, tuple, set)),
+                gauge_join=cfg.coarse and _is_multi(name),
                 transform=transform, step_size=self._step_size_col(cfg, "i"),
             )
             if cfg.coarse:
@@ -757,7 +688,7 @@ class Timeseries:
             return agg
         return self._aggregate(
             df, cfg, ["i_time", "r_time"], ["__prio", "insert_seq"],
-            gauge_join=isinstance(name, (list, tuple, set)),
+            gauge_join=_is_multi(name),
             transform=transform, step_size=self._step_size_col(cfg, "r"),
         )
 
@@ -772,42 +703,18 @@ class Timeseries:
         ``condense`` / ``collapse`` may be callables (customized-read
         hooks, README.rst:623-749): condense maps one interval's
         r-keyed dict to a single container; collapse maps the i-keyed
-        dict to one container keyed by the first bucket. ``join_rows``,
+        dict of condensed containers to one container keyed by the
+        range's first bucket. ``join_rows``,
         ``fetch(df, name, interval, start_bucket, end_bucket)`` and
         ``process_row(data)`` follow the same contracts as in ``get``."""
         cfg = require_interval(self.intervals, interval)
         if condensed is not None:  # deprecated alias (kairos timeseries.py:648)
             condense = condensed
-        if fetch is not None or process_row is not None or (
-            join_rows is not None and isinstance(name, (list, tuple, set))
-        ):
+        if _hooked(name, join_rows, fetch, process_row, condense, collapse):
             return self._series_hooked(
                 name, cfg, interval, start, end, steps, condense, collapse,
                 transform, join_rows, fetch, process_row,
             )
-        if callable(condense) or callable(collapse):
-            base = self.series(name, interval, start, end, steps)
-            buckets = self._bucket_range(cfg, start, end, steps)
-            if callable(condense) and not cfg.coarse:
-                base = OrderedDict((k, condense(v)) for k, v in base.items())
-            if collapse:
-                fold = collapse if callable(collapse) else condense
-                data = fold(base)
-                first = self._key_ts(cfg.i_calc, self._stored_i_values(cfg, buckets)[0])
-                base = OrderedDict([(first, data)])
-            if transform:
-                first_ts = cfg.i_calc.from_bucket(buckets[0])
-                last_ts = cfg.i_calc.from_bucket(buckets[-1])
-                out = OrderedDict()
-                for k, v in base.items():
-                    step = (
-                        cfg.i_calc.step_size(first_ts, last_ts)
-                        if collapse
-                        else cfg.i_calc.step_size(k)
-                    )
-                    out[k] = _apply_callable_transforms(self.ops, v, transform, step)
-                return out
-            return base
         callables = _has_callables(transform)
         df_transform = None if callables else transform
         if collapse:
@@ -816,47 +723,46 @@ class Timeseries:
         df = self.series_df(name, interval, start, end, steps, condense, collapse, df_transform)
         rows = df.collect()
         shaped = OrderedDict()
-
-        if cfg.coarse or condense or collapse:
+        nested = not (cfg.coarse or condense)
+        if nested:
+            for row in sorted(rows, key=lambda r: (r["i_time"], r["r_time"])):
+                i_ts = cfg.i_calc.key_time(row["i_time"])
+                r_ts = cfg.r_calc.key_time(row["r_time"])
+                shaped.setdefault(i_ts, OrderedDict())[r_ts] = _row_payload(row, self.ops, df_transform, self._value_py())
+        else:
             for row in sorted(rows, key=lambda r: r["i_time"]):
-                shaped[self._key_ts(cfg.i_calc, row["i_time"])] = _row_payload(row, self.ops, df_transform, self._value_py())
-            if cfg.coarse and not collapse:
-                # spine join already gap-filled; replace null containers /
-                # all-null transform rows with the type's empty defaults
-                def _is_gap(v):
-                    if v is None:
-                        return True
-                    return isinstance(v, dict) and v and all(x is None for x in v.values())
+                shaped[cfg.i_calc.key_time(row["i_time"])] = _row_payload(row, self.ops, df_transform, self._value_py())
+        if cfg.coarse and not collapse:
+            # spine join already gap-filled; replace null containers /
+            # all-null transform rows with the type's empty defaults
+            def _is_gap(v):
+                if v is None:
+                    return True
+                return isinstance(v, dict) and v and all(x is None for x in v.values())
 
-                multi = isinstance(name, (list, tuple, set))
-                shaped = OrderedDict(
-                    (k, v if not _is_gap(v) else _empty_payload(self.ops, df_transform, multi=multi))
-                    for k, v in shaped.items()
-                )
-            if callables:
-                first_ts = cfg.i_calc.from_bucket(buckets[0])
-                last_ts = cfg.i_calc.from_bucket(buckets[-1])
-                for k in shaped:
-                    step = (
-                        cfg.i_calc.step_size(first_ts, last_ts)
-                        if collapse
-                        else cfg.i_calc.step_size(k)
-                    )
-                    shaped[k] = _apply_callable_transforms(self.ops, shaped[k], transform, step)
-            return shaped
-
-        # fine, no condense: nested {i_ts: {r_ts: data}}
-        for row in sorted(rows, key=lambda r: (r["i_time"], r["r_time"])):
-            i_ts = self._key_ts(cfg.i_calc, row["i_time"])
-            r_ts = self._key_ts(cfg.r_calc, row["r_time"])
-            shaped.setdefault(i_ts, OrderedDict())[r_ts] = _row_payload(row, self.ops, df_transform, self._value_py())
+            multi = _is_multi(name)
+            shaped = OrderedDict(
+                (k, v if not _is_gap(v) else _empty_payload(self.ops, df_transform, multi=multi))
+                for k, v in shaped.items()
+            )
         if callables:
-            for i_ts, inner in shaped.items():
-                for r_ts in inner:
-                    inner[r_ts] = _apply_callable_transforms(
-                        self.ops, inner[r_ts], transform, cfg.r_calc.step_size(r_ts)
-                    )
+            shaped = self._transform_series(cfg, shaped, transform, buckets, collapse, nested)
         return shaped
+
+    def _transform_series(self, cfg, shaped, transform, buckets, collapse, nested):
+        """Transforms over a shaped series result with the reference's
+        step sizes (kairos/timeseries.py:706-719): the r-bucket for
+        nested data, the i-bucket per interval, the whole range for a
+        collapsed row."""
+        if nested:
+            return OrderedDict(
+                (i_ts, _transformed(self.ops, inner, transform, cfg.r_calc.step_size))
+                for i_ts, inner in shaped.items()
+            )
+        if collapse:
+            span = _range_span(cfg, buckets)
+            return _transformed(self.ops, shaped, transform, lambda _k: span)
+        return _transformed(self.ops, shaped, transform, cfg.i_calc.step_size)
 
     # ----------------------------------------------------- metadata/lifecycle
 
@@ -884,54 +790,60 @@ class Timeseries:
         )
         out = {}
         for r in rows:
-            cfg = self.intervals[r["interval"]]
-            first, last = r["first"], r["last"]
-            if is_gregorian(cfg.step):
-                first, last = cfg.i_calc.from_bucket(first), cfg.i_calc.from_bucket(last)
-            out[r["interval"]] = {"first": first, "last": last}
+            calc = self.intervals[r["interval"]].i_calc
+            out[r["interval"]] = {"first": calc.key_time(r["first"]), "last": calc.key_time(r["last"])}
         return out
 
     def delete(self, name):
-        name = str(name)
-        if isinstance(self._store, _MemoryStore):
-            self._store.delete_where(lambda r: r[0] != name)
-        else:
-            self._store.rewrite(self.spark, self.schema, F.col("name") != name)
+        self._store.rewrite(F.col("name") != str(name))
 
     def delete_all(self):
-        if isinstance(self._store, _MemoryStore):
-            self._store.truncate()
-        else:
-            self._store.rewrite(self.spark, self.schema, F.lit(False))
+        self._store.rewrite(F.lit(False))
 
     def expire(self, name=None):
         """Drop rows past each interval's ``steps`` retention
         (kairos/sql_backend.py:161-178)."""
         now = _time.time()
-        cutoffs = {}
-        for iname, cfg in self.intervals.items():
-            if not cfg.steps:
-                continue
-            if is_gregorian(cfg.step):
-                cutoffs[iname] = cfg.i_calc.to_bucket(now, -cfg.steps)
-            else:
-                cutoffs[iname] = cfg.i_calc.normalize(now, -cfg.steps)
-        if not cutoffs:
+        expired = [
+            (F.col("interval") == iname) & (F.col("i_time") <= cfg.i_calc.key(now, -cfg.steps))
+            for iname, cfg in self.intervals.items()
+            if cfg.steps
+        ]
+        if not expired:
             return
-        if isinstance(self._store, _MemoryStore):
-            self._store.delete_where(
-                lambda r: (name is not None and r[0] != str(name))
-                or r[1] not in cutoffs
-                or r[2] > cutoffs[r[1]]
-            )
-        else:
-            keep = F.lit(False)
-            for iname, cut in cutoffs.items():
-                keep = keep | ((F.col("interval") == iname) & (F.col("i_time") <= cut))
-            pred = ~keep
-            if name is not None:
-                pred = (F.col("name") != str(name)) | pred
-            self._store.rewrite(self.spark, self.schema, pred)
+        keep = ~functools.reduce(operator.or_, expired)
+        if name is not None:
+            keep = (F.col("name") != str(name)) | keep
+        self._store.rewrite(keep)
+
+
+# --------------------------------------------------------------- read-path rule
+
+
+def _is_multi(name) -> bool:
+    return isinstance(name, (list, tuple, set))
+
+
+def _per_name(name, join_rows, fetch, process_row) -> bool:
+    """Whether a hooked read acquires each name on its own: only
+    ``join_rows``, ``fetch`` and ``process_row`` act on per-name
+    containers. Without them several names come from one engine read
+    with the native join."""
+    return _is_multi(name) and (
+        join_rows is not None or fetch is not None or process_row is not None
+    )
+
+
+def _hooked(name, join_rows, fetch, process_row, *folds) -> bool:
+    """The read-path rule: any Python hook except a callable transform
+    (``fetch``, ``process_row``, ``join_rows`` over several names, a
+    callable ``condense``/``collapse``) sends the read to the
+    driver-side pipeline; everything else runs on the engine path."""
+    return (
+        fetch is not None or process_row is not None
+        or _per_name(name, join_rows, fetch, process_row)
+        or any(callable(f) for f in folds)
+    )
 
 
 # --------------------------------------------------------------- shaping utils
@@ -952,6 +864,20 @@ def _join_results(results, coarse, join):
                 inner[r_key] = join([res.get(i_key, {}).get(r_key) for res in results])
             rval[i_key] = inner
     return rval
+
+
+def _range_span(cfg, buckets) -> int:
+    """step_size of a collapsed range: first bucket start to the end of
+    the last bucket (kairos/timeseries.py:706-713)."""
+    return cfg.i_calc.step_size(cfg.i_calc.from_bucket(buckets[0]), cfg.i_calc.from_bucket(buckets[-1]))
+
+
+def _transformed(ops, shaped, transform, step_of) -> OrderedDict:
+    """``transform`` over each container of a shaped ``{key: data}``
+    result; ``step_of(key)`` gives that bucket's step size."""
+    return OrderedDict(
+        (k, _apply_callable_transforms(ops, v, transform, step_of(k))) for k, v in shaped.items()
+    )
 
 
 def _has_callables(transform) -> bool:

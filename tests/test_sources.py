@@ -71,21 +71,52 @@ def test_parquet_scan_pushdown(spark, tmp_path):
     assert len(got) == 1 and got[0]["value"] == 1.0
 
 
-def test_parquet_expire(spark, tmp_path):
+@pytest.mark.parametrize("store", ["memory", "parquet"])
+def test_parquet_expire(spark, tmp_path, store):
+    # delete / delete_all / expire behave the same on both stores, for
+    # relative and Gregorian (strftime-keyed) intervals
     t = Timeseries(
         spark,
         type="count",
-        intervals={"minute": {"step": 60, "steps": 5}},
-        path=str(tmp_path / "store"),
+        intervals={
+            "minute": {"step": 60, "steps": 5},
+            "daily": {"step": "daily", "steps": 2},
+        },
+        path=str(tmp_path / "store") if store == "parquet" else None,
     )
     import time as _time
 
+    def stored():
+        """{(name, interval): stored row count}."""
+        return {
+            (r["name"], r["interval"]): r["n"]
+            for r in t.scan().groupBy("name", "interval").count()
+            .withColumnRenamed("count", "n").collect()
+        }
+
+    # ingest_df keeps rows already past retention (insert drops them at
+    # write time), so expire has something to drop: the minute interval
+    # keeps only `now`, the daily one `now` and `now - 1h`
     now = _time.time()
-    t.insert("web", 1, timestamp=now)
-    t.insert("web", 1, timestamp=now - 3600)  # far past retention
+    t.ingest_df(
+        spark.createDataFrame(
+            [(n, float(ts), 1.0) for n in ("web", "api")
+             for ts in (now, now - 3600, now - 5 * 86400)],
+            "name string, ts_sec double, value double",
+        ).withColumn("ts", F.timestamp_seconds("ts_sec"))
+    )
+    assert stored() == {("web", "minute"): 3, ("web", "daily"): 3,
+                        ("api", "minute"): 3, ("api", "daily"): 3}
     t.expire("web")
-    rows = t.scan().collect()
-    assert len(rows) == 1
+    assert stored() == {("web", "minute"): 1, ("web", "daily"): 2,
+                        ("api", "minute"): 3, ("api", "daily"): 3}
+    t.expire()
+    assert stored() == {("web", "minute"): 1, ("web", "daily"): 2,
+                        ("api", "minute"): 1, ("api", "daily"): 2}
+    t.delete("web")
+    assert stored() == {("api", "minute"): 1, ("api", "daily"): 2}
+    t.delete_all()
+    assert stored() == {}
 
 
 def test_configured_builder_defaults():

@@ -575,3 +575,101 @@ def test_gauge_time_midnight_not_falsy(spark):
     t.insert("g", datetime.time(0, 0), timestamp=_time(70))
     got = t.get("g", "hour", timestamp=_time(0), condense=True)
     assert got == {_time(0): datetime.time(0, 0)}
+
+
+# ------------------------------- one read pipeline: engine vs driver-side
+# A read with fetch / process_row / join_rows over several names / a
+# callable condense or collapse runs the driver-side pipeline; the rest
+# runs on the engine. Both must agree wherever both apply.
+
+def test_callable_condense_ignored_on_coarse_get(spark):
+    # condense only folds fine intervals; a coarse bucket is already one
+    # container (series and the hooked get never applied it there)
+    t = make_ts(spark, "series")
+    t.insert("a", 1, timestamp=_time(0))
+    got = t.get("a", "minute", timestamp=_time(0), condense=lambda fine: len(fine))
+    assert got == {_time(0): [1.0]}
+    assert got == t.get(
+        "a", "minute", timestamp=_time(0), condense=lambda fine: len(fine),
+        process_row=lambda row: row,
+    )
+    assert got == t.series(
+        "a", "minute", start=_time(0), end=_time(0), condense=lambda fine: len(fine)
+    )
+
+
+def test_join_rows_then_condense_get(spark):
+    # names join per slot BEFORE the interval condenses, like the engine
+    t = make_ts(spark, "series")
+    t.insert("a", 1, timestamp=_time(0))
+    t.insert("a", 2, timestamp=_time(60))
+    t.insert("b", 10, timestamp=_time(0))
+    t.insert("b", 20, timestamp=_time(60))
+    got = t.get(
+        ["a", "b"], "hour", timestamp=_time(0), condense=True,
+        join_rows=lambda rows: [v for r in rows if r for v in r],
+    )
+    assert got == {_time(0): [1.0, 10.0, 2.0, 20.0]}
+    assert got == t.get(["a", "b"], "hour", timestamp=_time(0), condense=True)
+
+
+def test_callable_collapse_receives_condensed_data(spark):
+    # collapse implies condense: the callable sees {i_ts: container}
+    t = make_ts(spark, "series")
+    t.insert("a", 1, timestamp=_time(0))
+    t.insert("a", 2, timestamp=_time(60))
+    t.insert("a", 3, timestamp=_time(HOUR))
+    got = t.series(
+        "a", "hour", start=_time(0), end=_time(HOUR), collapse=lambda rv: dict(rv)
+    )
+    assert got == {_time(0): {_time(0): [1.0, 2.0], _time(HOUR): [3.0]}}
+
+
+def test_hooked_collapse_keyed_by_range_start(spark):
+    # the collapsed row is keyed by the range's first bucket and its
+    # transform step spans the whole range, populated or not
+    t = make_ts(spark, "series")
+    t.insert("a", 5, timestamp=_time(HOUR))
+    kw = dict(start=_time(0), end=_time(HOUR), collapse=True)
+    engine = t.series("a", "hour", **kw)
+    assert engine == {_time(0): [5.0]}
+    assert t.series("a", "hour", process_row=lambda row: row, **kw) == engine
+    step = lambda data, step_size: step_size
+    engine = t.series("a", "hour", transform=step, **kw)
+    assert engine == {_time(0): 2 * HOUR}
+    assert t.series("a", "hour", transform=step, process_row=lambda row: row, **kw) == engine
+
+
+def test_multi_name_callable_fold_is_one_engine_read(spark):
+    # a callable condense/collapse needs no per-name containers, so
+    # several names still come from one natively joined engine read
+    t = make_ts(spark, "series")
+    names = ["a", "b", "c", "d"]
+    for n in names:
+        t.insert(n, 1, timestamp=_time(0))
+    sc = spark.sparkContext
+
+    def jobs(tag, read):
+        sc.setJobGroup(tag, tag)
+        try:
+            read()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    # one engine read costs the same jobs for one name or several
+    one = jobs("one_get", lambda: t.get("a", "hour", timestamp=_time(0)))
+    assert one > 0
+    assert jobs("plain_get", lambda: t.get(names, "hour", timestamp=_time(0))) == one
+    assert jobs("fold_get", lambda: t.get(
+        names, "hour", timestamp=_time(0), condense=lambda fine: len(fine)
+    )) == one
+    one = jobs("one_series", lambda: t.series("a", "hour", start=_time(0), end=_time(HOUR)))
+    assert one > 0
+    assert jobs("plain_series", lambda: t.series(
+        names, "hour", start=_time(0), end=_time(HOUR)
+    )) == one
+    assert jobs("fold_series", lambda: t.series(
+        names, "hour", start=_time(0), end=_time(HOUR), collapse=lambda rv: len(rv)
+    )) == one
