@@ -23,11 +23,25 @@ for the 100 TB design point and are no-ops or harmless at test scale:
 - Arrow enabled for the Pandas-UDF paths (multimodal decode,
   stateful sessionization) — Arrow batch transfer is what makes those
   viable at all (~10-100x over row pickling).
+- ``spark.sql.codegen.cache.maxEntries=CODEGEN_CACHE_ENTRIES`` — one
+  pass of the read API's plan shapes (12 read kinds over 5 types and 3
+  intervals, plus the headline queries) generates more than Spark's
+  default 100 classes, so its LRU evicted and recompiled most of them
+  on every pass. Measured over one ``perfbench`` ``kairos_read``
+  session (set-up, warm-up, three passes; seed 1, shared 4-vCPU VM):
+  355 compiles at 100 entries (70, 68 and 83 per pass), 210 with the
+  cache unbounded (28, 28 and 20 per pass: plans with new constants).
+  The constant sits well above that. ``tests/conftest.py``, ``bench.py`` and
+  ``tools/opt_profile.py`` build their own sessions and do not pick
+  this setting up.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+
+# generated-class cache size (static: read once when the JVM starts)
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def configured_builder(
@@ -45,6 +59,7 @@ def configured_builder(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if cores:
         b = b.config("spark.sql.shuffle.partitions", str(cores))

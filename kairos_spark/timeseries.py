@@ -8,10 +8,12 @@ five series types, condense / collapse / transforms, multi-name merge,
 Two read paths; ``get`` and ``series`` pick one per call:
 - The engine path: ``get_df`` / ``series_df`` return DataFrames (the
   scale path — nothing collects, plans stay inside Catalyst; aggregation
-  output is ~buckets×names rows regardless of input size), and
-  ``get`` / ``series`` collect that small aggregated result and shape it
-  into the reference's ``OrderedDict`` forms. Callable transforms run on
-  the collected containers.
+  output is ~buckets×names rows regardless of input size, populated
+  buckets only), and ``get`` / ``series`` collect that small aggregated
+  result and shape it into the reference's ``OrderedDict`` forms.
+  Shaping gap-fills a coarse result over the bucket list the driver
+  already holds, so empty buckets cost no Spark job. Callable
+  transforms run on the collected containers.
 - The driver-side pipeline (``_get_hooked`` / ``_series_hooked``): the
   reference's sequence acquire (``fetch`` → ``process_row``) → join per
   time slot → condense (fine intervals only) → collapse → transform,
@@ -44,6 +46,7 @@ import shutil
 import time as _time
 from collections import OrderedDict
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -127,9 +130,14 @@ class _ParquetStore:
         df.write.mode("append").partitionBy("interval").parquet(self.path)
 
     def scan(self) -> DataFrame:
+        """The stored rows; a store never written to reads empty. Any
+        other failure (an unknown filesystem scheme, a permission
+        error) raises rather than reading as an empty store."""
         try:
             return self.spark.read.schema(self.schema).parquet(self.path)
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], schema=self.schema)
 
     def rewrite(self, predicate):
@@ -644,9 +652,10 @@ class Timeseries:
         self, name, interval, start=None, end=None, steps=None,
         condense=False, collapse=False, transform=None,
     ) -> DataFrame:
-        """Range read (kairos/timeseries.py:619-719). Coarse results are
-        gap-filled against the bucket spine; fine results carry only
-        populated buckets (reference parity, sql_backend.py:228-246)."""
+        """Range read (kairos/timeseries.py:619-719). Like ``get_df``,
+        the result carries populated buckets only; ``series`` gap-fills
+        coarse results while it shapes them (fine results stay sparse,
+        reference parity, sql_backend.py:228-246)."""
         cfg = require_interval(self.intervals, interval)
         if collapse:
             condense = True
@@ -672,20 +681,12 @@ class Timeseries:
             return out.withColumnRenamed("__collapse", "i_time")
 
         if cfg.coarse or condense:
-            agg = self._aggregate(
+            return self._aggregate(
                 df, cfg, ["i_time"], ["r_time", "__prio", "insert_seq"],
                 condense_gauge=condense and not cfg.coarse,
                 gauge_join=cfg.coarse and _is_multi(name),
                 transform=transform, step_size=self._step_size_col(cfg, "i"),
             )
-            if cfg.coarse:
-                # dense spine: aggregate-then-join keeps the join at
-                # (#buckets × #names) scale regardless of input size
-                spine = self.spark.createDataFrame(
-                    [(v,) for v in i_values], schema=T.StructType([T.StructField("i_time", T.LongType())])
-                )
-                agg = spine.join(agg, "i_time", "left")
-            return agg
         return self._aggregate(
             df, cfg, ["i_time", "r_time"], ["__prio", "insert_seq"],
             gauge_join=_is_multi(name),
@@ -729,22 +730,20 @@ class Timeseries:
                 i_ts = cfg.i_calc.key_time(row["i_time"])
                 r_ts = cfg.r_calc.key_time(row["r_time"])
                 shaped.setdefault(i_ts, OrderedDict())[r_ts] = _row_payload(row, self.ops, df_transform, self._value_py())
+        elif cfg.coarse and not collapse:
+            # gap-fill over the bucket list: every bucket gets its row's
+            # payload, or the type's empty default when the bucket has no
+            # row, a null container or an all-null transform row
+            by_key = {row["i_time"]: row for row in rows}
+            for b in buckets:
+                row = by_key.get(cfg.i_calc.key_of(b))
+                v = None if row is None else _row_payload(row, self.ops, df_transform, self._value_py())
+                if v is None or (isinstance(v, dict) and v and all(x is None for x in v.values())):
+                    v = _empty_payload(self.ops, df_transform, multi=_is_multi(name))
+                shaped[cfg.i_calc.from_bucket(b)] = v
         else:
             for row in sorted(rows, key=lambda r: r["i_time"]):
                 shaped[cfg.i_calc.key_time(row["i_time"])] = _row_payload(row, self.ops, df_transform, self._value_py())
-        if cfg.coarse and not collapse:
-            # spine join already gap-filled; replace null containers /
-            # all-null transform rows with the type's empty defaults
-            def _is_gap(v):
-                if v is None:
-                    return True
-                return isinstance(v, dict) and v and all(x is None for x in v.values())
-
-            multi = _is_multi(name)
-            shaped = OrderedDict(
-                (k, v if not _is_gap(v) else _empty_payload(self.ops, df_transform, multi=multi))
-                for k, v in shaped.items()
-            )
         if callables:
             shaped = self._transform_series(cfg, shaped, transform, buckets, collapse, nested)
         return shaped

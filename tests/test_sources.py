@@ -226,3 +226,15 @@ def test_timeseries_from_store_url(spark, tmp_path):
     with _pytest.raises(NotImplementedError):
         Timeseries(spark, intervals={"minute": {"step": 60}},
                    path="delta:///x")
+
+
+def test_parquet_store_missing_vs_broken_path(spark, tmp_path):
+    # a store never written to reads empty; a path Spark cannot read at
+    # all raises instead of passing for an empty store
+    intervals = {"minute": {"step": 60}}
+    fresh = Timeseries(spark, type="count", intervals=intervals, path=str(tmp_path / "never"))
+    assert fresh.get("web", "minute", timestamp=BASE) == {BASE: 0}
+    assert fresh.list() == []
+    broken = Timeseries(spark, type="count", intervals=intervals, path="nosuchfs:/bucket/store")
+    with pytest.raises(Exception, match="UnsupportedFileSystemException"):
+        broken.get("web", "minute", timestamp=BASE)

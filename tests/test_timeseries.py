@@ -22,12 +22,26 @@ INTERVALS = {
     "minute": {"step": 60, "steps": 5},
     "hour": {"step": HOUR, "resolution": 60},
 }
+DAY = 86400
+DAILY = {"day": {"step": "daily"}}
 
 
 def make_ts(spark, type_, value_type="double", intervals=None):
     return Timeseries(
         spark, type=type_, intervals=intervals or INTERVALS, value_type=value_type
     )
+
+
+def jobs(spark, tag, read) -> int:
+    """Number of Spark jobs ``read()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        read()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
 
 
 # ----------------------------------------------------------------- series
@@ -647,29 +661,74 @@ def test_multi_name_callable_fold_is_one_engine_read(spark):
     names = ["a", "b", "c", "d"]
     for n in names:
         t.insert(n, 1, timestamp=_time(0))
-    sc = spark.sparkContext
-
-    def jobs(tag, read):
-        sc.setJobGroup(tag, tag)
-        try:
-            read()
-        finally:
-            for key in ("spark.jobGroup.id", "spark.job.description"):
-                sc.setLocalProperty(key, None)
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
 
     # one engine read costs the same jobs for one name or several
-    one = jobs("one_get", lambda: t.get("a", "hour", timestamp=_time(0)))
+    one = jobs(spark, "one_get", lambda: t.get("a", "hour", timestamp=_time(0)))
     assert one > 0
-    assert jobs("plain_get", lambda: t.get(names, "hour", timestamp=_time(0))) == one
-    assert jobs("fold_get", lambda: t.get(
+    assert jobs(spark, "plain_get", lambda: t.get(names, "hour", timestamp=_time(0))) == one
+    assert jobs(spark, "fold_get", lambda: t.get(
         names, "hour", timestamp=_time(0), condense=lambda fine: len(fine)
     )) == one
-    one = jobs("one_series", lambda: t.series("a", "hour", start=_time(0), end=_time(HOUR)))
+    one = jobs(spark, "one_series", lambda: t.series("a", "hour", start=_time(0), end=_time(HOUR)))
     assert one > 0
-    assert jobs("plain_series", lambda: t.series(
+    assert jobs(spark, "plain_series", lambda: t.series(
         names, "hour", start=_time(0), end=_time(HOUR)
     )) == one
-    assert jobs("fold_series", lambda: t.series(
+    assert jobs(spark, "fold_series", lambda: t.series(
         names, "hour", start=_time(0), end=_time(HOUR), collapse=lambda rv: len(rv)
     )) == one
+
+
+def test_coarse_series_gap_fill_runs_no_spine_job(spark):
+    # gap-filling happens while the result is shaped, so a coarse range
+    # read with an empty bucket costs no more jobs than one coarse bucket
+    t = make_ts(spark, "count")
+    t.insert("test", 1, timestamp=_time(0))
+    t.insert("test", 1, timestamp=_time(180))
+    one = jobs(spark, "coarse_get", lambda: t.get("test", "minute", timestamp=_time(0)))
+    assert one > 0
+    got = {}
+    assert jobs(spark, "coarse_series", lambda: got.update(
+        t.series("test", "minute", start=_time(0), end=_time(180))
+    )) <= one
+    assert got == {_time(0): 1.0, _time(60): 0, _time(120): 0, _time(180): 1.0}
+
+
+def test_series_df_coarse_carries_populated_buckets_only(spark):
+    # like get_df: the engine result has no rows for empty buckets
+    t = make_ts(spark, "series")
+    t.insert("test", 1, timestamp=_time(0))
+    t.insert("test", 5, timestamp=_time(120))
+    df = t.series_df("test", "minute", start=_time(0), end=_time(120))
+    assert sorted(r["i_time"] for r in df.collect()) == [_time(0), _time(120)]
+
+
+def test_series_gap_fill_gregorian_named_transform(spark):
+    # an empty day under a named transform reads as that transform's default
+    t = make_ts(spark, "series", intervals=DAILY)
+    t.insert("test", 2, timestamp=_time(0))
+    t.insert("test", 4, timestamp=_time(0))
+    t.insert("test", 6, timestamp=_time(0) + 2 * DAY)
+    day0 = (_time(0) // DAY) * DAY
+    kw = dict(start=_time(0), end=_time(0) + 2 * DAY)
+    assert t.series("test", "day", transform="mean", **kw) == {
+        day0: 3.0, day0 + DAY: 0.0, day0 + 2 * DAY: 6.0,
+    }
+    assert t.series("test", "day", transform=["count", "max"], **kw) == {
+        day0: {"count": 2, "max": 4.0},
+        day0 + DAY: {"count": 0, "max": 0},
+        day0 + 2 * DAY: {"count": 1, "max": 6.0},
+    }
+
+
+def test_series_gap_fill_gregorian_multi_name_gauge(spark):
+    # an empty slot of a multi-name gauge reads None, of one name 0
+    t = make_ts(spark, "gauge", intervals=DAILY)
+    t.insert("a", 3, timestamp=_time(0))
+    t.insert("b", 4, timestamp=_time(0) + 2 * DAY)
+    day0 = (_time(0) // DAY) * DAY
+    kw = dict(start=_time(0), end=_time(0) + 2 * DAY)
+    assert t.series(["a", "b"], "day", **kw) == {
+        day0: 3.0, day0 + DAY: None, day0 + 2 * DAY: 4.0,
+    }
+    assert t.series("a", "day", **kw) == {day0: 3.0, day0 + DAY: 0, day0 + 2 * DAY: 0}
