@@ -27,6 +27,11 @@ pipeline acquires its data with one engine read (native multi-name
 join). Unless ``fetch`` takes over, the cluster does all scanning and
 aggregation on both paths.
 
+The facade is type-blind: every per-type decision (aggregation, gauge
+condense/join, transforms on either path, empty buckets, Python shapes,
+insert defaults) is a method of ``self.ops``, the series type's class in
+``kairos_spark.types``.
+
 Storage is raw-append long format (see kairos_spark.ingest), with the
 stored-key encoding owned by the ``timemath`` calculators. A memory
 store backs unit tests; a parquet store (partitioned by ``interval``)
@@ -40,6 +45,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import functools
+import inspect
 import itertools
 import operator
 import shutil
@@ -54,7 +60,7 @@ from kairos_spark.config import IntervalConfig, parse_intervals, require_interva
 from kairos_spark.functions.buckets import step_size_expr
 from kairos_spark.ingest import COARSE_SENTINEL, bucketize
 from kairos_spark.timemath import is_gregorian
-from kairos_spark.types import GaugeOps, HistogramOps, type_ops
+from kairos_spark.types import type_ops
 
 # Parity with the reference's SQL TYPE_MAP (sql_backend.py:29-65).
 VALUE_TYPES = {
@@ -251,12 +257,7 @@ class Timeseries:
         For count series the value defaults to 1 (``Count.insert``,
         kairos/timeseries.py:925-926); other types require it."""
         if value is self._UNSET:
-            if self.ops.name == "count":
-                value = 1
-            else:
-                raise TypeError(
-                    f"insert() requires a value for type {self.ops.name!r}"
-                )
+            value = self.ops.default_value()
         if timestamp is None:
             timestamp = _time.time()
         values = value if isinstance(value, (list, tuple, set)) else [value]
@@ -318,74 +319,22 @@ class Timeseries:
 
     # ------------------------------------------------------- aggregation core
 
-    def _aggregate(
-        self, df, cfg, keys, order, condense_gauge=False, transform=None,
-        step_size=None, gauge_join=False,
-    ):
+    def _aggregate(self, df, keys, order, condense=False, transform=None, step_size=None, join=False):
         """Aggregate raw rows at the requested grain, returning either the
-        per-type container column or transform columns."""
-        ops = self.ops
-        if transform is not None:
-            names = transform if isinstance(transform, (list, tuple)) else [transform]
-            exprs = []
-            hist_rate = None
-            for t in names:
-                if not isinstance(t, str):
-                    raise TypeError(
-                        "DataFrame-level transforms must be named; use the "
-                        "dict-level API (get/series) for Python callables"
-                    )
-                if isinstance(ops, HistogramOps) and t == "rate":
-                    hist_rate = t
-                    continue
-                exprs.append(ops.transform_expr(t, step_size).alias(t))
-            if hist_rate is not None:
-                if exprs:
-                    raise ValueError("histogram rate cannot combine with other transforms in one plan")
-                return ops.rate_map(df, keys, step_size)
-            return df.groupBy(*keys).agg(*exprs)
-        if isinstance(ops, GaugeOps) and condense_gauge:
-            # two-stage: per-resolution last write, falsy-filtered, then
-            # last resolution wins (kairos/timeseries.py:971-979). The
-            # reference joins names per SLOT before condensing
-            # (:588-605), so slot time dominates name priority: the last
-            # populated r_time wins, ties broken by name-argument order.
-            fine = ops.container_agg(df, keys + ["r_time", "__prio"], ["insert_seq"])
-            kept = fine.where(self._nonfalsy(F.col("value")))
-            return kept.groupBy(*keys).agg(
-                F.max_by("value", F.struct("r_time", "__prio")).alias("value")
+        per-type container column or transform columns. ``condense``:
+        the rows span several resolution slots per key group; ``join``:
+        they carry several names."""
+        if transform is None:
+            return self.ops.aggregate(df, keys, order, self.value_type, condense, join)
+        names = transform if isinstance(transform, (list, tuple)) else [transform]
+        if not all(isinstance(t, str) for t in names):
+            raise TypeError(
+                "DataFrame-level transforms must be named; use the "
+                "dict-level API (get/series) for Python callables"
             )
-        if isinstance(ops, GaugeOps) and gauge_join:
-            # multi-name join without condense: the reference's _join
-            # (timeseries.py:981-988) takes the LAST NON-FALSY name's
-            # value per slot (`if row: rval = row`) — per-name last
-            # write first, then falsy-filter, then name-argument order
-            fine = ops.container_agg(df, keys + ["__prio"], ["insert_seq"])
-            kept = fine.where(self._nonfalsy(F.col("value")))
-            return kept.groupBy(*keys).agg(
-                F.max_by("value", F.col("__prio")).alias("value")
-            )
-        return ops.container_agg(df, keys, order)
+        return self.ops.transform_agg(df, keys, names, step_size)
 
     # -------------------------------------------------------------- get
-
-    def _nonfalsy(self, col):
-        """Python-truthiness filter for gauge condense (reference drops
-        falsy values: 0, 0.0, '', None — kairos/timeseries.py:976)."""
-        dtype = VALUE_TYPES[self.value_type]
-        base = col.isNotNull()
-        if self.value_type == "time":
-            # datetime.time(0, 0) is TRUTHY in python (3.5+), so the
-            # reference's filter(None, ...) keeps a midnight reading even
-            # though our storage encodes it as 0L — don't drop it
-            return base
-        if isinstance(dtype, (T.DoubleType, T.LongType, T.DecimalType)):
-            return base & (col != 0)
-        if isinstance(dtype, T.StringType):
-            return base & (col != "")
-        if isinstance(dtype, T.BooleanType):
-            return base & col
-        return base
 
     def _step_size_col(self, cfg, grain: str):
         """step_size as a column over the grain's time key (variable for
@@ -406,17 +355,16 @@ class Timeseries:
 
         if cfg.coarse:
             return self._aggregate(
-                df, cfg, ["i_time"], ["__prio", "insert_seq"], gauge_join=multi,
+                df, ["i_time"], ["__prio", "insert_seq"], join=multi,
                 transform=transform, step_size=self._step_size_col(cfg, "i"),
             )
         if condense:
             return self._aggregate(
-                df, cfg, ["i_time"], ["r_time", "__prio", "insert_seq"],
-                condense_gauge=True,
+                df, ["i_time"], ["r_time", "__prio", "insert_seq"], condense=True,
                 transform=transform, step_size=self._step_size_col(cfg, "i"),
             )
         return self._aggregate(
-            df, cfg, ["r_time"], ["__prio", "insert_seq"], gauge_join=multi,
+            df, ["r_time"], ["__prio", "insert_seq"], join=multi,
             transform=transform, step_size=self._step_size_col(cfg, "r"),
         )
 
@@ -458,15 +406,15 @@ class Timeseries:
         coarse_like = cfg.coarse or condense
         key_col = "i_time" if coarse_like else "r_time"
         calc = cfg.i_calc if coarse_like else cfg.r_calc
+        step = calc.step_size(timestamp)
         shaped = OrderedDict()
         for row in sorted(rows, key=lambda r: r[key_col]):
             shaped[calc.key_time(row[key_col])] = _row_payload(row, self.ops, df_transform, self._value_py())
         if coarse_like and not shaped:
             shaped[cfg.i_calc.normalize(timestamp)] = _empty_payload(
-                self.ops, df_transform, multi=_is_multi(name)
+                self.ops, df_transform, step, multi=_is_multi(name)
             )
         if callables:
-            step = calc.step_size(timestamp)
             shaped = _transformed(self.ops, shaped, transform, lambda _k: step)
         return shaped
 
@@ -536,7 +484,7 @@ class Timeseries:
             raw = fetch(self.scan(), str(name), interval, i_bucket)
             if cfg.coarse:
                 data = next(iter(raw.values())) if raw else None
-                payload = proc(data) if data else _empty_payload(self.ops, None)
+                payload = proc(data) if data else self.ops.empty_container()
                 return OrderedDict([(cfg.i_calc.from_bucket(i_bucket), payload)])
             out = OrderedDict()
             for r_bucket in sorted(raw or {}):
@@ -602,9 +550,7 @@ class Timeseries:
             if cfg.coarse:
                 for b in buckets:
                     data = raw.get(b)
-                    rval[cfg.i_calc.from_bucket(b)] = (
-                        proc(data) if data else _empty_payload(self.ops, None)
-                    )
+                    rval[cfg.i_calc.from_bucket(b)] = proc(data) if data else self.ops.empty_container()
             else:
                 for b in sorted(raw):
                     inner = OrderedDict()
@@ -674,22 +620,21 @@ class Timeseries:
             # whole range (kairos/timeseries.py:706-713)
             keyed = df.withColumn("__collapse", F.lit(i_values[0]))
             out = self._aggregate(
-                keyed, cfg, ["__collapse"], ["i_time", "r_time", "__prio", "insert_seq"],
-                condense_gauge=not cfg.coarse,
+                keyed, ["__collapse"], ["i_time", "r_time", "__prio", "insert_seq"],
+                condense=not cfg.coarse,
                 transform=transform, step_size=F.lit(_range_span(cfg, buckets)),
             )
             return out.withColumnRenamed("__collapse", "i_time")
 
         if cfg.coarse or condense:
             return self._aggregate(
-                df, cfg, ["i_time"], ["r_time", "__prio", "insert_seq"],
-                condense_gauge=condense and not cfg.coarse,
-                gauge_join=cfg.coarse and _is_multi(name),
+                df, ["i_time"], ["r_time", "__prio", "insert_seq"],
+                condense=condense and not cfg.coarse,
+                join=cfg.coarse and _is_multi(name),
                 transform=transform, step_size=self._step_size_col(cfg, "i"),
             )
         return self._aggregate(
-            df, cfg, ["i_time", "r_time"], ["__prio", "insert_seq"],
-            gauge_join=_is_multi(name),
+            df, ["i_time", "r_time"], ["__prio", "insert_seq"], join=_is_multi(name),
             transform=transform, step_size=self._step_size_col(cfg, "r"),
         )
 
@@ -738,9 +683,10 @@ class Timeseries:
             for b in buckets:
                 row = by_key.get(cfg.i_calc.key_of(b))
                 v = None if row is None else _row_payload(row, self.ops, df_transform, self._value_py())
+                i_ts = cfg.i_calc.from_bucket(b)
                 if v is None or (isinstance(v, dict) and v and all(x is None for x in v.values())):
-                    v = _empty_payload(self.ops, df_transform, multi=_is_multi(name))
-                shaped[cfg.i_calc.from_bucket(b)] = v
+                    v = _empty_payload(self.ops, df_transform, cfg.i_calc.step_size(i_ts), multi=_is_multi(name))
+                shaped[i_ts] = v
         else:
             for row in sorted(rows, key=lambda r: r["i_time"]):
                 shaped[cfg.i_calc.key_time(row["i_time"])] = _row_payload(row, self.ops, df_transform, self._value_py())
@@ -874,9 +820,8 @@ def _range_span(cfg, buckets) -> int:
 def _transformed(ops, shaped, transform, step_of) -> OrderedDict:
     """``transform`` over each container of a shaped ``{key: data}``
     result; ``step_of(key)`` gives that bucket's step size."""
-    return OrderedDict(
-        (k, _apply_callable_transforms(ops, v, transform, step_of(k))) for k, v in shaped.items()
-    )
+    fn = _transformer(ops, transform)
+    return OrderedDict((k, fn(v, step_of(k))) for k, v in shaped.items())
 
 
 def _has_callables(transform) -> bool:
@@ -891,108 +836,57 @@ def _has_callables(transform) -> bool:
     return False
 
 
-def _map_container(v, fn):
-    """Apply a storage→python value mapper across a container's members
-    (histogram maps keys — the counted values — not counts)."""
-    if v is None:
-        return v
-    if isinstance(v, list):
-        return [fn(x) for x in v]
-    if isinstance(v, (set, frozenset)):
-        return {fn(x) for x in v}
-    if isinstance(v, dict):
-        return {fn(k): c for k, c in v.items()}
-    return fn(v)
-
-
 def _row_payload(row, ops, transform, value_py=None):
     """Extract the result payload from an aggregated row, converting the
-    container to the reference's python shape (set type → set)."""
+    container to the reference's python shape (``ops.py_value``)."""
     d = row.asDict()
     d.pop("i_time", None)
     d.pop("r_time", None)
     d.pop("__prio", None)
     if transform is None:
         v = d.get("value")
-        if ops.name == "set" and v is not None:
-            v = set(v)
-        if value_py is not None:
-            v = _map_container(v, value_py)
-        return v
-    if isinstance(transform, (list, tuple)):
-        return {t: d[t] for t in transform}
+        return v if v is None else ops.py_value(v, value_py)
     if isinstance(transform, str):
+        # a map-valued transform (``rate_map``) keeps the container column
         return d[transform] if transform in d else d.get("value")
-    return d
+    return {t: d[t] for t in transform}
 
 
-def _empty_payload(ops, transform, multi=False):
-    if transform is None:
-        if multi and isinstance(ops, GaugeOps):
-            # reference quirk: single-name empty gauge is 0
-            # (_type_no_value, timeseries.py:953-955) but a multi-name
-            # empty slot is None — gauge _join skips falsy rows and
-            # returns its None initial (timeseries.py:981-988)
-            return None
-        e = ops.empty
-        if isinstance(e, frozenset):
-            return set()
-        if isinstance(e, (list, dict)):
-            return type(e)()
-        return e
-    defaults = {"mean": 0.0, "count": 0, "min": 0, "max": 0, "sum": 0, "rate": 0.0}
-    if isinstance(transform, (list, tuple)):
-        return {t: defaults.get(t, 0) for t in transform}
-    return defaults.get(transform, 0)
+def _empty_payload(ops, transform, step_size, multi=False):
+    """A bucket without rows: the type's empty container, or each named
+    transform of it."""
+    empty = ops.empty_container(multi)
+    return empty if transform is None else _transformer(ops, transform)(empty, step_size)
 
 
-def _apply_callable_transforms(ops, data, transform, step_size):
-    """Driver-side callable transforms over already-collected containers
-    (parity: kairos/timeseries.py:747-755). Named strings still apply via
-    python on the container for mixed lists/dicts."""
+def _transformer(ops, transform):
+    """``transform`` as one ``fn(data, step_size)`` over a collected
+    container (parity: kairos/timeseries.py:747-755). A name is the
+    type's own ``py_transform``, checked here as the engine checks it; a
+    callable takes ``(data, step_size)``, or ``(data)`` alone when its
+    signature says so (the reference's set transforms,
+    timeseries.py:1017-1018). A list or dict maps each entry."""
     def one(t):
-        if callable(t) and not isinstance(t, str):
-            try:
-                return t(data, step_size)
-            except TypeError:
-                return t(data)
-        return _named_on_container(ops, data, t, step_size)
+        if not callable(t) or isinstance(t, str):
+            ops.require_transform(t)
+            return lambda data, step: ops.py_transform(data, t, step)
+        return t if _takes_step(t) else lambda data, step: t(data)
 
     if isinstance(transform, dict):
-        return {name: one(fn) for name, fn in transform.items()}
-    if isinstance(transform, (list, tuple, set)):
-        return {t: one(t) for t in transform}
-    return one(transform)
+        fns = {k: one(t) for k, t in transform.items()}
+    elif isinstance(transform, (list, tuple, set)):
+        fns = {t: one(t) for t in transform}
+    else:
+        return one(transform)
+    return lambda data, step: {k: fn(data, step) for k, fn in fns.items()}
 
 
-def _named_on_container(ops, data, name, step_size):
-    """Named transforms evaluated on a collected container (used only when
-    mixed with callables)."""
-    if isinstance(data, dict):  # histogram
-        total = sum(data.values())
-        if name == "mean":
-            return sum(k * v for k, v in data.items()) / total if total else 0
-        if name == "count":
-            return total
-        if name == "min":
-            return min(data.keys()) if data else 0
-        if name == "max":
-            return max(data.keys()) if data else 0
-        if name == "sum":
-            return sum(k * v for k, v in data.items())
-        if name == "rate":
-            return {k: v / step_size for k, v in data.items()}
-    seq = sorted(data) if isinstance(data, (set, frozenset)) else (data or [])
-    if name == "mean":
-        return sum(seq) / len(seq) if seq else 0
-    if name == "count":
-        return len(seq)
-    if name == "min":
-        return min(seq) if seq else 0
-    if name == "max":
-        return max(seq) if seq else 0
-    if name == "sum":
-        return sum(seq)
-    if name == "rate":
-        return len(seq) / step_size
-    raise ValueError(f"unknown transform {name!r}")
+def _takes_step(fn) -> bool:
+    """Whether a transform callable accepts ``(data, step_size)``,
+    decided from its signature before it runs (one without an
+    introspectable signature gets ``(data)``)."""
+    try:
+        inspect.signature(fn).bind(None, None)
+    except (TypeError, ValueError):
+        return False
+    return True

@@ -1,24 +1,30 @@
-"""Per-series-type aggregation layer.
+"""Per-series-type semantics; the ``Timeseries`` facade never branches
+on the type, it calls these classes.
 
 The reference implements five series types, each with three merge
 operators (`_condense`, `_join`, `_process_row`) and a `_transform`
 dispatcher (kairos/timeseries.py:757-1041). Because this engine stores
 RAW appends (one row per inserted value) rather than materialized
 containers, *condense*, *join* and interval-grain reads are all the same
-operation — re-aggregating raw rows at a coarser grain — so each type
-here declares:
+operation — re-aggregating raw rows at a coarser grain. Each type owns:
 
-- ``container_agg(df, keys, order)`` — rows → one container row per key
-  group (the shape ``get``/``series`` return without a transform);
-- ``transform_exprs(step_size)`` — named aggregate Column expressions
-  over raw rows (the shape returned WITH a transform);
-- ``empty`` — the python value an empty bucket yields (gap-fill).
+- engine expressions: ``container_agg`` / ``aggregate`` (rows → one
+  container per key group) and ``transform_exprs`` / ``transform_expr``
+  / ``transform_agg`` (named transforms over raw rows);
+- ``named_transforms``, the one list both transform paths check;
+- the ``py_*`` folds, driver-side ports of the reference's operators
+  and of its ``_transform`` (``py_transform``, the driver-side path);
+- empties: ``empty_container(multi)``; a named transform of an empty
+  bucket is ``py_transform`` of it;
+- gauge truthiness (``_nonfalsy``) under the store's value type.
 
-Everything is builtin-function Spark (JVM, whole-stage codegen); no
-Python UDFs in any hot path.
+Everything engine-side is builtin-function Spark (JVM, whole-stage
+codegen); no Python UDFs in any hot path.
 """
 
 from __future__ import annotations
+
+import copy
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -35,40 +41,86 @@ def _sorted_values(order_cols: list[str]):
 
 
 class TypeOps:
-    """Base: shared transform names mean/count/min/max/sum/rate.
+    """Base: shared transform names mean/count/min/max/sum/rate, and
+    their driver-side form over a sequence of values (series, set).
 
     The ``py_*`` methods are driver-side ports of the reference's
     native container operators (``_process_row`` / ``_condense`` /
-    ``_join``, kairos/timeseries.py:757-1041). They exist for the
-    customized-read hooks (``fetch`` / ``process_row`` / callable
-    condense-collapse-join, README.rst:623-749): once a custom callable
-    enters the read path the containers live driver-side, so the native
-    fallbacks must too. The cluster-scale path never calls these — it
-    re-aggregates raw rows JVM-side via ``container_agg``."""
+    ``_join`` / ``_transform``, kairos/timeseries.py:757-1041). They
+    serve the customized-read hooks (README.rst:623-749) and callable
+    transforms: once a custom callable enters the read path the
+    containers live driver-side, so the native fallbacks must too."""
 
     name: str = ""
     empty = None
     named_transforms = ("mean", "count", "min", "max", "sum", "rate")
 
+    def empty_container(self, multi: bool = False):
+        """A new container for a bucket without rows."""
+        return copy.copy(self.empty)
+
+    def default_value(self):
+        """The value ``insert`` writes when given none."""
+        raise TypeError(f"insert() requires a value for type {self.name!r}")
+
+    def require_transform(self, name):
+        if name not in self.named_transforms:
+            raise ValueError(f"transform {name!r} not supported for type {self.name!r}")
+
     def container_agg(self, df: DataFrame, keys: list[str], order: list[str]) -> DataFrame:
         raise NotImplementedError
+
+    def aggregate(self, df, keys, order, value_type, condense=False, join=False) -> DataFrame:
+        """Rows → one container per key group, where the rows may span
+        several resolution slots per group (``condense``) or several
+        names (``join``). For every type but gauge both are
+        ``container_agg`` over the rows in ``order``."""
+        return self.container_agg(df, keys, order)
 
     def transform_exprs(self, step_size) -> dict:
         raise NotImplementedError
 
     def transform_expr(self, name: str, step_size):
-        exprs = self.transform_exprs(step_size)
-        if name not in exprs:
-            raise ValueError(f"transform {name!r} not supported for type {self.name!r}")
-        return exprs[name]
+        """One named transform as an aggregate Column (histogram 'rate'
+        is map-valued and has none; see ``HistogramOps.transform_agg``)."""
+        self.require_transform(name)
+        return self.transform_exprs(step_size)[name]
+
+    def transform_agg(self, df, keys, names, step_size) -> DataFrame:
+        """Named transforms → one row per key group, a column per name."""
+        return df.groupBy(*keys).agg(*[self.transform_expr(t, step_size).alias(t) for t in names])
+
+    def py_value(self, data, fn=None):
+        """A collected engine container in the reference's Python shape,
+        with the storage → Python mapper ``fn`` applied to its values."""
+        return fn(data) if fn else data
+
+    def py_transform(self, data, name, step_size):
+        """A named transform of one container, the reference's
+        ``_transform`` (kairos/timeseries.py:805-821); empty-bucket
+        values match ``transform_exprs``: mean 0.0, min/max/sum 0."""
+        self.require_transform(name)
+        if name == "mean":
+            return sum(data) / len(data) if data else 0.0
+        if name == "count":
+            return len(data)
+        if name == "min":
+            return min(data, default=0)
+        if name == "max":
+            return max(data, default=0)
+        if name == "sum":
+            return sum(data)
+        return len(data) / step_size
 
     def py_process_row(self, data, read_func):
         """Native cast + read_func application for one container."""
         raise NotImplementedError
 
     def py_condense(self, data: dict):
-        """Collapse one interval's {r_ts: container} into one container."""
-        raise NotImplementedError
+        """Collapse one interval's {r_ts: container} into one container.
+        Each type's ``_condense`` folds the slots as its ``_join`` folds
+        names (kairos/timeseries.py:828-1041), so this is that join."""
+        return self.py_join(list(data.values()))
 
     def py_join(self, rows: list):
         """Join per-name containers of one time slot."""
@@ -98,16 +150,12 @@ class SeriesOps(TypeOps):
             "rate": F.count(VALUE) / step_size,
         }
 
+    def py_value(self, data, fn=None):
+        return [fn(v) for v in data] if fn else data
+
     def py_process_row(self, data, read_func):
         # kairos/timeseries.py:823-826
         return [read_func(v) for v in data] if read_func else data
-
-    def py_condense(self, data):
-        # kairos/timeseries.py:828-834 (reduce(operator.add))
-        out = []
-        for v in data.values():
-            out.extend(v)
-        return out
 
     def py_join(self, rows):
         # kairos/timeseries.py:836-843
@@ -124,7 +172,8 @@ class HistogramOps(TypeOps):
     From raw rows the weighted transforms collapse to plain aggregates
     (e.g. weighted mean Σk·v/Σv == avg over raw occurrences).
     'rate' is map-valued ({k: count/step}, timeseries.py:872-873) and
-    needs the two-phase ``rate_map`` path instead of a single expression.
+    needs the two-phase ``rate_map`` path instead of a single expression;
+    an empty bucket's rate is ``{}``.
     """
 
     name = "histogram"
@@ -146,6 +195,13 @@ class HistogramOps(TypeOps):
             "max": F.coalesce(F.max(VALUE), F.lit(0)),
             "sum": F.coalesce(F.sum(VALUE), F.lit(0)),
         }
+
+    def transform_agg(self, df, keys, names, step_size):
+        if "rate" not in names:
+            return super().transform_agg(df, keys, names, step_size)
+        if any(t != "rate" for t in names):
+            raise ValueError("histogram rate cannot combine with other transforms in one plan")
+        return self.rate_map(df, keys, step_size)
 
     def rate_map(self, df, keys, step_size):
         """Map-valued rate: {value: count/step_size} per key group."""
@@ -183,19 +239,31 @@ class HistogramOps(TypeOps):
         ]
         return cum.groupBy(*keys).agg(*aggs)
 
+    def py_value(self, data, fn=None):
+        # the counted values are the keys; counts stay as they are
+        return {fn(k): n for k, n in data.items()} if fn else data
+
+    def py_transform(self, data, name, step_size):
+        # kairos/timeseries.py:859-876, weighted by occurrence count
+        self.require_transform(name)
+        total = sum(data.values())
+        if name == "mean":
+            return sum(k * n for k, n in data.items()) / total if total else 0.0
+        if name == "count":
+            return total
+        if name == "min":
+            return min(data, default=0)
+        if name == "max":
+            return max(data, default=0)
+        if name == "sum":
+            return sum(k * n for k, n in data.items())
+        return {k: n / step_size for k, n in data.items()}
+
     def py_process_row(self, data, read_func):
         # kairos/timeseries.py:878-883 (keys through read_func, counts int)
         return {
             (read_func(k) if read_func else k): int(v) for k, v in data.items()
         }
-
-    def py_condense(self, data):
-        # kairos/timeseries.py:885-893
-        out: dict = {}
-        for hist in data.values():
-            for k, v in hist.items():
-                out[k] = v + out.get(k, 0)
-        return out
 
     def py_join(self, rows):
         # kairos/timeseries.py:895-904
@@ -216,19 +284,24 @@ class CountOps(TypeOps):
     empty = 0
     named_transforms = ("rate",)
 
+    def default_value(self):
+        # Count.insert (kairos/timeseries.py:925-926)
+        return 1
+
     def container_agg(self, df, keys, order):
         return df.groupBy(*keys).agg(F.coalesce(F.sum(VALUE), F.lit(0)).alias(VALUE))
 
     def transform_exprs(self, step_size):
         return {"rate": F.coalesce(F.sum(VALUE), F.lit(0)) / step_size}
 
+    def py_transform(self, data, name, step_size):
+        # kairos/timeseries.py:917-920
+        self.require_transform(name)
+        return data / step_size
+
     def py_process_row(self, data, read_func):
         # kairos/timeseries.py:928-929 (read_func not applied to counts)
         return int(data) if data else 0
-
-    def py_condense(self, data):
-        # kairos/timeseries.py:931-937
-        return sum(data.values()) if data else 0
 
     def py_join(self, rows):
         # kairos/timeseries.py:939-946
@@ -236,16 +309,17 @@ class CountOps(TypeOps):
 
 
 class GaugeOps(TypeOps):
-    """Last written value wins (kairos/timeseries.py:948-988). Named
-    transforms are identity no-ops (timeseries.py:957-964).
+    """Last written value wins (kairos/timeseries.py:948-988). The
+    reference's named transforms are no-ops (timeseries.py:957-964);
+    here every name raises, on the engine and the driver path alike.
 
     Join/condense order sensitivity: the winner is the last value by the
     caller-provided ``order`` columns (insert order; for multi-name
     reads, name-argument order — timeseries.py:981-988). The reference's
-    gauge ``_condense`` drops falsy values (``filter(None, ...)``,
-    timeseries.py:976) — reproduced by the facade's ``_nonfalsy``
-    condense path (kairos_spark/timeseries.py) so a 0 written
-    late in an interval does not shadow an earlier real reading."""
+    gauge ``_condense`` and ``_join`` drop falsy values (``filter(None,
+    ...)``, timeseries.py:976; ``if row``, :981-988) — reproduced by
+    ``aggregate`` so a 0 written late in an interval does not shadow an
+    earlier real reading."""
 
     name = "gauge"
     # reference _type_no_value is 0, not None (kairos/timeseries.py:953-955
@@ -254,9 +328,31 @@ class GaugeOps(TypeOps):
     empty = 0
     named_transforms = ()
 
+    def empty_container(self, multi=False):
+        # a multi-name empty slot is None: _join skips falsy rows and
+        # returns its None initial (timeseries.py:981-988)
+        return None if multi else self.empty
+
     def container_agg(self, df, keys, order):
         order_expr = F.struct(*[F.col(c) for c in order])
         return df.groupBy(*keys).agg(F.max_by(VALUE, order_expr).alias(VALUE))
+
+    def aggregate(self, df, keys, order, value_type, condense=False, join=False):
+        """Condense is two-stage: the last write per (resolution slot,
+        name), falsy-filtered, then the last slot wins
+        (kairos/timeseries.py:971-979). The reference joins names per
+        SLOT before condensing (:588-605), so slot time dominates name
+        priority: the last populated ``r_time`` wins, ties broken by
+        name-argument order (``__prio``). A join without condense takes
+        the last non-falsy name's value per slot (:981-988): the last
+        write per name, falsy-filtered, then name-argument order."""
+        if not (condense or join):
+            return self.container_agg(df, keys, order)
+        slot = ["r_time", "__prio"] if condense else ["__prio"]
+        fine = self.container_agg(df, keys + slot, [SEQ])
+        kept = fine.where(_nonfalsy(F.col(VALUE), value_type))
+        last = F.struct(*slot) if condense else F.col("__prio")
+        return kept.groupBy(*keys).agg(F.max_by(VALUE, last).alias(VALUE))
 
     def transform_exprs(self, step_size):
         return {}
@@ -266,11 +362,6 @@ class GaugeOps(TypeOps):
         if read_func:
             return read_func(data or "")
         return data
-
-    def py_condense(self, data):
-        # kairos/timeseries.py:971-979: last non-falsy value, else None
-        kept = [v for v in data.values() if v]
-        return kept[-1] if kept else None
 
     def py_join(self, rows):
         # kairos/timeseries.py:981-988: last truthy row wins
@@ -287,7 +378,7 @@ class SetOps(TypeOps):
     cardinality (timeseries.py:998-1016)."""
 
     name = "set"
-    empty: frozenset = frozenset()
+    empty: set = set()
 
     def container_agg(self, df, keys, order):
         # Two-phase distinct, not a direct collect_set: a direct
@@ -311,18 +402,19 @@ class SetOps(TypeOps):
             "rate": distinct_n / step_size,
         }
 
+    def py_value(self, data, fn=None):
+        return {fn(v) for v in data} if fn else set(data)
+
+    def py_transform(self, data, name, step_size):
+        # kairos/timeseries.py:998-1016; sorted so float sums do not
+        # depend on set iteration order
+        return super().py_transform(sorted(data), name, step_size)
+
     def py_process_row(self, data, read_func):
         # kairos/timeseries.py:1021-1024
         if read_func:
             return {read_func(d) for d in data}
         return set(data)
-
-    def py_condense(self, data):
-        # kairos/timeseries.py:1026-1032 (reduce(operator.ior))
-        out: set = set()
-        for v in data.values():
-            out |= v
-        return out
 
     def py_join(self, rows):
         # kairos/timeseries.py:1034-1041
@@ -331,6 +423,20 @@ class SetOps(TypeOps):
             if row:
                 out |= row
         return out
+
+
+def _nonfalsy(col, value_type: str):
+    """Python truthiness of a stored gauge value under the store's
+    ``value_type`` (the reference drops falsy values: 0, 0.0, '', False,
+    None — kairos/timeseries.py:976). ``time`` is stored as microseconds
+    since midnight, but ``datetime.time(0, 0)`` is truthy (Python 3.5+),
+    so like dates, datetimes and blobs only null is falsy."""
+    base = col.isNotNull()
+    if value_type in ("float", "double", "int", "long", "int64", "decimal"):
+        return base & (col != 0)
+    if value_type in ("str", "string", "text", "clob"):
+        return base & (col != "")
+    return base & col if value_type == "bool" else base
 
 
 TYPES: dict[str, TypeOps] = {

@@ -445,6 +445,98 @@ def test_set_callable_transform_single_arg(spark):
     assert got == {_time(0): 3}
 
 
+@pytest.mark.parametrize("default_step", [False, True], ids=["two_args", "step_default"])
+def test_callable_transform_type_error_runs_once(spark, default_step):
+    # the arity is read from the signature: a TypeError the callable
+    # raises is its own, not a cue to retry it with one argument
+    t = make_ts(spark, "series")
+    t.insert("x", 1, timestamp=_time(0))
+    calls = []
+
+    def fails(data, step):
+        calls.append(data)
+        raise TypeError("boom")
+
+    fn = (lambda data, step=None: fails(data, step)) if default_step else fails
+    with pytest.raises(TypeError, match="^boom$"):
+        t.get("x", "minute", timestamp=_time(0), transform=fn)
+    assert calls == [[1.0]]
+
+
+def test_mixed_named_and_callable_transforms_count_and_gauge(spark):
+    t = make_ts(spark, "count")
+    for ts in (5, 10, 20):
+        t.insert("x", timestamp=_time(ts))
+    f = lambda data, step: data
+    assert t.get("x", "minute", timestamp=_time(0), transform=["rate", f]) == {
+        _time(0): {"rate": 3 / 60, f: 3.0}
+    }
+    assert t.series("x", "minute", start=_time(0), end=_time(60), transform=["rate", f]) == {
+        _time(0): {"rate": 3 / 60, f: 3.0}, _time(60): {"rate": 0.0, f: 0},
+    }
+    g = make_ts(spark, "gauge")
+    g.insert("x", 4, timestamp=_time(5))
+    unsupported = "transform 'mean' not supported for type 'gauge'"
+    for transform in ("mean", ["mean", f]):
+        with pytest.raises(ValueError, match=unsupported):
+            g.get("x", "minute", timestamp=_time(0), transform=transform)
+        with pytest.raises(ValueError, match=unsupported):
+            g.series("x", "minute", start=_time(0), end=_time(60), transform=transform)
+
+
+def test_histogram_empty_bucket_rate_is_empty_map(spark):
+    t = make_ts(spark, "histogram", value_type="long")
+    for v in (1, 1, 2):
+        t.insert("x", v, timestamp=_time(0))
+    t.insert("x", 3, timestamp=_time(120))
+    assert t.series("x", "minute", start=_time(0), end=_time(120), transform="rate") == {
+        _time(0): {1: 2 / 60, 2: 1 / 60}, _time(60): {}, _time(120): {3: 1 / 60},
+    }
+    assert t.get("x", "minute", timestamp=_time(60), transform="rate") == {_time(60): {}}
+
+
+NAMED_TRANSFORMS = ("mean", "count", "min", "max", "sum", "rate")
+SUPPORTED_TRANSFORMS = {
+    "series": NAMED_TRANSFORMS,
+    "histogram": NAMED_TRANSFORMS,
+    "count": ("rate",),
+    "gauge": (),
+    "set": NAMED_TRANSFORMS,
+}
+
+
+@pytest.mark.parametrize("type_", sorted(SUPPORTED_TRANSFORMS))
+@pytest.mark.parametrize("name", NAMED_TRANSFORMS)
+def test_named_transform_engine_matches_driver(spark, type_, name):
+    # transform=name runs on the engine, [name, callable] on the driver;
+    # both give the same value (and Python type) on a populated and an
+    # empty coarse bucket, or the same ValueError for a name the type
+    # does not define
+    t = make_ts(spark, type_)
+    for v in (2, 2, 5):
+        t.insert("x", v, timestamp=_time(5))
+    cb = lambda data, step: None
+
+    def engine_and_driver(read):
+        out = []
+        for transform, pick in ((name, dict), ([name, cb], lambda r: {k: v[name] for k, v in r.items()})):
+            try:
+                out.append(repr(pick(read(transform))))
+            except ValueError as e:
+                out.append(f"ValueError: {e}")
+        return out
+
+    reads = [
+        lambda tr: t.get("x", "minute", timestamp=_time(0), transform=tr),
+        lambda tr: t.get("x", "minute", timestamp=_time(60), transform=tr),
+        lambda tr: t.series("x", "minute", start=_time(0), end=_time(60), transform=tr),
+    ]
+    for read in reads:
+        engine, driver = engine_and_driver(read)
+        assert engine == driver
+        assert engine.startswith("ValueError") == (name not in SUPPORTED_TRANSFORMS[type_])
+
+
 # --------------------------------- customized reads: fetch / process_row
 # (README.rst:623-749; threading parity with sql_backend.py:189-246)
 
