@@ -19,9 +19,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
-from kairos_spark import queries as q
+from kairos_spark import configured_builder, queries as q
 from kairos_spark.ingest import bucketize
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -522,12 +522,8 @@ def pipeline_stats(spark, sf_dir):
 
 def main():
     spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("kairos_spark-bench")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        configured_builder("kairos_spark-bench", cores=int(CPUS))
+        .master(f"local[{CPUS}]")
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -57,11 +57,6 @@ def sketch_estimate(sketch: Column, k: int = 64) -> Column:
     return F.round(F.lit(float(k) * MINHASH_PRIME) / s.cast("double") - 1.0, 6)
 
 
-def merge_sketches(a: Column, b: Column) -> Column:
-    """Elementwise-min merge of two sketches (sketch union semantics)."""
-    return F.zip_with(a, b, lambda x, y: F.least(x, y))
-
-
 def distinct_estimate(
     df: DataFrame,
     group_cols: list[str],

@@ -456,17 +456,6 @@ def shingles_of_norm(norm: Column, n: int = 8) -> Column:
     return F.transform(idx, lambda i: norm.substr(i, F.lit(n)))
 
 
-def char_shingles(text: Column, n: int = 8) -> Column:
-    """Array of n-character shingles (whitespace-normalized), built with
-    sequence+transform — JVM higher-order functions, no UDF.
-
-    NOTE: prefer the two-stage normalize_ws → shingles_of_norm form in
-    operators; this single-expression form re-runs the normalization
-    regex per element inside the interpreted lambda (see
-    shingles_of_norm)."""
-    return shingles_of_norm(normalize_ws(text), n)
-
-
 def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 8) -> DataFrame:
     """Document fingerprint: minimum md5 over n-char shingles (a 1-hash
     MinHash — stable under small edits far from the minimizing shingle).

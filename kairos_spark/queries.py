@@ -3275,10 +3275,6 @@ def q_shard_balance_audit(spark, sf_dir):
     return layout.shard_balance(docs, n_shards=64)
 
 
-# Registry order matters: the driver evaluates entries in order under a
-# time budget (r1 cut off at exactly 50 of 61). The 11 entries it never
-# reached are listed FIRST so every query gets a CORRECTNESS row even if
-# the tail is cut again.
 def q_paragraph_dedup(spark, sf_dir):
     """Paragraph-grain exact dedup with per-document reconstruction
     stats — the Dolma/CCNet paragraph dedupe, reported before running
@@ -4440,91 +4436,70 @@ def q_quant_bits_sweep(spark, sf_dir):
     return similarity.quant_bits_sweep(qs, emb, k=10)
 
 
+# Registry order is the driver's order: its CORRECTNESS run checks the
+# first 50 entries of this literal. A rotation moves lines to the top;
+# why each round's window was chosen lives in git history and in
+# PROMOTION_r*.md.
 QUERIES = {
-    # NOTE: the driver's CORRECTNESS run evaluates the FIRST 50 entries.
-    # The literal below keeps historical grouping; the AUTHORITATIVE
-    # round-9 window order is _R9_WINDOW after this dict (the dict is
-    # rebuilt from it) — edit THAT list for future rotations.
-    # --- Round-10 additions (never driver-checked) ---
-    "dup_line_stats": q_dup_line_stats,
-    "quality_threshold_sweep": q_quality_threshold_sweep,
-    "blocklist_audit": q_blocklist_audit,
-    "contamination_spans": q_contamination_spans,
-    "boundary_overlap": q_boundary_overlap,
-    "pipeline_roi": q_pipeline_roi,
-    "cluster_balanced_sample": q_cluster_balanced_sample,
-    "ivf_list_balance": q_ivf_list_balance,
-    # --- Round-9 additions (never driver-checked) ---
-    "paragraph_dedup": q_paragraph_dedup,
-    "crossdoc_spans": q_crossdoc_spans,
+    "duplicated_spans": q_duplicated_spans,
+    "semdedup": q_semdedup,
+    "winnow_pairs": q_winnow_pairs,
+    "simhash_near_pairs": q_simhash_near_pairs,
+    "editdist_pairs": q_editdist_pairs,
+    "bfs_reach": q_bfs_reach,
+    "dsir_weights": q_dsir_weights,
+    "tfidf_top_terms": q_tfidf_top_terms,
     "ppl_bucket_mix": q_ppl_bucket_mix,
-    "tokenizer_drift": q_tokenizer_drift,
-    "eval_contamination": q_eval_contamination,
-    "cluster_keep_best": q_cluster_keep_best,
-    "cluster_keep_best_lsh": q_cluster_keep_best_lsh,
-    # --- Late round-10 additions: registered BEHIND the full r10
-    # window (mirror-covered this round); they lead the r11 rotation
-    # per the CLAUDE.md rule for never-driver-checked entries ---
-    "dup_quality_bias": q_dup_quality_bias,
-    "cluster_source_purity": q_cluster_source_purity,
-    "bigram_entropy_rate": q_bigram_entropy_rate,
-    "script_mix": q_script_mix,
-    "cramers_v": q_cramers_v,
-    "fim_split_audit": q_fim_split_audit,
-    "rp_distortion": q_rp_distortion,
-    "ivf_probe_sweep": q_ivf_probe_sweep,
-    "shard_dup_locality": q_shard_dup_locality,
-    "quant_recall": q_quant_recall,
-    "frame_dup_rate": q_frame_dup_rate,
-    "byte_entropy": q_byte_entropy,
-    "cluster_quality_bias": q_cluster_quality_bias,
-    "rule_disagreement": q_rule_disagreement,
-    "kendall_tau": q_kendall_tau,
-    "source_kl": q_source_kl,
-    "l_diversity": q_l_diversity,
-    # late continuation additions: registered BEHIND the full window
-    # (per-query mirror-verified ×3 scales); they lead the r11 rotation
-    "embedding_anisotropy": q_embedding_anisotropy,
-    "doc_gini": q_doc_gini,
-    "cohens_d": q_cohens_d,
-    "code_detect": q_code_detect,
-    "cuped_adjustment": q_cuped_adjustment,
-    "cluster_diameter": q_cluster_diameter,
-    "hll_union_overlap": q_hll_union_overlap,
-    "order_count_histogram": q_order_count_histogram,
-    "qte_deciles": q_qte_deciles,
-    "vocab_partial_corr": q_vocab_partial_corr,
-    "t_closeness": q_t_closeness,
+    "coactivity_kcore": q_coactivity_kcore,
     "degree_assortativity": q_degree_assortativity,
-    "chunk_overlap": q_chunk_overlap,
-    "link_density": q_link_density,
-    "markup_stats": q_markup_stats,
+    "quality_auc": q_quality_auc,
+    "quantize_audit": q_quantize_audit,
+    "session_gap_sweep": q_session_gap_sweep,
+    "source_scorecard": q_source_scorecard,
+    "spearman_activity": q_spearman_activity,
+    "temperature_mix": q_temperature_mix,
+    "triangle_cooccurrence": q_triangle_cooccurrence,
+    "attribution_split": q_attribution_split,
+    "categorical_drift": q_categorical_drift,
+    "chao1_richness": q_chao1_richness,
+    "json_schema_profile": q_json_schema_profile,
+    "mutual_info": q_mutual_info,
+    "prefix_jaccard_pairs": q_prefix_jaccard_pairs,
+    "split_leakage_audit": q_split_leakage_audit,
+    "transition_entropy": q_transition_entropy,
+    "dedup_clusters_lsh": q_dedup_clusters_lsh,
+    "value_percentiles": q_value_percentiles,
+    "cluster_keep_best": q_cluster_keep_best,
+    "minhash_lsh_pairs": q_minhash_lsh_pairs,
+    "quality_rule_pack": q_quality_rule_pack,
+    "cluster_balanced_sample": q_cluster_balanced_sample,
+    "cluster_keep_best_lsh": q_cluster_keep_best_lsh,
+    "cluster_quality_bias": q_cluster_quality_bias,
+    "cluster_source_purity": q_cluster_source_purity,
+    "ivf_list_balance": q_ivf_list_balance,
+    "minhash_calibration": q_minhash_calibration,
+    "tokenizer_drift": q_tokenizer_drift,
+    "cluster_diameter": q_cluster_diameter,
     "dup_degree_spectrum": q_dup_degree_spectrum,
-    "language_mix": q_language_mix,
-    "brier_decomposition": q_brier_decomposition,
-    "forecast_mase": q_forecast_mase,
-    "char_rep_rate": q_char_rep_rate,
-    "url_dedup": q_url_dedup,
-    "doc_disposition": q_doc_disposition,
-    "knn_stability": q_knn_stability,
-    "bloom_fpr_audit": q_bloom_fpr_audit,
-    "cross_shard_novelty": q_cross_shard_novelty,
     "near_dup_family_agreement": q_near_dup_family_agreement,
-    "source_containment": q_source_containment,
-    "dup_run_lengths": q_dup_run_lengths,
-    # round-12 additions
-    # --- Round-13 additions ---
-    "vocab_size_sweep": q_vocab_size_sweep,
+    "kmeans_clusters": q_kmeans_clusters,
+    "prototypicality": q_prototypicality,
+    "lift_curve": q_lift_curve,
+    "schema_drift": q_schema_drift,
+    "ts_collapse_range": q_ts_collapse_range,
+    "ts_condense_hour": q_ts_condense_hour,
+    "ts_gauge_last_hour": q_ts_gauge_last_hour,
+    "ts_histogram_daily": q_ts_histogram_daily,
+    "ts_multi_name_merge": q_ts_multi_name_merge,
+    "bpe_merge_chain": q_bpe_merge_chain,
     "dump_overlap": q_dump_overlap,
     "license_audit": q_license_audit,
-    "unimax_alloc": q_unimax_alloc,
-    "simhash_radius_sweep": q_simhash_radius_sweep,
     "pq_recall": q_pq_recall,
-    "bpe_merge_chain": q_bpe_merge_chain,
-    # late-r13 (behind the window; lead the r14 rotation)
+    "simhash_radius_sweep": q_simhash_radius_sweep,
+    "unimax_alloc": q_unimax_alloc,
+    "vocab_size_sweep": q_vocab_size_sweep,
     "temperature_sweep": q_temperature_sweep,
     "contamination_ngram_sweep": q_contamination_ngram_sweep,
-    "prototypicality": q_prototypicality,
     "minhash_len_bias": q_minhash_len_bias,
     "lsh_br_planner": q_lsh_br_planner,
     "readability_scores": q_readability_scores,
@@ -4537,8 +4512,77 @@ QUERIES = {
     "good_turing_mass": q_good_turing_mass,
     "cluster_stability_ari": q_cluster_stability_ari,
     "participation_ratio": q_participation_ratio,
-    # --- Round-12 additions ---
+    "facility_select": q_facility_select,
     "minhash_scurve": q_minhash_scurve,
+    "ab_lift": q_ab_lift,
+    "absorption_prob": q_absorption_prob,
+    "dedup_threshold_sweep": q_dedup_threshold_sweep,
+    "did_estimate": q_did_estimate,
+    "drift_fdr": q_drift_fdr,
+    "max_drawdown": q_max_drawdown,
+    "media_signature_buckets": q_media_signature_buckets,
+    "rrf_fusion": q_rrf_fusion,
+    "source_similarity": q_source_similarity,
+    "ts_histogram_transforms": q_ts_histogram_transforms,
+    "vocab_coverage": q_vocab_coverage,
+    "zonemap_prune": q_zonemap_prune,
+    "churn_auc": q_churn_auc,
+    "context_budget": q_context_budget,
+    "decayed_topk": q_decayed_topk,
+    "dedup_recall": q_dedup_recall,
+    "ks_drift": q_ks_drift,
+    "langid_metrics": q_langid_metrics,
+    "multimodal_features": q_multimodal_features,
+    "ngram_novelty": q_ngram_novelty,
+    "path_conformance": q_path_conformance,
+    "dup_line_stats": q_dup_line_stats,
+    "quality_threshold_sweep": q_quality_threshold_sweep,
+    "blocklist_audit": q_blocklist_audit,
+    "contamination_spans": q_contamination_spans,
+    "boundary_overlap": q_boundary_overlap,
+    "pipeline_roi": q_pipeline_roi,
+    "paragraph_dedup": q_paragraph_dedup,
+    "crossdoc_spans": q_crossdoc_spans,
+    "eval_contamination": q_eval_contamination,
+    "dup_quality_bias": q_dup_quality_bias,
+    "bigram_entropy_rate": q_bigram_entropy_rate,
+    "script_mix": q_script_mix,
+    "cramers_v": q_cramers_v,
+    "fim_split_audit": q_fim_split_audit,
+    "rp_distortion": q_rp_distortion,
+    "ivf_probe_sweep": q_ivf_probe_sweep,
+    "shard_dup_locality": q_shard_dup_locality,
+    "quant_recall": q_quant_recall,
+    "frame_dup_rate": q_frame_dup_rate,
+    "byte_entropy": q_byte_entropy,
+    "rule_disagreement": q_rule_disagreement,
+    "kendall_tau": q_kendall_tau,
+    "source_kl": q_source_kl,
+    "l_diversity": q_l_diversity,
+    "embedding_anisotropy": q_embedding_anisotropy,
+    "doc_gini": q_doc_gini,
+    "cohens_d": q_cohens_d,
+    "code_detect": q_code_detect,
+    "cuped_adjustment": q_cuped_adjustment,
+    "hll_union_overlap": q_hll_union_overlap,
+    "order_count_histogram": q_order_count_histogram,
+    "qte_deciles": q_qte_deciles,
+    "vocab_partial_corr": q_vocab_partial_corr,
+    "t_closeness": q_t_closeness,
+    "chunk_overlap": q_chunk_overlap,
+    "link_density": q_link_density,
+    "markup_stats": q_markup_stats,
+    "language_mix": q_language_mix,
+    "brier_decomposition": q_brier_decomposition,
+    "forecast_mase": q_forecast_mase,
+    "char_rep_rate": q_char_rep_rate,
+    "url_dedup": q_url_dedup,
+    "doc_disposition": q_doc_disposition,
+    "knn_stability": q_knn_stability,
+    "bloom_fpr_audit": q_bloom_fpr_audit,
+    "cross_shard_novelty": q_cross_shard_novelty,
+    "source_containment": q_source_containment,
+    "dup_run_lengths": q_dup_run_lengths,
     "boilerplate_roi": q_boilerplate_roi,
     "oov_rate": q_oov_rate,
     "contamination_matrix": q_contamination_matrix,
@@ -4547,17 +4591,9 @@ QUERIES = {
     "instruction_detect": q_instruction_detect,
     "domain_mix": q_domain_mix,
     "bpe_merge_candidates": q_bpe_merge_candidates,
-    "facility_select": q_facility_select,
     "cross_source_dup": q_cross_source_dup,
     "dup_cluster_sizes": q_dup_cluster_sizes,
     "template_prefix": q_template_prefix,
-    # --- Round-8 rotation (CLAUDE.md rule + VERDICT r7 items 1-3):
-    # 5 NEW queries lead (never driver-checked), then the 7-entry
-    # backlog remainder from r7 positions 51-57 — driver-green on all
-    # 12 closes the verification program at 268/268 ever-checked. The
-    # 50 r7-green window rows rotate to the tail. ---
-    "quality_rule_pack": q_quality_rule_pack,
-    "dsir_weights": q_dsir_weights,
     "packing_efficiency": q_packing_efficiency,
     "token_budget_alloc": q_token_budget_alloc,
     "shard_balance_audit": q_shard_balance_audit,
@@ -4568,11 +4604,8 @@ QUERIES = {
     "vocab_drift": q_vocab_drift,
     "bootstrap_ci_mean": q_bootstrap_ci_mean,
     "seasonal_quantile_bands": q_seasonal_quantile_bands,
-    # r8 expression changes (exact-rational raw_mean, zero-token
-    # inflation sentinel) — promoted for driver re-check
     "post_stratified_mean": q_post_stratified_mean,
     "dup_inflation": q_dup_inflation,
-    # --- r2-r5 driver-green entries, mirror-covered ---
     "ts_multires_rollup": q_ts_multires_rollup,
     "ts_iterate_full": q_ts_iterate_full,
     "repetition_stats": q_repetition_stats,
@@ -4584,8 +4617,6 @@ QUERIES = {
     "embed_near_pairs_lsh": q_embed_near_pairs_lsh,
     "shard_packing": q_shard_packing,
     "sketch_distinct": q_sketch_distinct,
-    "kmeans_clusters": q_kmeans_clusters,
-    "tfidf_top_terms": q_tfidf_top_terms,
     "bigram_lm_score": q_bigram_lm_score,
     "normalize_dedup": q_normalize_dedup,
     "containment_pairs": q_containment_pairs,
@@ -4596,7 +4627,6 @@ QUERIES = {
     "q1_pricing_summary": q_q1_pricing_summary,
     "revenue_by_nation": q_revenue_by_nation,
     "window_top_orders": q_window_top_orders,
-    "value_percentiles": q_value_percentiles,
     "json_props_stats": q_json_props_stats,
     "range_join_user_events": q_range_join_user_events,
     "rollup_revenue_region": q_rollup_revenue_region,
@@ -4608,12 +4638,9 @@ QUERIES = {
     "dedup_exact_keep": q_dedup_exact_keep,
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
     "dedup_clusters": q_dedup_clusters,
-    "dedup_clusters_lsh": q_dedup_clusters_lsh,
     "training_data_prep": q_training_data_prep,
     "minhash_first_hashes": q_minhash_first_hashes,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
     "simhash_sample": q_simhash_sample,
-    "simhash_near_pairs": q_simhash_near_pairs,
     "text_stats": q_text_stats,
     "binned_quantiles": q_binned_quantiles,
     "weighted_sample": q_weighted_sample,
@@ -4645,7 +4672,6 @@ QUERIES = {
     "value_drift": q_value_drift,
     "period_delta": q_period_delta,
     "zorder_layout": q_zorder_layout,
-    "minhash_calibration": q_minhash_calibration,
     "cube_revenue": q_cube_revenue,
     "mad_outliers": q_mad_outliers,
     "freq_spectrum": q_freq_spectrum,
@@ -4672,44 +4698,25 @@ QUERIES = {
     "ts_count_rate_minute": q_ts_count_rate_minute,
     "ts_series_transforms_hour": q_ts_series_transforms_hour,
     "ts_fine_hour_minute": q_ts_fine_hour_minute,
-    "ts_condense_hour": q_ts_condense_hour,
-    "ts_collapse_range": q_ts_collapse_range,
-    "ts_histogram_daily": q_ts_histogram_daily,
-    "ts_gauge_last_hour": q_ts_gauge_last_hour,
     "ts_set_hour": q_ts_set_hour,
-    "ts_multi_name_merge": q_ts_multi_name_merge,
     "ts_set_cross_series": q_ts_set_cross_series,
     "ts_spine_gapfill": q_ts_spine_gapfill,
     "bm25_topk": q_bm25_topk,
-    "rrf_fusion": q_rrf_fusion,
-    "semdedup": q_semdedup,
     "interval_proration": q_interval_proration,
     "conformal_coverage": q_conformal_coverage,
     "quantile_normalize": q_quantile_normalize,
-    "media_signature_buckets": q_media_signature_buckets,
-    "coactivity_kcore": q_coactivity_kcore,
     "weight_ess": q_weight_ess,
     "cvm_drift": q_cvm_drift,
     "table_fingerprint": q_table_fingerprint,
     "ipf_raking": q_ipf_raking,
     "srm_audit": q_srm_audit,
-    "drift_fdr": q_drift_fdr,
     "freshness_audit": q_freshness_audit,
     "policy_replay": q_policy_replay,
     "growth_accounting": q_growth_accounting,
-    "vocab_coverage": q_vocab_coverage,
-    "ab_lift": q_ab_lift,
     "simpson_check": q_simpson_check,
     "langid_kappa": q_langid_kappa,
     "event_study": q_event_study,
-    "dedup_threshold_sweep": q_dedup_threshold_sweep,
-    "did_estimate": q_did_estimate,
-    "source_similarity": q_source_similarity,
-    "absorption_prob": q_absorption_prob,
-    "bfs_reach": q_bfs_reach,
     "audience_stability": q_audience_stability,
-    "max_drawdown": q_max_drawdown,
-    "zonemap_prune": q_zonemap_prune,
     "incremental_join": q_incremental_join,
     "theil_decomposition": q_theil_decomposition,
     "wasserstein_drift": q_wasserstein_drift,
@@ -4722,76 +4729,48 @@ QUERIES = {
     "ts_greg_monthly_rate": q_ts_greg_monthly_rate,
     "ts_fanout_minute": q_ts_fanout_minute,
     "ts_retention_filter": q_ts_retention_filter,
-    "ts_histogram_transforms": q_ts_histogram_transforms,
     "ts_histogram_rate": q_ts_histogram_rate,
     "ts_histogram_percentiles": q_ts_histogram_percentiles,
     "ts_variance_collapse": q_ts_variance_collapse,
     "ts_gauge_join": q_ts_gauge_join,
     "ts_series_condense_order": q_ts_series_condense_order,
     "ts_sliding_hour_15m": q_ts_sliding_hour_15m,
-    # --- r6 driver-green window (CORRECTNESS_r06: 49/50 exact),
-    # rotated to the tail per the CLAUDE.md rule; mirror-covered ---
-    "source_scorecard": q_source_scorecard,
-    "langid_metrics": q_langid_metrics,
     "conversion_latency": q_conversion_latency,
     "supplier_pareto": q_supplier_pareto,
     "gini_activity": q_gini_activity,
-    "dedup_recall": q_dedup_recall,
     "audience_overlap": q_audience_overlap,
-    "multimodal_features": q_multimodal_features,
     "capture_recapture": q_capture_recapture,
     "powerlaw_alpha": q_powerlaw_alpha,
     "scale_drift": q_scale_drift,
     "rbo_rankings": q_rbo_rankings,
-    "churn_auc": q_churn_auc,
-    "session_gap_sweep": q_session_gap_sweep,
     "wilson_ci": q_wilson_ci,
     "mann_kendall": q_mann_kendall,
     "peak_detection": q_peak_detection,
     "hashing_trick_audit": q_hashing_trick_audit,
-    "path_conformance": q_path_conformance,
-    "schema_drift": q_schema_drift,
     "ratio_ci": q_ratio_ci,
     "logrank_test": q_logrank_test,
     "qq_shift_fit": q_qq_shift_fit,
-    "ks_drift": q_ks_drift,
     "lateness_audit": q_lateness_audit,
     "norm_outliers": q_norm_outliers,
     "theilsen_trend": q_theilsen_trend,
     "session_paths": q_session_paths,
     "benford_totalprice": q_benford_totalprice,
     "rfm_segments": q_rfm_segments,
-    "triangle_cooccurrence": q_triangle_cooccurrence,
-    "context_budget": q_context_budget,
     "bigram_holdout": q_bigram_holdout,
-    "winnow_pairs": q_winnow_pairs,
-    "editdist_pairs": q_editdist_pairs,
     "hll_distinct": q_hll_distinct,
     "bpe_pairs": q_bpe_pairs,
-    "spearman_activity": q_spearman_activity,
-    "quality_auc": q_quality_auc,
-    "duplicated_spans": q_duplicated_spans,
     "domain_cap": q_domain_cap,
-    "ngram_novelty": q_ngram_novelty,
-    "quantize_audit": q_quantize_audit,
     "kaplan_meier": q_kaplan_meier,
     "changepoints": q_changepoints,
-    "temperature_mix": q_temperature_mix,
     "grouped_weighted_sample": q_grouped_weighted_sample,
-    "decayed_topk": q_decayed_topk,
-    # --- r7 driver-green window (CORRECTNESS_r07: 50/50 exact),
-    # rotated to the tail per the CLAUDE.md rule; mirror-covered ---
-    "chao1_richness": q_chao1_richness,
     "pseudonym_audit": q_pseudonym_audit,
     "autocorr_hourly": q_autocorr_hourly,
-    "transition_entropy": q_transition_entropy,
     "join_size_est": q_join_size_est,
     "skyline_docs": q_skyline_docs,
     "weighted_median_len": q_weighted_median_len,
     "langid_confusion": q_langid_confusion,
     "scd2_intervals": q_scd2_intervals,
     "distinctive_terms": q_distinctive_terms,
-    "categorical_drift": q_categorical_drift,
     "k_anonymity": q_k_anonymity,
     "dp_noisy_counts": q_dp_noisy_counts,
     "calibration_bins": q_calibration_bins,
@@ -4799,17 +4778,13 @@ QUERIES = {
     "vocab_growth": q_vocab_growth,
     "burstiness": q_burstiness,
     "forecast_eval": q_forecast_eval,
-    "prefix_jaccard_pairs": q_prefix_jaccard_pairs,
     "entity_clusters": q_entity_clusters,
     "incremental_rollup": q_incremental_rollup,
     "corr_matrix": q_corr_matrix,
-    "mutual_info": q_mutual_info,
-    "lift_curve": q_lift_curve,
     "topk_churn": q_topk_churn,
     "embedding_drift": q_embedding_drift,
     "embedding_moments": q_embedding_moments,
     "ols2_fit": q_ols2_fit,
-    "json_schema_profile": q_json_schema_profile,
     "expectations_audit": q_expectations_audit,
     "grouped_histogram": q_grouped_histogram,
     "pit_state_join": q_pit_state_join,
@@ -4817,8 +4792,6 @@ QUERIES = {
     "encoding_audit": q_encoding_audit,
     "token_fertility": q_token_fertility,
     "calendar_heatmap": q_calendar_heatmap,
-    "attribution_split": q_attribution_split,
-    "split_leakage_audit": q_split_leakage_audit,
     "group_quantiles": q_group_quantiles,
     "assoc_rules": q_assoc_rules,
     "session_entry_exit": q_session_entry_exit,
@@ -4832,489 +4805,6 @@ QUERIES = {
     "hierarchical_shares": q_hierarchical_shares,
     "negative_pairs": q_negative_pairs,
     "mrr_sessions": q_mrr_sessions,
-}
-
-# --- Round-9 driver window (CLAUDE.md rotation rule; the driver's
-# CORRECTNESS run evaluates exactly the FIRST 50 entries of QUERIES).
-# Layout: (1) the 7 NEW r9 queries (never driver-checked); (2) the 19
-# queries whose Spark/oracle expressions CHANGED this round (ADVICE r8
-# cents/lam/hash fixes + the multi-line round_lint sweep) — green
-# locally at sf0.01/sf0.1/adversarial, promoted for driver re-check
-# exactly as r8 did with post_stratified_mean; (3) 24 rotation
-# re-checks continuing the tail cycle (the entries directly after the
-# r8 window, last driver-checked r7). Everything else keeps its
-# previous relative order behind the window and stays covered by the
-# local full-registry mirror.
-_R9_WINDOW = [
-    # (1) new r9
-    "embedding_moments",
-    "paragraph_dedup",
-    "crossdoc_spans",
-    "ppl_bucket_mix",
-    "tokenizer_drift",
-    "eval_contamination",
-    "cluster_keep_best",
-    "cross_source_dup",
-    "dup_cluster_sizes",
-    "template_prefix",
-    # (2) r9 expression changes, promoted for driver re-check
-    "quality_rule_pack",
-    "dsir_weights",
-    "ts_series_transforms_hour",
-    "q1_pricing_summary",
-    "bootstrap_ci_mean",
-    "post_stratified_mean",
-    "boilerplate_chunks",
-    "freq_spectrum",
-    "hashing_trick_audit",
-    "conformal_coverage",
-    "winsorize",
-    "impute_median",
-    "policy_replay",
-    "powerlaw_alpha",
-    "wasserstein_drift",
-    "bm25_topk",
-    "conversion_latency",
-    "interval_proration",
-    "event_study",
-    # wilson_ci oracle gained the signed-zero `+ 0.0` normalization
-    # (the r9 zero_audit finding) — promoted for driver re-check
-    "wilson_ci",
-    # (3) rotation re-checks (last driver-checked r7)
-    "training_data_prep",
-    "minhash_first_hashes",
-    "minhash_lsh_pairs",
-    "simhash_sample",
-    "simhash_near_pairs",
-    "text_stats",
-    "binned_quantiles",
-    "weighted_sample",
-    "pii_scrub",
-    "quality_scores",
-    "lang_id",
-    "token_topk",
-    "doc_fingerprint",
-    "ann_cosine_topk",
-    "label_centroids",
-    "ann_ivf_topk",
-    "embed_near_pairs",
-    "ann_lsh_topk",
-    "frame_sample",
-    "sample_split",
-]
-assert len(_R9_WINDOW) == 50 and len(set(_R9_WINDOW)) == 50
-
-# --- Round-10 driver window (CLAUDE.md rotation rule). Layout:
-# (1) the 9 NEW r10 queries (never driver-checked); (2) the 3 queries
-# whose Spark/oracle expressions CHANGED this round (ADVICE r9 fixes:
-# conversion_latency's exact-integer percentiles changed BOTH sides;
-# tokenizer_drift and embedding_moments moved their overflow-prone
-# products into DECIMAL) — green locally at sf0.01/sf0.1/adversarial,
-# promoted for driver re-check; (3) 38 rotation re-checks continuing
-# the tail cycle from stratified_sample onward (the entries CLAUDE.md
-# queued after the late-r9 additions bumped them). CORRECTNESS_r09
-# came back 50/50, so nothing is red and no slot is owed to a repair.
-_R10_WINDOW = [
-    # (1) new r10 — none of these have ever been driver-checked (the
-    # r10 driver run happens at round end); late additions included so
-    # the whole batch gets checked this round
-    "dup_line_stats",
-    "quality_threshold_sweep",
-    "blocklist_audit",
-    "contamination_spans",
-    "boundary_overlap",
-    "pipeline_roi",
-    "cluster_balanced_sample",
-    "ivf_list_balance",
-    "cluster_keep_best_lsh",
-    "dup_quality_bias",
-    "cluster_source_purity",
-    "bigram_entropy_rate",
-    "script_mix",
-    "cramers_v",
-    "fim_split_audit",
-    "rp_distortion",
-    "ivf_probe_sweep",
-    "shard_dup_locality",
-    "quant_recall",
-    "frame_dup_rate",
-    "byte_entropy",
-    "cluster_quality_bias",
-    "rule_disagreement",
-    "kendall_tau",
-    "source_kl",
-    "l_diversity",
-    # (2) r10 expression changes, promoted for driver re-check
-    # (conversion_latency/tokenizer_drift/embedding_moments: ADVICE r9;
-    # lateness_audit/theilsen_trend + the already-tail-listed
-    # interarrival: the r10 percentile-midpoint sweep — the last two
-    # displaced ts_count_rate_minute / ts_fine_hour_minute, which now
-    # lead the r11 tail cycle)
-    "conversion_latency",
-    "tokenizer_drift",
-    "embedding_moments",
-    "lateness_audit",
-    "theilsen_trend",
-    # (3) rotation re-checks (tail cycle)
-    "stratified_sample",
-    "session_transitions",
-    "doc_chunks",
-    "inverted_index",
-    "heavy_hitters",
-    "bloom_filter_join",
-    "salted_join",
-    "unpivot_roundtrip",
-    "cluster_quality",
-    "pagerank_transitions",
-    "asof_tolerance",
-    "pmi_pairs",
-    "value_drift",
-    "period_delta",
-    "zorder_layout",
-    "minhash_calibration",
-    "knn_join",
-    "lsh_recall",
-    "interarrival",
-]
-assert len(_R10_WINDOW) == 50 and len(set(_R10_WINDOW)) == 50
-
-# --- Round-11 driver window (CLAUDE.md rotation rule). Layout:
-# (1) the 7 NEW r11 queries (never driver-checked); (2) the 19
-# late-r10 entries that have never been in a driver window (VERDICT
-# r10 #1 — the only registry entries whose driver-green status is
-# inherited from the mirror rather than observed; restores "every
-# registered query driver-checked at least once" when green);
-# (3) the 2 r10-checked entries whose expressions CHANGED this round
-# (ADVICE r10 signed-zero fixes: period_delta's oracle gained the
-# `+ 0.0` CASE normalization and its Spark side changed through
-# _round6_ratio_signed; theilsen_trend's slope routes through the
-# changed _round6_ratio_dec_signed) — mirror-green ×3, promoted for
-# driver re-check per the r8/r10 precedent. cuped_adjustment /
-# hll_union_overlap / cluster_diameter / dup_degree_spectrum also
-# changed this round but already sit in group (2). The OTHER formal
-# helper-change owners (rfm_segments, bootstrap_ci_mean,
-# post_stratified_mean, langid_kappa, embedding_moments,
-# rp_distortion, ts_series_transforms_hour, json_props_stats) are
-# identity-changed off the zero window, re-verified by the full
-# mirror, and stay in the tail cycle; (4) 22 rotation re-checks
-# continuing the tail cycle exactly as CLAUDE.md queued it (the 17
-# displaced re-checks, the 2 earlier-displaced ts_* rows, then the
-# oldest-driver-checked block; crosscorr_types rolled to r12 when
-# near_dup_family_agreement joined group 1).
-_R11_WINDOW = [
-    # (1) new r11
-    "char_rep_rate",
-    "url_dedup",
-    "doc_disposition",
-    "knn_stability",
-    "bloom_fpr_audit",
-    "cross_shard_novelty",
-    "near_dup_family_agreement",
-    # (2) never-driver-checked late-r10 entries
-    "embedding_anisotropy",
-    "doc_gini",
-    "cohens_d",
-    "code_detect",
-    "cuped_adjustment",
-    "cluster_diameter",
-    "hll_union_overlap",
-    "order_count_histogram",
-    "qte_deciles",
-    "vocab_partial_corr",
-    "t_closeness",
-    "degree_assortativity",
-    "chunk_overlap",
-    "link_density",
-    "markup_stats",
-    "dup_degree_spectrum",
-    "language_mix",
-    "brier_decomposition",
-    "forecast_mase",
-    # (3) r11 expression-changed promotions
-    "period_delta",
-    "theilsen_trend",
-    # (4) rotation re-checks (tail cycle)
-    "cube_revenue",
-    "mad_outliers",
-    "schema_profile",
-    "fk_conformance",
-    "snapshot_diff",
-    "trend_slope",
-    "fd_check",
-    "event_debounce",
-    "count_correlation",
-    "revenue_deciles",
-    "fuzzy_match",
-    "label_agreement",
-    "interval_coverage",
-    "seasonal_baseline",
-    "key_skew_stats",
-    "event_pivot",
-    "ts_count_series_hour",
-    "ts_count_rate_minute",
-    "ts_fine_hour_minute",
-    "packing_efficiency",
-    "token_budget_alloc",
-    "shard_balance_audit",
-]
-assert len(_R11_WINDOW) == 50 and len(set(_R11_WINDOW)) == 50
-
-# --- Round-12 driver window (CLAUDE.md rotation rule; _R11_WINDOW
-# above is historical record). Layout:
-# (1) the 10 NEW r12 queries (never driver-checked);
-# (2) the 2 late-r11 entries registered BEHIND the r11 window —
-#     the only registry entries never driver-checked (VERDICT r11 #3);
-# (3) the 8 r11 formal helper-change owners that skipped promotion
-#     (VERDICT r11 "What's missing" #4): their Spark expressions
-#     gained the signed-zero `+ F.lit(0.0)` normalization inside
-#     _round6_ratio_signed/_round6_ratio_dec_signed in r11 — identity
-#     off the zero window and mirror-re-verified + fuzz-pinned, but
-#     the rotation rule says expression-changed entries get a driver
-#     re-check;
-# (4) 30 tail re-checks continuing the oldest-driver-checked r8 block
-#     from crosscorr_types onward in registry order (bootstrap_ci_mean
-#     / post_stratified_mean / json_props_stats fall inside that block
-#     and already sit in group 3, so the block extends past them).
-_R12_WINDOW = [
-    # (1) new r12
-    "minhash_scurve",
-    "boilerplate_roi",
-    "oov_rate",
-    "contamination_matrix",
-    "quant_bits_sweep",
-    "sig_size_sweep",
-    "instruction_detect",
-    "domain_mix",
-    "bpe_merge_candidates",
-    "facility_select",
-    # (2) never-driver-checked late-r11
-    "source_containment",
-    "dup_run_lengths",
-    # (3) r11 signed-zero helper-change owners (driver re-check)
-    "rfm_segments",
-    "bootstrap_ci_mean",
-    "post_stratified_mean",
-    "langid_kappa",
-    "embedding_moments",
-    "rp_distortion",
-    "ts_series_transforms_hour",
-    "json_props_stats",
-    # (4) rotation re-checks (tail cycle from crosscorr_types)
-    "crosscorr_types",
-    "delta_attribution",
-    "bernoulli_ht_audit",
-    "markov_accuracy",
-    "vocab_drift",
-    "seasonal_quantile_bands",
-    "dup_inflation",
-    "ts_multires_rollup",
-    "ts_iterate_full",
-    "repetition_stats",
-    "word_entropy",
-    "contamination",
-    "dedup_incremental",
-    "token_topk_by_lang",
-    "cohort_retention",
-    "embed_near_pairs_lsh",
-    "shard_packing",
-    "sketch_distinct",
-    "kmeans_clusters",
-    "tfidf_top_terms",
-    "bigram_lm_score",
-    "normalize_dedup",
-    "containment_pairs",
-    "anomaly_zscore",
-    "ewma_smooth",
-    "rolling_distinct_users",
-    "funnel_conversion",
-    "q1_pricing_summary",
-    "revenue_by_nation",
-    "window_top_orders",
-]
-assert len(_R12_WINDOW) == 50 and len(set(_R12_WINDOW)) == 50
-
-# --- Round-13 driver window (CLAUDE.md rotation rule; _R12_WINDOW
-# above is historical record). FIRST round whose promotion set is
-# GENERATED by tools/impact_map.py (VERDICT r12 #2) — see
-# PROMOTION_r13.md for the full report. Layout:
-# (1) the 7 NEW r13 queries (never driver-checked);
-# (2) the 3 entries whose expressions changed THIS round
-#     (facility_select / minhash_scurve: the ADVICE-r12 refactors;
-#     simhash_near_pairs: the checkpoint + probe-repartition scale
-#     fix) — freshest changes are the least verified;
-# (3) 40 of the 53-entry expression-changed BACKLOG impact_map found
-#     on its first run (entries whose Spark closure or oracle source
-#     changed AFTER their last green driver check — the hand-rotation
-#     let these through across r5-r10; all have stayed green on the
-#     3-scale mirror battery every round since), ordered oldest
-#     last-green first. The 17 remaining backlog entries
-#     (split_leakage_audit, transition_entropy, dedup_clusters_lsh,
-#     value_percentiles, cluster_keep_best, quality_rule_pack,
-#     cluster_keep_best_lsh, cluster_quality_bias,
-#     cluster_source_purity, tokenizer_drift,
-#     near_dup_family_agreement, prefix_jaccard_pairs, plus
-#     chao1_richness, json_schema_profile, lift_curve, mutual_info,
-#     categorical_drift, attribution_split, winnow_pairs,
-#     triangle_cooccurrence, temperature_mix, spearman_activity,
-#     source_scorecard, session_gap_sweep, schema_drift,
-#     quantize_audit, quality_auc — displaced when the 15 late-r13
-#     queries rotated into group 1b) lead the r14 rotation's
-#     group (3).
-_R13_WINDOW = [
-    # (1) new r13
-    "bpe_merge_chain",
-    "dump_overlap",
-    "license_audit",
-    "pq_recall",
-    "simhash_radius_sweep",
-    "unimax_alloc",
-    "vocab_size_sweep",
-    # (1b) late r13 additions, never driver-checked — rotated in over
-    #      the 4 youngest backlog entries (those join the r14 queue)
-    "temperature_sweep",
-    "contamination_ngram_sweep",
-    "prototypicality",
-    "minhash_len_bias",
-    "lsh_br_planner",
-    "readability_scores",
-    "kcenter_coreset",
-    "hits_scores",
-    "mattr_diversity",
-    "data_constrained_epochs",
-    "ndcg_sessions",
-    "value_precision_audit",
-    "good_turing_mass",
-    "cluster_stability_ari",
-    "participation_ratio",
-    # (2) expressions changed this round
-    "facility_select",
-    "minhash_scurve",
-    "simhash_near_pairs",
-    # (3) impact_map backlog, oldest last-green first
-    "ab_lift",
-    "absorption_prob",
-    "bfs_reach",
-    "coactivity_kcore",
-    "dedup_threshold_sweep",
-    "did_estimate",
-    "drift_fdr",
-    "max_drawdown",
-    "media_signature_buckets",
-    "rrf_fusion",
-    "semdedup",
-    "source_similarity",
-    "ts_histogram_transforms",
-    "vocab_coverage",
-    "zonemap_prune",
-    "churn_auc",
-    "context_budget",
-    "decayed_topk",
-    "dedup_recall",
-    "editdist_pairs",
-    "ks_drift",
-    "langid_metrics",
-    "multimodal_features",
-    "ngram_novelty",
-    "path_conformance",
-]
-assert len(_R13_WINDOW) == 50 and len(set(_R13_WINDOW)) == 50
-QUERIES = {
-    **{k: QUERIES[k] for k in _R13_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R13_WINDOW)},
-}
-
-# --- Round-14 driver window (CLAUDE.md rotation rule; _R13_WINDOW
-# above is historical record). CORRECTNESS_r13 came back 50/50, no
-# new queries this round (optimization round 2/2), so the window is
-# pure promotion backlog from `tools/impact_map.py promote`
-# (report regenerated post-r14-changes; the r13-opt `_tbl` change
-# flags all 319 non-new entries via queries._tbl — per the CLAUDE.md
-# r13 addendum those are NOT promoted on that signal alone, since
-# plan-only equivalence was verified at 3 scales in r13). Layout:
-# (2a) the 6 queries whose OPERATOR code changed THIS round
-#      (duplicated_spans: grouped pair generation; semdedup:
-#      final-assignment checkpoint; winnow_pairs / simhash_near_pairs
-#      / editdist_pairs / bfs_reach: docstring-adjacent operator
-#      edits) — freshest changes are the least verified;
-# (2b) the remaining 32 entries impact_map flags with a non-_tbl
-#      changed def since their last green driver check (the r13-opt
-#      operator rewrites: minhash_lsh_pairs / simhash family /
-#      _kmeans_final_assign / cooccurrence_triangles consumers, plus
-#      the never-rotated r6-r9 helper-churn backlog), ordered oldest
-#      last-green first;
-# (3)  backlog: the 2 displaced-in-r13 entries not already in (2)
-#      (lift_curve, schema_drift), the 8 reference-parity ts_* rows
-#      last checked in r4, and the 2 oldest r5 entries.
-_R14_WINDOW = [
-    # (2a) operator code changed in r14
-    "duplicated_spans",
-    "semdedup",
-    "winnow_pairs",
-    "simhash_near_pairs",
-    "editdist_pairs",
-    "bfs_reach",
-    # (2a2) r14 second-batch expression rewrites (duplicated-explode
-    # removal: conditional-sum fuse / reuse pins / left grp join) —
-    # value-identical, oracle-proven at sf0.01+sf0.1, but these are
-    # the exact expressions a driver re-check most wants fresh
-    "dsir_weights",
-    "tfidf_top_terms",
-    "ppl_bucket_mix",
-    # (2a3) r14 coactivity grouped pair generation — value-identical,
-    # oracle-proven at sf0.01+sf0.1; bfs_reach/triangle_cooccurrence
-    # already lead the window, these are the other two owners
-    "coactivity_kcore",
-    "degree_assortativity",
-    # (2b) non-_tbl expression changes, oldest last-green first
-    "quality_auc",
-    "quantize_audit",
-    "session_gap_sweep",
-    "source_scorecard",
-    "spearman_activity",
-    "temperature_mix",
-    "triangle_cooccurrence",
-    "attribution_split",
-    "categorical_drift",
-    "chao1_richness",
-    "json_schema_profile",
-    "mutual_info",
-    "prefix_jaccard_pairs",
-    "split_leakage_audit",
-    "transition_entropy",
-    "dedup_clusters_lsh",
-    "value_percentiles",
-    "cluster_keep_best",
-    "minhash_lsh_pairs",
-    "quality_rule_pack",
-    "cluster_balanced_sample",
-    "cluster_keep_best_lsh",
-    "cluster_quality_bias",
-    "cluster_source_purity",
-    "ivf_list_balance",
-    "minhash_calibration",
-    "tokenizer_drift",
-    "cluster_diameter",
-    "dup_degree_spectrum",
-    "near_dup_family_agreement",
-    "kmeans_clusters",
-    "prototypicality",
-    # (3) backlog: displaced r13 leftovers, r4 ts_* parity rows, r5
-    "lift_curve",
-    "schema_drift",
-    "ts_collapse_range",
-    "ts_condense_hour",
-    "ts_gauge_last_hour",
-    "ts_histogram_daily",
-    "ts_multi_name_merge",
-    # ts_set_cross_series, ts_set_hour, ts_spine_gapfill,
-    # audience_stability, cvm_drift displaced to the tail by the
-    # (2a2)/(2a3) promotions — mirror-covered like the rest of the
-    # registry
-]
-assert len(_R14_WINDOW) == 50 and len(set(_R14_WINDOW)) == 50
-QUERIES = {
-    **{k: QUERIES[k] for k in _R14_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R14_WINDOW)},
 }
 
 ORACLES = dict(_TS_ORACLES)

@@ -31,9 +31,7 @@ for the 100 TB design point and are no-ops or harmless at test scale:
   session (set-up, warm-up, three passes; seed 1, shared 4-vCPU VM):
   355 compiles at 100 entries (70, 68 and 83 per pass), 210 with the
   cache unbounded (28, 28 and 20 per pass: plans with new constants).
-  The constant sits well above that. ``tests/conftest.py``, ``bench.py`` and
-  ``tools/opt_profile.py`` build their own sessions and do not pick
-  this setting up.
+  The constant sits well above that.
 """
 
 from __future__ import annotations

@@ -20,6 +20,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
+import shutil
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,13 +77,47 @@ class ParquetStoreHandle:
 
 def open_store(url: str) -> ParquetStoreHandle:
     """kairos-style URL dispatch for the long-table store:
-    ``parquet:///abs/path``, ``memory://`` (tests), ``delta:///path``
-    (same layout; requires delta-spark at runtime)."""
+    ``parquet:///abs/path``, ``parquet://rel/path``, ``memory://``
+    (tests), ``delta:///path`` (same layout; requires delta-spark at
+    runtime)."""
     parsed = urlparse(url)
     scheme = parsed.scheme or "parquet"
     if scheme not in ("parquet", "memory", "delta"):
         raise ValueError(f"unsupported store scheme {scheme!r}")
-    return ParquetStoreHandle(scheme, parsed.path)
+    return ParquetStoreHandle(scheme, parsed.netloc + parsed.path)
+
+
+def replace_directory(path: str, write) -> None:
+    """Replace the contents of directory ``path`` with what
+    ``write(staging)`` writes to a sibling staging directory.
+
+    The old directory moves aside and is dropped only once the new one
+    is in place. If the write or the swap fails, the staging directory
+    is removed and the old one comes back, so ``path`` is never left
+    missing or holding a mix of old and new files. ``path`` need not
+    exist yet."""
+    path = path.rstrip("/")
+    staging, backup = path + ".__staging__", path + ".__old__"
+    try:
+        write(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    had_path = os.path.exists(path)
+    if had_path:
+        shutil.move(path, backup)
+    try:
+        shutil.move(staging, path)
+    except BaseException:
+        # clear any partially-created target first (shutil.move into an
+        # existing dir would NEST the backup inside it), then restore
+        shutil.rmtree(path, ignore_errors=True)
+        if had_path:
+            shutil.move(backup, path)
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if had_path:
+        shutil.rmtree(backup)
 
 
 def write_bucketed_long_table(
@@ -133,7 +169,6 @@ def compact_long_table(
     Returns ``{"files_before": int, "files_after": int}``.
     """
     import pathlib
-    import shutil
 
     root = pathlib.Path(path)
 
@@ -145,33 +180,14 @@ def compact_long_table(
 
     before = len(_data_files(root))
     df = spark.read.format(fmt).load(path)
-    staging = str(root.with_name(root.name + ".__compact__"))
-    try:
-        (
-            df.repartition(target_partitions, "interval")
-            .sortWithinPartitions("interval", "name", "i_time")
-            .write.mode("overwrite")
-            .partitionBy("interval")
-            .format(fmt)
-            .save(staging)
-        )
-    except BaseException:
-        # failed compaction write: original untouched; drop the staging dir
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    backup = str(root.with_name(root.name + ".__old__"))
-    shutil.move(str(root), backup)
-    try:
-        shutil.move(staging, str(root))
-    except BaseException:
-        # crash-safety: a failure between the two moves must not leave the
-        # table directory missing — clear any partially-created target
-        # first (shutil.move into an existing dir would NEST the backup
-        # inside it), then restore the original from backup
-        shutil.rmtree(str(root), ignore_errors=True)
-        shutil.move(backup, str(root))
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    shutil.rmtree(backup)
+    replace_directory(
+        path,
+        lambda staging: df.repartition(target_partitions, "interval")
+        .sortWithinPartitions("interval", "name", "i_time")
+        .write.mode("overwrite")
+        .partitionBy("interval")
+        .format(fmt)
+        .save(staging),
+    )
     after = len(_data_files(root))
     return {"files_before": before, "files_after": after}

@@ -48,7 +48,6 @@ import functools
 import inspect
 import itertools
 import operator
-import shutil
 import time as _time
 from collections import OrderedDict
 
@@ -59,6 +58,7 @@ from pyspark.sql import types as T
 from kairos_spark.config import IntervalConfig, parse_intervals, require_interval
 from kairos_spark.functions.buckets import step_size_expr
 from kairos_spark.ingest import COARSE_SENTINEL, bucketize
+from kairos_spark.sources.tables import open_store, replace_directory
 from kairos_spark.timemath import is_gregorian
 from kairos_spark.types import type_ops
 
@@ -148,12 +148,13 @@ class _ParquetStore:
 
     def rewrite(self, predicate):
         """Keep the rows matching ``predicate``: write them aside, then
-        swap the directory in."""
+        swap the directory in (the old rows stay until the new ones are
+        in place)."""
         df = self.scan().where(predicate)
-        tmp = self.path.rstrip("/") + ".__rewrite__"
-        df.write.mode("overwrite").partitionBy("interval").parquet(tmp)
-        shutil.rmtree(self.path, ignore_errors=True)
-        shutil.move(tmp, self.path)
+        replace_directory(
+            self.path,
+            lambda tmp: df.write.mode("overwrite").partitionBy("interval").parquet(tmp),
+        )
 
 
 class Timeseries:
@@ -178,8 +179,6 @@ class Timeseries:
             # kairos 0.9.2 parity: construct from a store URL
             # (CHANGELOG; factory dispatch timeseries.py:288-297) —
             # here the URL picks the physical store layer
-            from kairos_spark.sources.tables import open_store
-
             handle = open_store(path)
             if handle.scheme == "memory":
                 path = None

@@ -5,16 +5,14 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from kairos_spark import configured_builder
 
 
 @pytest.fixture(scope="session")
 def spark():
     session = (
-        SparkSession.builder.master("local[4]")
-        .appName("kairos_spark-tests")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "4")
+        configured_builder("kairos_spark-tests", cores=4)
+        .master("local[4]")
         .config("spark.ui.enabled", "false")
         # 6g: the suite runs 500+ tests against ONE JVM; iterative
         # operators cache intermediates and the old 4g ceiling let a

@@ -13,6 +13,8 @@ BASE = 500000 * 3600
 def test_open_store_urls():
     h = open_store("parquet:///data/ts")
     assert h.scheme == "parquet" and h.path == "/data/ts"
+    # a relative path keeps its first segment (the URL's netloc)
+    assert open_store("parquet://data/ts").path == "data/ts"
     assert open_store("memory://").scheme == "memory"
     with pytest.raises(ValueError):
         open_store("redis://localhost")
@@ -52,6 +54,40 @@ def test_parquet_backed_timeseries(spark, tmp_path):
     }
     t.delete("web")
     assert t.list() == []
+
+
+def test_parquet_rewrite_failed_swap_keeps_rows(spark, tmp_path, monkeypatch):
+    """A failure while moving the rewritten rows into place raises and
+    leaves the stored rows as they were, with no staging or backup
+    directory left behind."""
+    import shutil
+
+    store = str(tmp_path / "store")
+    t = Timeseries(
+        spark,
+        type="count",
+        intervals={"minute": {"step": 60}},
+        path=store,
+    )
+    t.insert("web", 3, timestamp=BASE)
+    t.insert("api", 4, timestamp=BASE)
+    real_move = shutil.move
+    failed = []
+
+    def move(src, dst, *args, **kwargs):
+        # fail the first move INTO the store path: the rewritten rows
+        if str(dst) == store and not failed:
+            failed.append(src)
+            raise OSError("disk full")
+        return real_move(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "move", move)
+    with pytest.raises(OSError, match="disk full"):
+        t.delete("web")
+    monkeypatch.undo()
+    assert t.get("web", "minute", timestamp=BASE) == {BASE: 3.0}
+    assert t.get("api", "minute", timestamp=BASE) == {BASE: 4.0}
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["store"]
 
 
 def test_parquet_scan_pushdown(spark, tmp_path):

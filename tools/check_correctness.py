@@ -17,9 +17,9 @@ import numpy as np
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
 
 import __spark_entry__ as entry
+from kairos_spark import configured_builder
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -55,9 +55,8 @@ def canon(rows, cols):
 def main():
     only = set(sys.argv[1:])
     spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
+        configured_builder("kairos_spark-check-correctness", cores=8)
+        .master("local[8]")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
         .getOrCreate()

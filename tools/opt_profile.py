@@ -25,9 +25,8 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 import bench
+from kairos_spark import configured_builder
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -42,12 +41,8 @@ def main() -> None:
     args = ap.parse_args()
 
     builder = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("kairos_spark-opt-profile")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        configured_builder("kairos_spark-opt-profile", cores=int(CPUS))
+        .master(f"local[{CPUS}]")
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
     )

@@ -14,9 +14,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-from kairos_spark import queries as q
+from kairos_spark import configured_builder, queries as q
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -1438,9 +1436,8 @@ def plan_text(df) -> str:
 
 def main():
     spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
+        configured_builder("kairos_spark-plan-audit", cores=8)
+        .master("local[8]")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -35,9 +35,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import numpy as np
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entry
+from kairos_spark import configured_builder
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -64,9 +63,8 @@ def neg_zeros(df) -> dict:
 def main():
     only = set(sys.argv[1:])
     spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
+        configured_builder("kairos_spark-zero-audit", cores=8)
+        .master("local[8]")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
         .getOrCreate()
