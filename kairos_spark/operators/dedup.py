@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from kairos_spark.exact import _round6_ratio, _round6_ratio_dec
 from kairos_spark.operators.text import (
     TOKEN_REGEX,
     agree_lower,
@@ -36,14 +37,6 @@ MINHASH_PRIME = 17_592_186_044_399  # largest prime < 2^44
 def _md5_long(col: Column, skip: int = 0) -> Column:
     """44-bit slice of md5 as a non-negative long (11 hex chars)."""
     return F.conv(F.substring(F.md5(col), 1 + skip, 11), 16, 10).cast("long")
-
-
-# re-export: lives in text.py (dedup already imports text, so the
-# integer-ratio helper sits below both in the import graph)
-from kairos_spark.operators.text import (  # noqa: E402,F401
-    _round6_ratio,
-    _round6_ratio_dec,
-)
 
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -1071,7 +1064,7 @@ def dup_inflation(
     per_digest = d.groupBy("group", "__digest").agg(
         F.count("*").alias("__n"), F.min("__tok").alias("__t")
     )
-    from kairos_spark.operators.text import _round6_ratio_dec
+    from kairos_spark.exact import _round6_ratio_dec
 
     return per_digest.groupBy("group").agg(
         F.sum("__n").cast("long").alias("n_docs"),
@@ -1816,7 +1809,8 @@ def dup_quality_bias(
     map-only quality_score projection joined on the doc id; the
     bucket table is a ≤ size_cap-row aggregate. Text never shuffles
     twice."""
-    from kairos_spark.operators.text import _round6_ratio_dec, quality_score
+    from kairos_spark.exact import _round6_ratio_dec
+    from kairos_spark.operators.text import quality_score
 
     dg = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("__d"))
     sizes = dg.groupBy("__d").agg(
@@ -1914,7 +1908,7 @@ def shard_dup_locality(
     Scale shape: only (digest, shard) short keys shuffle — text never
     moves; two chained hash aggregates (digest×shard cells → digest
     groups) then a one-row combiner. No joins, no windows."""
-    from kairos_spark.operators.text import _round6_ratio_dec
+    from kairos_spark.exact import _round6_ratio_dec
 
     shard = (
         F.conv(
@@ -1987,7 +1981,8 @@ def cluster_quality_bias(
     the bucket table is ≤ size_cap−1 rows. The LSH/CC construction
     upstream is the banded scale path — this audit adds one hash join
     and two combiner aggregates on top."""
-    from kairos_spark.operators.text import _round6_ratio_dec, quality_score
+    from kairos_spark.exact import _round6_ratio_dec
+    from kairos_spark.operators.text import quality_score
 
     lab = clusters.select(F.col("node").alias(id_col), "cluster_id")
     sizes = lab.groupBy("cluster_id").agg(
@@ -2922,7 +2917,7 @@ def sig_size_sweep(
     allq = per_h[0]
     for frame in per_h[1:]:
         allq = allq.unionByName(frame)
-    from kairos_spark.operators.text import (
+    from kairos_spark.exact import (
         _round6_ratio_dec as _rdec,
         _round6_ratio_dec_signed as _rdecs,
     )
@@ -3312,7 +3307,7 @@ def minhash_len_bias(
         .cast("long")
     )
     quantized = base.select("len_bin", q.alias("__q"))
-    from kairos_spark.operators.text import (
+    from kairos_spark.exact import (
         _round6_ratio_dec as _rdec,
         _round6_ratio_dec_signed as _rdecs,
     )
@@ -3468,7 +3463,7 @@ def lsh_br_planner(
     allc = per_cfg[0]
     for frame in per_cfg[1:]:
         allc = allc.unionByName(frame)
-    from kairos_spark.operators.text import _round6_ratio_dec as _rdec
+    from kairos_spark.exact import _round6_ratio_dec as _rdec
 
     agg = allc.groupBy("bands", "rows_per_band", "t_star").agg(
         F.count("*").cast("long").alias("__n"),
@@ -3611,7 +3606,7 @@ def cluster_stability_ari(
     s2 = F.col("a") + F.col("c")
     num = F.lit(2) * F.col("__C") * F.col("a") - F.lit(2) * s1 * s2
     den = F.col("__C") * (F.lit(2) * F.col("a") + F.col("b") + F.col("c")) - F.lit(2) * s1 * s2
-    from kairos_spark.operators.text import _round6_ratio_signed
+    from kairos_spark.exact import _round6_ratio_signed
 
     return (
         nd.crossJoin(F.broadcast(ncl))

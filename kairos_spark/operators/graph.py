@@ -33,11 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kairos_spark.operators.text import (
-    _round6_bridge,
-    _round6_ratio,
-    _round6_ratio_dec,
-)
+from kairos_spark.exact import _round6_bridge, _round6_ratio, _round6_ratio_dec
 
 
 def pagerank(
@@ -556,7 +552,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     Scale shape: one degree aggregate, two hash joins to decorate edge
     endpoints, ONE combiner aggregate to a single row. Only
     (node, degree) and edge keys shuffle."""
-    from kairos_spark.operators.text import _round6_bridge, _round6_ratio
+    from kairos_spark.exact import _round6_bridge, _round6_ratio
 
     deg = (
         edges.select(F.col("a").alias("node"))

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kairos_spark.operators.text import _round6_ratio, _round6_ratio_dec
+from kairos_spark.exact import _round6_ratio, _round6_ratio_dec
 
 
 def banded_range_join(

@@ -20,7 +20,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from kairos_spark.operators.text import _round6_ratio
+from kairos_spark.exact import _round6_ratio
 
 
 def morton_z(x: Column, y: Column, bits: int = 16) -> Column:
@@ -168,10 +168,8 @@ def shard_balance(
 
     Scale shape: one map-side-combined aggregate to ``n_shards`` rows,
     then scalar math; the spine is ``n_shards`` literals."""
-    from kairos_spark.operators.text import (
-        _round6_ratio_dec,
-        agree_lower,
-    )
+    from kairos_spark.exact import _round6_ratio_dec
+    from kairos_spark.operators.text import agree_lower
 
     per_doc = df.select(
         (

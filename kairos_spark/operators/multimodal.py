@@ -344,7 +344,7 @@ def frame_dup_rate(df: DataFrame, frame_bytes: int = 256) -> DataFrame:
     set joins back on the digest key (correctly NOT broadcast —
     template-heavy corpora make it large); per-media rollup is the
     final combiner aggregate."""
-    from kairos_spark.operators.text import _round6_ratio
+    from kairos_spark.exact import _round6_ratio
 
     offsets = F.sequence(
         F.lit(0),

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from kairos_spark.operators.text import _round6_ratio
+from kairos_spark.exact import _round6_ratio
 
 # Ordered: applied in this sequence during redaction. SSN before phone
 # so 123-45-6789 is never half-eaten by a phone-shaped prefix match.
@@ -237,7 +237,7 @@ def l_diversity(
     the k_anonymity shape with one extra distinct aggregate."""
     from pyspark.sql.window import Window
 
-    from kairos_spark.operators.text import _round6_ratio_dec
+    from kairos_spark.exact import _round6_ratio_dec
 
     classes = df.groupBy(*quasi_cols).agg(
         F.count("*").cast("long").alias("class_size"),
@@ -294,7 +294,7 @@ def t_closeness(
     rows, one class-grain rollup. Raw records shuffle once."""
     from pyspark.sql.window import Window
 
-    from kairos_spark.operators.text import _round6_ratio_dec
+    from kairos_spark.exact import _round6_ratio_dec
 
     cnt = df.groupBy(*quasi_cols, F.col(rank_col).alias("__i")).agg(
         F.count("*").cast("long").alias("__c")

@@ -26,10 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kairos_spark.operators.dedup import _round6_ratio
-from kairos_spark.operators.text import (
+from kairos_spark.exact import (
     _cents,
     _round6_bridge,
+    _round6_ratio,
     _round6_ratio_dec,
     _round6_ratio_dec_signed,
     _round6_ratio_signed,
@@ -4416,7 +4416,7 @@ def value_precision_audit(
     templated — either way percentile/drift audits downstream are
     reading artifacts, not signal.
 
-    Exactness: cents via the engine-mirrored ``text._cents``
+    Exactness: cents via the engine-mirrored ``exact._cents``
     (sign·floor(|x·100|+0.5)); every share is ONE exact integer
     ratio; the modal digit breaks count ties on the SMALLER digit
     (deterministic on uniform adversarial grids). NULL values are
@@ -4428,7 +4428,7 @@ def value_precision_audit(
     Scale shape: map-only cents extraction, one (group, digit)-grain
     aggregate (≤ 10 rows per group) and one group-grain rollup — the
     modal pick is a tiny per-group sort, never a corpus window."""
-    from kairos_spark.operators.text import _cents
+    from kairos_spark.exact import _cents
 
     base = df.where(F.col(value_col).isNotNull()).select(
         F.col(group_col).alias("group"),

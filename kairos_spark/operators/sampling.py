@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from kairos_spark.operators.text import _round6_ratio, agree_lower, normalize_ws
+from kairos_spark.exact import _round6_ratio
+from kairos_spark.operators.text import agree_lower, normalize_ws
 
 # Bucket granularity for fraction thresholds: fractions are exact to
 # 1e-6, and thresholds stay far below 2^44 so the md5-slice math is
@@ -856,11 +857,8 @@ def pipeline_roi(
     aggregate for the dedup keep (short keys; text never shuffles),
     and a |sources|-row aggregate; the corpus sqrt total rides a
     1-row broadcast."""
-    from kairos_spark.operators.text import (
-        _round6_ratio_dec,
-        quality_score,
-        token_count,
-    )
+    from kairos_spark.exact import _round6_ratio_dec
+    from kairos_spark.operators.text import quality_score, token_count
 
     base = df.select(
         F.col(id_col),
@@ -961,7 +959,7 @@ def fim_split_audit(
     Scale shape: a map-only projection (hash, two mods, three spans)
     followed by ONE |groups|-row combiner aggregate. No joins, no
     windows; text never shuffles."""
-    from kairos_spark.operators.text import _round6_ratio_dec
+    from kairos_spark.exact import _round6_ratio_dec
 
     ln = F.length(F.col(text_col)).cast("long")
     idc = F.col(id_col).cast("string")

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from kairos_spark.operators.text import (
+from kairos_spark.exact import (
     _round6_ratio,
     _round6_ratio_dec,
     _round6_ratio_dec_signed,
@@ -1324,7 +1324,7 @@ def rp_distortion(
         ).cast("long").alias("hamming"),
         q.alias("__q"),
     )
-    from kairos_spark.operators.text import _round6_ratio_dec_signed
+    from kairos_spark.exact import _round6_ratio_dec_signed
 
     return pairs.groupBy("hamming").agg(
         F.count("*").cast("long").alias("n_pairs"),
@@ -1439,7 +1439,7 @@ def ivf_probe_sweep(
             F.count("*").alias("__t"),
         )
     )
-    from kairos_spark.operators.text import _round6_ratio_dec
+    from kairos_spark.exact import _round6_ratio_dec
 
     sc = (
         qrank.join(sizes, "list_id")
@@ -1607,7 +1607,7 @@ def embedding_anisotropy(
         F.max("__n").cast("long").alias("n"),
         F.count("*").cast("long").alias("dim"),
     )
-    from kairos_spark.operators.text import _round6_bridge
+    from kairos_spark.exact import _round6_bridge
 
     return tr.crossJoin(F.broadcast(lam)).select(
         "n",

@@ -547,7 +547,7 @@ def bloom_fpr_audit(
     per_dg = back.groupBy("__d").agg(
         F.min(F.when(F.col("__c") >= 2, 1).otherwise(0)).alias("__fp")
     )
-    from kairos_spark.operators.text import _round6_ratio
+    from kairos_spark.exact import _round6_ratio
 
     agg = per_dg.agg(
         F.count("*").cast("long").alias("n_digests"),

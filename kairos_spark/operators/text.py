@@ -11,6 +11,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from kairos_spark.exact import (
+    _round6_bridge,
+    _round6_ratio,
+    _round6_ratio_dec,
+    _round6_ratio_dec_signed,
+)
+
 # BPE-ish tokenizer: letter runs, digit runs, single punctuation marks.
 # Whitespace spelled out ([ \t\n\f\r]) rather than \s: Java regex \s
 # includes vertical tab (\x0B), RE2 (DuckDB) \s does not — explicit
@@ -37,136 +44,6 @@ def agree_lower(col: Column) -> Column:
     canonical lowercase for every tokenizer/normalizer in the repo)."""
     return F.lower(F.translate(col, _LOWER_HAZ_SRC, _LOWER_HAZ_DST))
 
-
-def _round6_ratio(num: Column, den: Column) -> Column:
-    """round-half-up(num/den, 6) via exact integer arithmetic:
-    floor((2·num·10^6 + den) / (2·den)) / 10^6. Integer-count ratios
-    are exact rationals that can land EXACTLY on a 7th-decimal midpoint
-    (e.g. 41/640 = 0.0640625, or 4 puncts in 512 chars = 0.0078125),
-    where Spark's shortest-string round and DuckDB's multiply-round
-    disagree; integer math is engine-identical. den ≥ 1 required.
-    Bounds: the floor is mathematically exact while 2·10^6·num + den
-    stays under 2^53 (num ≲ 2^32); between 2^32 and the ANSI BIGINT
-    ceiling (num < (2^63−1)/2·10^6 ≈ 4.6·10^12) cross-engine PARITY
-    still holds — both engines perform the identical int64→double
-    conversion and the identical double division — but the result may
-    differ from true half-up by 1 ulp of the quotient. Past 4.6·10^12
-    the 2·10^6·num product hard-errors under Spark ANSI (and overflows
-    DuckDB BIGINT): route through :func:`_round6_ratio_dec` instead.
-    The float division's error (~1 ulp) is far below the ≥ 1/(2·den)
-    gap to the nearest wrong integer, so the floor is exact in the
-    2^53 regime. Oracles mirror with
-    floor((2000000*n + d) / (2.0*d)) / 1000000.0."""
-    # force 64-bit arithmetic: length()/regexp_count() return INT, and
-    # 2e6·num in 32-bit hard-errors under ANSI once num > 1073 (hit by
-    # a ~2900-digit adversarial doc; DuckDB auto-widens, Spark doesn't)
-    num = num.cast("long")
-    den = den.cast("long")
-    return (
-        F.floor((F.lit(2_000_000) * num + den) / (F.lit(2) * den)).cast("long")
-        / F.lit(1_000_000.0)
-    )
-
-
-def _round6_ratio_dec(num: Column, den: Column) -> Column:
-    """:func:`_round6_ratio` for numerators that can exceed the BIGINT
-    product ceiling (num ≥ ~4.6·10^12, e.g. pairwise-count products like
-    2·f2·v_obs or micro-unit monetary sums): the same
-    floor((2·10^6·num + den)/(2·den)) computed entirely in
-    DECIMAL(38,0), which holds 38 digits — no ANSI overflow and no
-    double rounding anywhere. The division is made exact by stripping
-    the remainder first (x − pmod(x, y) is an exact multiple of y, so
-    Spark's DECIMAL division returns the integer quotient exactly at
-    any result scale). Requires den ≥ 1 and num/den < ~9·10^12 so the
-    quotient fits BIGINT — every round-6 ratio/estimate here is far
-    below that. Verified engine-identical against DuckDB HUGEINT on
-    midpoint and 10^17-scale fixtures (tests/test_round6_ratio.py).
-    Oracles mirror with
-    CAST((2000000::HUGEINT*n + d) // (2::HUGEINT*d) AS BIGINT)
-    / 1000000.0."""
-    x = num.cast("decimal(38,0)") * F.lit(2_000_000) + den.cast("decimal(38,0)")
-    y = den.cast("decimal(38,0)") * F.lit(2)
-    q = (x - F.pmod(x, y)) / y
-    return q.cast("long") / F.lit(1_000_000.0)
-
-
-def _round6_bridge(col: Column) -> Column:
-    """Engine-agreeing round-6 for a DOUBLE that is NOT expressible as
-    one integer ratio (iterative fixed points: pagerank, absorption
-    probabilities). Plain round(double, 6) splits when the double's
-    shortest decimal rendering is a 7-digit midpoint whose nearest
-    double sits below it (41/640 → Spark 0.064063 via shortest-string
-    HALF_UP, DuckDB 0.064062 via the multiply; engine-probed). The
-    bridge casts to DECIMAL(27,12) first: both engines' double→decimal
-    conversions land on the IDENTICAL 12-digit decimal (Spark's
-    shortest-string parse and DuckDB's ×10^12 multiply agree — a split
-    would need the double within half an ulp of a 13th-digit midpoint,
-    and for every ≤12-digit-exact value, midpoints included, both are
-    exact), and round(decimal, 6) is plain HALF_UP in both. Engine
-    battery: tests/test_round6_ratio.py::test_round6_bridge_*.
-    AGREEMENT BOUND: the two conversions coincide only while the
-    double's binary tail beyond 12 decimals is sub-half-ulp-of-10^-12,
-    i.e. ulp(x) < 10^-12 → |x| < ~4.5·10^3 (probed r7: at 10^12
-    magnitudes Spark zero-pads the shortest rendering while DuckDB
-    expands the binary fraction — they genuinely differ). Every call
-    site here carries probabilities/ratios ≤ 1; keep it that way.
-    Oracles mirror with
-    CAST(round(CAST(x AS DECIMAL(27,12)), 6) AS DOUBLE)."""
-    return F.round(col.cast("decimal(27,12)"), 6).cast("double")
-
-
-def _round6_ratio_dec_signed(num: Column, den: Column) -> Column:
-    """:func:`_round6_ratio_dec` for numerators that can be NEGATIVE
-    (den ≥ 1): round half AWAY FROM ZERO like ``_round6_ratio_signed``.
-    Oracles mirror with
-    CASE WHEN n >= 0 THEN  CAST(( 2000000::HUGEINT*n + d)
-                                // (2::HUGEINT*d) AS BIGINT) / 1000000.0
-         ELSE              -CAST((-2000000::HUGEINT*n + d)
-                                // (2::HUGEINT*d) AS BIGINT) / 1000000.0 END.
-    The `+ 0.0` normalizes the signed zero the `-mag` branch produces
-    when a negative numerator rounds to zero (|num|/den < 5e-7): Spark
-    would emit -0.0 while the oracle's negated-BIGINT zero is +0.0,
-    and the driver value-hash renders them differently (ADVICE r10).
-    IEEE -0.0 + 0.0 = +0.0, identity elsewhere."""
-    mag = _round6_ratio_dec(F.abs(num), den)
-    return F.when(num >= 0, mag).otherwise(-mag) + F.lit(0.0)
-
-
-def _round6_ratio_signed(num: Column, den: Column) -> Column:
-    """_round6_ratio for a numerator that can be NEGATIVE (den > 0):
-    round half AWAY FROM ZERO, matching what both engines' round()
-    does on negative doubles — sign(num) · half-up(|num|/den). Oracles
-    mirror with
-    CASE WHEN n >= 0 THEN  floor(( 2000000*n + d) / (2.0*d)) / 1000000.0
-         ELSE              -floor((-2000000*n + d) / (2.0*d)) / 1000000.0 END.
-    The `+ 0.0` normalizes the signed zero the `-mag` branch produces
-    when a negative numerator rounds to zero (|num|/den < 5e-7): Spark
-    would emit -0.0 while the oracle's negated floor-zero is +0.0, and
-    the driver value-hash renders them differently (ADVICE r10). IEEE
-    -0.0 + 0.0 = +0.0, identity elsewhere."""
-    mag = _round6_ratio(F.abs(num), den)
-    return F.when(num >= 0, mag).otherwise(-mag) + F.lit(0.0)
-
-
-def _cents(col: Column) -> Column:
-    """Exact integer hundredths of a (nominally 2-decimal-fixed) value
-    with an ENGINE-MIRRORED tie rule. ``F.rint`` is round-half-to-even
-    while DuckDB's ``round(x, 0)`` is half-away-from-zero: under the
-    2dp contract x·100 never lands on .5 so they agree, but the
-    contract is unasserted and testdata encodings change between
-    rounds (ADVICE r8) — a 3-decimal value like 0.125 would split the
-    engines. Both sides therefore compute the identical
-    sign(x)·floor(|x·100| + 0.5): floor on the same IEEE double is
-    engine-exact. Oracles mirror with
-    CASE WHEN CAST(v AS DOUBLE) >= 0
-         THEN  CAST(floor( CAST(v AS DOUBLE)*100 + 0.5) AS BIGINT)
-         ELSE -CAST(floor(-CAST(v AS DOUBLE)*100 + 0.5) AS BIGINT) END."""
-    x = col.cast("double") * F.lit(100)
-    return (
-        F.when(x >= 0, F.floor(x + F.lit(0.5)))
-        .otherwise(-F.floor(-x + F.lit(0.5)))
-        .cast("long")
-    )
 
 # Tiny per-language stopword panels for the n-gram/stopword heuristic.
 # Deliberately small and fixed so language_id is deterministic and

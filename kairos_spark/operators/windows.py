@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from kairos_spark.operators.text import (
+from kairos_spark.exact import (
     _round6_bridge,
     _round6_ratio,
     _round6_ratio_dec,
@@ -2683,7 +2683,7 @@ def forecast_mase(
     rows, one combiner rollup."""
     from pyspark.sql.window import Window
 
-    from kairos_spark.operators.text import _round6_ratio_dec
+    from kairos_spark.exact import _round6_ratio_dec
 
     hourly = (
         df.select(

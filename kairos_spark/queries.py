@@ -20,6 +20,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from kairos_spark.config import parse_intervals
+from kairos_spark.exact import (
+    _cents,
+    _round6_ratio,
+    _round6_ratio_dec_signed,
+    cents_sql,
+    round6_bridge_sql,
+    round6_ratio_dec_signed_sql,
+    round6_ratio_dec_sql,
+    round6_ratio_signed_sql,
+    round6_ratio_sql,
+)
 from kairos_spark.ingest import bucketize
 from kairos_spark.operators import (
     dedup,
@@ -163,8 +174,8 @@ def q_ts_series_transforms_hour(spark, sf_dir):
         # half-up ratio instead of bare F.round(avg). min/max/sum of
         # 2dp-exact values have zero 3rd..7th decimals — no midpoint
         # exists, bare round-6 is the identity and stays.
-        text._round6_ratio_dec_signed(
-            F.sum(text._cents(F.col("value"))),
+        _round6_ratio_dec_signed(
+            F.sum(_cents(F.col("value"))),
             F.lit(100) * F.count("value"),
         ).alias("mean_v"),
         ex["count"].alias("count_v"),
@@ -377,7 +388,7 @@ def q_ts_histogram_transforms(spark, sf_dir):
         # weighted mean collapses to avg over raw integer keys — an
         # exact integer ratio, so round through the integer half-up
         # helper, never bare F.round(avg) (CLAUDE.md midpoint class)
-        text._round6_ratio(
+        _round6_ratio(
             F.sum(F.col("value").cast("long")), F.count("value")
         ).alias("wmean"),
         ex["count"].alias("total_n"),
@@ -493,13 +504,10 @@ _TS_ORACLES = {
           AND floor(epoch(ts)/60)*60 < 1704499200
         GROUP BY 1, 2
     """,
-    "ts_series_transforms_hour": """
+    "ts_series_transforms_hour": f"""
         WITH g AS (
           SELECT CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS i_time,
-                 sum(CASE WHEN CAST(value AS DOUBLE) >= 0
-                      THEN  CAST(floor( CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT)
-                      ELSE -CAST(floor(-CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT)
-                     END)::HUGEINT AS cents,
+                 sum({cents_sql("value")})::HUGEINT AS cents,
                  100::HUGEINT * count(value) AS den,
                  count(value) AS count_v,
                  round(min(value), 6) AS min_v,
@@ -508,12 +516,7 @@ _TS_ORACLES = {
           FROM events WHERE event_type = 'click' GROUP BY 1
         )
         SELECT i_time,
-               CASE WHEN cents >= 0
-                    THEN  CAST(( 2000000::HUGEINT * cents + den)
-                               // (2::HUGEINT * den) AS BIGINT) / 1000000.0
-                    ELSE -CAST((-2000000::HUGEINT * cents + den)
-                               // (2::HUGEINT * den) AS BIGINT) / 1000000.0
-               END AS mean_v,
+               {round6_ratio_dec_signed_sql("cents", "den")} AS mean_v,
                count_v, min_v, max_v, sum_v
         FROM g
     """,
@@ -662,10 +665,9 @@ _TS_ORACLES = {
         SELECT name, i_time, cnt FROM c
         WHERE i_time > (SELECT max(i_time) FROM c) - 48*3600
     """,
-    "ts_histogram_transforms": """
+    "ts_histogram_transforms": f"""
         SELECT CAST(strftime(ts, '%Y%m%d') AS BIGINT) AS i_time,
-               floor((2000000 * sum(user_id % 10) + count(*))
-                     / (2.0 * count(*))) / 1000000.0 AS wmean,
+               {round6_ratio_sql("sum(user_id % 10)", "count(*)")} AS wmean,
                count(*) AS total_n,
                min(user_id % 10) AS min_k,
                max(user_id % 10) AS max_k,
@@ -759,11 +761,11 @@ def q_q1_pricing_summary(spark, sf_dir):
             # avg of integer-valued quantities / 2dp discounts are
             # exact rationals — engine-exact integer half-up instead of
             # the midpoint-splitting double round (the chao1 class)
-            text._round6_ratio(
+            _round6_ratio(
                 F.sum(F.col("l_quantity").cast("long")), F.count("*")
             ).alias("avg_qty"),
-            text._round6_ratio(
-                F.sum(text._cents(F.col("l_discount"))),
+            _round6_ratio(
+                F.sum(_cents(F.col("l_discount"))),
                 F.lit(100) * F.count("*"),
             ).alias("avg_disc"),
             F.count("*").alias("count_order"),
@@ -846,7 +848,7 @@ def q_json_props_stats(spark, sf_dir):
     return ev.groupBy(F.col("event_type").alias("name")).agg(
         F.count("*").alias("n"),
         F.when(
-            F.count(k) > 0, text._round6_ratio_dec_signed(F.sum(k), F.count(k))
+            F.count(k) > 0, _round6_ratio_dec_signed(F.sum(k), F.count(k))
         )
         .otherwise(F.lit(-1.0))
         .alias("k_mean"),
@@ -1475,7 +1477,7 @@ def q_multimodal_features(spark, sf_dir):
         cnt = F.coalesce(
             F.rint(F.col("features")[i] * F.col("n_bytes")).cast("long"), F.lit(0)
         )
-        return text._round6_ratio(cnt, F.greatest(F.col("n_bytes"), F.lit(1)))
+        return _round6_ratio(cnt, F.greatest(F.col("n_bytes"), F.lit(1)))
 
     return feats.select(
         "media_id",
@@ -4807,18 +4809,26 @@ QUERIES = {
     "mrr_sessions": q_mrr_sessions,
 }
 
+# DuckDB spellings of text_stats' per-document counts, shared by the
+# text-stat oracles. Raw strings: the regexes carry backslashes, which
+# an f-string replacement field cannot.
+_PUNCT_SQL = r"len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))"
+_SPACES_SQL = r"length(text) - length(regexp_replace(text, '\s', '', 'g'))"
+_STOP_HITS_SQL = (
+    r"len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|for|with)\b'))"
+)
+_WORDS_SQL = r"greatest(len(regexp_split_to_array(trim(text), '\s+')), 1)"
+
 ORACLES = dict(_TS_ORACLES)
 ORACLES.update(
     {
-        "q1_pricing_summary": """
+        "q1_pricing_summary": f"""
             SELECT l_returnflag, l_linestatus,
                    round(sum(l_quantity), 4) AS sum_qty,
                    round(sum(l_extendedprice), 4) AS sum_base_price,
                    round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-                   floor((2000000 * sum(CAST(l_quantity AS BIGINT)) + count(*))
-                         / (2.0 * count(*))) / 1000000.0 AS avg_qty,
-                   floor((2000000 * sum(CAST(floor(CAST(l_discount AS DOUBLE)*100 + 0.5) AS BIGINT)) + 100 * count(*))
-                         / (2.0 * 100 * count(*))) / 1000000.0 AS avg_disc,
+                   {round6_ratio_sql("sum(CAST(l_quantity AS BIGINT))", "count(*)")} AS avg_qty,
+                   {round6_ratio_sql(f"sum({cents_sql('l_discount')})", "100 * count(*)")} AS avg_disc,
                    count(*) AS count_order
             FROM lineitem
             WHERE l_shipdate <= TIMESTAMP '2000-09-02'
@@ -4834,7 +4844,7 @@ ORACLES.update(
             JOIN nation ON c_nationkey = n_nationkey
             GROUP BY 1
         """,
-        "json_props_stats": """
+        "json_props_stats": f"""
             WITH ext AS (
               SELECT event_type,
                      CASE WHEN json_valid(props)
@@ -4842,19 +4852,14 @@ ORACLES.update(
               FROM events
             ), kk AS (
               SELECT event_type,
-                     CASE WHEN regexp_matches(vs, '^-?[0-9]{1,12}$')
+                     CASE WHEN regexp_matches(vs, '^-?[0-9]{{1,12}}$')
                           THEN CAST(vs AS BIGINT) END AS v
               FROM ext
             )
             SELECT event_type AS name,
                    count(*) AS n,
                    CASE WHEN count(v) = 0 THEN -1.0
-                        WHEN sum(v) >= 0 THEN
-                          CAST((2000000::HUGEINT * sum(v) + count(v))
-                               // (2::HUGEINT * count(v)) AS BIGINT) / 1000000.0
-                        ELSE
-                          -CAST((-2000000::HUGEINT * sum(v) + count(v))
-                                // (2::HUGEINT * count(v)) AS BIGINT) / 1000000.0
+                        ELSE {round6_ratio_dec_signed_sql("sum(v)", "count(v)")}
                    END AS k_mean,
                    coalesce(min(v), -1) AS k_min,
                    coalesce(max(v), -1) AS k_max,
@@ -4957,22 +4962,23 @@ ORACLES.update(
             )
             SELECT min(doc_id) AS doc_id FROM docs GROUP BY md5(text)
         """,
-        "text_stats": """
+        "text_stats": f"""
             SELECT doc_id,
                    length(text) AS n_chars,
                    len(regexp_split_to_array(trim(text), '\\s+')) AS n_words,
                    len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS n_tokens,
-                   floor((2000000 * len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) + greatest(length(text), 1))
-                         / (2.0 * greatest(length(text), 1))) / 1000000.0 AS punct_ratio,
-                   floor((2000000 * len(regexp_extract_all(text, '[0-9]')) + greatest(length(text), 1))
-                         / (2.0 * greatest(length(text), 1))) / 1000000.0 AS digit_ratio,
-                   floor((2000000 * (length(text) - length(regexp_replace(text, '\\s', '', 'g'))) + greatest(length(text), 1))
-                         / (2.0 * greatest(length(text), 1))) / 1000000.0 AS space_ratio,
-                   floor((2000000 * len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|that|for|with)\\b')) + greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-                         / (2.0 * greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))) / 1000000.0
+                   {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
+                   {round6_ratio_sql(
+                       "len(regexp_extract_all(text, '[0-9]'))",
+                       "greatest(length(text), 1)",
+                   )} AS digit_ratio,
+                   {round6_ratio_sql(_SPACES_SQL, "greatest(length(text), 1)")} AS space_ratio,
+                   {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
                          AS stopword_ratio,
-                   floor((2000000 * length(regexp_replace(text, '[^A-Za-z]', '', 'g')) + greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-                         / (2.0 * greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))) / 1000000.0
+                   {round6_ratio_sql(
+                       "length(regexp_replace(text, '[^A-Za-z]', '', 'g'))",
+                       _WORDS_SQL,
+                   )}
                          AS mean_word_len
             FROM documents
         """,
@@ -5015,7 +5021,7 @@ ORACLES.update(
                                   ELSE 100000 END
             GROUP BY 1
         """,
-        "repetition_stats": """
+        "repetition_stats": f"""
             WITH w AS (
                 SELECT doc_id,
                        string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS ws
@@ -5029,10 +5035,8 @@ ORACLES.update(
             SELECT doc_id,
                    CAST(sum(c) AS BIGINT) AS n_grams,
                    CAST(count(*) AS BIGINT) AS n_distinct,
-                   floor((2000000 * (sum(c) - count(*)) + sum(c))
-                         / (2.0 * sum(c))) / 1000000.0 AS dup_frac,
-                   floor((2000000 * max(c) + sum(c))
-                         / (2.0 * sum(c))) / 1000000.0 AS top_share
+                   {round6_ratio_sql("sum(c) - count(*)", "sum(c)")} AS dup_frac,
+                   {round6_ratio_sql("max(c)", "sum(c)")} AS top_share
             FROM c GROUP BY 1
         """,
         "word_entropy": """
@@ -5088,7 +5092,7 @@ ORACLES.update(
                    CAST(sum(n_chars) AS BIGINT) AS sum_chars
             FROM c GROUP BY 1
         """,
-        "cohort_retention": """
+        "cohort_retention": f"""
             WITH e AS (
                 SELECT user_id, event_type,
                        CAST(floor(epoch(ts)/86400) AS BIGINT) * 86400 AS day
@@ -5113,8 +5117,7 @@ ORACLES.update(
             SELECT cohort, "offset",
                    CAST(n_active AS BIGINT) AS n_active,
                    CAST(cohort_size AS BIGINT) AS cohort_size,
-                   floor((2000000 * n_active + cohort_size)
-                         / (2.0 * cohort_size)) / 1000000.0 AS retention
+                   {round6_ratio_sql("n_active", "cohort_size")} AS retention
             FROM per JOIN sizes USING (cohort)
         """,
         "dedup_incremental": """
@@ -5230,7 +5233,7 @@ ORACLES.update(
         # high nibble b: exactly the odd-position chars of hex(payload).
         # regexp_replace('(.).','\1') keeps the first char of each hex
         # pair, then per-digit counting is length arithmetic.
-        "multimodal_features": r"""
+        "multimodal_features": rf"""
             WITH h AS (
                 SELECT doc_id AS media_id,
                        octet_length(encode(text)) AS n_bytes,
@@ -5239,16 +5242,26 @@ ORACLES.update(
             )
             SELECT media_id,
                    CAST(n_bytes AS BIGINT) AS n_bytes,
-                   floor((2000000 * (length(nib) - length(replace(nib, '0', ''))) + greatest(n_bytes, 1))
-                         / (2.0 * greatest(n_bytes, 1))) / 1000000.0 AS f0,
-                   floor((2000000 * (length(nib) - length(replace(nib, '3', ''))) + greatest(n_bytes, 1))
-                         / (2.0 * greatest(n_bytes, 1))) / 1000000.0 AS f3,
-                   floor((2000000 * (length(nib) - length(replace(nib, '7', ''))) + greatest(n_bytes, 1))
-                         / (2.0 * greatest(n_bytes, 1))) / 1000000.0 AS f7,
-                   floor((2000000 * (length(nib) - length(replace(nib, 'B', ''))) + greatest(n_bytes, 1))
-                         / (2.0 * greatest(n_bytes, 1))) / 1000000.0 AS f11,
-                   floor((2000000 * (length(nib) - length(replace(nib, 'F', ''))) + greatest(n_bytes, 1))
-                         / (2.0 * greatest(n_bytes, 1))) / 1000000.0 AS f15
+                   {round6_ratio_sql(
+                       "length(nib) - length(replace(nib, '0', ''))",
+                       "greatest(n_bytes, 1)",
+                   )} AS f0,
+                   {round6_ratio_sql(
+                       "length(nib) - length(replace(nib, '3', ''))",
+                       "greatest(n_bytes, 1)",
+                   )} AS f3,
+                   {round6_ratio_sql(
+                       "length(nib) - length(replace(nib, '7', ''))",
+                       "greatest(n_bytes, 1)",
+                   )} AS f7,
+                   {round6_ratio_sql(
+                       "length(nib) - length(replace(nib, 'B', ''))",
+                       "greatest(n_bytes, 1)",
+                   )} AS f11,
+                   {round6_ratio_sql(
+                       "length(nib) - length(replace(nib, 'F', ''))",
+                       "greatest(n_bytes, 1)",
+                   )} AS f15
             FROM h
         """,
         # anti-diagonal islands: a shared span of length S produces
@@ -5285,7 +5298,7 @@ ORACLES.update(
             FROM runs GROUP BY id_a, id_b, diag, island
             HAVING count(*) + 15 >= 40
         """,
-        "ngram_novelty": r"""
+        "ngram_novelty": rf"""
             WITH norm AS (
                 SELECT doc_id, regexp_replace(lower(text), '\s+', ' ', 'g') AS n
                 FROM documents
@@ -5302,8 +5315,10 @@ ORACLES.update(
             SELECT doc_id,
                    CAST(count(*) AS BIGINT) AS n_grams,
                    CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
-                   floor((2000000 * sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) + count(*))
-                         / (2.0 * count(*))) / 1000000.0 AS novelty
+                   {round6_ratio_sql(
+                       "sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)",
+                       "count(*)",
+                   )} AS novelty
             FROM grams JOIN gdf USING (g)
             GROUP BY doc_id
         """,
@@ -5411,16 +5426,16 @@ _SHINGLE_CTE = """
 
 ORACLES.update(
     {
-        "quality_scores": """
+        "quality_scores": f"""
             WITH stats AS (
                 SELECT doc_id,
                        len(regexp_split_to_array(trim(text), '\\s+')) AS n_words,
-                       floor((2000000 * len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) + greatest(length(text), 1))
-                             / (2.0 * greatest(length(text), 1))) / 1000000.0 AS punct_ratio,
-                       floor((2000000 * len(regexp_extract_all(text, '[0-9]')) + greatest(length(text), 1))
-                             / (2.0 * greatest(length(text), 1))) / 1000000.0 AS digit_ratio,
-                       floor((2000000 * len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|that|for|with)\\b')) + greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-                             / (2.0 * greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))) / 1000000.0
+                       {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
+                       {round6_ratio_sql(
+                           "len(regexp_extract_all(text, '[0-9]'))",
+                           "greatest(length(text), 1)",
+                       )} AS digit_ratio,
+                       {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
                              AS stopword_ratio
                 FROM documents
             )
@@ -5477,7 +5492,7 @@ ORACLES.update(
                    min((a + b) % 17592186044399) AS h1
             FROM h GROUP BY 1
         """,
-        "event_sessions": """
+        "event_sessions": f"""
             WITH o AS (
                 SELECT user_id, event_id, epoch(ts) AS secs,
                        lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY epoch(ts), event_id) AS prev
@@ -5493,8 +5508,7 @@ ORACLES.update(
             SELECT user_id,
                    CAST(max(session_id) AS BIGINT) AS n_sessions,
                    count(*) AS n_events,
-                   floor((2000000 * count(*) + max(session_id))
-                         / (2.0 * max(session_id))) / 1000000.0 AS events_per_session
+                   {round6_ratio_sql("count(*)", "max(session_id)")} AS events_per_session
             FROM s GROUP BY 1
         """,
         "asof_signup_purchase": """
@@ -5531,7 +5545,7 @@ ORACLES.update(
             WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
         """,
         "dedup_ngram_jaccard": """
-            WITH """ + _SHINGLE_CTE + """,
+            WITH """ + _SHINGLE_CTE + f""",
             sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
             shared AS (
                 SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
@@ -5539,14 +5553,14 @@ ORACLES.update(
                 GROUP BY 1, 2
             )
             SELECT id_a, id_b,
-                   floor((2000000 * shared + (sa.sz + sb.sz - shared)) / (2.0 * (sa.sz + sb.sz - shared))) / 1000000.0 AS jaccard
+                   {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} AS jaccard
             FROM shared
             JOIN sz sa ON sa.doc_id = id_a
             JOIN sz sb ON sb.doc_id = id_b
-            WHERE floor((2000000 * shared + (sa.sz + sb.sz - shared)) / (2.0 * (sa.sz + sb.sz - shared))) / 1000000.0 >= 0.25
+            WHERE {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} >= 0.25
         """,
         "dedup_clusters": """
-            WITH RECURSIVE """ + _SHINGLE_CTE + """,
+            WITH RECURSIVE """ + _SHINGLE_CTE + f""",
             sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
             shared AS (
                 SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
@@ -5557,7 +5571,7 @@ ORACLES.update(
                 SELECT id_a, id_b FROM shared
                 JOIN sz sa ON sa.doc_id = id_a
                 JOIN sz sb ON sb.doc_id = id_b
-                WHERE floor((2000000 * shared + (sa.sz + sb.sz - shared)) / (2.0 * (sa.sz + sb.sz - shared))) / 1000000.0 >= 0.25
+                WHERE {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} >= 0.25
             ),
             edges AS (
                 SELECT id_a AS a, id_b AS b FROM p
@@ -5571,7 +5585,7 @@ ORACLES.update(
             )
             SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY 1
         """,
-        "training_data_prep": """
+        "training_data_prep": f"""
             WITH u AS (
                 SELECT doc_id, text, lang FROM documents
                 UNION ALL
@@ -5583,12 +5597,12 @@ ORACLES.update(
             stats AS (
                 SELECT doc_id, lang,
                        len(regexp_split_to_array(trim(text), '\\s+')) AS n_words,
-                       floor((2000000 * len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) + greatest(length(text), 1))
-                             / (2.0 * greatest(length(text), 1))) / 1000000.0 AS punct_ratio,
-                       floor((2000000 * len(regexp_extract_all(text, '[0-9]')) + greatest(length(text), 1))
-                             / (2.0 * greatest(length(text), 1))) / 1000000.0 AS digit_ratio,
-                       floor((2000000 * len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|that|for|with)\\b')) + greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-                             / (2.0 * greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))) / 1000000.0
+                       {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
+                       {round6_ratio_sql(
+                           "len(regexp_extract_all(text, '[0-9]'))",
+                           "greatest(length(text), 1)",
+                       )} AS digit_ratio,
+                       {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
                              AS stopword_ratio
                 FROM k
             ),
@@ -5631,7 +5645,7 @@ ORACLES.update(
 # (md5 double-hashing, fixed band digests), so even the "approximate"
 # dedup path has an exact SQL twin.
 ORACLES["minhash_lsh_pairs"] = """
-    WITH """ + _SHINGLE_CTE + """,
+    WITH """ + _SHINGLE_CTE + f""",
     h AS (
         SELECT doc_id,
                ('0x' || substr(md5(s), 1, 11))::BIGINT AS a,
@@ -5655,8 +5669,10 @@ ORACLES["minhash_lsh_pairs"] = """
     ),
     est AS (
         SELECT c.id_a, c.id_b,
-               floor((2000000 * sum(CASE WHEN sa.hv = sb.hv THEN 1 ELSE 0 END) + 32)
-                     / (2.0 * 32)) / 1000000.0 AS est_jaccard
+               {round6_ratio_sql(
+                   "sum(CASE WHEN sa.hv = sb.hv THEN 1 ELSE 0 END)",
+                   "32",
+               )} AS est_jaccard
         FROM cand c
         JOIN sig sa ON sa.doc_id = c.id_a
         JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
@@ -5929,7 +5945,7 @@ ORACLES["rolling_distinct_users"] = """
     GROUP BY 1
 """
 
-ORACLES["funnel_conversion"] = """
+ORACLES["funnel_conversion"] = f"""
     WITH s1 AS (
       SELECT user_id AS u, min(epoch(ts)) AS t
       FROM events WHERE event_type = 'signup' GROUP BY 1
@@ -5950,8 +5966,7 @@ ORACLES["funnel_conversion"] = """
       UNION ALL SELECT 3, 'purchase', count(*) FROM s3
     )
     SELECT stage, step_name, n_users,
-           floor((2000000 * n_users + first_value(n_users) OVER w0)
-                 / (2.0 * first_value(n_users) OVER w0)) / 1000000.0 AS conversion
+           {round6_ratio_sql("n_users", "first_value(n_users) OVER w0")} AS conversion
     FROM c
     WINDOW w0 AS (ORDER BY stage ROWS BETWEEN UNBOUNDED PRECEDING
                                           AND UNBOUNDED FOLLOWING)
@@ -6026,7 +6041,7 @@ ORACLES["normalize_dedup"] = r"""
     FROM norm GROUP BY 1 HAVING count(*) > 1
 """
 
-ORACLES["containment_pairs"] = r"""
+ORACLES["containment_pairs"] = rf"""
     WITH docs AS (
       SELECT doc_id, text FROM documents
       UNION ALL
@@ -6048,11 +6063,11 @@ ORACLES["containment_pairs"] = r"""
       FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
       GROUP BY 1, 2
     )
-    SELECT id_a, id_b, floor((2000000 * shared + (least(sa.sz, sb.sz))) / (2.0 * (least(sa.sz, sb.sz)))) / 1000000.0 AS containment
+    SELECT id_a, id_b, {round6_ratio_sql("shared", "least(sa.sz, sb.sz)")} AS containment
     FROM shared
     JOIN sz sa ON sa.doc_id = id_a
     JOIN sz sb ON sb.doc_id = id_b
-    WHERE floor((2000000 * shared + (least(sa.sz, sb.sz))) / (2.0 * (least(sa.sz, sb.sz)))) / 1000000.0 >= 0.8
+    WHERE {round6_ratio_sql("shared", "least(sa.sz, sb.sz)")} >= 0.8
 """
 
 # K-means: every stage is exact — md5 seed draw, left-to-right float
@@ -6128,7 +6143,7 @@ ORACLES["kmeans_clusters"] = f"""
 
 # --- round-4 event-profiling oracles ---
 
-ORACLES["session_transitions"] = """
+ORACLES["session_transitions"] = f"""
     WITH ordered AS (
       SELECT user_id, event_id, event_type, epoch(ts) AS t,
              CASE WHEN lag(epoch(ts)) OVER w IS NULL
@@ -6155,8 +6170,7 @@ ORACLES["session_transitions"] = """
       FROM pairs WHERE to_type IS NOT NULL GROUP BY 1, 2
     )
     SELECT from_type, to_type, n_transitions,
-           floor((2000000 * n_transitions + sum(n_transitions) OVER w0)
-                 / (2.0 * sum(n_transitions) OVER w0)) / 1000000.0 AS share
+           {round6_ratio_sql("n_transitions", "sum(n_transitions) OVER w0")} AS share
     FROM cnt
     WINDOW w0 AS (PARTITION BY from_type)
 """
@@ -6204,19 +6218,17 @@ ORACLES["seasonal_baseline"] = f"""
     FROM slotted s JOIN base USING (name, slot)
 """
 
-ORACLES["key_skew_stats"] = """
+ORACLES["key_skew_stats"] = f"""
     WITH pk AS (
       SELECT event_type, user_id, count(*) AS c FROM events GROUP BY 1, 2
     )
     SELECT event_type AS name,
            CAST(sum(c) AS BIGINT) AS n_rows,
            count(*) AS n_keys,
-           floor((2000000 * max(c) + sum(c)) / (2.0 * sum(c))) / 1000000.0
+           {round6_ratio_sql("max(c)", "sum(c)")}
                AS top_share,
            round(ln(CAST(sum(c) AS DOUBLE)) - sum(c * ln(c)) / sum(c), 6) AS entropy,
-           CAST((2000000::HUGEINT * sum(c::HUGEINT * c) + sum(c)::HUGEINT * sum(c))
-                // (2::HUGEINT * sum(c)::HUGEINT * sum(c)) AS BIGINT)
-             / 1000000.0 AS hhi
+           {round6_ratio_dec_sql("sum(c::HUGEINT * c)", "sum(c)::HUGEINT * sum(c)")} AS hhi
     FROM pk GROUP BY 1
 """
 
@@ -6292,7 +6304,7 @@ ORACLES["heavy_hitters"] = r"""
     FROM est
 """
 
-ORACLES["bloom_filter_join"] = """
+ORACLES["bloom_filter_join"] = f"""
     WITH bkeys AS (
       SELECT DISTINCT o_custkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'
     ),
@@ -6329,8 +6341,7 @@ ORACLES["bloom_filter_join"] = """
     )
     SELECT n_build, n_probe, n_candidates, n_true,
            CAST(n_candidates - n_true AS BIGINT) AS n_false_pos,
-           floor((2000000 * (n_candidates - n_true) + greatest(n_probe - n_true, 1))
-                 / (2.0 * greatest(n_probe - n_true, 1))) / 1000000.0 AS fp_rate
+           {round6_ratio_sql("n_candidates - n_true", "greatest(n_probe - n_true, 1)")} AS fp_rate
     FROM cand, truth, nb
 """
 
@@ -6389,7 +6400,7 @@ ORACLES["cluster_quality"] = """
     FROM coh JOIN sep ON coh.lbl = sep.lbl
 """
 
-ORACLES["pagerank_transitions"] = """
+ORACLES["pagerank_transitions"] = f"""
     WITH
     ordered AS (
       SELECT user_id, event_id, event_type, epoch(ts) AS t,
@@ -6455,7 +6466,7 @@ ORACLES["pagerank_transitions"] = """
                   + (SELECT dm FROM d2) / (SELECT n FROM nn)) AS rank
       FROM nodes LEFT JOIN c2 ON nodes.node = c2.t2
     )
-    SELECT node, CAST(round(CAST(rank AS DECIMAL(27,12)), 6) AS DOUBLE) AS rank FROM r2
+    SELECT node, {round6_bridge_sql("rank")} AS rank FROM r2
 """
 
 ORACLES["asof_tolerance"] = """
@@ -6467,7 +6478,7 @@ ORACLES["asof_tolerance"] = """
     WHERE epoch(p.ts) - epoch(s.ts) <= 604800.0
 """
 
-ORACLES["boilerplate_chunks"] = r"""
+ORACLES["boilerplate_chunks"] = rf"""
     WITH w AS (
       SELECT doc_id,
              string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
@@ -6491,8 +6502,10 @@ ORACLES["boilerplate_chunks"] = r"""
     SELECT doc_id, count(*) AS n_chunks,
            CAST(sum(CASE WHEN dg IN (SELECT dg FROM b) THEN 1 ELSE 0 END) AS BIGINT)
              AS n_boiler,
-           floor((2000000 * sum(CASE WHEN dg IN (SELECT dg FROM b) THEN 1 ELSE 0 END)
-                  + count(*)) / (2.0 * count(*))) / 1000000.0 AS boiler_frac
+           {round6_ratio_sql(
+               "sum(CASE WHEN dg IN (SELECT dg FROM b) THEN 1 ELSE 0 END)",
+               "count(*)",
+           )} AS boiler_frac
     FROM c GROUP BY 1
 """
 
@@ -6552,7 +6565,7 @@ ORACLES["value_drift"] = """
     GROUP BY 1, 2, 3
 """
 
-ORACLES["period_delta"] = """
+ORACLES["period_delta"] = f"""
     WITH counts AS (
       SELECT event_type AS name,
              CAST(floor(epoch(ts) / 86400) AS BIGINT) * 86400 AS i_time,
@@ -6565,16 +6578,12 @@ ORACLES["period_delta"] = """
     )
     SELECT name, i_time, n, prev_n,
            n - prev_n AS delta,
-           CASE WHEN n - prev_n >= 0
-                THEN  floor(( 2000000 * (n - prev_n) + prev_n)
-                            / (2.0 * prev_n)) / 1000000.0
-                ELSE -floor((-2000000 * (n - prev_n) + prev_n)
-                            / (2.0 * prev_n)) / 1000000.0 END + 0.0 AS pct_change
+           {round6_ratio_signed_sql("n - prev_n", "prev_n")} AS pct_change
     FROM d WHERE prev_n IS NOT NULL
 """
 
 ORACLES["minhash_calibration"] = """
-    WITH """ + _SHINGLE_CTE + """,
+    WITH """ + _SHINGLE_CTE + f""",
     h AS (
         SELECT doc_id,
                ('0x' || substr(md5(s), 1, 11))::BIGINT AS a,
@@ -6598,8 +6607,10 @@ ORACLES["minhash_calibration"] = """
     ),
     est AS (
         SELECT c.id_a, c.id_b,
-               floor((2000000 * sum(CASE WHEN sa.hv = sb.hv THEN 1 ELSE 0 END) + 32)
-                     / (2.0 * 32)) / 1000000.0 AS est_jaccard
+               {round6_ratio_sql(
+                   "sum(CASE WHEN sa.hv = sb.hv THEN 1 ELSE 0 END)",
+                   "32",
+               )} AS est_jaccard
         FROM cand c
         JOIN sig sa ON sa.doc_id = c.id_a
         JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
@@ -6617,8 +6628,7 @@ ORACLES["minhash_calibration"] = """
         -- jaccards on a 7th-decimal midpoint round differently between
         -- engines with a bare round(double, 6)
         SELECT shared.id_a, shared.id_b,
-               floor((2000000 * sh_n + (sa.sz + sb.sz - sh_n))
-                     / (2.0 * (sa.sz + sb.sz - sh_n))) / 1000000.0 AS jaccard
+               {round6_ratio_sql("sh_n", "sa.sz + sb.sz - sh_n")} AS jaccard
         FROM shared
         JOIN sizes sa ON shared.id_a = sa.doc_id
         JOIN sizes sb ON shared.id_b = sb.doc_id
@@ -6665,7 +6675,7 @@ ORACLES["cube_revenue"] = """
     GROUP BY CUBE (l_returnflag, o_orderpriority)
 """
 
-ORACLES["mad_outliers"] = """
+ORACLES["mad_outliers"] = f"""
     WITH med AS (
       SELECT event_type AS name,
              quantile_cont(CAST(value AS DOUBLE), 0.5) AS m
@@ -6685,15 +6695,15 @@ ORACLES["mad_outliers"] = """
            CAST(sum(CASE WHEN abs(CAST(e.value AS DOUBLE) - mad.m)
                               > CAST(3.0 AS DOUBLE) * CAST(1.4826 AS DOUBLE) * mad.d
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-           floor((2000000 * sum(CASE WHEN abs(CAST(e.value AS DOUBLE) - mad.m)
-                               > CAST(3.0 AS DOUBLE) * CAST(1.4826 AS DOUBLE) * mad.d
-                          THEN 1 ELSE 0 END) + count(*))
-                 / (2.0 * count(*))) / 1000000.0 AS outlier_frac
+           {round6_ratio_sql(
+               "sum(CASE WHEN abs(CAST(e.value AS DOUBLE) - mad.m) > CAST(3.0 AS DOUBLE) * CAST(1.4826 AS DOUBLE) * mad.d THEN 1 ELSE 0 END)",
+               "count(*)",
+           )} AS outlier_frac
     FROM events e JOIN mad ON e.event_type = mad.name
     GROUP BY 1
 """
 
-ORACLES["freq_spectrum"] = r"""
+ORACLES["freq_spectrum"] = rf"""
     WITH tok AS (
       SELECT unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS t
       FROM documents
@@ -6701,19 +6711,21 @@ ORACLES["freq_spectrum"] = r"""
     counts AS (SELECT t, count(*) AS f FROM tok GROUP BY 1),
     spec AS (SELECT f AS freq, count(*) AS n_tokens FROM counts GROUP BY 1)
     SELECT freq, n_tokens,
-           floor((2000000 * sum(freq * n_tokens) OVER (ORDER BY freq
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  + sum(freq * n_tokens) OVER ())
-                 / (2.0 * sum(freq * n_tokens) OVER ())) / 1000000.0
+           {round6_ratio_sql(
+               "sum(freq * n_tokens) OVER (ORDER BY freq ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)",
+               "sum(freq * n_tokens) OVER ()",
+           )}
              AS cum_mass_share
     FROM spec
 """
 
-ORACLES["schema_profile"] = """
+ORACLES["schema_profile"] = f"""
     SELECT 'event_id' AS column_name, count(*) AS n_rows,
            CAST(sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-           floor((2000000 * sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END)
-                  + count(*)) / (2.0 * count(*))) / 1000000.0 AS null_rate,
+           {round6_ratio_sql(
+               "sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END)",
+               "count(*)",
+           )} AS null_rate,
            count(DISTINCT event_id) AS n_distinct,
            CAST(min(event_id) AS VARCHAR) AS min_str,
            CAST(max(event_id) AS VARCHAR) AS max_str
@@ -6721,30 +6733,27 @@ ORACLES["schema_profile"] = """
     UNION ALL
     SELECT 'user_id', count(*),
            CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-           floor((2000000 * sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END)
-                  + count(*)) / (2.0 * count(*))) / 1000000.0,
+           {round6_ratio_sql("sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END)", "count(*)")},
            count(DISTINCT user_id),
            CAST(min(user_id) AS VARCHAR), CAST(max(user_id) AS VARCHAR)
     FROM events
     UNION ALL
     SELECT 'event_type', count(*),
            CAST(sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-           floor((2000000 * sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END)
-                  + count(*)) / (2.0 * count(*))) / 1000000.0,
+           {round6_ratio_sql("sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END)", "count(*)")},
            count(DISTINCT event_type),
            CAST(min(event_type) AS VARCHAR), CAST(max(event_type) AS VARCHAR)
     FROM events
     UNION ALL
     SELECT 'props', count(*),
            CAST(sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-           floor((2000000 * sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END)
-                  + count(*)) / (2.0 * count(*))) / 1000000.0,
+           {round6_ratio_sql("sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END)", "count(*)")},
            count(DISTINCT props),
            CAST(min(props) AS VARCHAR), CAST(max(props) AS VARCHAR)
     FROM events
 """
 
-ORACLES["fk_conformance"] = """
+ORACLES["fk_conformance"] = f"""
     WITH o_orph AS (
       SELECT count(*) AS n_orphans, count(DISTINCT o_custkey) AS n_orphan_keys
       FROM orders WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)
@@ -6756,15 +6765,16 @@ ORACLES["fk_conformance"] = """
     SELECT 'orders.o_custkey' AS fk,
            (SELECT count(*) FROM orders) AS n_child,
            n_orphans, n_orphan_keys,
-           floor((2000000 * n_orphans + greatest((SELECT count(*) FROM orders), 1))
-                 / (2.0 * greatest((SELECT count(*) FROM orders), 1))) / 1000000.0 AS orphan_rate
+           {round6_ratio_sql(
+               "n_orphans",
+               "greatest((SELECT count(*) FROM orders), 1)",
+           )} AS orphan_rate
     FROM o_orph
     UNION ALL
     SELECT 'lineitem.l_orderkey',
            (SELECT count(*) FROM lineitem),
            n_orphans, n_orphan_keys,
-           floor((2000000 * n_orphans + greatest((SELECT count(*) FROM lineitem), 1))
-                 / (2.0 * greatest((SELECT count(*) FROM lineitem), 1))) / 1000000.0
+           {round6_ratio_sql("n_orphans", "greatest((SELECT count(*) FROM lineitem), 1)")}
     FROM li_orph
 """
 
@@ -6837,7 +6847,7 @@ ORACLES["fuzzy_match"] = """
     FROM agg JOIN best ON agg.d_id = best.d_id
 """
 
-ORACLES["interarrival"] = """
+ORACLES["interarrival"] = f"""
     WITH gaps AS (
       SELECT user_id,
              epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id
@@ -6861,23 +6871,19 @@ ORACLES["interarrival"] = """
       FROM rk GROUP BY 1
     )
     SELECT user_id, n_gaps,
-           CAST((2000000::HUGEINT
-                   * (2*v50lo + k50*(coalesce(v50hi, v50lo) - v50lo))::HUGEINT
-                 + 2000000::HUGEINT)
-                // (2::HUGEINT * 2000000::HUGEINT) AS BIGINT)
-             / 1000000.0 AS median_gap,
-           CAST((2000000::HUGEINT
-                   * (10*v90lo + k90*(coalesce(v90hi, v90lo) - v90lo))::HUGEINT
-                 + 10000000::HUGEINT)
-                // (2::HUGEINT * 10000000::HUGEINT) AS BIGINT)
-             / 1000000.0 AS p90_gap,
-           CAST((2000000::HUGEINT * mx::HUGEINT + 1000000::HUGEINT)
-                // (2::HUGEINT * 1000000::HUGEINT) AS BIGINT)
-             / 1000000.0 AS max_gap
+           {round6_ratio_dec_sql(
+               "(2*v50lo + k50*(coalesce(v50hi, v50lo) - v50lo))::HUGEINT",
+               "2000000::HUGEINT",
+           )} AS median_gap,
+           {round6_ratio_dec_sql(
+               "(10*v90lo + k90*(coalesce(v90hi, v90lo) - v90lo))::HUGEINT",
+               "10000000::HUGEINT",
+           )} AS p90_gap,
+           {round6_ratio_dec_sql("mx::HUGEINT", "1000000::HUGEINT")} AS max_gap
     FROM pick
 """
 
-ORACLES["label_agreement"] = """
+ORACLES["label_agreement"] = f"""
     WITH c AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ),
@@ -6897,13 +6903,12 @@ ORACLES["label_agreement"] = """
       FROM ranked WHERE rnk <= 10 GROUP BY 1, 2
     )
     SELECT ql AS label, count(*) AS n_vecs,
-           floor((2000000 * sum(m) + 10 * count(*))
-                 / (2.0 * 10 * count(*))) / 1000000.0 AS mean_agreement,
+           {round6_ratio_sql("sum(m)", "10 * count(*)")} AS mean_agreement,
            CAST(sum(CASE WHEN m * 2 < 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_suspect
     FROM per GROUP BY 1
 """
 
-ORACLES["lsh_recall"] = """
+ORACLES["lsh_recall"] = f"""
     WITH dims AS (SELECT unnest(generate_series(0, 63)) AS d),
     hs AS (SELECT unnest(generate_series(0, 7)) AS h),
     planes AS (
@@ -6959,7 +6964,7 @@ ORACLES["lsh_recall"] = """
       GROUP BY 1
     )
     SELECT n.q_id, n.n_candidates,
-           floor((2000000 * coalesce(h, 0) + 10) / (2.0 * 10)) / 1000000.0 AS recall
+           {round6_ratio_sql("coalesce(h, 0)", "10")} AS recall
     FROM napprox n LEFT JOIN hits ON n.q_id = hits.q_id
 """
 
@@ -7034,7 +7039,7 @@ ORACLES["fd_check"] = """
     FROM g3
 """
 
-ORACLES["event_debounce"] = """
+ORACLES["event_debounce"] = f"""
     WITH flagged AS (
       SELECT user_id,
              CASE WHEN lag(epoch(ts)) OVER w IS NULL
@@ -7045,8 +7050,7 @@ ORACLES["event_debounce"] = """
     )
     SELECT user_id, count(*) AS n_events,
            CAST(sum(k) AS BIGINT) AS n_kept,
-           floor((2000000 * (count(*) - sum(k)) + count(*))
-                 / (2.0 * count(*))) / 1000000.0 AS drop_rate
+           {round6_ratio_sql("count(*) - sum(k)", "count(*)")} AS drop_rate
     FROM flagged GROUP BY 1
 """
 
@@ -7096,7 +7100,7 @@ ORACLES["revenue_deciles"] = """
     FROM tiled GROUP BY 1
 """
 
-ORACLES["winsorize"] = """
+ORACLES["winsorize"] = f"""
     WITH cuts AS (
       SELECT event_type AS cname,
              quantile_cont(CAST(value AS DOUBLE), 0.05) AS lo,
@@ -7110,18 +7114,15 @@ ORACLES["winsorize"] = """
              AS n_clipped_lo,
            CAST(sum(CASE WHEN CAST(value AS DOUBLE) > hi THEN 1 ELSE 0 END) AS BIGINT)
              AS n_clipped_hi,
-           CAST(round(CAST(
-             CAST(sum(CAST(value AS DECIMAL(28,10))) AS DOUBLE) / count(*)
-             AS DECIMAL(27,12)), 6) AS DOUBLE) AS mean_raw,
-           CAST(round(CAST(
-             CAST(sum(CAST(least(greatest(CAST(value AS DOUBLE), lo), hi)
-                          AS DECIMAL(28,10))) AS DOUBLE) / count(*)
-             AS DECIMAL(27,12)), 6) AS DOUBLE) AS mean_winsorized
+           {round6_bridge_sql("CAST(sum(CAST(value AS DECIMAL(28,10))) AS DOUBLE) / count(*)")} AS mean_raw,
+           {round6_bridge_sql(
+               "CAST(sum(CAST(least(greatest(CAST(value AS DOUBLE), lo), hi) AS DECIMAL(28,10))) AS DOUBLE) / count(*)",
+           )} AS mean_winsorized
     FROM events e JOIN cuts ON e.event_type = cuts.cname
     GROUP BY 1
 """
 
-ORACLES["impute_median"] = """
+ORACLES["impute_median"] = f"""
     WITH nulled AS (
       SELECT event_type,
              CASE WHEN event_id % 13 = 0 THEN NULL
@@ -7135,14 +7136,14 @@ ORACLES["impute_median"] = """
     SELECT n.event_type AS name, count(*) AS n,
            CAST(sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_imputed,
            round(any_value(m), 6) AS median_used,
-           CAST(round(CAST(
-             CAST(sum(CAST(coalesce(v, m) AS DECIMAL(28,10))) AS DOUBLE)
-             / count(*) AS DECIMAL(27,12)), 6) AS DOUBLE) AS mean_after
+           {round6_bridge_sql(
+               "CAST(sum(CAST(coalesce(v, m) AS DECIMAL(28,10))) AS DOUBLE) / count(*)",
+           )} AS mean_after
     FROM nulled n JOIN med ON n.event_type = med.mname
     GROUP BY 1
 """
 
-ORACLES["source_scorecard"] = r"""
+ORACLES["source_scorecard"] = rf"""
     WITH dg AS (
       SELECT source, doc_id, md5(text) AS d, length(text) AS nc
       FROM documents
@@ -7152,12 +7153,12 @@ ORACLES["source_scorecard"] = r"""
             WITH stats AS (
                 SELECT doc_id,
                        len(regexp_split_to_array(trim(text), '\s+')) AS n_words,
-                       floor((2000000 * len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) + greatest(length(text), 1))
-                             / (2.0 * greatest(length(text), 1))) / 1000000.0 AS punct_ratio,
-                       floor((2000000 * len(regexp_extract_all(text, '[0-9]')) + greatest(length(text), 1))
-                             / (2.0 * greatest(length(text), 1))) / 1000000.0 AS digit_ratio,
-                       floor((2000000 * len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|for|with)\b')) + greatest(len(regexp_split_to_array(trim(text), '\s+')), 1))
-                             / (2.0 * greatest(len(regexp_split_to_array(trim(text), '\s+')), 1))) / 1000000.0
+                       {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
+                       {round6_ratio_sql(
+                           "len(regexp_extract_all(text, '[0-9]'))",
+                           "greatest(length(text), 1)",
+                       )} AS digit_ratio,
+                       {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
                              AS stopword_ratio
                 FROM documents
             )
@@ -7170,20 +7171,17 @@ ORACLES["source_scorecard"] = r"""
             FROM stats
         )
     SELECT dg.source, count(*) AS n_docs,
-           CAST((2000000::HUGEINT * sum(nc)::HUGEINT + count(*))
-                // (2::HUGEINT * count(*)::HUGEINT) AS BIGINT)
-             / 1000000.0 AS mean_chars,
-           floor((2000000 * sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) + count(*))
-                 / (2.0 * count(*))) / 1000000.0 AS dup_frac,
-           CAST((2000000::HUGEINT * sum(CAST(round(quality * 1000000) AS BIGINT))::HUGEINT
-                  + count(*)::HUGEINT * 1000000)
-                // (2::HUGEINT * count(*)::HUGEINT * 1000000) AS BIGINT)
-             / 1000000.0 AS mean_quality
+           {round6_ratio_dec_sql("sum(nc)::HUGEINT", "count(*)")} AS mean_chars,
+           {round6_ratio_sql("sum(CASE WHEN c > 1 THEN 1 ELSE 0 END)", "count(*)")} AS dup_frac,
+           {round6_ratio_dec_sql(
+               "sum(CAST(round(quality * 1000000) AS BIGINT))::HUGEINT",
+               "count(*)::HUGEINT * 1000000",
+           )} AS mean_quality
     FROM dg JOIN cnts USING (d) JOIN q USING (doc_id)
     GROUP BY 1
 """
 
-ORACLES["langid_metrics"] = r"""
+ORACLES["langid_metrics"] = rf"""
     WITH pred AS (
       SELECT doc_id, lang AS t, lang_pred FROM (
             WITH scores AS (
@@ -7222,18 +7220,15 @@ ORACLES["langid_metrics"] = r"""
            coalesce(n_pred, 0) AS n_pred,
            coalesce(tp, 0) AS tp,
            CASE WHEN coalesce(n_pred, 0) > 0
-                THEN floor((2000000 * coalesce(tp, 0) + n_pred)
-                           / (2.0 * n_pred)) / 1000000.0 ELSE 0.0 END AS precision,
+                THEN {round6_ratio_sql("coalesce(tp, 0)", "n_pred")} ELSE 0.0 END AS precision,
            CASE WHEN n_true > 0
-                THEN floor((2000000 * coalesce(tp, 0) + n_true)
-                           / (2.0 * n_true)) / 1000000.0 ELSE 0.0 END AS recall,
-           floor((2000000 * 2 * coalesce(tp, 0) + coalesce(n_pred, 0) + n_true)
-                 / (2.0 * (coalesce(n_pred, 0) + n_true))) / 1000000.0 AS f1
+                THEN {round6_ratio_sql("coalesce(tp, 0)", "n_true")} ELSE 0.0 END AS recall,
+           {round6_ratio_sql("2 * coalesce(tp, 0)", "coalesce(n_pred, 0) + n_true")} AS f1
     FROM row_s LEFT JOIN col_s ON row_s.t = col_s.t
     LEFT JOIN diag ON row_s.t = diag.t
 """
 
-ORACLES["conversion_latency"] = """
+ORACLES["conversion_latency"] = f"""
     WITH first_a AS (
       SELECT user_id, min(epoch_us(ts)) AS ta FROM events
       WHERE event_type = 'signup' GROUP BY 1
@@ -7264,25 +7259,19 @@ ORACLES["conversion_latency"] = """
     ),
     c AS (
       SELECT n_converted,
-             CAST((2000000::HUGEINT
-                     * (2*v50lo + k50*(coalesce(v50hi, v50lo) - v50lo))::HUGEINT
-                   + 2000000::HUGEINT)
-                  // (2::HUGEINT * 2000000::HUGEINT) AS BIGINT)
-               / 1000000.0 AS p50_sec,
-             CAST((2000000::HUGEINT
-                     * (10*v90lo + k90*(coalesce(v90hi, v90lo) - v90lo))::HUGEINT
-                   + 10000000::HUGEINT)
-                  // (2::HUGEINT * 10000000::HUGEINT) AS BIGINT)
-               / 1000000.0 AS p90_sec,
-             CAST((2000000::HUGEINT * sum_us::HUGEINT
-                   + 1000000::HUGEINT * n_converted)
-                  // (2::HUGEINT * 1000000::HUGEINT * n_converted) AS BIGINT)
-               / 1000000.0 AS mean_sec
+             {round6_ratio_dec_sql(
+                 "(2*v50lo + k50*(coalesce(v50hi, v50lo) - v50lo))::HUGEINT",
+                 "2000000::HUGEINT",
+             )} AS p50_sec,
+             {round6_ratio_dec_sql(
+                 "(10*v90lo + k90*(coalesce(v90hi, v90lo) - v90lo))::HUGEINT",
+                 "10000000::HUGEINT",
+             )} AS p90_sec,
+             {round6_ratio_dec_sql("sum_us::HUGEINT", "1000000::HUGEINT * n_converted")} AS mean_sec
       FROM pick
     )
     SELECT n_started, n_converted,
-           floor((2000000 * n_converted + n_started)
-                 / (2.0 * n_started)) / 1000000.0 AS conv_rate,
+           {round6_ratio_sql("n_converted", "n_started")} AS conv_rate,
            p50_sec, p90_sec, mean_sec
     FROM ns, c
 """
@@ -7334,7 +7323,7 @@ ORACLES["gini_activity"] = """
     FROM s
 """
 
-ORACLES["dedup_recall"] = r"""
+ORACLES["dedup_recall"] = rf"""
     WITH corpus2 AS (
       SELECT doc_id, text FROM documents
       UNION ALL
@@ -7394,14 +7383,12 @@ ORACLES["dedup_recall"] = r"""
       FROM found JOIN truth ON found.id_a = truth.id_a AND found.id_b = truth.id_b
     )
     SELECT n_truth, n_found, n_hit,
-           floor((2000000 * n_hit + greatest(n_truth, 1))
-                 / (2.0 * greatest(n_truth, 1))) / 1000000.0 AS recall,
-           floor((2000000 * n_hit + greatest(n_found, 1))
-                 / (2.0 * greatest(n_found, 1))) / 1000000.0 AS precision_lb
+           {round6_ratio_sql("n_hit", "greatest(n_truth, 1)")} AS recall,
+           {round6_ratio_sql("n_hit", "greatest(n_found, 1)")} AS precision_lb
     FROM nt, nf, nh
 """
 
-ORACLES["audience_overlap"] = """
+ORACLES["audience_overlap"] = f"""
     WITH pairs AS (
       SELECT DISTINCT event_type AS g, user_id AS k FROM events
     ),
@@ -7413,8 +7400,8 @@ ORACLES["audience_overlap"] = """
     )
     SELECT group_a, group_b,
            sa.n AS n_a, sb.n AS n_b, n_shared,
-           floor((2000000 * n_shared + (sa.n + sb.n - n_shared)) / (2.0 * (sa.n + sb.n - n_shared))) / 1000000.0 AS jaccard,
-           floor((2000000 * n_shared + (sa.n)) / (2.0 * (sa.n))) / 1000000.0 AS containment_a_in_b
+           {round6_ratio_sql("n_shared", "sa.n + sb.n - n_shared")} AS jaccard,
+           {round6_ratio_sql("n_shared", "sa.n")} AS containment_a_in_b
     FROM shared
     JOIN sizes sa ON shared.group_a = sa.g
     JOIN sizes sb ON shared.group_b = sb.g
@@ -7463,14 +7450,14 @@ ORACLES["changepoints"] = """
     FROM ranked GROUP BY name
 """
 
-ORACLES["temperature_mix"] = """
+ORACLES["temperature_mix"] = f"""
     WITH counts AS (
       SELECT lang AS name, count(*) AS n FROM documents GROUP BY 1
     ),
     tot AS (SELECT sum(n) AS total FROM counts),
     weighted AS (
       SELECT name, n,
-             floor((2000000 * n + total) / (2.0 * total)) / 1000000.0 AS share,
+             {round6_ratio_sql("n", "total")} AS share,
              sqrt(n * 1.0 / total) AS w
       FROM counts, tot
     ),
@@ -7499,8 +7486,10 @@ ORACLES["temperature_mix"] = """
            p_target,
            CAST(b + CASE WHEN rk <= s THEN 1 ELSE 0 END AS BIGINT) AS target_n,
            CAST(least(b + CASE WHEN rk <= s THEN 1 ELSE 0 END, n) AS BIGINT) AS feasible_n,
-           floor((2000000 * least(b + CASE WHEN rk <= s THEN 1 ELSE 0 END, n) + n)
-                 / (2.0 * n)) / 1000000.0 AS sample_rate
+           {round6_ratio_sql(
+               "least(b + CASE WHEN rk <= s THEN 1 ELSE 0 END, n)",
+               "n",
+           )} AS sample_rate
     FROM ranked
 """
 
@@ -7548,7 +7537,7 @@ ORACLES["pseudonym_audit"] = """
     FROM pairs
 """
 
-ORACLES["winnow_pairs"] = r"""
+ORACLES["winnow_pairs"] = rf"""
     WITH norm AS (
       SELECT doc_id, regexp_replace(lower(text), '[ \t\n\f\r]+', ' ', 'g') AS n
       FROM documents
@@ -7577,11 +7566,11 @@ ORACLES["winnow_pairs"] = r"""
       GROUP BY 1, 2 HAVING count(*) >= 3
     )
     SELECT id_a, id_b, CAST(n_shared AS BIGINT) AS n_shared,
-           floor((2000000 * n_shared + (sa.sz + sb.sz - n_shared)) / (2.0 * (sa.sz + sb.sz - n_shared))) / 1000000.0 AS score
+           {round6_ratio_sql("n_shared", "sa.sz + sb.sz - n_shared")} AS score
     FROM shared
     JOIN sizes sa ON sa.doc_id = id_a
     JOIN sizes sb ON sb.doc_id = id_b
-    WHERE floor((2000000 * n_shared + (sa.sz + sb.sz - n_shared)) / (2.0 * (sa.sz + sb.sz - n_shared))) / 1000000.0 >= 0.2
+    WHERE {round6_ratio_sql("n_shared", "sa.sz + sb.sz - n_shared")} >= 0.2
 """
 
 ORACLES["editdist_pairs"] = r"""
@@ -7728,7 +7717,7 @@ ORACLES["spearman_activity"] = """
     WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
 """
 
-ORACLES["quality_auc"] = """
+ORACLES["quality_auc"] = f"""
     WITH d AS (
       SELECT source, n_chars, (lang = 'en') AS pos FROM documents
     ),
@@ -7748,13 +7737,14 @@ ORACLES["quality_auc"] = """
     SELECT source,
            CAST(n_pos AS BIGINT) AS n_pos,
            CAST(n_neg AS BIGINT) AS n_neg,
-           CAST((2000000::HUGEINT * (r2pos::HUGEINT - n_pos::HUGEINT * (n_pos + 1))
-                 + 2::HUGEINT * n_pos::HUGEINT * n_neg)
-                // (2::HUGEINT * 2 * n_pos::HUGEINT * n_neg) AS BIGINT) / 1000000.0 AS auc
+           {round6_ratio_dec_sql(
+               "r2pos::HUGEINT - n_pos::HUGEINT * (n_pos + 1)",
+               "2::HUGEINT * n_pos::HUGEINT * n_neg",
+           )} AS auc
     FROM a WHERE n_pos > 0 AND n_neg > 0
 """
 
-ORACLES["triangle_cooccurrence"] = """
+ORACLES["triangle_cooccurrence"] = f"""
     WITH occ AS (
       SELECT DISTINCT user_id AS u,
              event_type || ':' ||
@@ -7790,15 +7780,15 @@ ORACLES["triangle_cooccurrence"] = """
            CAST(degree AS BIGINT) AS degree,
            CAST(coalesce(triangles, 0) AS BIGINT) AS triangles,
            CASE WHEN degree >= 2
-                THEN CAST((2000000::HUGEINT * 2 * coalesce(triangles, 0)
-                           + degree::HUGEINT * (degree - 1))
-                          // (2::HUGEINT * degree::HUGEINT * (degree - 1)) AS BIGINT)
-                     / 1000000.0
+                THEN {round6_ratio_dec_sql(
+                         "2 * coalesce(triangles, 0)",
+                         "degree::HUGEINT * (degree - 1)",
+                     )}
                 ELSE 0.0 END AS clustering
     FROM deg LEFT JOIN pn ON deg.node = pn.node
 """
 
-ORACLES["context_budget"] = """
+ORACLES["context_budget"] = f"""
     WITH toks AS (
       SELECT len(regexp_extract_all(lower(text), '[a-z]+')) AS t FROM documents
     ),
@@ -7812,10 +7802,10 @@ ORACLES["context_budget"] = """
     )
     SELECT CAST(cutoff AS BIGINT) AS cutoff,
            CAST(n_docs_over AS BIGINT) AS n_docs_over,
-           floor((2000000 * n_docs_over + nd) / (2.0 * nd)) / 1000000.0
+           {round6_ratio_sql("n_docs_over", "nd")}
                AS frac_docs_over,
            CAST(tokens_lost AS BIGINT) AS tokens_lost,
-           floor((2000000 * tokens_lost + nt) / (2.0 * nt)) / 1000000.0
+           {round6_ratio_sql("tokens_lost", "nt")}
                AS frac_tokens_lost
     FROM agg, tot
 """
@@ -7865,7 +7855,7 @@ ORACLES["bigram_holdout"] = r"""
     GROUP BY 1
 """
 
-ORACLES["theilsen_trend"] = """
+ORACLES["theilsen_trend"] = f"""
     WITH counts AS (
       SELECT event_type AS name,
              CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS i_time,
@@ -7908,12 +7898,7 @@ ORACLES["theilsen_trend"] = """
     ),
     sz AS (SELECT name, CAST(count(*) AS BIGINT) AS n_buckets FROM counts GROUP BY 1)
     SELECT sz.name, n_buckets, n_pairs,
-           CASE WHEN mnum >= 0
-                THEN  CAST(( 2000000::HUGEINT * mnum + mden)
-                           // (2::HUGEINT * mden) AS BIGINT) / 1000000.0
-                ELSE -CAST((-2000000::HUGEINT * mnum + mden)
-                           // (2::HUGEINT * mden) AS BIGINT) / 1000000.0
-           END AS slope_per_hour
+           {round6_ratio_dec_signed_sql("mnum", "mden")} AS slope_per_hour
     FROM sz JOIN med USING (name)
 """
 
@@ -7943,7 +7928,7 @@ ORACLES["session_paths"] = """
     GROUP BY 1 ORDER BY n DESC, path LIMIT 20
 """
 
-ORACLES["benford_totalprice"] = """
+ORACLES["benford_totalprice"] = f"""
     WITH d AS (
       SELECT CAST(substr(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR), 1, 1)
                   AS BIGINT) AS digit
@@ -7952,13 +7937,13 @@ ORACLES["benford_totalprice"] = """
     base AS (SELECT digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1),
     tot AS (SELECT sum(n) AS t FROM base)
     SELECT digit, n,
-           floor((2000000 * n + t) / (2.0 * t)) / 1000000.0 AS obs_freq,
+           {round6_ratio_sql("n", "t")} AS obs_freq,
            round(log10(1.0 + 1.0 / digit), 6) AS exp_freq,
            round(n * 1.0 / t - log10(1.0 + 1.0 / digit), 6) AS deviation
     FROM base, tot
 """
 
-ORACLES["rfm_segments"] = """
+ORACLES["rfm_segments"] = f"""
     WITH endt AS (SELECT max(epoch_us(ts)) AS e FROM events),
     per_user AS (
       SELECT user_id,
@@ -7980,25 +7965,19 @@ ORACLES["rfm_segments"] = """
            CAST(f_tile AS BIGINT) AS f_tile,
            CAST(m_tile AS BIGINT) AS m_tile,
            CAST(count(*) AS BIGINT) AS n_users,
-           CAST((2000000::HUGEINT * sum(rec_sec)::HUGEINT
-                 + count(*)::HUGEINT * 86400000000)
-                // (2::HUGEINT * count(*)::HUGEINT * 86400000000) AS BIGINT)
-             / 1000000.0 AS avg_recency_days,
-           floor((2000000 * sum(freq) + count(*))
-                 / (2.0 * count(*))) / 1000000.0 AS avg_frequency,
-           CASE WHEN sum(mon) >= 0
-                THEN CAST((2000000::HUGEINT * CAST(sum(mon) * 1000000 AS HUGEINT)
-                           + count(*)::HUGEINT * 1000000)
-                          // (2::HUGEINT * count(*)::HUGEINT * 1000000) AS BIGINT)
-                     / 1000000.0
-                ELSE -CAST((-2000000::HUGEINT * CAST(sum(mon) * 1000000 AS HUGEINT)
-                            + count(*)::HUGEINT * 1000000)
-                           // (2::HUGEINT * count(*)::HUGEINT * 1000000) AS BIGINT)
-                     / 1000000.0 END AS avg_monetary
+           {round6_ratio_dec_sql(
+               "sum(rec_sec)::HUGEINT",
+               "count(*)::HUGEINT * 86400000000",
+           )} AS avg_recency_days,
+           {round6_ratio_sql("sum(freq)", "count(*)")} AS avg_frequency,
+           {round6_ratio_dec_signed_sql(
+               "CAST(sum(mon) * 1000000 AS HUGEINT)",
+               "count(*)::HUGEINT * 1000000",
+           )} AS avg_monetary
     FROM tiled GROUP BY 1, 2, 3
 """
 
-ORACLES["ks_drift"] = """
+ORACLES["ks_drift"] = f"""
     WITH scal AS (
       SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
       FROM events
@@ -8031,12 +8010,11 @@ ORACLES["ks_drift"] = """
       GROUP BY 1
     )
     SELECT name, n1, n2,
-           CAST((2000000::HUGEINT * gapnum + n1::HUGEINT * n2)
-                // (2::HUGEINT * n1::HUGEINT * n2) AS BIGINT) / 1000000.0 AS ks
+           {round6_ratio_dec_sql("gapnum", "n1::HUGEINT * n2")} AS ks
     FROM agg
 """
 
-ORACLES["lateness_audit"] = """
+ORACLES["lateness_audit"] = f"""
     WITH late AS (
       SELECT event_type AS name,
              max(epoch_us(ts)) OVER (PARTITION BY event_type ORDER BY event_id
@@ -8066,23 +8044,19 @@ ORACLES["lateness_audit"] = """
     SELECT name,
            CAST(n_events AS BIGINT) AS n_events,
            CAST(n_late AS BIGINT) AS n_late,
-           CAST((2000000::HUGEINT * mx::HUGEINT + 1000000::HUGEINT)
-                // (2::HUGEINT * 1000000::HUGEINT) AS BIGINT)
-             / 1000000.0 AS max_late_sec,
-           CAST((2000000::HUGEINT
-                   * (20*alo + ak*(coalesce(ahi, alo) - alo))::HUGEINT
-                 + 20000000::HUGEINT)
-                // (2::HUGEINT * 20000000::HUGEINT) AS BIGINT)
-             / 1000000.0 AS p95_late_sec,
-           CAST((2000000::HUGEINT
-                   * (100*blo + bk*(coalesce(bhi, blo) - blo))::HUGEINT
-                 + 100000000::HUGEINT)
-                // (2::HUGEINT * 100000000::HUGEINT) AS BIGINT)
-             / 1000000.0 AS p99_late_sec
+           {round6_ratio_dec_sql("mx::HUGEINT", "1000000::HUGEINT")} AS max_late_sec,
+           {round6_ratio_dec_sql(
+               "(20*alo + ak*(coalesce(ahi, alo) - alo))::HUGEINT",
+               "20000000::HUGEINT",
+           )} AS p95_late_sec,
+           {round6_ratio_dec_sql(
+               "(100*blo + bk*(coalesce(bhi, blo) - blo))::HUGEINT",
+               "100000000::HUGEINT",
+           )} AS p99_late_sec
     FROM pick
 """
 
-ORACLES["dup_inflation"] = """
+ORACLES["dup_inflation"] = f"""
     WITH d AS (
       SELECT source AS "group", md5(text) AS digest,
              len(regexp_extract_all(lower(text), '[a-z]+')) AS tok
@@ -8098,8 +8072,7 @@ ORACLES["dup_inflation"] = """
            CAST(sum(n * t) AS BIGINT) AS tokens_total,
            CAST(sum(t) AS BIGINT) AS tokens_unique,
            CASE WHEN sum(t) = 0 THEN 0.0
-                ELSE CAST((2000000::HUGEINT * sum(n::HUGEINT * t) + sum(t)::HUGEINT)
-                          // (2::HUGEINT * sum(t)::HUGEINT) AS BIGINT) / 1000000.0
+                ELSE {round6_ratio_dec_sql("sum(n::HUGEINT * t)", "sum(t)::HUGEINT")}
            END AS inflation
     FROM per_digest GROUP BY 1
 """
@@ -8238,12 +8211,14 @@ ORACLES["join_size_est"] = """
     FROM est, ex
 """
 
-ORACLES["skyline_docs"] = """
+ORACLES["skyline_docs"] = f"""
     WITH d AS (
       SELECT doc_id,
              CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT) AS toks,
-             floor((2000000 * len(list_distinct(regexp_extract_all(lower(text), '[a-z]+'))) + greatest(len(regexp_extract_all(lower(text), '[a-z]+')), 1))
-                   / (2.0 * greatest(len(regexp_extract_all(lower(text), '[a-z]+')), 1))) / 1000000.0 AS uniq_ratio
+             {round6_ratio_sql(
+                 "len(list_distinct(regexp_extract_all(lower(text), '[a-z]+')))",
+                 "greatest(len(regexp_extract_all(lower(text), '[a-z]+')), 1)",
+             )} AS uniq_ratio
       FROM documents
     ),
     gx AS (SELECT toks AS x, max(uniq_ratio) AS gymax FROM d GROUP BY 1),
@@ -8395,22 +8370,25 @@ ORACLES["categorical_drift"] = """
     FROM contribs
 """
 
-ORACLES["k_anonymity"] = """
+ORACLES["k_anonymity"] = f"""
     WITH classes AS (
       SELECT c_mktsegment, c_nationkey, CAST(count(*) AS BIGINT) AS class_size
       FROM customer GROUP BY 1, 2
     )
     SELECT c_mktsegment, c_nationkey, class_size,
            min(class_size) OVER () AS min_k,
-           floor((2000000 * sum(CASE WHEN class_size < 2 THEN class_size ELSE 0 END) OVER ()
-                  + sum(class_size) OVER ())
-                 / (2.0 * sum(class_size) OVER ())) / 1000000.0 AS pct_lt_2,
-           floor((2000000 * sum(CASE WHEN class_size < 5 THEN class_size ELSE 0 END) OVER ()
-                  + sum(class_size) OVER ())
-                 / (2.0 * sum(class_size) OVER ())) / 1000000.0 AS pct_lt_5,
-           floor((2000000 * sum(CASE WHEN class_size < 10 THEN class_size ELSE 0 END) OVER ()
-                  + sum(class_size) OVER ())
-                 / (2.0 * sum(class_size) OVER ())) / 1000000.0 AS pct_lt_10
+           {round6_ratio_sql(
+               "sum(CASE WHEN class_size < 2 THEN class_size ELSE 0 END) OVER ()",
+               "sum(class_size) OVER ()",
+           )} AS pct_lt_2,
+           {round6_ratio_sql(
+               "sum(CASE WHEN class_size < 5 THEN class_size ELSE 0 END) OVER ()",
+               "sum(class_size) OVER ()",
+           )} AS pct_lt_5,
+           {round6_ratio_sql(
+               "sum(CASE WHEN class_size < 10 THEN class_size ELSE 0 END) OVER ()",
+               "sum(class_size) OVER ()",
+           )} AS pct_lt_10
     FROM classes
 """
 
@@ -8432,7 +8410,7 @@ ORACLES["dp_noisy_counts"] = """
     FROM draw
 """
 
-ORACLES["calibration_bins"] = """
+ORACLES["calibration_bins"] = f"""
     WITH scored AS (
       SELECT least(greatest((n_chars - 50) / 550.0, 0.0), 1.0) AS s,
              CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
@@ -8452,14 +8430,14 @@ ORACLES["calibration_bins"] = """
     )
     SELECT bin, n,
            round(mean_score, 6) AS mean_score,
-           floor((2000000 * pos + n) / (2.0 * n)) / 1000000.0 AS frac_pos,
+           {round6_ratio_sql("pos", "n")} AS frac_pos,
            round(gap_raw, 6) AS gap,
            round(CAST(sum(CAST(abs(gap_raw) * n AS DECIMAL(28,12))) OVER ()
                  AS DOUBLE) / sum(n) OVER (), 6) AS ece
     FROM g
 """
 
-ORACLES["filter_sweep"] = """
+ORACLES["filter_sweep"] = f"""
     WITH scored AS (
       SELECT least(n_chars / 500.0, 1.0) AS s, CAST(n_chars AS DOUBLE) AS w
       FROM documents
@@ -8468,8 +8446,10 @@ ORACLES["filter_sweep"] = """
     pairs AS (SELECT CAST(threshold AS DOUBLE) AS threshold, s, w FROM scored CROSS JOIN t)
     SELECT threshold,
            CAST(sum(CASE WHEN s >= threshold THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           floor((2000000 * sum(CASE WHEN s >= threshold THEN 1 ELSE 0 END)
-                  + count(*)) / (2.0 * count(*))) / 1000000.0 AS pct_kept,
+           {round6_ratio_sql(
+               "sum(CASE WHEN s >= threshold THEN 1 ELSE 0 END)",
+               "count(*)",
+           )} AS pct_kept,
            round(sum(CASE WHEN s >= threshold THEN w ELSE 0.0 END), 6) AS w_kept,
            round(sum(CASE WHEN s >= threshold THEN w ELSE 0.0 END) / sum(w), 6)
                AS pct_w_kept
@@ -8535,7 +8515,7 @@ ORACLES["burstiness"] = """
     FROM ranked WHERE rank <= 40
 """
 
-ORACLES["forecast_eval"] = """
+ORACLES["forecast_eval"] = f"""
     WITH hourly AS (
       SELECT event_type AS grp, date_trunc('hour', ts) AS hour,
              CAST(count(*) AS BIGINT) AS y
@@ -8549,18 +8529,16 @@ ORACLES["forecast_eval"] = """
     )
     SELECT grp AS event_type,
            CAST(count(p1) AS BIGINT) AS n_eval_naive,
-           coalesce(floor((2000000 * sum(abs(y - p1)) + count(p1))
-                 / (2.0 * count(p1))) / 1000000.0, -1.0) AS mae_naive,
+           coalesce({round6_ratio_sql("sum(abs(y - p1))", "count(p1)")}, -1.0) AS mae_naive,
            coalesce(round(sqrt(sum((y - p1) * (y - p1)) * 1.0 / count(p1)), 6), -1.0)
                AS rmse_naive,
            CAST(count(ps) AS BIGINT) AS n_eval_seasonal,
-           coalesce(floor((2000000 * sum(abs(y - ps)) + count(ps))
-                 / (2.0 * count(ps))) / 1000000.0, -1.0) AS mae_seasonal,
+           coalesce({round6_ratio_sql("sum(abs(y - ps))", "count(ps)")}, -1.0) AS mae_seasonal,
            coalesce(round(sqrt(sum((y - ps) * (y - ps)) * 1.0 / count(ps)), 6), -1.0)
                AS rmse_seasonal
     FROM l GROUP BY grp
 """
-ORACLES["prefix_jaccard_pairs"] = """
+ORACLES["prefix_jaccard_pairs"] = f"""
     WITH toks AS (
       SELECT DISTINCT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS token
       FROM documents
@@ -8572,7 +8550,7 @@ ORACLES["prefix_jaccard_pairs"] = """
       GROUP BY 1, 2
     )
     SELECT id_a, id_b, sa.s AS size_a, sb.s AS size_b, overlap,
-           floor((2000000 * overlap + (sa.s + sb.s - overlap)) / (2.0 * (sa.s + sb.s - overlap))) / 1000000.0 AS jaccard
+           {round6_ratio_sql("overlap", "sa.s + sb.s - overlap")} AS jaccard
     FROM shared
     JOIN sz sa ON sa.doc_id = id_a
     JOIN sz sb ON sb.doc_id = id_b
@@ -8678,7 +8656,7 @@ ORACLES["mutual_info"] = """
     FROM p
 """
 
-ORACLES["lift_curve"] = """
+ORACLES["lift_curve"] = f"""
     WITH scored AS (
       SELECT least(greatest((n_chars - 50) / 550.0, 0.0), 1.0) AS s,
              CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
@@ -8692,12 +8670,11 @@ ORACLES["lift_curve"] = """
     SELECT bin, n, pos,
            CAST(sum(n) OVER (ORDER BY bin DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_n,
            CAST(sum(pos) OVER (ORDER BY bin DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_pos,
-           floor((2000000 * sum(pos) OVER wc + sum(pos) OVER wt)
-                 / (2.0 * sum(pos) OVER wt)) / 1000000.0 AS capture,
-           CAST((2000000::HUGEINT * sum(pos) OVER wc * sum(n) OVER wt
-                  + sum(n) OVER wc * (sum(pos) OVER wt)::HUGEINT)
-                // (2::HUGEINT * sum(n) OVER wc * sum(pos) OVER wt)
-                AS BIGINT) / 1000000.0 AS lift
+           {round6_ratio_sql("sum(pos) OVER wc", "sum(pos) OVER wt")} AS capture,
+           {round6_ratio_dec_sql(
+               "sum(pos) OVER wc * sum(n) OVER wt",
+               "sum(n) OVER wc * (sum(pos) OVER wt)::HUGEINT",
+           )} AS lift
     FROM bins
     WINDOW wc AS (ORDER BY bin DESC ROWS UNBOUNDED PRECEDING), wt AS ()
 """
@@ -8730,7 +8707,7 @@ ORACLES["topk_churn"] = """
     WHERE (r1 <= 20 AND n_1 > 0) OR (r2 <= 20 AND n_2 > 0)
 """
 
-ORACLES["embedding_moments"] = """
+ORACLES["embedding_moments"] = f"""
     WITH vals AS (
       SELECT unnest(range(len(embedding))) AS dim,
              CAST(unnest(embedding) AS DOUBLE) AS v
@@ -8750,16 +8727,8 @@ ORACLES["embedding_moments"] = """
       FROM comp GROUP BY 1
     )
     SELECT CAST(dim AS INT) AS dim, n,
-      CASE WHEN q1 >= 0
-        THEN  CAST(( 2000000::HUGEINT*q1 + 1000000000000::HUGEINT*n)
-                   // (2::HUGEINT*1000000000000::HUGEINT*n) AS BIGINT) / 1000000.0
-        ELSE -CAST((-2000000::HUGEINT*q1 + 1000000000000::HUGEINT*n)
-                   // (2::HUGEINT*1000000000000::HUGEINT*n) AS BIGINT) / 1000000.0
-      END AS mean_v,
-      CAST((2000000::HUGEINT*(n*q2 - q1*q1)
-            + 1000000000000000000000000::HUGEINT*n*n)
-           // (2::HUGEINT*1000000000000000000000000::HUGEINT*n*n) AS BIGINT)
-      / 1000000.0 AS var_v
+      {round6_ratio_dec_signed_sql("q1", "1000000000000::HUGEINT*n")} AS mean_v,
+      {round6_ratio_dec_sql("n*q2 - q1*q1", "1000000000000000000000000::HUGEINT*n*n")} AS var_v
     FROM agg
 """
 
@@ -8845,7 +8814,7 @@ ORACLES["ols2_fit"] = """
            round(1.0 - (syy - b0 * sy - b1 * s1y - b2 * s2y) / sst, 6) AS r2
     FROM coef WHERE ok AND sst > 0
 """
-ORACLES["json_schema_profile"] = """
+ORACLES["json_schema_profile"] = f"""
     WITH tot AS (SELECT count(*) AS n FROM events),
     -- json_valid guard: Spark's from_json returns a NULL map on
     -- malformed JSON (row silently contributes no keys) while DuckDB's
@@ -8860,8 +8829,7 @@ ORACLES["json_schema_profile"] = """
     )
     SELECT key,
            CAST(count(*) AS BIGINT) AS n_present,
-           floor((2000000 * count(*) + (SELECT n FROM tot))
-                 / (2.0 * (SELECT n FROM tot))) / 1000000.0 AS pct_present,
+           {round6_ratio_sql("count(*)", "SELECT n FROM tot")} AS pct_present,
            CAST(sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
            CAST(sum(CASE WHEN regexp_matches(v,
                 '^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$')
@@ -8870,7 +8838,7 @@ ORACLES["json_schema_profile"] = """
     FROM ext GROUP BY 1
 """
 
-ORACLES["expectations_audit"] = """
+ORACLES["expectations_audit"] = f"""
     WITH g AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
              CAST(sum(CASE WHEN coalesce(o_totalprice > 0, FALSE) THEN 0 ELSE 1 END)
@@ -8884,13 +8852,13 @@ ORACLES["expectations_audit"] = """
       FROM orders
     )
     SELECT 'totalprice_positive' AS constraint, v1 AS n_violations, n AS n_rows,
-           floor((2000000 * v1 + n) / (2.0 * n)) / 1000000.0 AS pct_violated FROM g
+           {round6_ratio_sql("v1", "n")} AS pct_violated FROM g
     UNION ALL
-    SELECT 'status_in_domain', v2, n, floor((2000000 * v2 + n) / (2.0 * n)) / 1000000.0 FROM g
+    SELECT 'status_in_domain', v2, n, {round6_ratio_sql("v2", "n")} FROM g
     UNION ALL
-    SELECT 'orderdate_not_null', v3, n, floor((2000000 * v3 + n) / (2.0 * n)) / 1000000.0 FROM g
+    SELECT 'orderdate_not_null', v3, n, {round6_ratio_sql("v3", "n")} FROM g
     UNION ALL
-    SELECT 'priority_format', v4, n, floor((2000000 * v4 + n) / (2.0 * n)) / 1000000.0 FROM g
+    SELECT 'priority_format', v4, n, {round6_ratio_sql("v4", "n")} FROM g
 """
 
 ORACLES["grouped_histogram"] = """
@@ -8978,7 +8946,7 @@ ORACLES["cdc_upsert"] = """
     SELECT c_custkey, c_name, round(c_acctbal, 6) FROM latest WHERE op <> 'D'
 """
 
-ORACLES["encoding_audit"] = """
+ORACLES["encoding_audit"] = f"""
     WITH per_doc AS (
       SELECT source AS grp,
              length(text) - length(replace(text, chr(65533), '')) AS r,
@@ -8992,19 +8960,18 @@ ORACLES["encoding_audit"] = """
     )
     SELECT grp AS source,
            CAST(count(*) AS BIGINT) AS n_docs,
-           floor((2000000 * sum(CASE WHEN r > 0 THEN 1 ELSE 0 END) + count(*))
-                 / (2.0 * count(*))) / 1000000.0 AS pct_repl_docs,
-           floor((2000000 * sum(c) + count(*))
-                 / (2.0 * count(*))) / 1000000.0 AS pct_ctrl_docs,
-           floor((2000000 * sum(m) + count(*))
-                 / (2.0 * count(*))) / 1000000.0 AS pct_mojibake_docs,
-           CAST((2000000::HUGEINT * sum(r)::HUGEINT * 10000 + greatest(sum(len), 1))
-                // (2::HUGEINT * greatest(sum(len), 1)::HUGEINT) AS BIGINT)
-             / 1000000.0 AS repl_per_10k_chars
+           {round6_ratio_sql(
+               "sum(CASE WHEN r > 0 THEN 1 ELSE 0 END)",
+               "count(*)",
+           )} AS pct_repl_docs,
+           {round6_ratio_sql("sum(c)", "count(*)")} AS pct_ctrl_docs,
+           {round6_ratio_sql("sum(m)", "count(*)")} AS pct_mojibake_docs,
+           {round6_ratio_dec_sql("sum(r)::HUGEINT * 10000", "greatest(sum(len), 1)")}
+             AS repl_per_10k_chars
     FROM per_doc GROUP BY 1
 """
 
-ORACLES["token_fertility"] = """
+ORACLES["token_fertility"] = f"""
     WITH per_doc AS (
       SELECT lang,
              len(regexp_extract_all(text,
@@ -9017,14 +8984,14 @@ ORACLES["token_fertility"] = """
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(t) AS BIGINT) AS tokens,
            CAST(sum(w) AS BIGINT) AS words,
-           floor((2000000 * sum(t) + sum(w)) / (2.0 * sum(w))) / 1000000.0
+           {round6_ratio_sql("sum(t)", "sum(w)")}
                AS fertility,
-           floor((2000000 * sum(c) + sum(t)) / (2.0 * sum(t))) / 1000000.0
+           {round6_ratio_sql("sum(c)", "sum(t)")}
                AS chars_per_token
     FROM per_doc GROUP BY 1
 """
 
-ORACLES["calendar_heatmap"] = """
+ORACLES["calendar_heatmap"] = f"""
     WITH cells AS (
       SELECT event_type, CAST(dayofweek(ts) + 1 AS INTEGER) AS dow,
              CAST(hour(ts) AS INTEGER) AS hod,
@@ -9032,8 +8999,7 @@ ORACLES["calendar_heatmap"] = """
       FROM events GROUP BY 1, 2, 3
     )
     SELECT event_type, dow, hod, n,
-           floor((2000000 * n + sum(n) OVER w0)
-                 / (2.0 * sum(n) OVER w0)) / 1000000.0 AS share
+           {round6_ratio_sql("n", "sum(n) OVER w0")} AS share
     FROM cells
     WINDOW w0 AS (PARTITION BY event_type)
 """
@@ -9069,7 +9035,7 @@ ORACLES["attribution_split"] = """
     FROM scored GROUP BY 1
 """
 
-ORACLES["split_leakage_audit"] = """
+ORACLES["split_leakage_audit"] = f"""
     WITH toks AS (
       SELECT DISTINCT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS token
       FROM documents
@@ -9103,8 +9069,7 @@ ORACLES["split_leakage_audit"] = """
     )
     SELECT split_a, split_b, n_pairs,
            split_a <> split_b AS cross_split,
-           floor((2000000 * n_pairs + sum(n_pairs) OVER ())
-                 / (2.0 * sum(n_pairs) OVER ())) / 1000000.0 AS pct_of_pairs
+           {round6_ratio_sql("n_pairs", "sum(n_pairs) OVER ()")} AS pct_of_pairs
     FROM cells
 """
 
@@ -9120,7 +9085,7 @@ ORACLES["group_quantiles"] = """
     FROM cells
 """
 
-ORACLES["assoc_rules"] = """
+ORACLES["assoc_rules"] = f"""
     WITH items AS (
       SELECT DISTINCT
              CAST(user_id AS VARCHAR) || chr(31)
@@ -9136,16 +9101,14 @@ ORACLES["assoc_rules"] = """
       GROUP BY 1, 2
     )
     SELECT item_a, item_b, n_ab,
-           floor((2000000 * n_ab + tot.n) / (2.0 * tot.n)) / 1000000.0 AS support,
-           floor((2000000 * n_ab + ca.ni) / (2.0 * ca.ni)) / 1000000.0 AS confidence,
-           CAST((2000000::HUGEINT * n_ab * tot.n + ca.ni::HUGEINT * cb.ni)
-                // (2::HUGEINT * ca.ni::HUGEINT * cb.ni) AS BIGINT)
-             / 1000000.0 AS lift
+           {round6_ratio_sql("n_ab", "tot.n")} AS support,
+           {round6_ratio_sql("n_ab", "ca.ni")} AS confidence,
+           {round6_ratio_dec_sql("n_ab * tot.n", "ca.ni::HUGEINT * cb.ni")} AS lift
     FROM pc
     JOIN ic ca ON pc.item_a = ca.item
     JOIN ic cb ON pc.item_b = cb.item, tot
 """
-ORACLES["session_entry_exit"] = """
+ORACLES["session_entry_exit"] = f"""
     WITH ordered AS (
       SELECT user_id, event_type, ts, event_id, epoch_us(ts) AS us,
              lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -9190,14 +9153,15 @@ ORACLES["session_entry_exit"] = """
            CAST(coalesce(n_entries, 0) AS BIGINT) AS n_entries,
            CAST(coalesce(n_exits, 0) AS BIGINT) AS n_exits,
            CAST(coalesce(n_bounces, 0) AS BIGINT) AS n_bounces,
-           floor((2000000 * coalesce(n_bounces, 0) + greatest(coalesce(n_entries, 0), 1))
-                 / (2.0 * greatest(coalesce(n_entries, 0), 1))) / 1000000.0 AS bounce_rate,
-           floor((2000000 * coalesce(n_exits, 0) + (SELECT total FROM tot))
-                 / (2.0 * (SELECT total FROM tot))) / 1000000.0 AS exit_rate
+           {round6_ratio_sql(
+               "coalesce(n_bounces, 0)",
+               "greatest(coalesce(n_entries, 0), 1)",
+           )} AS bounce_rate,
+           {round6_ratio_sql("coalesce(n_exits, 0)", "SELECT total FROM tot")} AS exit_rate
     FROM entries en FULL OUTER JOIN exits ex USING (event_type), tot
 """
 
-ORACLES["dist_overlap"] = """
+ORACLES["dist_overlap"] = f"""
     WITH scal AS (
       SELECT min(CAST(value AS DOUBLE)) AS lo, max(CAST(value AS DOUBLE)) AS hi
       FROM events
@@ -9215,10 +9179,10 @@ ORACLES["dist_overlap"] = """
       SELECT grp, bin, n, sum(n) OVER (PARTITION BY grp) AS t FROM cells
     )
     SELECT a.grp AS group_a, b.grp AS group_b,
-           CAST((2000000::HUGEINT * sum(least(a.n::HUGEINT * b.t, b.n::HUGEINT * a.t))
-                  + max(a.t)::HUGEINT * max(b.t))
-                // (2::HUGEINT * max(a.t)::HUGEINT * max(b.t)) AS BIGINT)
-             / 1000000.0 AS overlap
+           {round6_ratio_dec_sql(
+               "sum(least(a.n::HUGEINT * b.t, b.n::HUGEINT * a.t))",
+               "max(a.t)::HUGEINT * max(b.t)",
+           )} AS overlap
     FROM probs a JOIN probs b ON a.bin = b.bin AND a.grp < b.grp
     GROUP BY 1, 2
 """
@@ -9270,7 +9234,7 @@ ORACLES["trimmed_mean"] = """
     FROM j GROUP BY 1
 """
 
-ORACLES["hapax_rate"] = """
+ORACLES["hapax_rate"] = f"""
     WITH toks AS (
       SELECT source, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS token
       FROM documents
@@ -9280,13 +9244,12 @@ ORACLES["hapax_rate"] = """
            CAST(sum(n) AS BIGINT) AS tokens,
            CAST(count(*) AS BIGINT) AS vocab,
            CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-           floor((2000000 * sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) + count(*))
-                 / (2.0 * count(*))) / 1000000.0 AS hapax_share,
-           floor((2000000 * count(*) + sum(n)) / (2.0 * sum(n))) / 1000000.0 AS ttr
+           {round6_ratio_sql("sum(CASE WHEN n = 1 THEN 1 ELSE 0 END)", "count(*)")} AS hapax_share,
+           {round6_ratio_sql("count(*)", "sum(n)")} AS ttr
     FROM cnt GROUP BY 1
 """
 
-ORACLES["reconciliation_audit"] = """
+ORACLES["reconciliation_audit"] = f"""
     WITH per_key AS (
       SELECT l_orderkey AS okey,
              sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
@@ -9303,12 +9266,14 @@ ORACLES["reconciliation_audit"] = """
            CAST(count(*) AS BIGINT) AS n_headers,
            CAST(sum(CASE WHEN d <= 0.01 THEN 1 ELSE 0 END) AS BIGINT) AS n_matched,
            CAST(sum(CASE WHEN d <= 0.01 THEN 0 ELSE 1 END) AS BIGINT) AS n_mismatched,
-           floor((2000000 * sum(CASE WHEN d <= 0.01 THEN 1 ELSE 0 END) + count(*))
-                 / (2.0 * count(*))) / 1000000.0 AS pct_matched,
-           CAST((2000000::HUGEINT * CAST(sum(d) * 100000000 AS HUGEINT)
-                 + 100000000::HUGEINT * count(*))
-                // (2::HUGEINT * 100000000::HUGEINT * count(*)) AS BIGINT)
-               / 1000000.0 AS mean_abs_diff,
+           {round6_ratio_sql(
+               "sum(CASE WHEN d <= 0.01 THEN 1 ELSE 0 END)",
+               "count(*)",
+           )} AS pct_matched,
+           {round6_ratio_dec_sql(
+               "CAST(sum(d) * 100000000 AS HUGEINT)",
+               "100000000::HUGEINT * count(*)",
+           )} AS mean_abs_diff,
            CAST(round(max(d), 6) AS DOUBLE) AS max_abs_diff
     FROM j GROUP BY 1
 """
@@ -9397,7 +9362,7 @@ ORACLES["negative_pairs"] = """
     FROM cand c
     ANTI JOIN base b ON c."user" = b."user" AND c.neg_item = b.pos_item
 """
-ORACLES["mrr_sessions"] = """
+ORACLES["mrr_sessions"] = f"""
     WITH ordered AS (
       SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
              lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -9426,12 +9391,11 @@ ORACLES["mrr_sessions"] = """
     )
     SELECT CAST(count(*) AS BIGINT) AS n_sessions,
            CAST(count(first_pos) AS BIGINT) AS n_with_target,
-           CAST(round(CAST(CAST(sum(coalesce(CAST(1.0 / first_pos AS DECIMAL(28,12)),
-                                             CAST(0 AS DECIMAL(28,12)))) AS DOUBLE)
-                           / count(*) AS DECIMAL(27,12)), 6) AS DOUBLE) AS mrr,
+           {round6_bridge_sql(
+               "CAST(sum(coalesce(CAST(1.0 / first_pos AS DECIMAL(28,12)), CAST(0 AS DECIMAL(28,12)))) AS DOUBLE) / count(*)",
+           )} AS mrr,
            CASE WHEN count(first_pos) = 0 THEN -1.0
-                ELSE floor((2000000 * sum(first_pos) + count(first_pos))
-                           / (2.0 * count(first_pos))) / 1000000.0
+                ELSE {round6_ratio_sql("sum(first_pos)", "count(first_pos)")}
            END AS mean_first_pos
     FROM per_sess
 """
@@ -9523,7 +9487,7 @@ ORACLES["bernoulli_ht_audit"] = """
     FROM g
 """
 
-ORACLES["markov_accuracy"] = """
+ORACLES["markov_accuracy"] = f"""
     WITH scal AS (
       SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
       FROM events
@@ -9553,10 +9517,11 @@ ORACLES["markov_accuracy"] = """
            CAST(count(*) AS BIGINT) AS n_test,
            CAST(count(pred) AS BIGINT) AS n_covered,
            CAST(sum(CASE WHEN pred = t THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           floor((2000000 * sum(CASE WHEN pred = t THEN 1 ELSE 0 END) + count(*))
-                 / (2.0 * count(*))) / 1000000.0 AS accuracy,
-           floor((2000000 * sum(CASE WHEN pred = t THEN 1 ELSE 0 END) + count(pred))
-                 / (2.0 * count(pred))) / 1000000.0 AS covered_accuracy
+           {round6_ratio_sql("sum(CASE WHEN pred = t THEN 1 ELSE 0 END)", "count(*)")} AS accuracy,
+           {round6_ratio_sql(
+               "sum(CASE WHEN pred = t THEN 1 ELSE 0 END)",
+               "count(pred)",
+           )} AS covered_accuracy
     FROM scored
 """
 
@@ -9599,7 +9564,7 @@ ORACLES["vocab_drift"] = """
       FROM scored
     ) WHERE rank <= 20
 """
-ORACLES["bootstrap_ci_mean"] = """
+ORACLES["bootstrap_ci_mean"] = f"""
     WITH rows_b AS (
       SELECT CAST(event_id AS VARCHAR) AS id, CAST(value AS DOUBLE) AS v,
              unnest(range(50)) AS b
@@ -9635,32 +9600,21 @@ ORACLES["bootstrap_ci_mean"] = """
       FROM per_b
     ),
     stats AS (
-      SELECT CAST(round(CAST(sqrt(greatest(
-               (count(*) * sum(d * d) - sum(d) * sum(d))
-                 / (count(*) * (count(*) - 1.0)), 0.0)) AS DECIMAL(27,12)), 6)
-             AS DOUBLE) AS se,
-             CAST(round(CAST(quantile_cont(mean_b, 0.025) AS DECIMAL(27,12)), 6)
-             AS DOUBLE) AS ci_lo,
-             CAST(round(CAST(quantile_cont(mean_b, 0.975) AS DECIMAL(27,12)), 6)
-             AS DOUBLE) AS ci_hi
+      SELECT {round6_bridge_sql(
+                 "sqrt(greatest( (count(*) * sum(d * d) - sum(d) * sum(d)) / (count(*) * (count(*) - 1.0)), 0.0))",
+             )} AS se,
+             {round6_bridge_sql("quantile_cont(mean_b, 0.025)")} AS ci_lo,
+             {round6_bridge_sql("quantile_cont(mean_b, 0.975)")} AS ci_hi
       FROM cen
     ),
     overall AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-             sum(CASE WHEN CAST(value AS DOUBLE) >= 0
-                  THEN  CAST(floor( CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT)
-                  ELSE -CAST(floor(-CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT)
-                 END)::HUGEINT AS cents,
+             sum({cents_sql("value")})::HUGEINT AS cents,
              100::HUGEINT * count(*) AS den
       FROM events
     )
     SELECT n,
-           CASE WHEN cents >= 0
-                THEN  CAST(( 2000000::HUGEINT * cents + den)
-                           // (2::HUGEINT * den) AS BIGINT) / 1000000.0
-                ELSE -CAST((-2000000::HUGEINT * cents + den)
-                           // (2::HUGEINT * den) AS BIGINT) / 1000000.0
-           END AS mean,
+           {round6_ratio_dec_signed_sql("cents", "den")} AS mean,
            se, ci_lo, ci_hi
     FROM overall, stats
 """
@@ -9881,7 +9835,7 @@ ORACLES["interval_proration"] = """
     FROM al GROUP BY 1
 """
 
-ORACLES["conformal_coverage"] = """
+ORACLES["conformal_coverage"] = f"""
     WITH base AS (
       SELECT event_type AS grp, CAST(value AS DOUBLE) AS v,
              CASE WHEN substring(md5(CAST(event_id AS VARCHAR)), 1, 1)
@@ -9917,11 +9871,12 @@ ORACLES["conformal_coverage"] = """
     )
     SELECT t.grp AS "group", max(n_cal) AS n_cal,
            CAST(count(*) AS BIGINT) AS n_test,
-           CAST(round(CAST(max(pred) AS DECIMAL(27,12)), 6) AS DOUBLE) AS pred,
+           {round6_bridge_sql("max(pred)")} AS pred,
            max(qhat) AS qhat,
-           floor((2000000 * sum(CASE WHEN round(abs(v - pred), 6) <= qhat
-                                     THEN 1 ELSE 0 END)
-                  + count(*)) / (2.0 * count(*))) / 1000000.0 AS coverage
+           {round6_ratio_sql(
+               "sum(CASE WHEN round(abs(v - pred), 6) <= qhat THEN 1 ELSE 0 END)",
+               "count(*)",
+           )} AS coverage
     FROM test t JOIN qh ON t.grp = qh.grp GROUP BY 1
 """
 
@@ -10226,7 +10181,7 @@ ORACLES["freshness_audit"] = """
 """
 
 
-ORACLES["policy_replay"] = """
+ORACLES["policy_replay"] = f"""
     WITH base AS (
       SELECT CAST(user_id AS VARCHAR) AS u, event_type AS arm,
              CAST(value AS DOUBLE) AS r
@@ -10249,10 +10204,9 @@ ORACLES["policy_replay"] = """
            CAST(count(*) AS BIGINT) AS n_logged,
            CAST(sum(m) AS BIGINT) AS n_matched,
            CASE WHEN sum(m) > 0 THEN
-             CAST(round(CAST(
-               CAST(sum(CAST(CASE WHEN m = 1 THEN r ELSE 0.0 END
-                             AS DECIMAL(38,12))) AS DOUBLE) / sum(m)
-               AS DECIMAL(27,12)), 6) AS DOUBLE)
+             {round6_bridge_sql(
+                 "CAST(sum(CAST(CASE WHEN m = 1 THEN r ELSE 0.0 END AS DECIMAL(38,12))) AS DOUBLE) / sum(m)",
+             )}
            ELSE -1.0 END AS replay_mean
     FROM matched GROUP BY 1
 """
@@ -10286,7 +10240,7 @@ ORACLES["growth_accounting"] = """
     FROM per
 """
 
-ORACLES["vocab_coverage"] = """
+ORACLES["vocab_coverage"] = f"""
     WITH toks AS (
       SELECT unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS token
       FROM documents
@@ -10302,7 +10256,7 @@ ORACLES["vocab_coverage"] = """
     ),
     cuts(k) AS (VALUES (CAST(10 AS BIGINT)), (100), (1000))
     SELECT k, vocab_size,
-           floor((2000000 * cum + total) / (2.0 * total)) / 1000000.0 AS coverage
+           {round6_ratio_sql("cum", "total")} AS coverage
     FROM ranked JOIN cuts ON rank = least(k, vocab_size)
 """
 
@@ -10375,15 +10329,12 @@ ORACLES["simpson_check"] = """
     FROM per CROSS JOIN pooled
 """
 
-ORACLES["post_stratified_mean"] = """
+ORACLES["post_stratified_mean"] = f"""
     WITH per AS (
       SELECT event_type AS h,
              CAST(count(*) AS BIGINT) AS n_h,
              sum(CAST(CAST(value AS DOUBLE) AS DECIMAL(38,12))) AS s_h,
-             sum(CASE WHEN CAST(value AS DOUBLE) >= 0
-                  THEN  CAST(floor( CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT)
-                  ELSE -CAST(floor(-CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT)
-                 END) AS c_h
+             sum({cents_sql("value")}) AS c_h
       FROM events GROUP BY 1
     ),
     agg AS (
@@ -10391,20 +10342,14 @@ ORACLES["post_stratified_mean"] = """
              CAST(count(*) AS BIGINT) AS n_strata,
              sum(c_h)::HUGEINT AS cents,
              100::HUGEINT * sum(n_h) AS den,
-             CAST(round(CAST(
-               CAST(sum(CAST(CAST(s_h AS DOUBLE) / n_h AS DECIMAL(38,12))) AS DOUBLE)
-               / count(*) AS DECIMAL(27,12)), 6) AS DOUBLE) AS post_mean,
-             floor((2000000 * max(n_h) + sum(n_h))
-                   / (2.0 * sum(n_h))) / 1000000.0 AS max_stratum_share
+             {round6_bridge_sql(
+                 "CAST(sum(CAST(CAST(s_h AS DOUBLE) / n_h AS DECIMAL(38,12))) AS DOUBLE) / count(*)",
+             )} AS post_mean,
+             {round6_ratio_sql("max(n_h)", "sum(n_h)")} AS max_stratum_share
       FROM per
     )
     SELECT n, n_strata,
-           CASE WHEN cents >= 0
-                THEN  CAST(( 2000000::HUGEINT * cents + den)
-                           // (2::HUGEINT * den) AS BIGINT) / 1000000.0
-                ELSE -CAST((-2000000::HUGEINT * cents + den)
-                           // (2::HUGEINT * den) AS BIGINT) / 1000000.0
-           END AS raw_mean,
+           {round6_ratio_dec_signed_sql("cents", "den")} AS raw_mean,
            post_mean, max_stratum_share
     FROM agg
 """
@@ -10439,7 +10384,7 @@ ORACLES["capture_recapture"] = """
     FROM agg
 """
 
-ORACLES["powerlaw_alpha"] = """
+ORACLES["powerlaw_alpha"] = f"""
     WITH toks AS (
       SELECT unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS token
       FROM documents
@@ -10452,11 +10397,10 @@ ORACLES["powerlaw_alpha"] = """
                          / CAST(sum(CAST(CASE WHEN x >= 5.0 THEN ln(x / 4.5)
                                               ELSE 0.0 END AS DECIMAL(38,12)))
                                 AS DOUBLE), 6) AS alpha,
-           CAST((2000000::HUGEINT
-                   * sum(CASE WHEN x >= 5.0 THEN CAST(x AS BIGINT) ELSE 0 END)::HUGEINT
-                 + sum(CAST(x AS BIGINT))::HUGEINT)
-                // (2::HUGEINT * sum(CAST(x AS BIGINT))::HUGEINT) AS BIGINT)
-             / 1000000.0 AS tail_mass_share
+           {round6_ratio_dec_sql(
+               "sum(CASE WHEN x >= 5.0 THEN CAST(x AS BIGINT) ELSE 0 END)::HUGEINT",
+               "sum(CAST(x AS BIGINT))::HUGEINT",
+           )} AS tail_mass_share
     FROM base
 """
 
@@ -10524,7 +10468,7 @@ ORACLES["rbo_rankings"] = """
     FROM ov
 """
 
-ORACLES["churn_auc"] = """
+ORACLES["churn_auc"] = f"""
     WITH scal AS (
       SELECT CAST(floor((min(epoch_us(o_orderdate)) + max(epoch_us(o_orderdate))) / 2) AS BIGINT) AS mid
       FROM orders
@@ -10555,13 +10499,14 @@ ORACLES["churn_auc"] = """
     )
     SELECT CAST(n_pos AS BIGINT) AS n_pos,
            CAST(n_neg AS BIGINT) AS n_neg,
-           CAST((2000000::HUGEINT * (r2pos::HUGEINT - n_pos::HUGEINT * (n_pos + 1))
-                 + 2::HUGEINT * n_pos::HUGEINT * n_neg)
-                // (2::HUGEINT * 2 * n_pos::HUGEINT * n_neg) AS BIGINT) / 1000000.0 AS auc
+           {round6_ratio_dec_sql(
+               "r2pos::HUGEINT - n_pos::HUGEINT * (n_pos + 1)",
+               "2::HUGEINT * n_pos::HUGEINT * n_neg",
+           )} AS auc
     FROM a WHERE n_pos > 0 AND n_neg > 0
 """
 
-ORACLES["session_gap_sweep"] = """
+ORACLES["session_gap_sweep"] = f"""
     WITH gaps AS (
       SELECT user_id AS u,
              epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY ts) AS gap
@@ -10576,20 +10521,19 @@ ORACLES["session_gap_sweep"] = """
       FROM gaps
     )
     SELECT CAST(900 AS BIGINT) AS gap_sec, nu + x900 AS n_sessions, ne AS n_events,
-           floor((2000000 * ne + (nu + x900))
-                 / (2.0 * (nu + x900))) / 1000000.0 AS events_per_session FROM agg
+           {round6_ratio_sql("ne", "nu + x900")} AS events_per_session FROM agg
     UNION ALL
     SELECT 1800, nu + x1800, ne,
-           floor((2000000 * ne + (nu + x1800)) / (2.0 * (nu + x1800))) / 1000000.0
+           {round6_ratio_sql("ne", "nu + x1800")}
     FROM agg
     UNION ALL
     SELECT 3600, nu + x3600, ne,
-           floor((2000000 * ne + (nu + x3600)) / (2.0 * (nu + x3600))) / 1000000.0
+           {round6_ratio_sql("ne", "nu + x3600")}
     FROM agg
 """
 
 
-ORACLES["langid_kappa"] = r"""
+ORACLES["langid_kappa"] = rf"""
     WITH scores AS (
         SELECT doc_id, lang,
                len(regexp_extract_all(lower(text),
@@ -10627,23 +10571,16 @@ ORACLES["langid_kappa"] = r"""
       FROM ma FULL OUTER JOIN mb USING (cls)
     )
     SELECT n,
-           floor((2000000 * agree + n) / (2.0 * n)) / 1000000.0 AS po,
-           CAST((2000000::HUGEINT * CAST(sp AS HUGEINT) + n::HUGEINT * n)
-                // (2::HUGEINT * n::HUGEINT * n) AS BIGINT) / 1000000.0 AS pe,
-           CASE WHEN agree::HUGEINT * n - CAST(sp AS HUGEINT) >= 0
-                THEN  CAST(( 2000000::HUGEINT * (agree::HUGEINT * n - CAST(sp AS HUGEINT))
-                              + (n::HUGEINT * n - CAST(sp AS HUGEINT)))
-                            // (2::HUGEINT * (n::HUGEINT * n - CAST(sp AS HUGEINT)))
-                           AS BIGINT) / 1000000.0
-                ELSE -CAST((-2000000::HUGEINT * (agree::HUGEINT * n - CAST(sp AS HUGEINT))
-                              + (n::HUGEINT * n - CAST(sp AS HUGEINT)))
-                            // (2::HUGEINT * (n::HUGEINT * n - CAST(sp AS HUGEINT)))
-                           AS BIGINT) / 1000000.0
-                END AS kappa
+           {round6_ratio_sql("agree", "n")} AS po,
+           {round6_ratio_dec_sql("CAST(sp AS HUGEINT)", "n::HUGEINT * n")} AS pe,
+           {round6_ratio_dec_signed_sql(
+               "agree::HUGEINT * n - CAST(sp AS HUGEINT)",
+               "n::HUGEINT * n - CAST(sp AS HUGEINT)",
+           )} AS kappa
     FROM tot CROSS JOIN cr
 """
 
-ORACLES["event_study"] = """
+ORACLES["event_study"] = f"""
     WITH anchors AS (
       SELECT user_id AS u, min(epoch_us(ts)) AS t0
       FROM events WHERE event_type = 'purchase' GROUP BY 1
@@ -10659,13 +10596,11 @@ ORACLES["event_study"] = """
     SELECT offset_day,
            CAST(count(*) AS BIGINT) AS n_events,
            CAST(count(DISTINCT u) AS BIGINT) AS n_users,
-           CAST(round(CAST(
-             CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*)
-             AS DECIMAL(27,12)), 6) AS DOUBLE) AS mean_value
+           {round6_bridge_sql("CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*)")} AS mean_value
     FROM o WHERE offset_day BETWEEN -5 AND 5 GROUP BY 1
 """
 
-ORACLES["dedup_threshold_sweep"] = """
+ORACLES["dedup_threshold_sweep"] = f"""
     WITH norm AS (
         SELECT doc_id, regexp_replace(lower(text), '\\s+', ' ', 'g') AS n
         FROM documents WHERE doc_id % 5 = 0
@@ -10684,11 +10619,11 @@ ORACLES["dedup_threshold_sweep"] = """
     ),
     pairs AS (
         SELECT id_a, id_b,
-               floor((2000000 * shared + (sa.sz + sb.sz - shared)) / (2.0 * (sa.sz + sb.sz - shared))) / 1000000.0 AS jaccard
+               {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} AS jaccard
         FROM shared
         JOIN sz sa ON sa.doc_id = id_a
         JOIN sz sb ON sb.doc_id = id_b
-        WHERE floor((2000000 * shared + (sa.sz + sb.sz - shared)) / (2.0 * (sa.sz + sb.sz - shared))) / 1000000.0 >= 0.05
+        WHERE {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} >= 0.05
     ),
     pa AS (
       SELECT CAST(COALESCE(sum(CASE WHEN jaccard >= 0.1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS p0,
@@ -10781,7 +10716,7 @@ ORACLES["source_similarity"] = """
     FROM dots JOIN norms na ON na.g = src_a JOIN norms nb ON nb.g = src_b
 """
 
-ORACLES["absorption_prob"] = """
+ORACLES["absorption_prob"] = f"""
     WITH ordered AS (
       SELECT user_id AS u, event_type AS s,
              lead(event_type) OVER (PARTITION BY user_id
@@ -10812,7 +10747,7 @@ ORACLES["absorption_prob"] = """
     r3 AS (SELECT sts.s, CASE WHEN sts.s = 'purchase' THEN 1.0
                               ELSE COALESCE(acc, 0.0) END AS r
            FROM sts LEFT JOIN a3 ON sts.s = a3.s)
-    SELECT s AS state, CAST(round(CAST(r AS DECIMAL(27,12)), 6) AS DOUBLE) AS p_reach FROM r3
+    SELECT s AS state, {round6_bridge_sql("r")} AS p_reach FROM r3
 """
 
 
@@ -10909,7 +10844,7 @@ ORACLES["max_drawdown"] = """
 """
 
 
-ORACLES["zonemap_prune"] = """
+ORACLES["zonemap_prune"] = f"""
     WITH base AS (
       SELECT CAST(o_totalprice AS DOUBLE) AS x, o_orderkey AS id FROM orders
     ),
@@ -10926,15 +10861,19 @@ ORACLES["zonemap_prune"] = """
     SELECT 'natural' AS layout,
            CAST(count(*) AS BIGINT) AS n_chunks,
            CAST(sum(CASE WHEN hi < 50000.0 OR lo > 100000.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pruned,
-           floor((2000000 * sum(CASE WHEN hi < 50000.0 OR lo > 100000.0 THEN 1 ELSE 0 END)
-                  + count(*)) / (2.0 * count(*))) / 1000000.0 AS prune_rate
+           {round6_ratio_sql(
+               "sum(CASE WHEN hi < 50000.0 OR lo > 100000.0 THEN 1 ELSE 0 END)",
+               "count(*)",
+           )} AS prune_rate
     FROM nstats
     UNION ALL
     SELECT 'sorted',
            CAST(count(*) AS BIGINT),
            CAST(sum(CASE WHEN hi < 50000.0 OR lo > 100000.0 THEN 1 ELSE 0 END) AS BIGINT),
-           floor((2000000 * sum(CASE WHEN hi < 50000.0 OR lo > 100000.0 THEN 1 ELSE 0 END)
-                  + count(*)) / (2.0 * count(*))) / 1000000.0
+           {round6_ratio_sql(
+               "sum(CASE WHEN hi < 50000.0 OR lo > 100000.0 THEN 1 ELSE 0 END)",
+               "count(*)",
+           )}
     FROM sstats
 """
 
@@ -11108,7 +11047,7 @@ ORACLES["ship_lag_percentiles"] = """
 """
 
 
-ORACLES["wilson_ci"] = """
+ORACLES["wilson_ci"] = f"""
     WITH agg AS (
       SELECT event_type AS "group",
              CAST(count(*) AS BIGINT) AS n,
@@ -11116,7 +11055,7 @@ ORACLES["wilson_ci"] = """
       FROM events GROUP BY 1
     )
     SELECT "group", n,
-           floor((2000000 * k + n) / (2.0 * n)) / 1000000.0 AS p_hat,
+           {round6_ratio_sql("k", "n")} AS p_hat,
            round((k / CAST(n AS DOUBLE) + 1.959964 * 1.959964 / (2.0 * CAST(n AS DOUBLE)))
                    / (1.0 + 1.959964 * 1.959964 / CAST(n AS DOUBLE))
                  - 1.959964
@@ -11190,7 +11129,7 @@ ORACLES["peak_detection"] = """
 """
 
 
-ORACLES["hashing_trick_audit"] = """
+ORACLES["hashing_trick_audit"] = f"""
     WITH toks AS (
       SELECT unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS token
       FROM documents
@@ -11208,14 +11147,15 @@ ORACLES["hashing_trick_audit"] = """
     SELECT CAST(10 AS BIGINT) AS bits,
            CAST(sum(k) AS BIGINT) AS n_tokens,
            CAST(count(*) AS BIGINT) AS n_buckets_used,
-           floor((2000000 * sum(CASE WHEN k > 1 THEN k ELSE 0 END) + sum(k))
-                 / (2.0 * sum(k))) / 1000000.0 AS collision_rate,
-           floor((2000000 * sum(CASE WHEN k > 1 THEN mass ELSE 0 END) + sum(mass))
-                 / (2.0 * sum(mass))) / 1000000.0 AS collided_mass_share
+           {round6_ratio_sql("sum(CASE WHEN k > 1 THEN k ELSE 0 END)", "sum(k)")} AS collision_rate,
+           {round6_ratio_sql(
+               "sum(CASE WHEN k > 1 THEN mass ELSE 0 END)",
+               "sum(mass)",
+           )} AS collided_mass_share
     FROM per_bucket
 """
 
-ORACLES["path_conformance"] = """
+ORACLES["path_conformance"] = f"""
     WITH ordered AS (
       SELECT user_id, event_type, ts, epoch(ts) AS t,
              CASE WHEN lag(epoch(ts)) OVER w IS NULL
@@ -11246,11 +11186,11 @@ ORACLES["path_conformance"] = """
     ),
     tot AS (SELECT CAST(sum(n_sessions) AS BIGINT) AS t FROM hist)
     SELECT edit_distance, n_sessions,
-           floor((2000000 * n_sessions + t) / (2.0 * t)) / 1000000.0 AS share
+           {round6_ratio_sql("n_sessions", "t")} AS share
     FROM hist CROSS JOIN tot
 """
 
-ORACLES["schema_drift"] = """
+ORACLES["schema_drift"] = f"""
     WITH scal AS (
       SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
       FROM events
@@ -11277,8 +11217,8 @@ ORACLES["schema_drift"] = """
       FROM keys_ GROUP BY 1
     )
     SELECT key, n1, n2,
-           floor((2000000 * n1 + r1) / (2.0 * r1)) / 1000000.0 AS share1,
-           floor((2000000 * n2 + r2) / (2.0 * r2)) / 1000000.0 AS share2,
+           {round6_ratio_sql("n1", "r1")} AS share1,
+           {round6_ratio_sql("n2", "r2")} AS share2,
            CASE WHEN n1 = 0 THEN 'new'
                 WHEN n2 = 0 THEN 'dropped'
                 ELSE 'stable' END AS status
@@ -11418,7 +11358,7 @@ ORACLES["qq_shift_fit"] = """
     FROM agg WHERE n * sxx - sx * sx > 0
 """
 
-ORACLES["chao1_richness"] = """
+ORACLES["chao1_richness"] = f"""
     WITH toks AS (
       SELECT unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS token
       FROM documents
@@ -11447,16 +11387,14 @@ ORACLES["chao1_richness"] = """
       FROM agg
     )
     SELECT v_obs, f1, f2,
-           CAST((2000000::HUGEINT * num + den) // (2::HUGEINT * den) AS BIGINT)
-             / 1000000.0 AS chao1,
+           {round6_ratio_dec_sql("num", "den")} AS chao1,
            CASE WHEN num > 0
-                THEN CAST((2000000::HUGEINT * extra_num + num)
-                          // (2::HUGEINT * num) AS BIGINT) / 1000000.0
+                THEN {round6_ratio_dec_sql("extra_num", "num")}
                 ELSE 0.0 END AS unseen_share
     FROM rat
 """
 
-ORACLES["quality_rule_pack"] = r"""
+ORACLES["quality_rule_pack"] = rf"""
     WITH per_doc AS (
       SELECT
         len(regexp_split_to_array(trim(text), '\s+')) AS w,
@@ -11482,7 +11420,7 @@ ORACLES["quality_rule_pack"] = r"""
          + CASE WHEN regexp_matches(lower(text), '\bhave\b') THEN 1 ELSE 0 END
          + CASE WHEN regexp_matches(lower(text), '\bwith\b') THEN 1 ELSE 0 END
         ) AS sh,
-        (contains(lower(text), 'lorem ipsum') OR contains(text, '{')) AS boiler
+        (contains(lower(text), 'lorem ipsum') OR contains(text, '{{')) AS boiler
       FROM documents
     ),
     flags AS (
@@ -11519,8 +11457,7 @@ ORACLES["quality_rule_pack"] = r"""
     SELECT rule,
            CAST(nd AS BIGINT) AS n_docs,
            CAST(np AS BIGINT) AS n_pass,
-           floor((2000000 * np + greatest(nd, 1)) / (2.0 * greatest(nd, 1)))
-             / 1000000.0 AS pass_rate
+           {round6_ratio_sql("np", "greatest(nd, 1)")} AS pass_rate
     FROM rows_out
 """
 
@@ -11563,7 +11500,7 @@ ORACLES["dsir_weights"] = r"""
     FROM scored ORDER BY log_weight DESC, doc_id LIMIT 100
 """
 
-ORACLES["packing_efficiency"] = r"""
+ORACLES["packing_efficiency"] = rf"""
     WITH toks AS (
       SELECT doc_id,
              CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT) AS t
@@ -11592,18 +11529,16 @@ ORACLES["packing_efficiency"] = r"""
            CAST(nd AS BIGINT) AS n_docs,
            CAST(tt AS BIGINT) AS total_tokens,
            CAST((tt + L - 1) // L AS BIGINT) AS packed_contexts,
-           floor((2000000 * tt + greatest(((tt + L - 1) // L) * L, 1))
-                 / (2.0 * greatest(((tt + L - 1) // L) * L, 1))) / 1000000.0
+           {round6_ratio_sql("tt", "greatest(((tt + L - 1) // L) * L, 1)")}
              AS packed_fill_rate,
            CAST(ds AS BIGINT) AS docs_split,
            CAST(tsplits AS BIGINT) AS total_splits,
            CAST(nc AS BIGINT) AS naive_contexts,
-           floor((2000000 * tt + greatest(nc * L, 1))
-                 / (2.0 * greatest(nc * L, 1))) / 1000000.0 AS naive_fill_rate
+           {round6_ratio_sql("tt", "greatest(nc * L, 1)")} AS naive_fill_rate
     FROM agg
 """
 
-ORACLES["token_budget_alloc"] = r"""
+ORACLES["token_budget_alloc"] = rf"""
     WITH toks AS (
       SELECT source AS grp,
              len(regexp_extract_all(lower(text), '[a-z]+')) AS t
@@ -11666,14 +11601,12 @@ ORACLES["token_budget_alloc"] = r"""
       FROM flagged, level
     )
     SELECT grp, avail_tokens, cap_tokens, alloc_tokens, capped,
-           floor((2000000 * alloc_tokens + avail_tokens)
-                 / (2.0 * avail_tokens)) / 1000000.0 AS epochs,
-           floor((2000000 * alloc_tokens + greatest(B, 1))
-                 / (2.0 * greatest(B, 1))) / 1000000.0 AS budget_share
+           {round6_ratio_sql("alloc_tokens", "avail_tokens")} AS epochs,
+           {round6_ratio_sql("alloc_tokens", "greatest(B, 1)")} AS budget_share
     FROM out
 """
 
-ORACLES["shard_balance_audit"] = r"""
+ORACLES["shard_balance_audit"] = rf"""
     WITH per_doc AS (
       SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 11))::BIGINT % 64
                AS shard,
@@ -11701,22 +11634,22 @@ ORACLES["shard_balance_audit"] = r"""
     )
     SELECT n_shards, n_empty_shards, n_docs, n_tokens,
            max_shard_tokens, min_shard_tokens,
-           CAST((2000000::HUGEINT * (64::HUGEINT * snd2 - n_docs::HUGEINT * n_docs)
-                 + greatest(n_docs, 1))
-                // (2::HUGEINT * greatest(n_docs, 1)) AS BIGINT) / 1000000.0
+           {round6_ratio_dec_sql(
+               "64::HUGEINT * snd2 - n_docs::HUGEINT * n_docs",
+               "greatest(n_docs, 1)",
+           )}
              AS doc_chi2,
-           CAST((2000000::HUGEINT * (64::HUGEINT * snt2 - n_tokens::HUGEINT * n_tokens)
-                 + greatest(n_tokens, 1))
-                // (2::HUGEINT * greatest(n_tokens, 1)) AS BIGINT) / 1000000.0
+           {round6_ratio_dec_sql(
+               "64::HUGEINT * snt2 - n_tokens::HUGEINT * n_tokens",
+               "greatest(n_tokens, 1)",
+           )}
              AS token_chi2,
-           CAST((2000000::HUGEINT * (64::HUGEINT * max_shard_tokens)
-                 + greatest(n_tokens, 1))
-                // (2::HUGEINT * greatest(n_tokens, 1)) AS BIGINT) / 1000000.0
+           {round6_ratio_dec_sql("64::HUGEINT * max_shard_tokens", "greatest(n_tokens, 1)")}
              AS token_imbalance
     FROM agg
 """
 
-ORACLES["paragraph_dedup"] = """
+ORACLES["paragraph_dedup"] = f"""
     WITH paras AS (
       SELECT doc_id, trim(p, ' ' || chr(9) || chr(13)) AS p
       FROM (SELECT doc_id, unnest(string_split(text, chr(10))) AS p
@@ -11739,15 +11672,15 @@ ORACLES["paragraph_dedup"] = """
     SELECT doc_id,
            CAST(count(*) AS BIGINT) AS n_paras,
            CAST(sum(d) AS BIGINT) AS n_dup_paras,
-           floor((2000000 * sum(d) + count(*)) / (2.0 * count(*)))
-             / 1000000.0 AS dup_para_frac,
-           floor((2000000 * sum(CASE WHEN d = 1 THEN len ELSE 0 END)
-                  + greatest(sum(len), 1))
-                 / (2.0 * greatest(sum(len), 1))) / 1000000.0 AS dup_char_frac
+           {round6_ratio_sql("sum(d)", "count(*)")} AS dup_para_frac,
+           {round6_ratio_sql(
+               "sum(CASE WHEN d = 1 THEN len ELSE 0 END)",
+               "greatest(sum(len), 1)",
+           )} AS dup_char_frac
     FROM m GROUP BY 1
 """
 
-ORACLES["crossdoc_spans"] = r"""
+ORACLES["crossdoc_spans"] = rf"""
     WITH words AS (
       SELECT doc_id,
              string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
@@ -11788,12 +11721,11 @@ ORACLES["crossdoc_spans"] = r"""
            CAST(nt AS BIGINT) AS n_tokens,
            CAST(coalesce(ns, 0) AS BIGINT) AS n_spans,
            CAST(coalesce(dt, 0) AS BIGINT) AS dup_tokens,
-           floor((2000000 * coalesce(dt, 0) + greatest(nt, 1))
-                 / (2.0 * greatest(nt, 1))) / 1000000.0 AS dup_token_frac
+           {round6_ratio_sql("coalesce(dt, 0)", "greatest(nt, 1)")} AS dup_token_frac
     FROM base b LEFT JOIN pd ON b.doc_id = pd.doc_id
 """
 
-ORACLES["ppl_bucket_mix"] = r"""
+ORACLES["ppl_bucket_mix"] = rf"""
     WITH words AS (
       SELECT doc_id,
              string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
@@ -11841,17 +11773,14 @@ ORACLES["ppl_bucket_mix"] = r"""
       FROM tiered GROUP BY 1, 2
     )
     SELECT grp, bucket, n_docs, nb AS n_bigrams,
-           floor((2000000 * n_docs + sum(n_docs) OVER (PARTITION BY grp))
-                 / (2.0 * sum(n_docs) OVER (PARTITION BY grp))) / 1000000.0
+           {round6_ratio_sql("n_docs", "sum(n_docs) OVER (PARTITION BY grp)")}
              AS doc_share,
-           floor((2000000 * nb + greatest(sum(nb) OVER (PARTITION BY grp), 1))
-                 / (2.0 * greatest(sum(nb) OVER (PARTITION BY grp), 1)))
-             / 1000000.0 AS mass_share,
+           {round6_ratio_sql("nb", "greatest(sum(nb) OVER (PARTITION BY grp), 1)")} AS mass_share,
            score_lo, score_hi
     FROM per
 """
 
-ORACLES["tokenizer_drift"] = """
+ORACLES["tokenizer_drift"] = f"""
     WITH per AS (
       SELECT source AS grp,
              CAST(count(*) AS BIGINT) AS n_docs,
@@ -11862,20 +11791,15 @@ ORACLES["tokenizer_drift"] = """
     ),
     tot AS (SELECT sum(tokens) AS ta, sum(chars) AS ca FROM per)
     SELECT grp, n_docs, tokens, chars,
-           floor((2000000 * chars + greatest(tokens, 1))
-                 / (2.0 * greatest(tokens, 1))) / 1000000.0 AS chars_per_token,
-           CASE WHEN chars::HUGEINT * ta - ca::HUGEINT * tokens >= 0
-                THEN  CAST(( 2000000::HUGEINT * (chars::HUGEINT * ta - ca::HUGEINT * tokens)
-                            + greatest(tokens::HUGEINT * ta, 1))
-                           // (2::HUGEINT * greatest(tokens::HUGEINT * ta, 1)) AS BIGINT) / 1000000.0
-                ELSE -CAST((-2000000::HUGEINT * (chars::HUGEINT * ta - ca::HUGEINT * tokens)
-                            + greatest(tokens::HUGEINT * ta, 1))
-                           // (2::HUGEINT * greatest(tokens::HUGEINT * ta, 1)) AS BIGINT) / 1000000.0
-           END AS drift
+           {round6_ratio_sql("chars", "greatest(tokens, 1)")} AS chars_per_token,
+           {round6_ratio_dec_signed_sql(
+               "chars::HUGEINT * ta - ca::HUGEINT * tokens",
+               "greatest(tokens::HUGEINT * ta, 1)",
+           )} AS drift
     FROM per, tot
 """
 
-ORACLES["eval_contamination"] = r"""
+ORACLES["eval_contamination"] = rf"""
     WITH bdocs AS (
       SELECT 'b' || CAST(doc_id % 3 AS VARCHAR) AS benchmark, text
       FROM documents WHERE doc_id < 9
@@ -11907,14 +11831,13 @@ ORACLES["eval_contamination"] = r"""
     )
     SELECT b.benchmark, b.nbg AS n_bench_grams,
            coalesce(dh, 0) AS n_docs_hit,
-           floor((2000000 * coalesce(dh, 0) + greatest(n, 1))
-                 / (2.0 * greatest(n, 1))) / 1000000.0 AS hit_rate,
+           {round6_ratio_sql("coalesce(dh, 0)", "greatest(n, 1)")} AS hit_rate,
            coalesce(ov, 0) AS total_overlap
     FROM bsz b LEFT JOIN hits USING (benchmark), nd
 """
 
 ORACLES["cluster_keep_best"] = """
-    WITH RECURSIVE """ + _SHINGLE_CTE + """,
+    WITH RECURSIVE """ + _SHINGLE_CTE + f""",
     sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
     shared AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
@@ -11925,7 +11848,7 @@ ORACLES["cluster_keep_best"] = """
         SELECT id_a, id_b FROM shared
         JOIN sz sa ON sa.doc_id = id_a
         JOIN sz sb ON sb.doc_id = id_b
-        WHERE floor((2000000 * shared + (sa.sz + sb.sz - shared)) / (2.0 * (sa.sz + sb.sz - shared))) / 1000000.0 >= 0.25
+        WHERE {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} >= 0.25
     ),
     edges AS (
         SELECT id_a AS a, id_b AS b FROM p
@@ -11941,12 +11864,12 @@ ORACLES["cluster_keep_best"] = """
     stats AS (
         SELECT doc_id,
                len(regexp_split_to_array(trim(text), '\\s+')) AS n_words,
-               floor((2000000 * len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) + greatest(length(text), 1))
-                     / (2.0 * greatest(length(text), 1))) / 1000000.0 AS punct_ratio,
-               floor((2000000 * len(regexp_extract_all(text, '[0-9]')) + greatest(length(text), 1))
-                     / (2.0 * greatest(length(text), 1))) / 1000000.0 AS digit_ratio,
-               floor((2000000 * len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|that|for|with)\\b')) + greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-                     / (2.0 * greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))) / 1000000.0
+               {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
+               {round6_ratio_sql(
+                   "len(regexp_extract_all(text, '[0-9]'))",
+                   "greatest(length(text), 1)",
+               )} AS digit_ratio,
+               {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
                      AS stopword_ratio
         FROM documents
     ),
@@ -11994,7 +11917,7 @@ ORACLES["cross_source_dup"] = """
     FROM pairs GROUP BY 1, 2
 """
 
-ORACLES["dup_cluster_sizes"] = """
+ORACLES["dup_cluster_sizes"] = f"""
     WITH u AS (
       SELECT doc_id, text FROM documents
       UNION ALL
@@ -12016,12 +11939,11 @@ ORACLES["dup_cluster_sizes"] = """
     )
     SELECT CAST(group_size AS BIGINT) AS group_size,
            n_groups, n_docs, n_docs_removable, chars_removable,
-           floor((2000000 * n_docs + sum(n_docs) OVER ())
-                 / (2.0 * sum(n_docs) OVER ())) / 1000000.0 AS doc_share
+           {round6_ratio_sql("n_docs", "sum(n_docs) OVER ()")} AS doc_share
     FROM spec
 """
 
-ORACLES["template_prefix"] = r"""
+ORACLES["template_prefix"] = rf"""
     WITH pref AS (
       SELECT source AS grp,
              md5(array_to_string(
@@ -12041,7 +11963,7 @@ ORACLES["template_prefix"] = r"""
       FROM counts GROUP BY 1
     )
     SELECT a.grp, n_docs, n_prefixes, CAST(c AS BIGINT) AS top_count,
-           floor((2000000 * c + n_docs) / (2.0 * n_docs)) / 1000000.0
+           {round6_ratio_sql("c", "n_docs")}
              AS top_share
     FROM agg a JOIN rk ON a.grp = rk.grp AND rk.rn = 1
 """
@@ -12072,16 +11994,16 @@ ORACLES["cluster_keep_best_lsh"] = _sql_surgery(
 # oracle's stats/q CTEs), parameterized on the source relation so the
 # injected-union queries can reuse it verbatim
 def _quality_cte_sql(rel: str) -> str:
-    return """
+    return f"""
     stats AS (
         SELECT doc_id,
                len(regexp_split_to_array(trim(text), '\\s+')) AS n_words,
-               floor((2000000 * len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) + greatest(length(text), 1))
-                     / (2.0 * greatest(length(text), 1))) / 1000000.0 AS punct_ratio,
-               floor((2000000 * len(regexp_extract_all(text, '[0-9]')) + greatest(length(text), 1))
-                     / (2.0 * greatest(length(text), 1))) / 1000000.0 AS digit_ratio,
-               floor((2000000 * len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is|that|for|with)\\b')) + greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))
-                     / (2.0 * greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1))) / 1000000.0
+               {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
+               {round6_ratio_sql(
+                   "len(regexp_extract_all(text, '[0-9]'))",
+                   "greatest(length(text), 1)",
+               )} AS digit_ratio,
+               {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
                      AS stopword_ratio
         FROM """ + rel + """
     ),
@@ -12096,7 +12018,7 @@ def _quality_cte_sql(rel: str) -> str:
     )"""
 
 
-ORACLES["dup_line_stats"] = """
+ORACLES["dup_line_stats"] = f"""
     WITH deco AS (
       SELECT doc_id,
              CASE WHEN doc_id % 9 = 0
@@ -12121,15 +12043,19 @@ ORACLES["dup_line_stats"] = """
     SELECT d.doc_id,
            CAST(coalesce(nl, 0) AS BIGINT) AS n_lines,
            CAST(coalesce(nd, 0) AS BIGINT) AS n_distinct_lines,
-           floor((2000000 * coalesce(nl - nd, 0) + greatest(coalesce(nl, 0), 1))
-                 / (2.0 * greatest(coalesce(nl, 0), 1))) / 1000000.0 AS dup_line_frac,
-           floor((2000000 * coalesce(dupchars, 0) + greatest(coalesce(chars, 0), 1))
-                 / (2.0 * greatest(coalesce(chars, 0), 1))) / 1000000.0 AS dup_char_frac
+           {round6_ratio_sql(
+               "coalesce(nl - nd, 0)",
+               "greatest(coalesce(nl, 0), 1)",
+           )} AS dup_line_frac,
+           {round6_ratio_sql(
+               "coalesce(dupchars, 0)",
+               "greatest(coalesce(chars, 0), 1)",
+           )} AS dup_char_frac
     FROM deco d LEFT JOIN ag ON d.doc_id = ag.doc_id
 """
 
 ORACLES["quality_threshold_sweep"] = ("""
-    WITH""" + _quality_cte_sql("documents") + """,
+    WITH""" + _quality_cte_sql("documents") + f""",
     tok AS (
       SELECT doc_id,
              len(regexp_extract_all(text,
@@ -12148,15 +12074,12 @@ ORACLES["quality_threshold_sweep"] = ("""
     SELECT i / 10.0 AS threshold,
            CAST(nk AS BIGINT) AS n_docs_kept,
            CAST(tkk AS BIGINT) AS tokens_kept,
-           floor((2000000 * nk + greatest(n, 1)) / (2.0 * greatest(n, 1)))
-             / 1000000.0 AS doc_share,
-           CAST((2000000::HUGEINT * tkk::HUGEINT + greatest(tk, 1)::HUGEINT)
-                // (2::HUGEINT * greatest(tk, 1)::HUGEINT) AS BIGINT)
-             / 1000000.0 AS token_share
+           {round6_ratio_sql("nk", "greatest(n, 1)")} AS doc_share,
+           {round6_ratio_dec_sql("tkk::HUGEINT", "greatest(tk, 1)::HUGEINT")} AS token_share
     FROM sw, tots
 """)
 
-ORACLES["contamination_spans"] = """
+ORACLES["contamination_spans"] = f"""
     WITH words AS (
       SELECT doc_id,
              string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
@@ -12204,8 +12127,7 @@ ORACLES["contamination_spans"] = """
            CAST(coalesce(hits, 0) AS BIGINT) AS n_hits,
            CAST(coalesce(ns, 0) AS BIGINT) AS n_spans,
            CAST(coalesce(rt, 0) AS BIGINT) AS rm_tokens,
-           floor((2000000 * coalesce(rt, 0) + greatest(nt, 1))
-                 / (2.0 * greatest(nt, 1))) / 1000000.0 AS rm_token_frac
+           {round6_ratio_sql("coalesce(rt, 0)", "greatest(nt, 1)")} AS rm_token_frac
     FROM base b LEFT JOIN pd ON b.doc_id = pd.doc_id
 """
 
@@ -12256,7 +12178,7 @@ ORACLES["pipeline_roi"] = ("""
       SELECT doc_id, text, source FROM documents
       UNION ALL
       SELECT doc_id + 6000000, text, source FROM documents WHERE doc_id % 6 = 0
-    ),""" + _quality_cte_sql("u") + """,
+    ),""" + _quality_cte_sql("u") + f""",
     tok AS (
       SELECT doc_id, source, md5(text) AS d,
              len(regexp_extract_all(text,
@@ -12299,13 +12221,9 @@ ORACLES["pipeline_roi"] = ("""
     tot AS (SELECT sum(qsv) AS qt FROM qs)
     SELECT source, n_raw, tokens_raw, n_quality, tokens_quality, n_kept,
            tokens_kept,
-           floor((2000000 * (n_raw - n_quality) + greatest(n_raw, 1))
-                 / (2.0 * greatest(n_raw, 1))) / 1000000.0 AS quality_rm_frac,
-           floor((2000000 * (n_quality - n_kept) + greatest(n_quality, 1))
-                 / (2.0 * greatest(n_quality, 1))) / 1000000.0 AS dup_rm_frac,
-           CAST((2000000::HUGEINT * qsv::HUGEINT + greatest(qt, 1)::HUGEINT)
-                // (2::HUGEINT * greatest(qt, 1)::HUGEINT) AS BIGINT)
-             / 1000000.0 AS mix_weight
+           {round6_ratio_sql("n_raw - n_quality", "greatest(n_raw, 1)")} AS quality_rm_frac,
+           {round6_ratio_sql("n_quality - n_kept", "greatest(n_quality, 1)")} AS dup_rm_frac,
+           {round6_ratio_dec_sql("qsv::HUGEINT", "greatest(qt, 1)::HUGEINT")} AS mix_weight
     FROM qs, tot
 """)
 
@@ -12333,7 +12251,7 @@ ORACLES["blocklist_audit"] = ("""
       FROM documents
     ),
     ph(phrase, pat) AS (
-      VALUES """ + _BL_VALUES + """
+      VALUES """ + _BL_VALUES + f"""
     ),
     per AS (
       SELECT source, phrase,
@@ -12344,9 +12262,10 @@ ORACLES["blocklist_audit"] = ("""
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(CASE WHEN occ > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_hit,
            CAST(sum(occ) AS BIGINT) AS n_occurrences,
-           floor((2000000 * sum(CASE WHEN occ > 0 THEN 1 ELSE 0 END)
-                  + greatest(count(*), 1))
-                 / (2.0 * greatest(count(*), 1))) / 1000000.0 AS hit_rate
+           {round6_ratio_sql(
+               "sum(CASE WHEN occ > 0 THEN 1 ELSE 0 END)",
+               "greatest(count(*), 1)",
+           )} AS hit_rate
     FROM per GROUP BY 1, 2
 """)
 
@@ -12371,16 +12290,14 @@ ORACLES["cluster_balanced_sample"] = _KM_ASSIGN_PREFIX + """, rk AS (
     FROM pick WHERE rn <= 10
 """
 
-ORACLES["ivf_list_balance"] = _KM_ASSIGN_PREFIX + """, sizes AS (
+ORACLES["ivf_list_balance"] = _KM_ASSIGN_PREFIX + f""", sizes AS (
       SELECT cid, count(*) AS n_vecs FROM a3 GROUP BY 1
     ),
     tot AS (SELECT sum(n_vecs) AS n FROM sizes)
     SELECT cid AS list_id,
            CAST(n_vecs AS BIGINT) AS n_vecs,
-           floor((2000000 * n_vecs + greatest(n, 1)) / (2.0 * greatest(n, 1)))
-             / 1000000.0 AS share,
-           floor((2000000 * n_vecs * 8 + greatest(n, 1)) / (2.0 * greatest(n, 1)))
-             / 1000000.0 AS load_factor
+           {round6_ratio_sql("n_vecs", "greatest(n, 1)")} AS share,
+           {round6_ratio_sql("n_vecs * 8", "greatest(n, 1)")} AS load_factor
     FROM sizes, tot
 """
 
@@ -12394,7 +12311,7 @@ ORACLES["dup_quality_bias"] = ("""
       SELECT doc_id + 5000000, text FROM documents WHERE doc_id % 5 = 0
       UNION ALL
       SELECT doc_id + 15000000, text FROM documents WHERE doc_id % 15 = 0
-    ),""" + _quality_cte_sql("u") + """,
+    ),""" + _quality_cte_sql("u") + f""",
     dg AS (SELECT doc_id, md5(text) AS d FROM u),
     sz AS (SELECT d, count(*) AS s, min(doc_id) AS keep FROM dg GROUP BY 1),
     j AS (
@@ -12406,18 +12323,14 @@ ORACLES["dup_quality_bias"] = ("""
     SELECT CAST(b AS BIGINT) AS group_size_bucket,
            CAST(count(DISTINCT d) AS BIGINT) AS n_groups,
            CAST(count(*) AS BIGINT) AS n_docs,
-           CAST((2000000::HUGEINT * sum(qu)::HUGEINT
-                 + count(*)::HUGEINT * 1000000)
-                // (2::HUGEINT * count(*)::HUGEINT * 1000000) AS BIGINT)
-             / 1000000.0 AS mean_quality_all,
-           CAST((2000000::HUGEINT
-                   * sum(CASE WHEN is_keep THEN qu ELSE 0 END)::HUGEINT
-                 + greatest(sum(CASE WHEN is_keep THEN 1 ELSE 0 END), 1)::HUGEINT
-                   * 1000000)
-                // (2::HUGEINT
-                    * greatest(sum(CASE WHEN is_keep THEN 1 ELSE 0 END), 1)::HUGEINT
-                    * 1000000) AS BIGINT)
-             / 1000000.0 AS mean_quality_kept
+           {round6_ratio_dec_sql(
+               "sum(qu)::HUGEINT",
+               "count(*)::HUGEINT * 1000000",
+           )} AS mean_quality_all,
+           {round6_ratio_dec_sql(
+               "sum(CASE WHEN is_keep THEN qu ELSE 0 END)::HUGEINT",
+               "greatest(sum(CASE WHEN is_keep THEN 1 ELSE 0 END), 1)::HUGEINT * 1000000",
+           )} AS mean_quality_kept
     FROM j GROUP BY 1
 """)
 
@@ -12485,20 +12398,24 @@ ORACLES["script_mix"] = (
     + " FROM documents) SELECT grp, CAST(count(*) AS BIGINT) AS n_docs, "
     + "CAST(sum(len) AS BIGINT) AS n_chars, "
     + ", ".join(
-        "CASE WHEN sum(len) > 0 THEN CAST((2000000::HUGEINT*sum(c_{n})::HUGEINT"
-        " + sum(len)::HUGEINT) // (2::HUGEINT*sum(len)::HUGEINT) AS BIGINT)"
-        "/1000000.0 ELSE 0.0 END AS frac_{n}".format(n=name)
+        "CASE WHEN sum(len) > 0 THEN "
+        + round6_ratio_dec_sql(f"sum(c_{name})::HUGEINT", "sum(len)::HUGEINT")
+        + f" ELSE 0.0 END AS frac_{name}"
         for name, _ in text.SCRIPT_CLASSES
     )
-    + ", CASE WHEN sum(len) > 0 THEN CAST((2000000::HUGEINT*(sum(len) - ("
-    + " + ".join(f"sum(c_{name})" for name, _ in text.SCRIPT_CLASSES)
-    + "))::HUGEINT + sum(len)::HUGEINT) // (2::HUGEINT*sum(len)::HUGEINT)"
-    " AS BIGINT)/1000000.0 ELSE 0.0 END AS frac_other"
+    + ", CASE WHEN sum(len) > 0 THEN "
+    + round6_ratio_dec_sql(
+        "(sum(len) - ("
+        + " + ".join(f"sum(c_{name})" for name, _ in text.SCRIPT_CLASSES)
+        + "))::HUGEINT",
+        "sum(len)::HUGEINT",
+    )
+    + " ELSE 0.0 END AS frac_other"
     " FROM c GROUP BY grp"
 )
 
 
-ORACLES["cramers_v"] = """
+ORACLES["cramers_v"] = f"""
     WITH cells AS (
       SELECT source AS a, lang AS b, count(*) AS o
       FROM documents GROUP BY 1, 2
@@ -12522,21 +12439,18 @@ ORACLES["cramers_v"] = """
            CAST(n_rows AS BIGINT) AS n_rows,
            CAST(n_cols AS BIGINT) AS n_cols,
            CASE WHEN least(n_rows - 1, n_cols - 1) > 0 THEN
-             CAST((2000000::HUGEINT * (n * d) + 1000000000000::HUGEINT)
-                  // (2::HUGEINT * 1000000000000::HUGEINT) AS BIGINT)
-               / 1000000.0
+             {round6_ratio_dec_sql("n * d", "1000000000000::HUGEINT")}
            ELSE 0.0 END AS chi2,
            CASE WHEN least(n_rows - 1, n_cols - 1) > 0 THEN
-             CAST(round(CAST(sqrt(CAST(d AS DOUBLE)
-                    / CAST(1000000000000::BIGINT
-                           * least(n_rows - 1, n_cols - 1) AS DOUBLE))
-                  AS DECIMAL(27,12)), 6) AS DOUBLE)
+             {round6_bridge_sql(
+                 "sqrt(CAST(d AS DOUBLE) / CAST(1000000000000::BIGINT * least(n_rows - 1, n_cols - 1) AS DOUBLE))",
+             )}
            ELSE 0.0 END AS cramers_v
     FROM agg
 """
 
 
-ORACLES["fim_split_audit"] = """
+ORACLES["fim_split_audit"] = f"""
     WITH per AS (
       SELECT source AS grp,
              length(text)::BIGINT AS len,
@@ -12568,25 +12482,22 @@ ORACLES["fim_split_audit"] = """
            CAST(n_docs AS BIGINT) AS n_docs,
            CAST(fim_docs AS BIGINT) AS fim_docs,
            CASE WHEN l > 0 THEN
-             CAST((2000000::HUGEINT * p::HUGEINT + l::HUGEINT)
-                  // (2::HUGEINT * l::HUGEINT) AS BIGINT) / 1000000.0
+             {round6_ratio_dec_sql("p::HUGEINT", "l::HUGEINT")}
            ELSE 0.0 END AS prefix_frac,
            CASE WHEN l > 0 THEN
-             CAST((2000000::HUGEINT * m::HUGEINT + l::HUGEINT)
-                  // (2::HUGEINT * l::HUGEINT) AS BIGINT) / 1000000.0
+             {round6_ratio_dec_sql("m::HUGEINT", "l::HUGEINT")}
            ELSE 0.0 END AS middle_frac,
            CASE WHEN l > 0 THEN
-             CAST((2000000::HUGEINT * s::HUGEINT + l::HUGEINT)
-                  // (2::HUGEINT * l::HUGEINT) AS BIGINT) / 1000000.0
+             {round6_ratio_dec_sql("s::HUGEINT", "l::HUGEINT")}
            ELSE 0.0 END AS suffix_frac,
            CASE WHEN fim_docs > 0 THEN
-             floor((2000000 * short + fim_docs) / (2.0 * fim_docs)) / 1000000.0
+             {round6_ratio_sql("short", "fim_docs")}
            ELSE 0.0 END AS short_middle_rate
     FROM agg
 """
 
 
-ORACLES["rp_distortion"] = """
+ORACLES["rp_distortion"] = f"""
     WITH dims AS (SELECT unnest(generate_series(0, 63)) AS d),
     hs AS (SELECT unnest(generate_series(0, 15)) AS h),
     planes AS (
@@ -12629,19 +12540,14 @@ ORACLES["rp_distortion"] = """
     )
     SELECT hamming,
            CAST(count(*) AS BIGINT) AS n_pairs,
-           CASE WHEN sum(q) >= 0
-             THEN  CAST(( 2000000::HUGEINT*sum(q) + count(*)::HUGEINT*1000000)
-                        // (2::HUGEINT*count(*)::HUGEINT*1000000) AS BIGINT) / 1000000.0
-             ELSE -CAST((-2000000::HUGEINT*sum(q) + count(*)::HUGEINT*1000000)
-                        // (2::HUGEINT*count(*)::HUGEINT*1000000) AS BIGINT) / 1000000.0
-           END AS mean_cosine,
+           {round6_ratio_dec_signed_sql("sum(q)", "count(*)::HUGEINT*1000000")} AS mean_cosine,
            min(q)::BIGINT / 1000000.0 AS min_cosine,
            max(q)::BIGINT / 1000000.0 AS max_cosine
     FROM qd GROUP BY 1
 """
 
 
-ORACLES["ivf_probe_sweep"] = """
+ORACLES["ivf_probe_sweep"] = f"""
     WITH q AS (
       SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
       FROM embeddings WHERE vec_id % 211 = 0
@@ -12706,14 +12612,13 @@ ORACLES["ivf_probe_sweep"] = """
       FROM qsz, probes GROUP BY 1
     )
     SELECT CAST(p AS BIGINT) AS nprobe,
-           floor((2000000 * h + t) / (2.0 * t)) / 1000000.0 AS recall,
-           CAST((2000000::HUGEINT * num::HUGEINT + den::HUGEINT)
-                // (2::HUGEINT * den::HUGEINT) AS BIGINT) / 1000000.0 AS scanned_frac
+           {round6_ratio_sql("h", "t")} AS recall,
+           {round6_ratio_dec_sql("num::HUGEINT", "den::HUGEINT")} AS scanned_frac
     FROM rec JOIN sc USING (p)
 """
 
 
-ORACLES["shard_dup_locality"] = """
+ORACLES["shard_dup_locality"] = f"""
     WITH u AS (
       SELECT doc_id, text FROM documents
       UNION ALL
@@ -12746,14 +12651,13 @@ ORACLES["shard_dup_locality"] = """
            CAST(ip AS BIGINT) AS intra_pairs,
            CAST(tp - ip AS BIGINT) AS cross_pairs,
            CASE WHEN tp > 0 THEN
-             CAST((2000000::HUGEINT * ip + tp) // (2::HUGEINT * tp) AS BIGINT)
-               / 1000000.0
+             {round6_ratio_dec_sql("ip", "tp")}
            ELSE 0.0 END AS locality
     FROM agg
 """
 
 
-ORACLES["quant_recall"] = """
+ORACLES["quant_recall"] = f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     q AS (
       SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
@@ -12799,13 +12703,12 @@ ORACLES["quant_recall"] = """
     ),
     allq AS (SELECT q_id, count(*) AS t FROM exact GROUP BY 1)
     SELECT allq.q_id,
-           floor((2000000 * coalesce(h, 0) + greatest(t, 1))
-                 / (2.0 * greatest(t, 1))) / 1000000.0 AS recall
+           {round6_ratio_sql("coalesce(h, 0)", "greatest(t, 1)")} AS recall
     FROM allq LEFT JOIN hits USING (q_id)
 """
 
 
-ORACLES["frame_dup_rate"] = """
+ORACLES["frame_dup_rate"] = f"""
     WITH u AS (
       SELECT doc_id, text FROM documents
       UNION ALL
@@ -12829,14 +12732,16 @@ ORACLES["frame_dup_rate"] = """
            CAST(count(*) AS BIGINT) AS n_frames,
            CAST(sum(CASE WHEN flagged.d IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
              AS dup_frames,
-           floor((2000000 * sum(CASE WHEN flagged.d IS NOT NULL THEN 1 ELSE 0 END)
-                  + count(*)) / (2.0 * count(*))) / 1000000.0 AS dup_frame_rate
+           {round6_ratio_sql(
+               "sum(CASE WHEN flagged.d IS NOT NULL THEN 1 ELSE 0 END)",
+               "count(*)",
+           )} AS dup_frame_rate
     FROM fr LEFT JOIN flagged ON fr.d = flagged.d
     GROUP BY 1
 """
 
 
-ORACLES["byte_entropy"] = """
+ORACLES["byte_entropy"] = f"""
     WITH m AS (
       SELECT source AS grp, hex(encode(text)) AS h
       FROM documents WHERE octet_length(encode(text)) > 0
@@ -12850,10 +12755,10 @@ ORACLES["byte_entropy"] = """
            CAST(sum(c) AS BIGINT) AS n_bytes,
            CAST(count(*) AS BIGINT) AS n_distinct_bytes,
            round(log2(sum(c)) - sum(c * log2(c)) / sum(c), 6) AS h_byte,
-           CAST((2000000::HUGEINT
-                   * sum(CASE WHEN bv BETWEEN '20' AND '7E' THEN c ELSE 0 END)::HUGEINT
-                 + sum(c)::HUGEINT)
-                // (2::HUGEINT * sum(c)::HUGEINT) AS BIGINT) / 1000000.0
+           {round6_ratio_dec_sql(
+               "sum(CASE WHEN bv BETWEEN '20' AND '7E' THEN c ELSE 0 END)::HUGEINT",
+               "sum(c)::HUGEINT",
+           )}
              AS printable_frac
     FROM counted GROUP BY 1
 """
@@ -12870,7 +12775,7 @@ ORACLES["cluster_quality_bias"] = _sql_surgery(
     ", cl AS MATERIALIZED (SELECT node AS doc_id, min(r) AS cluster_id"
     " FROM reach GROUP BY 1),"
     + _quality_cte_sql("documents")
-    + """,
+    + f""",
     sz AS (
       SELECT cluster_id, count(*) AS s, min(doc_id) AS keep
       FROM cl GROUP BY 1
@@ -12884,18 +12789,14 @@ ORACLES["cluster_quality_bias"] = _sql_surgery(
     SELECT CAST(b AS BIGINT) AS cluster_size_bucket,
            CAST(count(DISTINCT cluster_id) AS BIGINT) AS n_clusters,
            CAST(count(*) AS BIGINT) AS n_docs,
-           CAST((2000000::HUGEINT * sum(qu)::HUGEINT
-                 + count(*)::HUGEINT * 1000000)
-                // (2::HUGEINT * count(*)::HUGEINT * 1000000) AS BIGINT)
-             / 1000000.0 AS mean_quality_all,
-           CAST((2000000::HUGEINT
-                   * sum(CASE WHEN is_keep THEN qu ELSE 0 END)::HUGEINT
-                 + greatest(sum(CASE WHEN is_keep THEN 1 ELSE 0 END), 1)::HUGEINT
-                   * 1000000)
-                // (2::HUGEINT
-                    * greatest(sum(CASE WHEN is_keep THEN 1 ELSE 0 END), 1)::HUGEINT
-                    * 1000000) AS BIGINT)
-             / 1000000.0 AS mean_quality_kept
+           {round6_ratio_dec_sql(
+               "sum(qu)::HUGEINT",
+               "count(*)::HUGEINT * 1000000",
+           )} AS mean_quality_all,
+           {round6_ratio_dec_sql(
+               "sum(CASE WHEN is_keep THEN qu ELSE 0 END)::HUGEINT",
+               "greatest(sum(CASE WHEN is_keep THEN 1 ELSE 0 END), 1)::HUGEINT * 1000000",
+           )} AS mean_quality_kept
     FROM jj GROUP BY 1""",
 )
 
@@ -12924,23 +12825,20 @@ ORACLES["rule_disagreement"] = (
         f" s_{b[:3]} - p_{a[:3]}_{b[:3]} AS cc FROM agg"
         for a, b in _QR_PAIRS
     )
-    + """
+    + f"""
     )
     SELECT rule_a, rule_b, CAST(n AS BIGINT) AS n_docs,
            CAST(bb AS BIGINT) AS a_only, CAST(cc AS BIGINT) AS b_only,
-           floor((2000000 * (bb + cc) + greatest(n, 1))
-                 / (2.0 * greatest(n, 1))) / 1000000.0 AS disagree_rate,
+           {round6_ratio_sql("bb + cc", "greatest(n, 1)")} AS disagree_rate,
            CASE WHEN bb + cc > 0 THEN
-             CAST((2000000::HUGEINT * ((bb - cc)::HUGEINT * (bb - cc)::HUGEINT)
-                   + (bb + cc)::HUGEINT)
-                  // (2::HUGEINT * (bb + cc)::HUGEINT) AS BIGINT) / 1000000.0
+             {round6_ratio_dec_sql("(bb - cc)::HUGEINT * (bb - cc)::HUGEINT", "(bb + cc)::HUGEINT")}
            ELSE 0.0 END AS mcnemar_chi2
     FROM pr
 """
 )
 
 
-ORACLES["kendall_tau"] = """
+ORACLES["kendall_tau"] = f"""
     WITH cells AS (
       SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
              CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
@@ -12968,9 +12866,9 @@ ORACLES["kendall_tau"] = """
            CAST(concordant AS BIGINT) AS concordant,
            CAST(discordant AS BIGINT) AS discordant,
            CASE WHEN n0 - t1 > 0 AND n0 - t2 > 0 THEN
-             CAST(round(CAST((concordant - discordant)
-                    / sqrt(CAST((n0 - t1) * (n0 - t2) AS DOUBLE))
-                  AS DECIMAL(27,12)), 6) AS DOUBLE)
+             {round6_bridge_sql(
+                 "(concordant - discordant) / sqrt(CAST((n0 - t1) * (n0 - t2) AS DOUBLE))",
+             )}
            ELSE 0.0 END AS tau_b
     FROM nh JOIN g USING (day)
 """
@@ -13000,7 +12898,7 @@ ORACLES["source_kl"] = """
 """
 
 
-ORACLES["l_diversity"] = """
+ORACLES["l_diversity"] = f"""
     WITH c AS (
       SELECT c_mktsegment, c_nationkey,
              CASE WHEN c_acctbal < 0 THEN 'debt'
@@ -13025,15 +12923,13 @@ ORACLES["l_diversity"] = """
            CAST(class_size AS BIGINT) AS class_size,
            CAST(l_distinct AS BIGINT) AS l_distinct,
            CAST(min_l AS BIGINT) AS min_l,
-           CAST((2000000::HUGEINT * lt2::HUGEINT + t::HUGEINT)
-                // (2::HUGEINT * t::HUGEINT) AS BIGINT) / 1000000.0 AS pct_lt_2,
-           CAST((2000000::HUGEINT * lt3::HUGEINT + t::HUGEINT)
-                // (2::HUGEINT * t::HUGEINT) AS BIGINT) / 1000000.0 AS pct_lt_3
+           {round6_ratio_dec_sql("lt2::HUGEINT", "t::HUGEINT")} AS pct_lt_2,
+           {round6_ratio_dec_sql("lt3::HUGEINT", "t::HUGEINT")} AS pct_lt_3
     FROM classes, tot
 """
 
 
-ORACLES["embedding_anisotropy"] = """
+ORACLES["embedding_anisotropy"] = f"""
     WITH comp AS (
       SELECT vec_id,
              generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS d,
@@ -13082,16 +12978,16 @@ ORACLES["embedding_anisotropy"] = """
     )
     SELECT CAST(nv AS BIGINT) AS n,
            CAST(dim AS BIGINT) AS dim,
-           CAST(round(CAST(tr AS DECIMAL(27,12)), 6) AS DOUBLE) AS trace_var,
-           CAST(round(CAST(lam AS DECIMAL(27,12)), 6) AS DOUBLE) AS top_eigenvalue,
+           {round6_bridge_sql("tr")} AS trace_var,
+           {round6_bridge_sql("lam")} AS top_eigenvalue,
            CASE WHEN tr > 0 THEN
-             CAST(round(CAST(lam / tr AS DECIMAL(27,12)), 6) AS DOUBLE)
+             {round6_bridge_sql("lam / tr")}
            ELSE 0.0 END AS top_share
     FROM tr, lam
 """
 
 
-ORACLES["doc_gini"] = """
+ORACLES["doc_gini"] = f"""
     WITH per AS (
       SELECT source AS grp, doc_id AS id,
              len(list_filter(
@@ -13113,15 +13009,14 @@ ORACLES["doc_gini"] = """
            CAST(n AS BIGINT) AS n_docs,
            CAST(st AS BIGINT) AS n_tokens,
            CASE WHEN st > 0 THEN
-             CAST(round(CAST(
-               2.0 * CAST(sit AS DOUBLE) / CAST(n::HUGEINT * st::HUGEINT AS DOUBLE)
-               - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE)
-             AS DECIMAL(27,12)), 6) AS DOUBLE)
+             {round6_bridge_sql(
+                 "2.0 * CAST(sit AS DOUBLE) / CAST(n::HUGEINT * st::HUGEINT AS DOUBLE) - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE)",
+             )}
            ELSE 0.0 END AS gini_tokens
     FROM s
 """
 
-ORACLES["cohens_d"] = """
+ORACLES["cohens_d"] = f"""
     WITH per AS (
       SELECT source AS grp,
              len(list_filter(
@@ -13137,27 +13032,20 @@ ORACLES["cohens_d"] = """
     tot AS (SELECT sum(n) AS nn, sum(st) AS tt, sum(qt) AS qq FROM s)
     SELECT grp,
            CAST(n AS BIGINT) AS n_docs,
-           floor((2000000*st + n) / (2.0*n)) / 1000000.0 AS mean_tokens,
+           {round6_ratio_sql("st", "n")} AS mean_tokens,
            CASE WHEN (nn - n) >= 1 AND nn >= 3 AND
                      (CAST(qq AS DOUBLE)
                       - CAST(st AS DOUBLE)*CAST(st AS DOUBLE)/CAST(n AS DOUBLE)
                       - CAST(tt - st AS DOUBLE)*CAST(tt - st AS DOUBLE)/CAST(nn - n AS DOUBLE))
                      / CAST(nn - 2 AS DOUBLE) > 0
-           THEN CAST(round(CAST(
-                  greatest(least(
-                    (CAST(st AS DOUBLE)/CAST(n AS DOUBLE)
-                     - CAST(tt - st AS DOUBLE)/CAST(nn - n AS DOUBLE))
-                    / sqrt((CAST(qq AS DOUBLE)
-                            - CAST(st AS DOUBLE)*CAST(st AS DOUBLE)/CAST(n AS DOUBLE)
-                            - CAST(tt - st AS DOUBLE)*CAST(tt - st AS DOUBLE)/CAST(nn - n AS DOUBLE))
-                           / CAST(nn - 2 AS DOUBLE))
-                  , 1000.0), -1000.0)
-                AS DECIMAL(27,12)), 6) AS DOUBLE)
+           THEN {round6_bridge_sql(
+                    "greatest(least( (CAST(st AS DOUBLE)/CAST(n AS DOUBLE) - CAST(tt - st AS DOUBLE)/CAST(nn - n AS DOUBLE)) / sqrt((CAST(qq AS DOUBLE) - CAST(st AS DOUBLE)*CAST(st AS DOUBLE)/CAST(n AS DOUBLE) - CAST(tt - st AS DOUBLE)*CAST(tt - st AS DOUBLE)/CAST(nn - n AS DOUBLE)) / CAST(nn - 2 AS DOUBLE)) , 1000.0), -1000.0)",
+                )}
            ELSE 0.0 END AS cohens_d
     FROM s, tot
 """
 
-ORACLES["code_detect"] = """
+ORACLES["code_detect"] = f"""
     WITH per AS (
       SELECT source AS grp, replace(text, chr(13), '') AS body
       FROM documents
@@ -13168,10 +13056,10 @@ ORACLES["code_detect"] = """
         len(list_filter(string_split(body, chr(10)),
             x -> left(x, 4) = '    ' OR left(x, 1) = chr(9))) AS ind,
         len(list_filter(string_split(body, chr(10)),
-            x -> right(rtrim(x), 1) IN (';', '{', '}', ')'))) AS pnc,
+            x -> right(rtrim(x), 1) IN (';', '{{', '}}', ')'))) AS pnc,
         length(body) AS ch,
         length(body)
-          - length(regexp_replace(body, '[\\[\\]{}();=<>]', '', 'g')) AS sy,
+          - length(regexp_replace(body, '[\\[\\]{{}}();=<>]', '', 'g')) AS sy,
         (CASE WHEN contains(body, 'def ') THEN 1 ELSE 0 END
          + CASE WHEN contains(body, 'return') THEN 1 ELSE 0 END
          + CASE WHEN contains(body, 'import ') THEN 1 ELSE 0 END
@@ -13201,26 +13089,22 @@ ORACLES["code_detect"] = """
     SELECT grp,
            CAST(n AS BIGINT) AS n_docs,
            CAST(cd AS BIGINT) AS code_docs,
-           floor((2000000*cd + n) / (2.0*n)) / 1000000.0 AS code_frac,
-           floor((2000000*ss + n) / (2.0*n)) / 1000000.0 AS mean_score
+           {round6_ratio_sql("cd", "n")} AS code_frac,
+           {round6_ratio_sql("ss", "n")} AS mean_score
     FROM g
 """
 
-ORACLES["cuped_adjustment"] = """
+ORACLES["cuped_adjustment"] = f"""
     WITH mm AS (
       SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi FROM events
     ),
     per AS (
       SELECT user_id AS u,
         coalesce(sum(CASE WHEN epoch_us(ts) < lo + (hi - lo) // 2 THEN
-          CASE WHEN CAST(value AS DOUBLE) >= 0
-               THEN  CAST(floor( CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT)
-               ELSE -CAST(floor(-CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT) END
+          {cents_sql("value")}
         END), 0) AS x,
         coalesce(sum(CASE WHEN epoch_us(ts) >= lo + (hi - lo) // 2 THEN
-          CASE WHEN CAST(value AS DOUBLE) >= 0
-               THEN  CAST(floor( CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT)
-               ELSE -CAST(floor(-CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT) END
+          {cents_sql("value")}
         END), 0) AS y
       FROM events, mm
       GROUP BY 1
@@ -13265,10 +13149,7 @@ ORACLES["cuped_adjustment"] = """
     )
     SELECT variant,
            CAST(n_users AS BIGINT) AS n_users,
-           CASE WHEN svy >= 0
-                THEN  floor(( 2000000*svy + 100*n_users) / (2.0*100*n_users)) / 1000000.0
-                ELSE -floor((-2000000*svy + 100*n_users) / (2.0*100*n_users)) / 1000000.0
-           END + 0.0 AS raw_mean,
+           {round6_ratio_signed_sql("svy", "100*n_users")} AS raw_mean,
            (CASE WHEN adj >= 0
                  THEN  CAST(floor(abs(adj)*1000000.0 + 0.5) AS BIGINT)
                  ELSE -CAST(floor(abs(adj)*1000000.0 + 0.5) AS BIGINT) END
@@ -13277,7 +13158,7 @@ ORACLES["cuped_adjustment"] = """
                  THEN  CAST(floor(abs(theta)*1000000.0 + 0.5) AS BIGINT)
                  ELSE -CAST(floor(abs(theta)*1000000.0 + 0.5) AS BIGINT) END
            ) / 1000000.0 AS theta,
-           CAST(round(CAST(r2 AS DECIMAL(27,12)), 6) AS DOUBLE) AS rho2
+           {round6_bridge_sql("r2")} AS rho2
     FROM expr
     ORDER BY variant
 """
@@ -13300,7 +13181,7 @@ ORACLES["cluster_diameter"] = _sql_surgery(
         "sig AS MATERIALIZED (",
     ),
         "SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.2",
-        """, p AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.2),
+        f""", p AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.2),
     edges AS MATERIALIZED (
         SELECT id_a AS a, id_b AS b FROM p
         UNION
@@ -13344,7 +13225,7 @@ ORACLES["cluster_diameter"] = _sql_surgery(
     ),
     pp AS (
         SELECT cluster_id, csize,
-               CAST(floor((2000000*it + un) / (2.0*un)) AS BIGINT) AS jmu,
+               CAST({round6_ratio_sql("it", "un")} * 1000000 AS BIGINT) AS jmu,
                CASE WHEN 5*it < 1*un THEN 1 ELSE 0 END AS ch
         FROM pj
     ),
@@ -13357,10 +13238,9 @@ ORACLES["cluster_diameter"] = _sql_surgery(
            count(*)::BIGINT AS n_clusters,
            sum(np)::BIGINT AS n_pairs,
            sum(nc)::BIGINT AS chained_pairs,
-           floor((2000000*sum(nc) + sum(np)) / (2.0*sum(np))) / 1000000.0 AS chained_frac,
+           {round6_ratio_sql("sum(nc)", "sum(np)")} AS chained_frac,
            min(minj) / 1000000.0 AS min_sim,
-           CAST((2000000::HUGEINT*sum(sumj) + 1000000::HUGEINT*sum(np))
-                // (2::HUGEINT*1000000::HUGEINT*sum(np)) AS BIGINT) / 1000000.0 AS mean_sim
+           {round6_ratio_dec_sql("sum(sumj)", "1000000::HUGEINT*sum(np)")} AS mean_sim
     FROM pc GROUP BY csize""",
 )
 
@@ -13453,11 +13333,6 @@ ORACLES["order_count_histogram"] = """
 def _qte_oracle() -> str:
     """Mirror of qte_deciles: decile picks a=1..9 over b=10 with the
     exact integer-rank formula, signed DECIMAL round-6 ratios."""
-    cents = (
-        "CASE WHEN CAST(value AS DOUBLE) >= 0"
-        " THEN  CAST(floor( CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT)"
-        " ELSE -CAST(floor(-CAST(value AS DOUBLE)*100 + 0.5) AS BIGINT) END"
-    )
     picks = []
     for a in range(1, 10):
         picks.append(
@@ -13467,12 +13342,7 @@ def _qte_oracle() -> str:
         )
 
     def sr(num):
-        return (
-            f"CASE WHEN ({num}) >= 0 THEN CAST((2000000::HUGEINT*({num}) + 1000)"
-            f" // (2::HUGEINT*1000) AS BIGINT) / 1000000.0"
-            f" ELSE -CAST((-2000000::HUGEINT*({num}) + 1000)"
-            f" // (2::HUGEINT*1000) AS BIGINT) / 1000000.0 END"
-        )
+        return round6_ratio_dec_signed_sql(num, "1000")
 
     rows = []
     for a in range(1, 10):
@@ -13487,7 +13357,7 @@ def _qte_oracle() -> str:
     return f"""
     WITH base AS (
       SELECT ('0x' || substr(md5(user_id::VARCHAR), 1, 11))::BIGINT % 2 AS variant,
-             {cents} AS v,
+             {cents_sql("value")} AS v,
              event_id AS o
       FROM events
     ),
@@ -13510,7 +13380,7 @@ def _qte_oracle() -> str:
 
 ORACLES["qte_deciles"] = _qte_oracle()
 
-ORACLES["vocab_partial_corr"] = """
+ORACLES["vocab_partial_corr"] = f"""
     WITH per AS (
       SELECT source AS grp,
              len(list_filter(
@@ -13553,25 +13423,24 @@ ORACLES["vocab_partial_corr"] = """
     SELECT grp,
            CAST(n AS BIGINT) AS n_docs,
            CASE WHEN vx > 0 AND vy > 0 AND vz > 0
-                THEN CAST(round(CAST(rxy AS DECIMAL(27,12)), 6) AS DOUBLE)
+                THEN {round6_bridge_sql("rxy")}
                 ELSE 0.0 END AS r_xy,
            CASE WHEN vx > 0 AND vy > 0 AND vz > 0
-                THEN CAST(round(CAST(rxz AS DECIMAL(27,12)), 6) AS DOUBLE)
+                THEN {round6_bridge_sql("rxz")}
                 ELSE 0.0 END AS r_xz,
            CASE WHEN vx > 0 AND vy > 0 AND vz > 0
-                THEN CAST(round(CAST(ryz AS DECIMAL(27,12)), 6) AS DOUBLE)
+                THEN {round6_bridge_sql("ryz")}
                 ELSE 0.0 END AS r_yz,
            CASE WHEN vx > 0 AND vy > 0 AND vz > 0
                  AND (1.0 - rxz * rxz) * (1.0 - ryz * ryz) > 0
-                THEN CAST(round(CAST(
-                       (rxy - rxz * ryz)
-                       / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz))
-                     AS DECIMAL(27,12)), 6) AS DOUBLE)
+                THEN {round6_bridge_sql(
+                         "(rxy - rxz * ryz) / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz))",
+                     )}
                 ELSE 0.0 END AS partial_xy_z
     FROM rr
 """
 
-ORACLES["t_closeness"] = """
+ORACLES["t_closeness"] = f"""
     WITH cnt AS (
       SELECT c_mktsegment AS q1, c_nationkey AS q2,
              CASE WHEN c_acctbal < 0 THEN 1
@@ -13611,22 +13480,20 @@ ORACLES["t_closeness"] = """
     )
     SELECT q1 AS c_mktsegment, q2 AS c_nationkey,
            CAST(class_size AS BIGINT) AS class_size,
-           CAST((2000000::HUGEINT*num + den) // (2::HUGEINT*den) AS BIGINT)
-             / 1000000.0 AS t_emd,
-           max(CAST((2000000::HUGEINT*num + den) // (2::HUGEINT*den) AS BIGINT)
-               / 1000000.0) OVER () AS max_t,
-           CAST((2000000::HUGEINT
-                   * sum(CASE WHEN 10*num > 1*den THEN class_size ELSE 0 END) OVER ()
-                 + max(nn) OVER ())
-                // (2::HUGEINT * max(nn) OVER ()) AS BIGINT) / 1000000.0 AS pct_gt_1_10,
-           CAST((2000000::HUGEINT
-                   * sum(CASE WHEN 5*num > 1*den THEN class_size ELSE 0 END) OVER ()
-                 + max(nn) OVER ())
-                // (2::HUGEINT * max(nn) OVER ()) AS BIGINT) / 1000000.0 AS pct_gt_1_5
+           {round6_ratio_dec_sql("num", "den")} AS t_emd,
+           max({round6_ratio_dec_sql("num", "den")}) OVER () AS max_t,
+           {round6_ratio_dec_sql(
+               "sum(CASE WHEN 10*num > 1*den THEN class_size ELSE 0 END) OVER ()",
+               "max(nn) OVER ()",
+           )} AS pct_gt_1_10,
+           {round6_ratio_dec_sql(
+               "sum(CASE WHEN 5*num > 1*den THEN class_size ELSE 0 END) OVER ()",
+               "max(nn) OVER ()",
+           )} AS pct_gt_1_5
     FROM per
 """
 
-ORACLES["degree_assortativity"] = """
+ORACLES["degree_assortativity"] = f"""
     WITH occ AS MATERIALIZED (
       SELECT DISTINCT user_id AS u,
              event_type || ':' ||
@@ -13659,13 +13526,11 @@ ORACLES["degree_assortativity"] = """
     nn AS (SELECT count(*) AS n_nodes FROM deg)
     SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
            CAST(m AS BIGINT) AS n_edges,
-           floor((2000000*(2*m) + greatest(n_nodes, 1))
-                 / (2.0*greatest(n_nodes, 1))) / 1000000.0 AS mean_degree,
+           {round6_ratio_sql("2*m", "greatest(n_nodes, 1)")} AS mean_degree,
            CASE WHEN CAST(2::HUGEINT*m::HUGEINT*s2 - s1::HUGEINT*s1::HUGEINT AS DOUBLE) > 0
-                THEN CAST(round(CAST(
-                       CAST(4::HUGEINT*m::HUGEINT*sjk - s1::HUGEINT*s1::HUGEINT AS DOUBLE)
-                       / CAST(2::HUGEINT*m::HUGEINT*s2 - s1::HUGEINT*s1::HUGEINT AS DOUBLE)
-                     AS DECIMAL(27,12)), 6) AS DOUBLE)
+                THEN {round6_bridge_sql(
+                         "CAST(4::HUGEINT*m::HUGEINT*sjk - s1::HUGEINT*s1::HUGEINT AS DOUBLE) / CAST(2::HUGEINT*m::HUGEINT*s2 - s1::HUGEINT*s1::HUGEINT AS DOUBLE)",
+                     )}
                 ELSE 0.0 END AS assortativity
     FROM g, nn
 """
@@ -13714,7 +13579,7 @@ ORACLES["chunk_overlap"] = """
     FROM pb JOIN dd USING (bucket)
 """
 
-ORACLES["link_density"] = """
+ORACLES["link_density"] = f"""
     WITH deco AS (
       SELECT source,
              text
@@ -13751,13 +13616,12 @@ ORACLES["link_density"] = """
            CAST(ld AS BIGINT) AS link_docs,
            CAST(nl AS BIGINT) AS n_links,
            CAST(coalesce(nd, 0) AS BIGINT) AS n_domains,
-           floor((2000000*ld + n) / (2.0*n)) / 1000000.0 AS link_doc_frac,
-           floor((2000000*(1000*nl) + greatest(ch, 1))
-                 / (2.0*greatest(ch, 1))) / 1000000.0 AS links_per_kchar
+           {round6_ratio_sql("ld", "n")} AS link_doc_frac,
+           {round6_ratio_sql("1000*nl", "greatest(ch, 1)")} AS links_per_kchar
     FROM g LEFT JOIN doms ON doms.grp = g.grp
 """
 
-ORACLES["markup_stats"] = """
+ORACLES["markup_stats"] = f"""
     WITH deco AS (
       SELECT source,
              replace(text
@@ -13802,9 +13666,8 @@ ORACLES["markup_stats"] = """
            CAST(st AS BIGINT) AS table_lines,
            CAST(sq AS BIGINT) AS quote_lines,
            CAST(sf AS BIGINT) AS code_fences,
-           floor((2000000*md + n_docs) / (2.0*n_docs)) / 1000000.0 AS markup_frac,
-           floor((2000000*(sh + sl + st + sq) + greatest(sn, 1))
-                 / (2.0*greatest(sn, 1))) / 1000000.0 AS markup_line_frac
+           {round6_ratio_sql("md", "n_docs")} AS markup_frac,
+           {round6_ratio_sql("sh + sl + st + sq", "greatest(sn, 1)")} AS markup_line_frac
     FROM g
 """
 
@@ -13823,7 +13686,7 @@ ORACLES["dup_degree_spectrum"] = _sql_surgery(
     FROM deg GROUP BY 1""",
 )
 
-ORACLES["language_mix"] = """
+ORACLES["language_mix"] = f"""
     WITH deco AS (
       SELECT doc_id, source,
              text || CASE WHEN doc_id % 7 = 0
@@ -13876,11 +13739,11 @@ ORACLES["language_mix"] = """
            CAST(n AS BIGINT) AS n_docs,
            CAST(coalesce(msd, 0) AS BIGINT) AS multi_seg_docs,
            CAST(coalesce(mxd, 0) AS BIGINT) AS mixed_docs,
-           floor((2000000*coalesce(mxd, 0) + n) / (2.0*n)) / 1000000.0 AS mixed_frac
+           {round6_ratio_sql("coalesce(mxd, 0)", "n")} AS mixed_frac
     FROM ad LEFT JOIN rolled ON rolled.grp = ad.grp
 """
 
-ORACLES["brier_decomposition"] = """
+ORACLES["brier_decomposition"] = f"""
     WITH base AS (
       SELECT least(greatest(n_chars - 50, 0), 550)::BIGINT AS c,
              CASE WHEN lang = 'en' THEN 1 ELSE 0 END::BIGINT AS y,
@@ -13908,24 +13771,20 @@ ORACLES["brier_decomposition"] = """
       GROUP BY 1, 2, 3
     )
     SELECT CAST(n AS BIGINT) AS n,
-           CAST((2000000::HUGEINT*sq + 302500::HUGEINT*n)
-                // (2::HUGEINT*302500::HUGEINT*n) AS BIGINT) / 1000000.0 AS brier,
-           CAST((2000000::HUGEINT*rel
-                 + 1000000000000::HUGEINT*302500::HUGEINT*n)
-                // (2::HUGEINT*1000000000000::HUGEINT*302500::HUGEINT*n)
-                AS BIGINT) / 1000000.0 AS reliability,
-           CAST((2000000::HUGEINT*res
-                 + 1000000::HUGEINT*n::HUGEINT*n::HUGEINT*n::HUGEINT)
-                // (2::HUGEINT*1000000::HUGEINT*n::HUGEINT*n::HUGEINT*n::HUGEINT)
-                AS BIGINT) / 1000000.0 AS resolution,
-           CAST((2000000::HUGEINT*(yy::HUGEINT*(n - yy)::HUGEINT)
-                 + n::HUGEINT*n::HUGEINT)
-                // (2::HUGEINT*n::HUGEINT*n::HUGEINT) AS BIGINT)
-             / 1000000.0 AS uncertainty
+           {round6_ratio_dec_sql("sq", "302500::HUGEINT*n")} AS brier,
+           {round6_ratio_dec_sql("rel", "1000000000000::HUGEINT*302500::HUGEINT*n")} AS reliability,
+           {round6_ratio_dec_sql(
+               "res",
+               "1000000::HUGEINT*n::HUGEINT*n::HUGEINT*n::HUGEINT",
+           )} AS resolution,
+           {round6_ratio_dec_sql(
+               "yy::HUGEINT*(n - yy)::HUGEINT",
+               "n::HUGEINT*n::HUGEINT",
+           )} AS uncertainty
     FROM terms
 """
 
-ORACLES["forecast_mase"] = """
+ORACLES["forecast_mase"] = f"""
     WITH hourly AS (
       SELECT event_type AS grp, date_trunc('hour', ts) AS hour,
              count(*) AS y
@@ -13949,15 +13808,15 @@ ORACLES["forecast_mase"] = """
            CAST(n1 AS BIGINT) AS n_naive,
            CAST(ns AS BIGINT) AS n_seasonal,
            CASE WHEN n1 > 0 AND ns > 0 AND ae1 > 0
-                THEN CAST((2000000::HUGEINT * (aes::HUGEINT * n1::HUGEINT)
-                           + ae1::HUGEINT * ns::HUGEINT)
-                          // (2::HUGEINT * ae1::HUGEINT * ns::HUGEINT)
-                          AS BIGINT) / 1000000.0
+                THEN {round6_ratio_dec_sql(
+                         "aes::HUGEINT * n1::HUGEINT",
+                         "ae1::HUGEINT * ns::HUGEINT",
+                     )}
                 ELSE -1.0 END AS mase
     FROM agg
 """
 
-ORACLES["char_rep_rate"] = """
+ORACLES["char_rep_rate"] = f"""
     WITH el AS (
       SELECT doc_id, source, text FROM documents WHERE length(text) >= 10
     ),
@@ -13984,12 +13843,11 @@ ORACLES["char_rep_rate"] = """
            CAST(coalesce(np, 0) AS BIGINT) AS n_grams,
            CAST(coalesce(dup, 0) AS BIGINT) AS dup_grams,
            CASE WHEN np IS NULL THEN -1.0
-                ELSE floor((2000000*coalesce(dup, 0) + np) / (2.0*np))
-                     / 1000000.0 END AS rep_rate
+                ELSE {round6_ratio_sql("coalesce(dup, 0)", "np")} END AS rep_rate
     FROM allg LEFT JOIN per ON per.grp = allg.grp
 """
 
-ORACLES["url_dedup"] = """
+ORACLES["url_dedup"] = f"""
     WITH deco AS (
       SELECT doc_id, source,
              text
@@ -14028,7 +13886,7 @@ ORACLES["url_dedup"] = """
            CAST(coalesce(ud, 0) AS BIGINT) AS url_docs,
            CAST(coalesce(uu, 0) AS BIGINT) AS uniq_urls,
            CAST(coalesce(dd, 0) AS BIGINT) AS dup_docs,
-           floor((2000000*coalesce(dd, 0) + n) / (2.0*n)) / 1000000.0 AS dup_frac
+           {round6_ratio_sql("coalesce(dd, 0)", "n")} AS dup_frac
     FROM ad LEFT JOIN per ON per.grp = ad.grp
 """
 
@@ -14046,7 +13904,7 @@ ORACLES["doc_disposition"] = """
               OR text LIKE '%Privacy Policy%') AS blk
       FROM deco
     ),
-    keep AS (SELECT dg, min(doc_id) AS k FROM d0 GROUP BY 1),""" + _quality_cte_sql("deco") + """,
+    keep AS (SELECT dg, min(doc_id) AS k FROM d0 GROUP BY 1),""" + _quality_cte_sql("deco") + f""",
     j AS (
       SELECT d0.source AS grp,
              CASE WHEN d0.doc_id <> keep.k THEN 'dup'
@@ -14057,7 +13915,7 @@ ORACLES["doc_disposition"] = """
     ),
     tot AS (SELECT source AS grp, count(*) AS n FROM deco GROUP BY 1)
     SELECT j.grp, disposition, count(*)::BIGINT AS n_docs,
-           floor((2000000*count(*) + n) / (2.0*n)) / 1000000.0 AS frac
+           {round6_ratio_sql("count(*)", "n")} AS frac
     FROM j JOIN tot ON tot.grp = j.grp
     GROUP BY 1, 2, n
 """
@@ -14121,7 +13979,7 @@ ORACLES["knn_stability"] = """
     FROM ov GROUP BY 1
 """
 
-ORACLES["bloom_fpr_audit"] = """
+ORACLES["bloom_fpr_audit"] = f"""
     WITH dg AS MATERIALIZED (SELECT DISTINCT md5(text) AS d FROM documents),
     pos AS MATERIALIZED (
       SELECT DISTINCT d,
@@ -14141,13 +13999,13 @@ ORACLES["bloom_fpr_audit"] = """
            CAST(3 AS BIGINT) AS j_hashes,
            CAST(n AS BIGINT) AS n_digests,
            CAST(nb AS BIGINT) AS n_set_bits,
-           floor((2000000*nb + 4096) / (2.0*4096)) / 1000000.0 AS load_frac,
+           {round6_ratio_sql("nb", "4096")} AS load_frac,
            CAST(fpp AS BIGINT) AS fp_prone,
-           floor((2000000*fpp + n) / (2.0*n)) / 1000000.0 AS fp_rate
+           {round6_ratio_sql("fpp", "n")} AS fp_rate
     FROM agg, bits
 """
 
-ORACLES["cross_shard_novelty"] = """
+ORACLES["cross_shard_novelty"] = f"""
     WITH base AS MATERIALIZED (
       SELECT doc_id, CAST(doc_id AS BIGINT) // 100 AS sh, md5(text) AS d
       FROM documents
@@ -14158,8 +14016,7 @@ ORACLES["cross_shard_novelty"] = """
            sum(CASE WHEN fs < sh THEN 1 ELSE 0 END)::BIGINT AS stale_docs,
            count(DISTINCT CASE WHEN fs = sh THEN base.d END)::BIGINT
              AS novel_digests,
-           floor((2000000*sum(CASE WHEN fs < sh THEN 1 ELSE 0 END) + count(*))
-                 / (2.0*count(*))) / 1000000.0 AS stale_frac
+           {round6_ratio_sql("sum(CASE WHEN fs < sh THEN 1 ELSE 0 END)", "count(*)")} AS stale_frac
     FROM base JOIN firsts USING (d)
     GROUP BY 1
 """
@@ -14171,7 +14028,7 @@ ORACLES["cross_shard_novelty"] = """
 ORACLES["near_dup_family_agreement"] = _sql_surgery(
     ORACLES["minhash_lsh_pairs"],
     "SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.2",
-    """, mh AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.2),
+    f""", mh AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.2),
     tok AS (
         SELECT doc_id,
                unnest(regexp_extract_all(lower(text),
@@ -14212,16 +14069,16 @@ ORACLES["near_dup_family_agreement"] = _sql_surgery(
            CAST(coalesce(mo, 0) AS BIGINT) AS minhash_only,
            CAST(coalesce(so, 0) AS BIGINT) AS simhash_only,
            CASE WHEN coalesce(bp, 0) + coalesce(mo, 0) + coalesce(so, 0) > 0
-                THEN floor((2000000*coalesce(bp, 0)
-                            + (coalesce(bp,0)+coalesce(mo,0)+coalesce(so,0)))
-                           / (2.0*(coalesce(bp,0)+coalesce(mo,0)+coalesce(so,0))))
-                     / 1000000.0
+                THEN {round6_ratio_sql(
+                         "coalesce(bp, 0)",
+                         "coalesce(bp,0)+coalesce(mo,0)+coalesce(so,0)",
+                     )}
                 ELSE -1.0 END AS agreement
     FROM agg""",
 )
 
 ORACLES["source_containment"] = """
-    WITH """ + _SHINGLE_CTE + """,
+    WITH """ + _SHINGLE_CTE + f""",
     sg AS MATERIALIZED (
       SELECT DISTINCT d.source AS grp, sh.s
       FROM sh JOIN documents d USING (doc_id)
@@ -14236,8 +14093,7 @@ ORACLES["source_containment"] = """
            CAST(ns AS BIGINT) AS n_shared,
            CAST(za.z AS BIGINT) AS size_a,
            CAST(zb.z AS BIGINT) AS size_b,
-           floor((2000000*ns + least(za.z, zb.z)) / (2.0*least(za.z, zb.z)))
-             / 1000000.0 AS containment
+           {round6_ratio_sql("ns", "least(za.z, zb.z)")} AS containment
     FROM inter
     JOIN sz za ON za.grp = grp_a
     JOIN sz zb ON zb.grp = grp_b
@@ -14274,7 +14130,7 @@ ORACLES["dup_run_lengths"] = """
     FROM lens WHERE run_len >= 2 GROUP BY 1
 """
 
-ORACLES["minhash_scurve"] = """
+ORACLES["minhash_scurve"] = f"""
     WITH ids AS MATERIALIZED (
         SELECT doc_id FROM documents ORDER BY doc_id LIMIT 64
     ),
@@ -14343,13 +14199,12 @@ ORACLES["minhash_scurve"] = """
            CAST(j.j_bin AS BIGINT) AS j_bin,
            CAST(count(*) AS BIGINT) AS n_pairs,
            CAST(sum(is_cand) AS BIGINT) AS n_cand,
-           floor((2000000 * sum(is_cand) + count(*)) / (2.0 * count(*)))
-             / 1000000.0 AS cand_rate
+           {round6_ratio_sql("sum(is_cand)", "count(*)")} AS cand_rate
     FROM cand c JOIN jb j USING (id_a, id_b)
     GROUP BY 1, 2, 3
 """
 
-ORACLES["boilerplate_roi"] = """
+ORACLES["boilerplate_roi"] = f"""
     WITH deco AS (
       SELECT source, doc_id,
              CASE WHEN doc_id % 3 = 0
@@ -14393,19 +14248,17 @@ ORACLES["boilerplate_roi"] = """
     SELECT s.grp,
            CAST(coalesce(nl, 0) AS BIGINT) AS n_lines,
            CAST(coalesce(bl, 0) AS BIGINT) AS bp_lines,
-           floor((2000000 * coalesce(bl, 0) + greatest(coalesce(nl, 0), 1))
-                 / (2.0 * greatest(coalesce(nl, 0), 1))) / 1000000.0
+           {round6_ratio_sql("coalesce(bl, 0)", "greatest(coalesce(nl, 0), 1)")}
              AS line_share,
            CAST(coalesce(nc, 0) AS BIGINT) AS n_chars,
            CAST(coalesce(bc, 0) AS BIGINT) AS bp_chars,
-           floor((2000000 * coalesce(bc, 0) + greatest(coalesce(nc, 0), 1))
-                 / (2.0 * greatest(coalesce(nc, 0), 1))) / 1000000.0
+           {round6_ratio_sql("coalesce(bc, 0)", "greatest(coalesce(nc, 0), 1)")}
              AS char_share,
            CAST(coalesce(da, 0) AS BIGINT) AS docs_affected
     FROM srcs s LEFT JOIN agg USING (grp)
 """
 
-ORACLES["oov_rate"] = """
+ORACLES["oov_rate"] = f"""
     WITH toks AS (
         SELECT source AS grp,
                unnest(regexp_extract_all(lower(text),
@@ -14438,17 +14291,15 @@ ORACLES["oov_rate"] = """
     SELECT s.grp,
            CAST(coalesce(nt, 0) AS BIGINT) AS n_tokens,
            CAST(coalesce(ov, 0) AS BIGINT) AS oov_tokens,
-           floor((2000000 * coalesce(ov, 0) + greatest(coalesce(nt, 0), 1))
-                 / (2.0 * greatest(coalesce(nt, 0), 1))) / 1000000.0
+           {round6_ratio_sql("coalesce(ov, 0)", "greatest(coalesce(nt, 0), 1)")}
              AS oov_rate,
            CAST(coalesce(fb, 0) AS BIGINT) AS fallback_tokens,
-           floor((2000000 * coalesce(fb, 0) + greatest(coalesce(nt, 0), 1))
-                 / (2.0 * greatest(coalesce(nt, 0), 1))) / 1000000.0
+           {round6_ratio_sql("coalesce(fb, 0)", "greatest(coalesce(nt, 0), 1)")}
              AS inflation
     FROM srcs s LEFT JOIN agg USING (grp)
 """
 
-ORACLES["contamination_matrix"] = r"""
+ORACLES["contamination_matrix"] = rf"""
     WITH bdocs AS (
         SELECT 'b' || CAST(doc_id % 3 AS VARCHAR) AS benchmark, text
         FROM documents WHERE doc_id < 9
@@ -14495,12 +14346,10 @@ ORACLES["contamination_matrix"] = r"""
            coalesce(nb2, 0) AS n_both,
            CASE WHEN coalesce(za.sz, 0) + coalesce(zb.sz, 0)
                      - coalesce(nb2, 0) > 0
-                THEN floor((2000000 * coalesce(nb2, 0)
-                            + (coalesce(za.sz, 0) + coalesce(zb.sz, 0)
-                               - coalesce(nb2, 0)))
-                           / (2.0 * (coalesce(za.sz, 0) + coalesce(zb.sz, 0)
-                                     - coalesce(nb2, 0))))
-                     / 1000000.0
+                THEN {round6_ratio_sql(
+                         "coalesce(nb2, 0)",
+                         "coalesce(za.sz, 0) + coalesce(zb.sz, 0) - coalesce(nb2, 0)",
+                     )}
                 ELSE 0.0 END AS jaccard
     FROM prs p
     LEFT JOIN ovl USING (bench_a, bench_b)
@@ -14536,12 +14385,11 @@ _QBS_LEVEL_SQL = """
       FROM a{L} JOIN exact USING (q_id, vec_id)
     )"""
 
-_QBS_ROW_SQL = """
-    SELECT CAST({L} AS BIGINT) AS q_levels, CAST({B} AS BIGINT) AS bits,
+_QBS_ROW_SQL = f"""
+    SELECT CAST({{L}} AS BIGINT) AS q_levels, CAST({{B}} AS BIGINT) AS bits,
            nq AS n_queries, ne AS n_exact, h AS n_hits,
-           floor((2000000 * h + greatest(ne, 1)) / (2.0 * greatest(ne, 1)))
-             / 1000000.0 AS recall
-    FROM tot, h{L}"""
+           {round6_ratio_sql("h", "greatest(ne, 1)")} AS recall
+    FROM tot, h{{L}}"""
 
 ORACLES["quant_bits_sweep"] = (
     """
@@ -14576,7 +14424,7 @@ ORACLES["quant_bits_sweep"] = (
     )
 )
 
-ORACLES["sig_size_sweep"] = """
+ORACLES["sig_size_sweep"] = f"""
     WITH ids AS MATERIALIZED (
         SELECT doc_id FROM documents ORDER BY doc_id LIMIT 64
     ),
@@ -14653,27 +14501,19 @@ ORACLES["sig_size_sweep"] = """
     SELECT CAST(h AS BIGINT) AS sig_size,
            CAST(j_bin AS BIGINT) AS j_bin,
            CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST((2000000::HUGEINT * sum(abs(q))::HUGEINT
-                 + count(*)::HUGEINT * 1000000000000)
-                // (2::HUGEINT * count(*)::HUGEINT * 1000000000000)
-                AS BIGINT) / 1000000.0 AS mae,
-           CASE WHEN sum(q) >= 0
-                THEN CAST((2000000::HUGEINT * sum(q)::HUGEINT
-                           + count(*)::HUGEINT * 1000000000000)
-                          // (2::HUGEINT * count(*)::HUGEINT * 1000000000000)
-                          AS BIGINT) / 1000000.0
-                ELSE -CAST((-2000000::HUGEINT * sum(q)::HUGEINT
-                            + count(*)::HUGEINT * 1000000000000)
-                           // (2::HUGEINT * count(*)::HUGEINT * 1000000000000)
-                           AS BIGINT) / 1000000.0
-           END AS bias,
-           CAST((2000000::HUGEINT * max(abs(q))::HUGEINT + 1000000000000)
-                // (2::HUGEINT * 1000000000000)
-                AS BIGINT) / 1000000.0 AS max_abs_err
+           {round6_ratio_dec_sql(
+               "sum(abs(q))::HUGEINT",
+               "count(*)::HUGEINT * 1000000000000",
+           )} AS mae,
+           {round6_ratio_dec_signed_sql(
+               "sum(q)::HUGEINT",
+               "count(*)::HUGEINT * 1000000000000",
+           )} AS bias,
+           {round6_ratio_dec_sql("max(abs(q))::HUGEINT", "1000000000000")} AS max_abs_err
     FROM qs GROUP BY 1, 2
 """
 
-ORACLES["instruction_detect"] = """
+ORACLES["instruction_detect"] = f"""
     WITH deco AS (
       SELECT source,
              CASE WHEN doc_id % 5 = 0
@@ -14729,12 +14569,12 @@ ORACLES["instruction_detect"] = """
     SELECT grp,
            CAST(n AS BIGINT) AS n_docs,
            CAST(idc AS BIGINT) AS inst_docs,
-           floor((2000000*idc + n) / (2.0*n)) / 1000000.0 AS inst_frac,
-           floor((2000000*ss + n) / (2.0*n)) / 1000000.0 AS mean_score
+           {round6_ratio_sql("idc", "n")} AS inst_frac,
+           {round6_ratio_sql("ss", "n")} AS mean_score
     FROM g
 """
 
-ORACLES["domain_mix"] = """
+ORACLES["domain_mix"] = f"""
     WITH deco AS (
       SELECT source,
              text
@@ -14767,7 +14607,7 @@ ORACLES["domain_mix"] = """
     SELECT per.grp, per.tld,
            CAST(nd AS BIGINT) AS n_docs,
            CAST(nh AS BIGINT) AS n_hosts,
-           floor((2000000*nd + tt) / (2.0*tt)) / 1000000.0 AS share
+           {round6_ratio_sql("nd", "tt")} AS share
     FROM per JOIN tot USING (grp)
 """
 
@@ -14855,7 +14695,7 @@ def _facility_oracle(k: int = 8, sample_docs: int = 64) -> str:
 
 ORACLES["facility_select"] = _facility_oracle(8, 64)
 
-ORACLES["vocab_size_sweep"] = """
+ORACLES["vocab_size_sweep"] = f"""
     WITH toks AS (
         SELECT unnest(regexp_extract_all(lower(text),
             '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\f\r]')) AS t
@@ -14880,17 +14720,15 @@ ORACLES["vocab_size_sweep"] = """
            CAST(coalesce(vt, 0) AS BIGINT) AS vocab_types,
            CAST(coalesce(nt, 0) AS BIGINT) AS n_tokens,
            CAST(coalesce(ov, 0) AS BIGINT) AS oov_tokens,
-           floor((2000000 * coalesce(ov, 0) + greatest(coalesce(nt, 0), 1))
-                 / (2.0 * greatest(coalesce(nt, 0), 1))) / 1000000.0
+           {round6_ratio_sql("coalesce(ov, 0)", "greatest(coalesce(nt, 0), 1)")}
              AS oov_rate,
            CAST(coalesce(fb, 0) AS BIGINT) AS fallback_tokens,
-           floor((2000000 * coalesce(fb, 0) + greatest(coalesce(nt, 0), 1))
-                 / (2.0 * greatest(coalesce(nt, 0), 1))) / 1000000.0
+           {round6_ratio_sql("coalesce(fb, 0)", "greatest(coalesce(nt, 0), 1)")}
              AS inflation
     FROM vs v LEFT JOIN agg USING (vocab_size)
 """
 
-ORACLES["dump_overlap"] = """
+ORACLES["dump_overlap"] = f"""
     WITH docs AS (
         SELECT doc_id, text FROM documents
         UNION ALL
@@ -14916,17 +14754,17 @@ ORACLES["dump_overlap"] = """
            CAST(coalesce(na.n, 0) AS BIGINT) AS n_a,
            CAST(coalesce(nb.n, 0) AS BIGINT) AS n_b,
            CAST(coalesce(sh.s, 0) AS BIGINT) AS shared,
-           floor((2000000 * coalesce(sh.s, 0)
-                  + greatest(coalesce(na.n, 0) + coalesce(nb.n, 0) - coalesce(sh.s, 0), 1))
-                 / (2.0 * greatest(coalesce(na.n, 0) + coalesce(nb.n, 0) - coalesce(sh.s, 0), 1)))
-             / 1000000.0 AS jaccard
+           {round6_ratio_sql(
+               "coalesce(sh.s, 0)",
+               "greatest(coalesce(na.n, 0) + coalesce(nb.n, 0) - coalesce(sh.s, 0), 1)",
+           )} AS jaccard
     FROM spine p
     LEFT JOIN sh ON sh.dump_a = p.dump_a AND sh.dump_b = p.dump_b
     LEFT JOIN sizes na ON na.dp = p.dump_a
     LEFT JOIN sizes nb ON nb.dp = p.dump_b
 """
 
-ORACLES["license_audit"] = """
+ORACLES["license_audit"] = f"""
     WITH deco AS (
         SELECT source AS grp,
                lower(
@@ -14962,14 +14800,14 @@ ORACLES["license_audit"] = """
            CAST(sum(perm) AS BIGINT) AS n_permissive,
            CAST(sum(restr) AS BIGINT) AS n_restrictive,
            CAST(sum(opt) AS BIGINT) AS n_optout,
-           floor((2000000 * sum(restr) + count(*)) / (2.0 * count(*))) / 1000000.0
+           {round6_ratio_sql("sum(restr)", "count(*)")}
              AS restrictive_share,
-           floor((2000000 * sum(opt) + count(*)) / (2.0 * count(*))) / 1000000.0
+           {round6_ratio_sql("sum(opt)", "count(*)")}
              AS optout_share
     FROM panel GROUP BY 1
 """
 
-ORACLES["unimax_alloc"] = """
+ORACLES["unimax_alloc"] = f"""
     WITH toks AS (
         SELECT lang AS grp,
                len(regexp_extract_all(lower(text), '[a-z]+')) AS t
@@ -15010,11 +14848,10 @@ ORACLES["unimax_alloc"] = """
                                  THEN 1 ELSE 0 END
                 END AS BIGINT) AS alloc_tokens,
            CAST(capped AS BIGINT) AS capped,
-           floor((2000000 * (CASE WHEN capped = 1 THEN cap_tokens
-                     ELSE (B - csum) // (L - t_capped)
-                          + CASE WHEN rk - t_capped <= (B - csum) % (L - t_capped)
-                                 THEN 1 ELSE 0 END
-                END) + avail_tokens) / (2.0 * avail_tokens)) / 1000000.0 AS epochs
+           {round6_ratio_sql(
+               "CASE WHEN capped = 1 THEN cap_tokens ELSE (B - csum) // (L - t_capped) + CASE WHEN rk - t_capped <= (B - csum) % (L - t_capped) THEN 1 ELSE 0 END END",
+               "avail_tokens",
+           )} AS epochs
     FROM flagged CROSS JOIN totals
 """
 
@@ -15125,9 +14962,12 @@ def _pq_oracle(m_list=(2, 4, 8), n_codes=16, dim=64, k=10) -> str:
             "SELECT CAST({m} AS BIGINT) AS m_subspaces,"
             " CAST({bits} AS BIGINT) AS code_bits,"
             " nq AS n_queries, ne AS n_exact, h AS n_hits,"
-            " floor((2000000 * h + greatest(ne, 1)) / (2.0 * greatest(ne, 1)))"
-            " / 1000000.0 AS recall"
-            " FROM tot, hit{m}".format(m=m, bits=m * int(math.log2(n_codes)))
+            " {recall} AS recall"
+            " FROM tot, hit{m}".format(
+                m=m,
+                bits=m * int(math.log2(n_codes)),
+                recall=round6_ratio_sql("h", "greatest(ne, 1)"),
+            )
         )
     return head + "," + ",".join(blocks) + "\n    " + "\n    UNION ALL ".join(rows)
 
@@ -15186,39 +15026,41 @@ ORACLES["bpe_merge_chain"] = _bpe_chain_oracle(3)
 def _temp_sweep_oracle(budget: int = 1000) -> str:
     """Per-alpha instantiation of the temperature_mix oracle; w is
     1.0 / sqrt(share) / share for alpha 0 / 0.5 / 1 (all IEEE-exact)."""
-    block = """
-    w{pct} AS (
+    block = f"""
+    w{{pct}} AS (
       SELECT name, n,
-             floor((2000000 * n + total) / (2.0 * total)) / 1000000.0 AS share,
-             {wexpr} AS w
+             {round6_ratio_sql("n", "total")} AS share,
+             {{wexpr}} AS w
       FROM counts, tot
     ),
-    ws{pct} AS (SELECT sum(w) AS ws FROM w{pct}),
-    pl{pct} AS (
+    ws{{pct}} AS (SELECT sum(w) AS ws FROM w{{pct}}),
+    pl{{pct}} AS (
       SELECT name, n, share,
              round(w / ws, 6) AS p_target,
-             round({budget} * w / ws, 6) AS raw
-      FROM w{pct}, ws{pct}
+             round({{budget}} * w / ws, 6) AS raw
+      FROM w{{pct}}, ws{{pct}}
     ),
-    ba{pct} AS (
+    ba{{pct}} AS (
       SELECT name, n, share, p_target,
              CAST(floor(raw) AS BIGINT) AS b,
              raw - floor(raw) AS frac
-      FROM pl{pct}
+      FROM pl{{pct}}
     ),
-    sh{pct} AS (SELECT {budget} - sum(b) AS s FROM ba{pct}),
-    rk{pct} AS (
-      SELECT ba{pct}.*, s,
+    sh{{pct}} AS (SELECT {{budget}} - sum(b) AS s FROM ba{{pct}}),
+    rk{{pct}} AS (
+      SELECT ba{{pct}}.*, s,
              row_number() OVER (ORDER BY frac DESC, name) AS rk
-      FROM ba{pct}, sh{pct}
+      FROM ba{{pct}}, sh{{pct}}
     )"""
-    rows = """SELECT CAST({pct} AS BIGINT) AS alpha_pct, name,
+    rows = f"""SELECT CAST({{pct}} AS BIGINT) AS alpha_pct, name,
            CAST(n AS BIGINT) AS n, share, p_target,
            CAST(b + CASE WHEN rk <= s THEN 1 ELSE 0 END AS BIGINT) AS target_n,
            CAST(least(b + CASE WHEN rk <= s THEN 1 ELSE 0 END, n) AS BIGINT) AS feasible_n,
-           floor((2000000 * least(b + CASE WHEN rk <= s THEN 1 ELSE 0 END, n) + n)
-                 / (2.0 * n)) / 1000000.0 AS sample_rate
-    FROM rk{pct}"""
+           {round6_ratio_sql(
+               "least(b + CASE WHEN rk <= s THEN 1 ELSE 0 END, n)",
+               "n",
+           )} AS sample_rate
+    FROM rk{{pct}}"""
     wexprs = {0: "1.0", 50: "sqrt(n * 1.0 / total)", 100: "n * 1.0 / total"}
     head = """
     WITH counts AS (
@@ -15253,13 +15095,12 @@ def _contam_sweep_oracle(ns=(2, 3, 4)) -> str:
         SELECT count(DISTINCT doc_id) AS cd, count(*) AS og
         FROM g{n} JOIN bg{n} USING (g)
     )"""
-    rows = """SELECT CAST({n} AS BIGINT) AS ngram_n,
+    rows = f"""SELECT CAST({{n}} AS BIGINT) AS ngram_n,
            CAST(nd AS BIGINT) AS n_docs,
            CAST(cd AS BIGINT) AS contaminated_docs,
-           floor((2000000 * cd + greatest(nd, 1)) / (2.0 * greatest(nd, 1)))
-             / 1000000.0 AS contaminated_share,
+           {round6_ratio_sql("cd", "greatest(nd, 1)")} AS contaminated_share,
            CAST(og AS BIGINT) AS overlap_grams
-    FROM tot, ov{n}"""
+    FROM tot, ov{{n}}"""
     head = r"""
     WITH cw AS MATERIALIZED (
         SELECT doc_id,
@@ -15354,8 +15195,7 @@ ORACLES["prototypicality"] = f"""
     )
     SELECT CAST(a.cluster_id AS BIGINT) AS cluster_id,
            n_vecs,
-           CAST((2000000::HUGEINT * msum + n_vecs * 1000000)
-                // (2::HUGEINT * n_vecs * 1000000) AS BIGINT) / 1000000.0
+           {round6_ratio_dec_sql("msum", "n_vecs * 1000000")}
              AS mean_dist,
            p20_dist,
            min_dist,
@@ -15363,7 +15203,7 @@ ORACLES["prototypicality"] = f"""
     FROM agg a JOIN p20 USING (cluster_id)
 """
 
-ORACLES["minhash_len_bias"] = """
+ORACLES["minhash_len_bias"] = f"""
     WITH ids AS MATERIALIZED (
         SELECT doc_id FROM documents ORDER BY doc_id LIMIT 64
     ),
@@ -15432,27 +15272,19 @@ ORACLES["minhash_len_bias"] = """
     )
     SELECT CAST(len_bin AS BIGINT) AS len_bin,
            CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST((2000000::HUGEINT * sum(abs(q))::HUGEINT
-                 + count(*)::HUGEINT * 1000000000000)
-                // (2::HUGEINT * count(*)::HUGEINT * 1000000000000)
-                AS BIGINT) / 1000000.0 AS mae,
-           CASE WHEN sum(q) >= 0
-                THEN CAST((2000000::HUGEINT * sum(q)::HUGEINT
-                           + count(*)::HUGEINT * 1000000000000)
-                          // (2::HUGEINT * count(*)::HUGEINT * 1000000000000)
-                          AS BIGINT) / 1000000.0
-                ELSE -CAST((-2000000::HUGEINT * sum(q)::HUGEINT
-                            + count(*)::HUGEINT * 1000000000000)
-                           // (2::HUGEINT * count(*)::HUGEINT * 1000000000000)
-                           AS BIGINT) / 1000000.0
-           END AS bias,
-           CAST((2000000::HUGEINT * max(abs(q))::HUGEINT + 1000000000000)
-                // (2::HUGEINT * 1000000000000)
-                AS BIGINT) / 1000000.0 AS max_abs_err
+           {round6_ratio_dec_sql(
+               "sum(abs(q))::HUGEINT",
+               "count(*)::HUGEINT * 1000000000000",
+           )} AS mae,
+           {round6_ratio_dec_signed_sql(
+               "sum(q)::HUGEINT",
+               "count(*)::HUGEINT * 1000000000000",
+           )} AS bias,
+           {round6_ratio_dec_sql("max(abs(q))::HUGEINT", "1000000000000")} AS max_abs_err
     FROM qs GROUP BY 1
 """
 
-ORACLES["lsh_br_planner"] = """
+ORACLES["lsh_br_planner"] = f"""
     WITH ids AS MATERIALIZED (
         SELECT doc_id FROM documents ORDER BY doc_id LIMIT 64
     ),
@@ -15535,25 +15367,22 @@ ORACLES["lsh_br_planner"] = """
            CAST(n_pos AS BIGINT) AS n_pos,
            CAST(nn - n_pos AS BIGINT) AS n_neg,
            CASE WHEN nn - n_pos > 0
-                THEN CAST((2000000::HUGEINT * q_neg
-                           + (nn - n_pos) * 1000000000000)
-                          // (2::HUGEINT * ((nn - n_pos) * 1000000000000))
-                          AS BIGINT) / 1000000.0
+                THEN {round6_ratio_dec_sql("q_neg", "(nn - n_pos) * 1000000000000")}
                 ELSE 0.0 END AS fp_mass,
            CASE WHEN n_pos > 0
-                THEN CAST((2000000::HUGEINT * (n_pos * 1000000000000 - q_pos)
-                           + n_pos * 1000000000000)
-                          // (2::HUGEINT * (n_pos * 1000000000000))
-                          AS BIGINT) / 1000000.0
+                THEN {round6_ratio_dec_sql(
+                         "n_pos * 1000000000000 - q_pos",
+                         "n_pos * 1000000000000",
+                     )}
                 ELSE 0.0 END AS fn_mass,
-           CAST((2000000::HUGEINT * (q_neg + n_pos * 1000000000000 - q_pos)
-                 + nn * 1000000000000)
-                // (2::HUGEINT * (nn * 1000000000000))
-                AS BIGINT) / 1000000.0 AS miss_mass
+           {round6_ratio_dec_sql(
+               "q_neg + n_pos * 1000000000000 - q_pos",
+               "nn * 1000000000000",
+           )} AS miss_mass
     FROM agg
 """
 
-ORACLES["readability_scores"] = """
+ORACLES["readability_scores"] = f"""
     WITH norm AS (
         SELECT source,
                trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS n
@@ -15593,28 +15422,11 @@ ORACLES["readability_scores"] = """
     SELECT g AS "group",
            CAST(n_docs AS BIGINT) AS n_docs,
            words, sentences, syll_runs, alnum_chars,
-           floor((2000000 * words + sentences) / (2.0 * sentences))
-               / 1000000.0 AS wps,
-           floor((2000000 * syll_runs + words) / (2.0 * words))
-               / 1000000.0 AS spw,
-           CASE WHEN fnum >= 0
-                THEN CAST((2000000::HUGEINT * fnum + fden)
-                          // (2::HUGEINT * fden) AS BIGINT) / 1000000.0
-                ELSE -CAST((2000000::HUGEINT * (-fnum) + fden)
-                           // (2::HUGEINT * fden) AS BIGINT) / 1000000.0
-           END AS flesch_re,
-           CASE WHEN knum >= 0
-                THEN CAST((2000000::HUGEINT * knum + kden)
-                          // (2::HUGEINT * kden) AS BIGINT) / 1000000.0
-                ELSE -CAST((2000000::HUGEINT * (-knum) + kden)
-                           // (2::HUGEINT * kden) AS BIGINT) / 1000000.0
-           END AS fk_grade,
-           CASE WHEN anum >= 0
-                THEN CAST((2000000::HUGEINT * anum + aden)
-                          // (2::HUGEINT * aden) AS BIGINT) / 1000000.0
-                ELSE -CAST((2000000::HUGEINT * (-anum) + aden)
-                           // (2::HUGEINT * aden) AS BIGINT) / 1000000.0
-           END AS ari
+           {round6_ratio_sql("words", "sentences")} AS wps,
+           {round6_ratio_sql("syll_runs", "words")} AS spw,
+           {round6_ratio_dec_signed_sql("fnum", "fden")} AS flesch_re,
+           {round6_ratio_dec_signed_sql("knum", "kden")} AS fk_grade,
+           {round6_ratio_dec_signed_sql("anum", "aden")} AS ari
     FROM scored
 """
 
@@ -15746,7 +15558,7 @@ ORACLES["kcenter_coreset"] = """
     FROM trace ORDER BY step
 """
 
-ORACLES["hits_scores"] = """
+ORACLES["hits_scores"] = f"""
     WITH
     ordered AS (
       SELECT user_id, event_id, event_type, epoch(ts) AS t,
@@ -15827,12 +15639,12 @@ ORACLES["hits_scores"] = """
       FROM nodes LEFT JOIN hr2 ON nodes.node = hr2.s
     )
     SELECT a2.node AS node,
-           CAST(round(CAST(a AS DECIMAL(27,12)), 6) AS DOUBLE) AS authority,
-           CAST(round(CAST(h AS DECIMAL(27,12)), 6) AS DOUBLE) AS hub
+           {round6_bridge_sql("a")} AS authority,
+           {round6_bridge_sql("h")} AS hub
     FROM a2 JOIN h2 ON a2.node = h2.node
 """
 
-ORACLES["mattr_diversity"] = """
+ORACLES["mattr_diversity"] = f"""
     WITH norm AS (
         SELECT source,
                trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS n
@@ -15864,18 +15676,16 @@ ORACLES["mattr_diversity"] = """
            CAST(n_docs AS BIGINT) AS n_docs,
            n_tokens,
            CAST(n_types AS BIGINT) AS n_types,
-           floor((2000000 * n_types + n_tokens) / (2.0 * n_tokens))
-               / 1000000.0 AS ttr,
+           {round6_ratio_sql("n_types", "n_tokens")} AS ttr,
            CAST(n_segs AS BIGINT) AS n_segs,
            seg_distinct_sum,
-           floor((2000000 * seg_distinct_sum + n_segs * 25)
-                 / (2.0 * (n_segs * 25))) / 1000000.0 AS msttr
+           {round6_ratio_sql("seg_distinct_sum", "n_segs * 25")} AS msttr
     FROM vol v
     JOIN types ty ON ty.g = v.g
     JOIN seg_agg s ON s.g = v.g
 """
 
-ORACLES["data_constrained_epochs"] = """
+ORACLES["data_constrained_epochs"] = f"""
     WITH norm AS (
         SELECT source,
                trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS n
@@ -15912,13 +15722,13 @@ ORACLES["data_constrained_epochs"] = """
            g AS "group",
            u AS u_tokens,
            b AS budget,
-           floor((2000000 * b + u) / (2.0 * u)) / 1000000.0 AS epochs,
+           {round6_ratio_sql("b", "u")} AS epochs,
            round(eff, 6) AS eff_tokens,
            CASE WHEN b >= 1 THEN round(eff / b, 6) ELSE 0.0 END AS value_ratio
     FROM scored
 """
 
-ORACLES["ndcg_sessions"] = """
+ORACLES["ndcg_sessions"] = f"""
     WITH ordered AS (
       SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
              lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -15967,20 +15777,17 @@ ORACLES["ndcg_sessions"] = """
     SELECT entry_type,
            CAST(count(*) AS BIGINT) AS n_sessions,
            CAST(sum(norel) AS BIGINT) AS n_norel,
-           CAST((2000000::HUGEINT * sum(q)::HUGEINT
-                 + count(*)::HUGEINT * 1000000000000)
-                // (2::HUGEINT * count(*)::HUGEINT * 1000000000000)
-                AS BIGINT) / 1000000.0 AS mean_ndcg
+           {round6_ratio_dec_sql(
+               "sum(q)::HUGEINT",
+               "count(*)::HUGEINT * 1000000000000",
+           )} AS mean_ndcg
     FROM scored GROUP BY 1
 """
 
-ORACLES["value_precision_audit"] = """
+ORACLES["value_precision_audit"] = f"""
     WITH base AS (
         SELECT event_type AS g,
-               CASE WHEN CAST(value AS DOUBLE) >= 0
-                    THEN  CAST(floor( CAST(value AS DOUBLE) * 100 + 0.5) AS BIGINT)
-                    ELSE -CAST(floor(-CAST(value AS DOUBLE) * 100 + 0.5) AS BIGINT)
-               END AS c
+               {cents_sql("value")} AS c
         FROM events WHERE value IS NOT NULL
     ),
     flags AS (
@@ -16009,15 +15816,15 @@ ORACLES["value_precision_audit"] = """
     top AS (SELECT g, d AS top_digit, nd AS top_n FROM ranked WHERE rk = 1)
     SELECT a.g AS "group",
            n,
-           floor((2000000 * int_n + n) / (2.0 * n)) / 1000000.0 AS share_int,
-           floor((2000000 * dime_n + n) / (2.0 * n)) / 1000000.0 AS share_dime,
-           floor((2000000 * c99_n + n) / (2.0 * n)) / 1000000.0 AS share_99,
+           {round6_ratio_sql("int_n", "n")} AS share_int,
+           {round6_ratio_sql("dime_n", "n")} AS share_dime,
+           {round6_ratio_sql("c99_n", "n")} AS share_99,
            CAST(top_digit AS BIGINT) AS top_digit,
-           floor((2000000 * top_n + n) / (2.0 * n)) / 1000000.0 AS top_digit_share
+           {round6_ratio_sql("top_n", "n")} AS top_digit_share
     FROM agg a JOIN top t ON t.g = a.g
 """
 
-ORACLES["good_turing_mass"] = """
+ORACLES["good_turing_mass"] = f"""
     WITH norm AS (
         SELECT trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS n
         FROM documents
@@ -16038,10 +15845,8 @@ ORACLES["good_turing_mass"] = """
     body AS (
         SELECT CAST(f.c AS BIGINT) AS r,
                f.nr AS n_r,
-               floor((2000000 * (f.c * f.nr) + t.nn) / (2.0 * t.nn))
-                   / 1000000.0 AS mass_share,
-               floor((2000000 * ((f.c + 1) * coalesce(f2.nr, 0)) + f.nr)
-                     / (2.0 * f.nr)) / 1000000.0 AS r_star
+               {round6_ratio_sql("f.c * f.nr", "t.nn")} AS mass_share,
+               {round6_ratio_sql("(f.c + 1) * coalesce(f2.nr, 0)", "f.nr")} AS r_star
         FROM ff f
         LEFT JOIN ff f2 ON f2.c = f.c + 1
         CROSS JOIN tot t
@@ -16049,7 +15854,7 @@ ORACLES["good_turing_mass"] = """
     ),
     unseen AS (
         SELECT CAST(0 AS BIGINT) AS r, CAST(0 AS BIGINT) AS n_r,
-               floor((2000000 * n1.h + t.nn) / (2.0 * t.nn)) / 1000000.0
+               {round6_ratio_sql("n1.h", "t.nn")}
                    AS mass_share,
                0.0 AS r_star
         FROM tot t CROSS JOIN n1
@@ -16060,7 +15865,7 @@ ORACLES["good_turing_mass"] = """
     SELECT r, n_r, mass_share, r_star FROM body
 """
 
-ORACLES["cluster_stability_ari"] = """
+ORACLES["cluster_stability_ari"] = f"""
     WITH RECURSIVE
     ids AS MATERIALIZED (
         SELECT doc_id AS id FROM documents ORDER BY doc_id LIMIT 64
@@ -16085,8 +15890,7 @@ ORACLES["cluster_stability_ari"] = """
         SELECT id_a, id_b FROM shared
         JOIN sz sa ON sa.doc_id = id_a
         JOIN sz sb ON sb.doc_id = id_b
-        WHERE floor((2000000 * shared + (sa.sz + sb.sz - shared))
-                    / (2.0 * (sa.sz + sb.sz - shared))) / 1000000.0 >= 0.06
+        WHERE {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} >= 0.06
     ),
     elo AS (
         SELECT id_a AS a, id_b AS b FROM plo
@@ -16108,8 +15912,7 @@ ORACLES["cluster_stability_ari"] = """
         SELECT id_a, id_b FROM shared
         JOIN sz sa ON sa.doc_id = id_a
         JOIN sz sb ON sb.doc_id = id_b
-        WHERE floor((2000000 * shared + (sa.sz + sb.sz - shared))
-                    / (2.0 * (sa.sz + sb.sz - shared))) / 1000000.0 >= 0.1
+        WHERE {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} >= 0.1
     ),
     ehi AS (
         SELECT id_a AS a, id_b AS b FROM phi
@@ -16157,26 +15960,18 @@ ORACLES["cluster_stability_ari"] = """
            b AS together_lo_only,
            c AS together_hi_only,
            cc - a - b - c AS together_neither,
-           floor((2000000 * (cc - b - c) + cc) / (2.0 * cc)) / 1000000.0
+           {round6_ratio_sql("cc - b - c", "cc")}
                AS rand_index,
            CASE WHEN cc * (2 * a + b + c) - 2 * (a + b) * (a + c) > 0
-                THEN CASE WHEN 2 * cc * a - 2 * (a + b) * (a + c) >= 0
-                     THEN floor((2000000 * (2 * cc * a - 2 * (a + b) * (a + c))
-                                 + (cc * (2 * a + b + c) - 2 * (a + b) * (a + c)))
-                                / (2.0 * (cc * (2 * a + b + c)
-                                          - 2 * (a + b) * (a + c))))
-                          / 1000000.0
-                     ELSE -floor((2000000 * (-(2 * cc * a - 2 * (a + b) * (a + c)))
-                                  + (cc * (2 * a + b + c) - 2 * (a + b) * (a + c)))
-                                 / (2.0 * (cc * (2 * a + b + c)
-                                           - 2 * (a + b) * (a + c))))
-                          / 1000000.0 + 0.0
-                     END
+                THEN {round6_ratio_signed_sql(
+                         "2 * cc * a - 2 * (a + b) * (a + c)",
+                         "cc * (2 * a + b + c) - 2 * (a + b) * (a + c)",
+                     )}
                 ELSE 1.0 END AS ari
     FROM nd CROSS JOIN ncl CROSS JOIN cnt
 """
 
-ORACLES["participation_ratio"] = """
+ORACLES["participation_ratio"] = f"""
     WITH v AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     pairs AS (
         SELECT i.i, j.j, v.v[i.i] * v.v[j.j] AS p
@@ -16202,12 +15997,10 @@ ORACLES["participation_ratio"] = """
     )
     SELECT n_vecs, dims,
            CASE WHEN fro2 > 0
-                THEN CAST((2000000::HUGEINT * (tr * tr) + fro2)
-                          // (2::HUGEINT * fro2) AS BIGINT) / 1000000.0
+                THEN {round6_ratio_dec_sql("tr * tr", "fro2")}
                 ELSE 0.0 END AS pr,
            CASE WHEN fro2 > 0
-                THEN CAST((2000000::HUGEINT * (tr * tr) + fro2 * dims)
-                          // (2::HUGEINT * (fro2 * dims)) AS BIGINT) / 1000000.0
+                THEN {round6_ratio_dec_sql("tr * tr", "fro2 * dims")}
                 ELSE 0.0 END AS pr_norm
     FROM meta CROSS JOIN agg
     WHERE n_vecs >= 1

@@ -325,7 +325,12 @@ class Timeseries:
         they carry several names."""
         if transform is None:
             return self.ops.aggregate(df, keys, order, self.value_type, condense, join)
-        names = transform if isinstance(transform, (list, tuple)) else [transform]
+        if isinstance(transform, (set, frozenset)):
+            names = sorted(transform)  # a deterministic plan for a set
+        elif isinstance(transform, (list, tuple)):
+            names = transform
+        else:
+            names = [transform]
         if not all(isinstance(t, str) for t in names):
             raise TypeError(
                 "DataFrame-level transforms must be named; use the "
@@ -689,6 +694,13 @@ class Timeseries:
         else:
             for row in sorted(rows, key=lambda r: r["i_time"]):
                 shaped[cfg.i_calc.key_time(row["i_time"])] = _row_payload(row, self.ops, df_transform, self._value_py())
+            if collapse and not shaped:
+                # a collapsed range without rows still reads as one row,
+                # keyed by the range's first bucket, as the driver-side
+                # pipeline and get(condense=True) do
+                shaped[cfg.i_calc.from_bucket(buckets[0])] = _empty_payload(
+                    self.ops, df_transform, _range_span(cfg, buckets), multi=_is_multi(name)
+                )
         if callables:
             shaped = self._transform_series(cfg, shaped, transform, buckets, collapse, nested)
         return shaped

@@ -4,8 +4,9 @@ The deterministic batteries (test_round6_ratio.py, test_signed_zero.py,
 test_round9_ops.py) pin the KNOWN hazard points — midpoints, ties,
 signed zeros. This suite searches for UNKNOWN counterexamples: large
 seeded-random pools (plus the hazard families mixed in) flow through
-each helper in ONE Spark job and through its documented oracle mirror
-in ONE DuckDB query, and every row must agree exactly. A failure here
+each helper in ONE Spark job and through the SQL its oracles emit (the
+``kairos_spark.exact`` builders) in ONE DuckDB query, and every row
+must agree exactly. A failure here
 is a new engine-divergence class — investigate before touching the
 seed.
 
@@ -22,13 +23,19 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kairos_spark.operators.text import (
+from kairos_spark.exact import (
     _cents,
     _round6_bridge,
     _round6_ratio,
     _round6_ratio_dec,
     _round6_ratio_dec_signed,
     _round6_ratio_signed,
+    cents_sql,
+    round6_bridge_sql,
+    round6_ratio_dec_signed_sql,
+    round6_ratio_dec_sql,
+    round6_ratio_signed_sql,
+    round6_ratio_sql,
 )
 
 N = 20_000
@@ -66,11 +73,9 @@ def test_ratio_helpers_random_parity(spark, con):
     )
     con.register("pool", pdf)
     dk = con.execute(
-        """
-        SELECT floor((2000000*n + d) / (2.0*d)) / 1000000.0 AS r,
-               CASE WHEN sn >= 0
-                 THEN  floor(( 2000000*sn + d) / (2.0*d)) / 1000000.0
-                 ELSE -floor((-2000000*sn + d) / (2.0*d)) / 1000000.0 END AS rs
+        f"""
+        SELECT {round6_ratio_sql("n", "d")} AS r,
+               {round6_ratio_signed_sql("sn", "d")} AS rs
         FROM pool
         """
     ).df()
@@ -98,14 +103,9 @@ def test_dec_ratio_helpers_random_parity(spark, con):
     )
     con.register("pool_dec", pdf)
     dk = con.execute(
-        """
-        SELECT CAST((2000000::HUGEINT*n + d) // (2::HUGEINT*d) AS BIGINT)
-               / 1000000.0 AS r,
-               CASE WHEN sn >= 0
-                 THEN  CAST(( 2000000::HUGEINT*sn + d)
-                            // (2::HUGEINT*d) AS BIGINT) / 1000000.0
-                 ELSE -CAST((-2000000::HUGEINT*sn + d)
-                            // (2::HUGEINT*d) AS BIGINT) / 1000000.0 END AS rs
+        f"""
+        SELECT {round6_ratio_dec_sql("n", "d")} AS r,
+               {round6_ratio_dec_signed_sql("sn", "d")} AS rs
         FROM pool_dec
         """
     ).df()
@@ -132,9 +132,7 @@ def test_bridge_random_parity(spark, con):
         .toPandas()
     )
     con.register("pool_b", pdf)
-    dk = con.execute(
-        "SELECT CAST(round(CAST(x AS DECIMAL(27,12)), 6) AS DOUBLE) AS b FROM pool_b"
-    ).df()
+    dk = con.execute(f"SELECT {round6_bridge_sql('x')} AS b FROM pool_b").df()
     a = out["b"].to_numpy()
     b = dk["b"].to_numpy()
     # bit-compare so +0.0 / -0.0 and every last-ulp case counts
@@ -173,10 +171,8 @@ def test_cents_and_quantizer_random_parity(spark, con):
     )
     con.register("pool_c", pdf)
     dk = con.execute(
-        """
-        SELECT CASE WHEN v >= 0
-                 THEN  CAST(floor( v * 100 + 0.5) AS BIGINT)
-                 ELSE -CAST(floor(-v * 100 + 0.5) AS BIGINT) END AS c,
+        f"""
+        SELECT {cents_sql("v")} AS c,
                CASE WHEN w >= 0
                  THEN  CAST(floor( w * 1000000000000.0 + 0.5) AS BIGINT)
                  ELSE -CAST(floor(-w * 1000000000000.0 + 0.5) AS BIGINT) END AS q
@@ -254,7 +250,10 @@ def test_pct_pick_exact_percentiles_random_parity(spark, con):
 
     # oracle-mirror parity: the documented row_number/HUGEINT formula
     con.register("pct_fuzz", pdf)
-    sql = """
+    p90 = round6_ratio_dec_sql(
+        "(10*vlo + k*(coalesce(vhi, vlo) - vlo))::HUGEINT", "10000000::HUGEINT"
+    )
+    sql = f"""
     WITH rk AS (
       SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS r,
              count(*) OVER (PARTITION BY g) AS n
@@ -267,12 +266,7 @@ def test_pct_pick_exact_percentiles_random_parity(spark, con):
              max((9*(n-1)) % 10) AS k
       FROM rk GROUP BY 1
     )
-    SELECT g,
-           CAST((2000000::HUGEINT
-                   * (10*vlo + k*(coalesce(vhi, vlo) - vlo))::HUGEINT
-                 + 10000000::HUGEINT)
-                // (2::HUGEINT * 10000000::HUGEINT) AS BIGINT)
-             / 1000000.0 AS p
+    SELECT g, {p90} AS p
     FROM pick ORDER BY g
     """
     odf = con.execute(sql).df().set_index("g").sort_index()
@@ -282,7 +276,7 @@ def test_pct_pick_exact_percentiles_random_parity(spark, con):
 def test_signed_ratio_zero_window_sign_parity(spark, con):
     """The signed helpers' ZERO-SIGN contract (ADVICE r10): any
     numerator with |num|/den < 5e-7 rounds to a zero that must be
-    +0.0 on the Spark side AND on the canonical oracle mirrors (the
+    +0.0 on the Spark side AND on the SQL builders' mirrors (the
     `-CAST(... AS BIGINT)` integer-negation form, and the
     `-floor(...)` double form with its `+ 0.0`). The main parity fuzz
     compares with `==`, which is sign-blind on zeros — this one
@@ -310,16 +304,9 @@ def test_signed_ratio_zero_window_sign_parity(spark, con):
         assert not np.signbit(v).any(), f"{c}: Spark emitted -0.0"
     con.register("pool_zw", pdf)
     dk = con.execute(
-        """
-        SELECT (CASE WHEN sn >= 0
-                 THEN  floor(( 2000000*sn + d) / (2.0*d)) / 1000000.0
-                 ELSE -floor((-2000000*sn + d) / (2.0*d)) / 1000000.0
-                END) + 0.0 AS rs,
-               CASE WHEN sn >= 0
-                 THEN  CAST(( 2000000::HUGEINT*sn + d)
-                            // (2::HUGEINT*d) AS BIGINT) / 1000000.0
-                 ELSE -CAST((-2000000::HUGEINT*sn + d)
-                            // (2::HUGEINT*d) AS BIGINT) / 1000000.0 END AS rds
+        f"""
+        SELECT {round6_ratio_signed_sql("sn", "d")} AS rs,
+               {round6_ratio_dec_signed_sql("sn", "d")} AS rds
         FROM pool_zw
         """
     ).df()

@@ -64,9 +64,10 @@ def test_registry_covers_every_query(loaded):
 
 
 def test_signed_ratio_owners_resolved_through_relative_imports(loaded):
-    """The r11 episode: _round6_ratio_signed lives in operators/text.py
-    and is used via relative imports in windows.py/profiling.py — the
-    owner set must include entries from BOTH import styles."""
+    """The r11 episode: _round6_ratio_signed lives in kairos_spark/exact.py
+    and is used via function-local and module imports across the
+    operators — the owner set must include entries from every import
+    style."""
     mods, graph, entries, _oh, _on = loaded
     all_defs = {(m.name, d) for m in mods.values() for d in m.defs}
     hits = {
@@ -133,3 +134,25 @@ def test_changed_vs_head_commit_sees_worktree_only(im, loaded):
         assert changed == set() and oracle_changed == set()
     # dirty tree: nothing to assert beyond "it ran" — promote mode is
     # exercised against real round refs in the workflow, not here
+
+
+def test_oracle_builder_owners_resolved_through_imports(loaded):
+    """An oracle calls the exact.py SQL builders by imported name, some
+    through a queries.py helper function: a change to a builder must
+    flag every oracle that emits it."""
+    _mods, graph, _entries, ohelpers, _on = loaded
+
+    def owners(name):
+        target = ("kairos_spark.exact", name)
+        return {q for q, hs in ohelpers.items() if target in im_closure_of(graph, hs)}
+
+    assert "q1_pricing_summary" in owners("round6_ratio_sql")
+    # via _qte_oracle(), a helper function the ORACLES entry calls
+    assert "qte_deciles" in owners("round6_ratio_dec_signed_sql")
+
+
+def im_closure_of(graph, roots):
+    seen = set()
+    for root in roots:
+        seen |= im_closure(graph, root)
+    return seen

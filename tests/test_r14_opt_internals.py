@@ -294,7 +294,8 @@ def test_ppl_bucket_mix_matches_pre_rewrite_composition(spark):
     from pyspark.sql.window import Window
 
     from kairos_spark.operators import text
-    from kairos_spark.operators.text import _round6_ratio, bigram_lm_score
+    from kairos_spark.exact import _round6_ratio
+    from kairos_spark.operators.text import bigram_lm_score
 
     def ppl_old(df, buckets=3):
         scored = bigram_lm_score(df, "text", "doc_id").join(
@@ -335,9 +336,8 @@ def test_winnow_pairs_matches_pre_rewrite_composition(spark):
     denominators) while producing no pairs, and the max_occ stop gate
     (exercised with max_occ=2 so the shared 'common' fingerprint
     window is dropped)."""
-    from kairos_spark.operators.dedup import (
-        _round6_ratio, winnow_fingerprints, winnow_near_pairs,
-    )
+    from kairos_spark.exact import _round6_ratio
+    from kairos_spark.operators.dedup import winnow_fingerprints, winnow_near_pairs
 
     def winnow_old(df, k=8, w=4, max_occ=50, min_shared=3, min_score=0.0):
         fps = winnow_fingerprints(df, "text", "doc_id", k, w)

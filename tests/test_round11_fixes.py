@@ -31,10 +31,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from kairos_spark.operators import profiling
-from kairos_spark.operators.text import (
-    _round6_ratio_dec_signed,
-    _round6_ratio_signed,
-)
+from kairos_spark.exact import _round6_ratio_dec_signed, _round6_ratio_signed
 
 
 def _pos_zero(x: float) -> bool:

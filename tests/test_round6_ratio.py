@@ -19,7 +19,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from kairos_spark.operators.text import _round6_ratio, _round6_ratio_signed
+from kairos_spark.exact import _round6_ratio, _round6_ratio_signed
 
 
 def _grid():
@@ -100,7 +100,7 @@ def test_round6_ratio_dec_matches_duckdb_hugeint(spark):
     """_round6_ratio_dec == the HUGEINT // oracle mirror, including
     numerators past the BIGINT*2e6 ceiling where _round6_ratio would
     ANSI-overflow (the chao1 2*f2*v_obs product class)."""
-    from kairos_spark.operators.text import _round6_ratio_dec
+    from kairos_spark.exact import _round6_ratio_dec
 
     cases = [(n, d) for n, d in _grid() if True] + [
         (2049 * 2049, 2 * 320),                 # odd f1, f2=320 chao1 midpoint
@@ -125,7 +125,7 @@ def test_round6_ratio_dec_matches_duckdb_hugeint(spark):
 def test_round6_ratio_dec_agrees_with_plain_in_bigint_range(spark):
     """Inside _round6_ratio's exact regime the two helpers agree, so
     swapping a site to the dec variant never changes green results."""
-    from kairos_spark.operators.text import _round6_ratio, _round6_ratio_dec
+    from kairos_spark.exact import _round6_ratio, _round6_ratio_dec
 
     cases = [(n, d) for n, d in _grid() if d <= 12800]
     sdf = spark.createDataFrame(cases, "n long, d long").select(
@@ -143,7 +143,7 @@ def test_round6_bridge_agrees_on_splitting_midpoints(spark):
     doubles where bare round(double, 6) splits the engines (shortest
     rendering is a 7-digit midpoint, nearest double below it), plus
     agreeing midpoints and garden-variety values."""
-    from kairos_spark.operators.text import _round6_bridge
+    from kairos_spark.exact import _round6_bridge
 
     vals = [
         41 / 640,    # plain round SPLITS (Spark .064063, DuckDB .064062)
@@ -190,7 +190,7 @@ def test_round6_ratio_dec_property_vs_exact_rational(spark):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from kairos_spark.operators.text import _round6_ratio_dec
+    from kairos_spark.exact import _round6_ratio_dec
 
     con = duckdb.connect()
 

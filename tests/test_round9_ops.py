@@ -8,6 +8,7 @@ count)."""
 
 from pyspark.sql import Row, functions as F
 
+from kairos_spark import exact
 from kairos_spark.operators import dedup, text
 
 # --- paragraph_dedup_stats ---
@@ -301,7 +302,7 @@ def test_cents_tie_rule_half_away(spark):
         [(0.125,), (-0.125,), (2.625,), (1.0,), (4.56,), (-0.375,)], ["v"]
     )
     got = [
-        r.c for r in df.select(text._cents(F.col("v")).alias("c")).collect()
+        r.c for r in df.select(exact._cents(F.col("v")).alias("c")).collect()
     ]
     assert got == [13, -13, 263, 100, 456, -38]
 

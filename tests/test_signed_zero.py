@@ -35,7 +35,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from kairos_spark.operators.text import _round6_bridge
+from kairos_spark.exact import _round6_bridge
 
 WINDOW = [-0.0, -1e-9, -4.9e-7, -2.5e-7]
 

@@ -824,3 +824,37 @@ def test_series_gap_fill_gregorian_multi_name_gauge(spark):
         day0: 3.0, day0 + DAY: None, day0 + 2 * DAY: 4.0,
     }
     assert t.series("a", "day", **kw) == {day0: 3.0, day0 + DAY: 0, day0 + 2 * DAY: 0}
+
+
+EMPTY_COLLAPSE_CASES = [(type_, None) for type_ in sorted(SUPPORTED_TRANSFORMS)] + [
+    (type_, names[0]) for type_, names in sorted(SUPPORTED_TRANSFORMS.items()) if names
+]
+
+
+@pytest.mark.parametrize("interval", ["minute", "hour"])
+@pytest.mark.parametrize("type_,transform", EMPTY_COLLAPSE_CASES)
+def test_empty_collapsed_series_keyed_by_range_start(spark, type_, transform, interval):
+    # a collapsed range without rows reads as one row keyed by the
+    # range's first bucket, as on the driver-side pipeline, holding what
+    # get(condense=True) gap-fills into an empty bucket
+    t = make_ts(spark, type_)
+    t.insert("x", 1, timestamp=_time(10 * HOUR))
+    kw = dict(start=_time(0), end=_time(HOUR), collapse=True, transform=transform)
+    engine = t.series("x", interval, **kw)
+    driver = t.series("x", interval, process_row=lambda row: row, **kw)
+    assert list(engine) == list(driver) == [_time(0)]
+    empty = t.get("x", interval, timestamp=_time(0), condense=True, transform=transform)
+    assert engine == {_time(0): empty[_time(0)]}
+
+
+@pytest.mark.parametrize("type_", ["series", "histogram", "set"])
+def test_set_of_named_transforms_reads_like_a_list(spark, type_):
+    t = make_ts(spark, type_)
+    for v in (2, 2, 5):
+        t.insert("x", v, timestamp=_time(5))
+    t.insert("x", 7, timestamp=_time(HOUR))
+    for interval in ("minute", "hour"):
+        get = lambda tr: t.get("x", interval, timestamp=_time(0), transform=tr)
+        assert get({"mean", "max"}) == get(["mean", "max"])
+        series = lambda tr: t.series("x", interval, start=_time(0), end=_time(HOUR), transform=tr)
+        assert series({"mean", "max"}) == series(["mean", "max"])

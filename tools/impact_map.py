@@ -17,7 +17,9 @@ statically:
    reshuffles), then transitive closure through the graph.
 3. Oracle spans: each ORACLES key is mapped to the SOURCE TEXT of its
    SQL expression (dict literals + ``ORACLES[k] =`` assigns), plus any
-   helper functions the oracle expression calls (e.g. ``_sql_surgery``).
+   helper functions the oracle expression calls (e.g. ``_sql_surgery``,
+   the ``kairos_spark.exact`` SQL builders) and, through the graph,
+   whatever those helpers call.
 4. Per-query baseline: the latest round whose CORRECTNESS_r{N}.json
    shows the query green; the code the driver ran that round is the
    tree at the ``round N: verdict/...`` artifact commit (it only adds
@@ -31,7 +33,8 @@ statically:
 
 Usage:
   python tools/impact_map.py helper NAME [NAME ...]
-      # queries whose Spark expressions transit any def named NAME
+      # queries whose Spark expressions or oracle builders transit any
+      # def named NAME (e.g. an exact.py kernel or its SQL builder)
   python tools/impact_map.py promote
       # the driver-window promotion set for the next round
   python tools/impact_map.py closure QUERY
@@ -254,8 +257,10 @@ def _load_registry(mods):
         entries[name] = (fn.__module__, fn.__name__)
 
     # helper functions referenced inside oracle value expressions
-    # (e.g. _sql_surgery, _facility_oracle) — a change there changes
-    # the oracle even when the literal text at the key is unchanged
+    # (e.g. _sql_surgery, _facility_oracle, the exact.py SQL builders)
+    # — a change there changes the oracle even when the literal text at
+    # the key is unchanged. Imported names resolve to their defining
+    # module's def.
     qmod = mods["kairos_spark.queries"]
     helpers = defaultdict(set)
 
@@ -264,6 +269,10 @@ def _load_registry(mods):
             if isinstance(sub, ast.Name) and isinstance(sub.ctx, ast.Load):
                 if sub.id in qmod.defs:
                     helpers[keyname].add((qmod.name, sub.id))
+                elif sub.id in qmod.import_names:
+                    src, orig = qmod.import_names[sub.id]
+                    if src in mods and orig in mods[src].defs:
+                        helpers[keyname].add((src, orig))
 
     for node in ast.walk(qmod.tree):
         if isinstance(node, ast.Dict):
@@ -379,9 +388,9 @@ def main(argv):
         print("resolved:", sorted(hit_defs))
         owners = []
         for qname, root in sorted(entries.items()):
-            if _closure(graph, {root}) & hit_defs:
+            if (_closure(graph, {root}) | _closure(graph, ohelpers[qname])) & hit_defs:
                 owners.append(qname)
-        print(f"{len(owners)} queries transit {sorted(targets)}:")
+        print(f"{len(owners)} queries (Spark side or oracle) transit {sorted(targets)}:")
         for qname in owners:
             print(" ", qname)
         return 0
@@ -428,7 +437,7 @@ def main(argv):
             )
         if qname in coracles:
             reasons.append("oracle SQL source changed")
-        ohit = ohelpers.get(qname, set()) & cdefs
+        ohit = _closure(graph, ohelpers.get(qname, set())) & cdefs
         if ohit:
             reasons.append(
                 "oracle builder helper changed: "

@@ -58,7 +58,7 @@ def us(sec: float) -> int:
 
 
 def cents(v: float) -> int:
-    """Mirror of the engines' cents extraction (operators/text._cents):
+    """Mirror of the engines' cents extraction (kairos_spark/exact._cents):
     signed floor(|v·100| + 0.5). Python's round() is half-EVEN and
     would mis-account the half-cent tie fixtures (0.125 → 12 vs the
     engines' 13), silently dissolving the 41/640 grand-mean pin."""
@@ -499,7 +499,7 @@ def make_documents():
     add("Lorem İpsum dolor TERMS OF USE and Lorem\nIpsum broken", "tr", "src13")
     # --- round 7: 32-bit-width stress doc (~60 KB). ANSI INT overflow
     # in length()/regexp_count()-fed arithmetic only bites once a
-    # per-doc count clears 2^31/2e6 ≈ 1073 (the text.py ratio-helper
+    # per-doc count clears 2^31/2e6 ≈ 1073 (the exact.py ratio-helper
     # class caught this round) — one large digit- and punct-heavy
     # document keeps every length-scaled numerator well past that.
     # High-entropy tokens (own seeded rng) so gram joins stay sparse.

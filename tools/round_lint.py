@@ -22,12 +22,21 @@ site in the operator library and query layer. A site passes if:
 Everything else is a finding and the exit code is 1. Run it whenever a
 new query or operator lands; the oracle twin follows the Spark side by
 the mirror invariant, so linting the Spark side suffices.
+
+The oracle side has one rule of its own: every kernel's DuckDB mirror
+lives once, as a SQL builder in ``kairos_spark/exact.py``, so a string
+literal of ``kairos_spark/queries.py`` (adjacent literals joined) must
+not spell one out by hand — an opened ratio expansion (``((2000000``,
+``((-2000000``, with or without ``::HUGEINT``), the bridge's
+``DECIMAL(27,12)), 6)`` or the signed-cents ``floor(-CAST(``.
 """
 
 from __future__ import annotations
 
+import io
 import re
 import sys
+import tokenize
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent / "kairos_spark"
@@ -46,6 +55,15 @@ PATTERN = re.compile(r"F\.round\(\s*F\.(avg|sum)\(")
 # under the same exemption rules.
 PCT = re.compile(r"F\.round\(")
 SCALE = re.compile(r",\s*([0-9]+)\s*\)\s*$")
+# hand-typed kernel mirrors in oracle SQL (see the module docstring)
+ORACLES_PY = ROOT / "queries.py"
+HAND_TYPED = re.compile(
+    r"\(\(\s*-?2000000"  # an opened ratio expansion
+    r"|DECIMAL\(27,12\)\),\s*6\)"  # the round-6 bridge
+    r"|floor\(-CAST\("  # the signed-cents negative branch
+)
+# a string token: prefix, quotes, body
+LITERAL = re.compile(r"([rRfFbBuU]*)('''|\"\"\"|'|\")(.*)\2\Z", re.S)
 
 
 def call_extent(text: str, start: int) -> str:
@@ -72,7 +90,47 @@ def call_scale(call: str) -> int | None:
     return int(hit.group(1)) if hit else None
 
 
+def literal_runs(text: str):
+    """Each run of adjacent string literals, as a list of (line, body)
+    pieces: implicit concatenation is one run, so a mirror split across
+    literals is still one match."""
+    run = []
+    for tok in tokenize.generate_tokens(io.StringIO(text).readline):
+        if tok.type == tokenize.STRING:
+            run.append((tok.start[0], LITERAL.match(tok.string).group(3)))
+        elif tok.type not in (tokenize.NL, tokenize.COMMENT) and run:
+            yield run
+            run = []
+    if run:
+        yield run
+
+
+def hand_typed_mirrors(text: str) -> list[tuple[int, str]]:
+    """(line, match) of each string literal in `text` that spells out a
+    kernel instead of calling its kairos_spark.exact SQL builder."""
+    out = []
+    for run in literal_runs(text):
+        joined = "".join(body for _line, body in run)
+        for m in HAND_TYPED.finditer(joined):
+            offset = m.start()
+            for line, body in run:
+                if offset < len(body):
+                    break
+                offset -= len(body)
+            out.append((line + body.count("\n", 0, offset), m.group(0)))
+    return out
+
+
 def main() -> int:
+    rel = ORACLES_PY.relative_to(ROOT.parent)
+    mirrors = [
+        f"{rel}:{line}: {hit}" for line, hit in hand_typed_mirrors(ORACLES_PY.read_text())
+    ]
+    if mirrors:
+        print("round_lint: hand-typed kernel mirrors in oracle SQL (call the "
+              "SQL builders in kairos_spark.exact instead):")
+        for f in mirrors:
+            print(" ", f)
     findings = []
     for path in sorted(ROOT.rglob("*.py")):
         text = path.read_text()
@@ -113,9 +171,11 @@ def main() -> int:
               "'exempt' comment with the reason within 6 lines above):")
         for f in findings:
             print(" ", f)
+    if findings or mirrors:
         return 1
     print("round_lint: clean — every F.round(F.avg|F.sum) site is "
-          "scale<6, DECIMAL-routed, or carries an exempt annotation")
+          "scale<6, DECIMAL-routed, or carries an exempt annotation, and "
+          "every oracle calls the kairos_spark.exact SQL builders")
     return 0
 
 
