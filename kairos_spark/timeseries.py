@@ -44,6 +44,7 @@ drops (SURVEY.md §4).
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
 import functools
 import inspect
 import itertools
@@ -51,9 +52,12 @@ import operator
 import time as _time
 from collections import OrderedDict
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import _make_type_verifier
 
 from kairos_spark.config import IntervalConfig, parse_intervals, require_interval
 from kairos_spark.functions.buckets import step_size_expr
@@ -100,8 +104,46 @@ def long_schema(value_type: str = "double") -> T.StructType:
     )
 
 
+def _local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Driver-held rows as a DataFrame built from one Arrow table: a
+    ``LocalRelation`` under ``spark.sql.execution.arrow.localRelationThreshold``
+    (no RDD, no Python worker), a JVM-side RDD of Arrow batches above
+    it. Keeps the contract of Spark's row path (a frame built from the
+    tuples themselves): Spark's own row verifier rejects the same values
+    (``PySparkTypeError``), and every cell is stored as that path stores
+    it (``_arrow_cell``)."""
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    columns = zip(*rows) if rows else [()] * len(schema.fields)
+    arrays = []
+    for values, field in zip(columns, schema.fields):
+        cell = _arrow_cell(field.dataType)
+        arrays.append(pa.array(
+            [None if v is None else cell(v) for v in values] if cell else list(values),
+            type=to_arrow_type(field.dataType),
+        ))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, names=schema.names), schema=schema)
+
+
+def _arrow_cell(dtype):
+    """The Arrow input for one non-null value of ``dtype`` that stores
+    what the row path's JVM conversion stores (None: the value as is).
+    Timestamps and dates go through ``toInternal``, so a naive datetime
+    is process-local time; decimals round half-up to the type's scale
+    and NaN reads null; a non-str value in a string column is printed
+    (bools lower-case, as the JVM prints them)."""
+    if isinstance(dtype, T.DecimalType):
+        exp = decimal.Decimal(1).scaleb(-dtype.scale)
+        return lambda v: None if v.is_nan() else v.quantize(exp, decimal.ROUND_HALF_UP)
+    if isinstance(dtype, T.StringType):
+        return lambda v: v if isinstance(v, str) else str(v).lower() if isinstance(v, bool) else str(v)
+    return dtype.toInternal if dtype.needConversion() else None
+
+
 class _MemoryStore:
-    """Driver-held rows; DataFrame materialized per read. Unit-test scale."""
+    """Driver-held rows; each read builds them into an Arrow local
+    relation (``_local_frame``). Unit-test scale."""
 
     def __init__(self, spark: SparkSession, schema: T.StructType):
         self.spark, self.schema = spark, schema
@@ -114,7 +156,7 @@ class _MemoryStore:
         self.rows.extend(tuple(r) for r in df.collect())
 
     def scan(self) -> DataFrame:
-        return self.spark.createDataFrame(self.rows, schema=self.schema)
+        return _local_frame(self.spark, self.rows, self.schema)
 
     def rewrite(self, predicate):
         """Keep the rows matching ``predicate`` (one small Spark job)."""
@@ -122,15 +164,18 @@ class _MemoryStore:
 
 
 class _ParquetStore:
-    """Append-only parquet partitioned by interval. delete/expire rewrite;
-    on a real deployment this store is a Delta table and those become
-    ``DELETE WHERE`` + ``OPTIMIZE ZORDER BY (name, i_time)``."""
+    """Append-only parquet partitioned by interval, rows unsorted in
+    their files. ``append_rows`` writes driver-held rows as one Arrow
+    local relation in one task: one file per interval per append.
+    delete/expire rewrite; on a real deployment this store is a Delta
+    table and those become ``DELETE WHERE`` + ``OPTIMIZE ZORDER BY
+    (name, i_time)``."""
 
     def __init__(self, spark: SparkSession, schema: T.StructType, path: str):
         self.spark, self.schema, self.path = spark, schema, path
 
     def append_rows(self, rows):
-        self.append_df(self.spark.createDataFrame(rows, schema=self.schema))
+        self.append_df(_local_frame(self.spark, rows, self.schema).coalesce(1))
 
     def append_df(self, df: DataFrame):
         df.write.mode("append").partitionBy("interval").parquet(self.path)
@@ -144,7 +189,7 @@ class _ParquetStore:
         except AnalysisException as e:
             if e.getCondition() != "PATH_NOT_FOUND":
                 raise
-            return self.spark.createDataFrame([], schema=self.schema)
+            return _local_frame(self.spark, [], self.schema)
 
     def rewrite(self, predicate):
         """Keep the rows matching ``predicate``: write them aside, then
@@ -442,13 +487,23 @@ class Timeseries:
             rval = self._get_base_hooked(name, cfg, interval, timestamp, fetch, process_row)
         calc = cfg.i_calc if cfg.coarse else cfg.r_calc
         if condense and not cfg.coarse:
-            fold = condense if callable(condense) else self.ops.py_condense
+            fold = condense if callable(condense) else self._py_condense(_is_multi(name))
             rval = OrderedDict([(cfg.i_calc.normalize(timestamp), fold(rval))])
             calc = cfg.i_calc
         if transform:
             step = calc.step_size(timestamp)
             rval = _transformed(self.ops, rval, transform, lambda _k: step)
         return rval
+
+    def _py_condense(self, multi):
+        """The native driver-side fold: ``ops.py_condense``, except that a
+        fold in which no slot survives (gauge drops falsy values) gives
+        the type's empty value, as the engine path's gap-fill does."""
+        def fold(data):
+            out = self.ops.py_condense(data)
+            return self.ops.empty_container(multi) if out is None else out
+
+        return fold
 
     def _engine_read(self, process_row, read, *args):
         """Engine acquisition under hooks: ``read(*args)`` with the
@@ -523,14 +578,15 @@ class Timeseries:
             rval = self._series_base_hooked(
                 name, cfg, interval, start, end, steps, buckets, fetch, process_row
             )
+        native = self._py_condense(_is_multi(name))
         if condense and not cfg.coarse:
-            fold = condense if callable(condense) else self.ops.py_condense
+            fold = condense if callable(condense) else native
             rval = OrderedDict((k, fold(v)) for k, v in rval.items())
         if collapse:
             fold = (
                 collapse if callable(collapse)
                 else condense if callable(condense)
-                else self.ops.py_condense
+                else native
             )
             rval = OrderedDict([(cfg.i_calc.from_bucket(buckets[0]), fold(rval))])
         if transform:

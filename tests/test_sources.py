@@ -1,11 +1,17 @@
 """Sources/sinks + parquet-backed Timeseries store: round trip, partition
 pruning and predicate pushdown reaching the scan."""
 
+import datetime as _dt
+import time
+from decimal import Decimal
+
 import pytest
+from pyspark.errors import PySparkTypeError
 from pyspark.sql import functions as F
 
 from kairos_spark import Timeseries
 from kairos_spark.sources import open_store, read_table, write_long_table
+from kairos_spark.timeseries import VALUE_TYPES
 
 BASE = 500000 * 3600
 
@@ -274,3 +280,91 @@ def test_parquet_store_missing_vs_broken_path(spark, tmp_path):
     broken = Timeseries(spark, type="count", intervals=intervals, path="nosuchfs:/bucket/store")
     with pytest.raises(Exception, match="UnsupportedFileSystemException"):
         broken.get("web", "minute", timestamp=BASE)
+
+
+# value_type -> (value written, value read back)
+VALUE_SAMPLES = {
+    "str": ("a é", "a é"),
+    "string": ("", ""),
+    "text": ("x\ny", "x\ny"),
+    "clob": ("c", "c"),
+    "float": (1.25, 1.25),
+    "double": (-0.5, -0.5),
+    "int": (7, 7),
+    "long": (2**62, 2**62),
+    "int64": (-3, -3),
+    "bool": (True, True),
+    "date": (_dt.date(2020, 1, 2), _dt.date(2020, 1, 2)),
+    # naive: process-local time on write and on read
+    "datetime": (_dt.datetime(2020, 1, 2, 3, 4, 5, 678901), _dt.datetime(2020, 1, 2, 3, 4, 5, 678901)),
+    "decimal": (Decimal("1.2345675"), Decimal("1.234568")),
+    "blob": (b"\x00ab", b"\x00ab"),
+    "time": (_dt.time(13, 14, 15, 16), _dt.time(13, 14, 15, 16)),
+}
+
+
+@pytest.fixture
+def new_york(monkeypatch):
+    """The process time zone set to a non-UTC zone for one test."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def _value_store(spark, tmp_path, store, value_type):
+    return Timeseries(
+        spark, type="series", value_type=value_type,
+        intervals={"minute": {"step": 60}},
+        path=str(tmp_path / "store") if store == "parquet" else None,
+    )
+
+
+def test_value_samples_cover_every_value_type():
+    assert set(VALUE_SAMPLES) == set(VALUE_TYPES)
+
+
+@pytest.mark.parametrize("value_type", sorted(VALUE_TYPES))
+@pytest.mark.parametrize("store", ["memory", "parquet"])
+def test_value_type_round_trip(spark, tmp_path, new_york, store, value_type):
+    # insert and bulk_insert store a value of every value type as
+    # Spark's row path stores it, and read it back unchanged
+    written, read = VALUE_SAMPLES[value_type]
+    t = _value_store(spark, tmp_path, store, value_type)
+    t.insert("x", written, timestamp=BASE)
+    t.bulk_insert({BASE + 1: {"x": [written]}})
+    got = t.get("x", "minute", timestamp=BASE)[BASE]
+    if value_type == "blob":
+        got = [bytes(v) for v in got]
+    assert got == [read, read]
+    assert all(type(v) is type(read) for v in got)
+
+
+@pytest.mark.parametrize("bad", [1.5, 3])
+@pytest.mark.parametrize("bulk", [False, True])
+@pytest.mark.parametrize("store", ["memory", "parquet"])
+def test_decimal_rejects_float_and_int(spark, tmp_path, store, bulk, bad):
+    # a decimal store takes Decimal values only, as Spark's row verifier
+    # rules (a memory store keeps the rows until a read builds them)
+    t = _value_store(spark, tmp_path, store, "decimal")
+    with pytest.raises(PySparkTypeError):
+        if bulk:
+            t.bulk_insert({BASE: {"x": [bad]}})
+        else:
+            t.insert("x", bad, timestamp=BASE)
+        t.get("x", "minute", timestamp=BASE)
+
+
+@pytest.mark.parametrize("store", ["memory", "parquet"])
+def test_non_str_interval_name_is_stored_as_text(spark, tmp_path, store):
+    # an interval named by an int is stored as its text, as Spark's row
+    # path stores a non-str value in a string column
+    t = Timeseries(
+        spark, type="count", intervals={60: {"step": 60}},
+        path=str(tmp_path / "store") if store == "parquet" else None,
+    )
+    t.insert("x", 2, timestamp=BASE)
+    t.bulk_insert({BASE: {"x": [3]}})
+    assert t.get("x", 60, timestamp=BASE) == {BASE: 5.0}
+    assert {r["interval"] for r in t.scan().collect()} == {"60"}

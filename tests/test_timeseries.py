@@ -44,6 +44,16 @@ def jobs(spark, tag, read) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(tag))
 
 
+def tasks(spark, tag) -> int:
+    """Number of tasks the jobs of group ``tag`` (see ``jobs``) ran."""
+    tracker = spark.sparkContext.statusTracker()
+    return sum(
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(tag)
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+
+
 # ----------------------------------------------------------------- series
 
 
@@ -786,6 +796,27 @@ def test_coarse_series_gap_fill_runs_no_spine_job(spark):
     assert got == {_time(0): 1.0, _time(60): 0, _time(120): 0, _time(180): 1.0}
 
 
+def test_parquet_append_runs_one_task_and_one_file_per_interval(spark, tmp_path):
+    # driver-held rows reach a parquet store as one Arrow local relation
+    # written in one task, so each append adds one file per interval
+    path = tmp_path / "store"
+    t = Timeseries(spark, type="series", intervals=INTERVALS, path=str(path))
+
+    def files():
+        return {iv: len(list(path.glob(f"interval={iv}/part-*.parquet"))) for iv in INTERVALS}
+
+    writes = {
+        "append_insert": lambda: t.insert("x", [1, 2, 3], timestamp=_time(0)),
+        "append_bulk_insert": lambda: t.bulk_insert({_time(i): {"x": [float(i)]} for i in range(500)}),
+    }
+    for tag, write in writes.items():
+        before = files()
+        assert jobs(spark, tag, write) == 1
+        assert tasks(spark, tag) == 1
+        assert {iv: n - before[iv] for iv, n in files().items()} == {iv: 1 for iv in INTERVALS}
+    assert len(t.get("x", "hour", timestamp=_time(0), condense=True)[_time(0)]) == 503
+
+
 def test_series_df_coarse_carries_populated_buckets_only(spark):
     # like get_df: the engine result has no rows for empty buckets
     t = make_ts(spark, "series")
@@ -858,3 +889,20 @@ def test_set_of_named_transforms_reads_like_a_list(spark, type_):
         assert get({"mean", "max"}) == get(["mean", "max"])
         series = lambda tr: t.series("x", interval, start=_time(0), end=_time(HOUR), transform=tr)
         assert series({"mean", "max"}) == series(["mean", "max"])
+
+
+@pytest.mark.parametrize("type_", sorted(SUPPORTED_TRANSFORMS))
+def test_empty_fold_reads_alike_on_both_paths(spark, type_):
+    # a driver-side fold in which no slot survives reads the type's
+    # empty value (gauge: 0, or None over several names), as the engine
+    # path's gap-fill does
+    t = make_ts(spark, type_)
+    t.insert("x", 1, timestamp=_time(10 * HOUR))
+    same = lambda row: row
+    get = dict(timestamp=_time(0), condense=True)
+    collapse = dict(start=_time(0), end=_time(HOUR), collapse=True)
+    for name in ("x", ["x", "y"]):
+        assert t.get(name, "hour", process_row=same, **get) == t.get(name, "hour", **get)
+        for interval in ("minute", "hour"):
+            driver = t.series(name, interval, process_row=same, **collapse)
+            assert driver == t.series(name, interval, **collapse)
