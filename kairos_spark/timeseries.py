@@ -5,19 +5,23 @@ series / iterate / list / properties / delete / delete_all / expire``,
 five series types, condense / collapse / transforms, multi-name merge,
 ±N insert fan-out, retention.
 
-Two read paths; ``get`` and ``series`` pick one per call:
-- The engine path: ``get_df`` / ``series_df`` return DataFrames (the
-  scale path — nothing collects, plans stay inside Catalyst; aggregation
-  output is ~buckets×names rows regardless of input size, populated
-  buckets only), and ``get`` / ``series`` collect that small aggregated
-  result and shape it into the reference's ``OrderedDict`` forms.
-  Shaping gap-fills a coarse result over the bucket list the driver
-  already holds, so empty buckets cost no Spark job. Callable
-  transforms run on the collected containers.
-- The driver-side pipeline (``_get_hooked`` / ``_series_hooked``): the
-  reference's sequence acquire (``fetch`` → ``process_row``) → join per
-  time slot → condense (fine intervals only) → collapse → transform,
-  over Python containers.
+``get`` is a one-bucket ``series``: ``series`` over ``start=timestamp,
+steps=1``, flattened to the bucket's ``{r_ts: data}`` for a fine read
+and gap-filled with the type's empty value for a coarse or condensed
+one (``get_df`` likewise is a one-bucket ``series_df``). ``series``
+picks one of two read paths per call:
+- The engine path: ``series_df`` returns a DataFrame (the scale path —
+  nothing collects, plans stay inside Catalyst; aggregation output is
+  ~buckets×names rows regardless of input size, populated buckets
+  only), and ``series`` collects that small aggregated result and
+  shapes it into the reference's ``OrderedDict`` forms. Shaping
+  gap-fills a coarse result over the bucket list the driver already
+  holds, so empty buckets cost no Spark job. Callable transforms run
+  on the collected containers.
+- The driver-side pipeline (``_series_hooked``): the reference's
+  sequence acquire (``fetch`` → ``process_row``) → join per time slot
+  → condense (fine intervals only) → collapse → transform, over Python
+  containers.
 
 The rule (``_hooked``): a read takes the driver-side pipeline iff it
 passes ``fetch``, ``process_row``, ``join_rows`` over several names, or
@@ -339,16 +343,15 @@ class Timeseries:
     def scan(self) -> DataFrame:
         return self._store.scan()
 
-    def _read_cast(self, col):
-        return self.read_func(col) if self.read_func else col
-
-    def _filtered(self, names, interval) -> DataFrame:
+    def _filtered(self, names, interval, cast=True) -> DataFrame:
+        """The rows of ``names`` in ``interval``, each tagged with its
+        name's ``__prio``; ``cast=False`` leaves out the read_func."""
         df = self.scan().where(F.col("interval") == interval)
-        if self.read_func:
+        if cast and self.read_func:
             # read-side cast applied at scan, before any aggregation —
             # the reference applies read_func per row read in every
             # _process_row (kairos/timeseries.py:365, 823-826)
-            df = df.withColumn("value", self._read_cast(F.col("value")))
+            df = df.withColumn("value", self.read_func(F.col("value")))
         if _is_multi(names):
             names = list(names)
             df = df.where(F.col("name").isin(names))
@@ -393,36 +396,23 @@ class Timeseries:
         return step_size_expr(F.col(key), calc_step)
 
     def get_df(self, name, interval, timestamp=None, condense=False, transform=None) -> DataFrame:
-        """One interval bucket as a DataFrame keyed by i_time or r_time.
-        (kairos/timeseries.py:547-611; gap-filling of the empty coarse
-        bucket happens in ``get``'s shaping, not here)."""
+        """One interval bucket as a DataFrame keyed by i_time or r_time
+        (kairos/timeseries.py:547-611): ``series_df`` over that bucket
+        alone. An empty bucket has no row; ``get`` gap-fills it while it
+        shapes."""
         cfg = require_interval(self.intervals, interval)
-        if timestamp is None:
-            timestamp = _time.time()
-        df = self._filtered(name, interval).where(F.col("i_time") == cfg.i_calc.key(timestamp))
-        multi = _is_multi(name)
-
-        if cfg.coarse:
-            return self._aggregate(
-                df, ["i_time"], ["__prio", "insert_seq"], join=multi,
-                transform=transform, step_size=self._step_size_col(cfg, "i"),
-            )
-        if condense:
-            return self._aggregate(
-                df, ["i_time"], ["r_time", "__prio", "insert_seq"], condense=True,
-                transform=transform, step_size=self._step_size_col(cfg, "i"),
-            )
-        return self._aggregate(
-            df, ["r_time"], ["__prio", "insert_seq"], join=multi,
-            transform=transform, step_size=self._step_size_col(cfg, "r"),
-        )
+        df = self.series_df(name, interval, start=timestamp, steps=1, condense=condense, transform=transform)
+        return df if cfg.coarse or condense else df.drop("i_time")
 
     def get(
         self, name, interval, timestamp=None, condense=False, transform=None,
         join_rows=None, condensed=None, fetch=None, process_row=None,
     ) -> OrderedDict:
-        """Reference-shaped read: OrderedDict keyed by bucket timestamps
-        (kairos/timeseries.py:547-611).
+        """Reference-shaped read of one interval bucket
+        (kairos/timeseries.py:547-611): ``series`` over that bucket
+        alone. A coarse or condensed read is ``{i_ts: data}``, gap-filled
+        with the type's empty value; a fine read is the bucket's flat
+        ``{r_ts: data}`` (timeseries.py:591-593), ``{}`` when empty.
 
         Customized-read hooks (parity: README.rst:623-749): ``condense``
         may be a callable receiving the r-keyed OrderedDict of
@@ -442,191 +432,17 @@ class Timeseries:
             condense = condensed
         if timestamp is None:
             timestamp = _time.time()
-        if _hooked(name, join_rows, fetch, process_row, condense):
-            return self._get_hooked(
-                name, cfg, interval, timestamp, condense, transform,
-                join_rows, fetch, process_row,
-            )
-        callables = _has_callables(transform)
-        df_transform = None if callables else transform
-        df = self.get_df(name, interval, timestamp, condense, df_transform)
-        rows = df.collect()
-
-        coarse_like = cfg.coarse or condense
-        key_col = "i_time" if coarse_like else "r_time"
-        calc = cfg.i_calc if coarse_like else cfg.r_calc
-        step = calc.step_size(timestamp)
-        shaped = OrderedDict()
-        for row in sorted(rows, key=lambda r: r[key_col]):
-            shaped[calc.key_time(row[key_col])] = _row_payload(row, self.ops, df_transform, self._value_py())
-        if coarse_like and not shaped:
-            shaped[cfg.i_calc.normalize(timestamp)] = _empty_payload(
-                self.ops, df_transform, step, multi=_is_multi(name)
-            )
-        if callables:
-            shaped = _transformed(self.ops, shaped, transform, lambda _k: step)
-        return shaped
-
-    # ------------------------------------------ driver-side read pipeline
-
-    def _get_hooked(
-        self, name, cfg, interval, timestamp, condense, transform,
-        join_rows, fetch, process_row,
-    ) -> OrderedDict:
-        """The driver-side `get` pipeline, in the reference's order
-        (timeseries.py:576-611): acquire (fetch + process_row), join
-        names per slot, condense fine data, transform."""
-        if _per_name(name, join_rows, fetch, process_row):
-            per = [
-                self._get_base_hooked(n, cfg, interval, timestamp, fetch, process_row)
-                for n in name
-            ]
-            # get results are flat even for fine data (timeseries.py:591-593)
-            rval = _join_results(per, True, join_rows or self.ops.py_join)
-        else:
-            rval = self._get_base_hooked(name, cfg, interval, timestamp, fetch, process_row)
-        calc = cfg.i_calc if cfg.coarse else cfg.r_calc
-        if condense and not cfg.coarse:
-            fold = condense if callable(condense) else self._py_condense(_is_multi(name))
-            rval = OrderedDict([(cfg.i_calc.normalize(timestamp), fold(rval))])
-            calc = cfg.i_calc
-        if transform:
-            step = calc.step_size(timestamp)
-            rval = _transformed(self.ops, rval, transform, lambda _k: step)
-        return rval
-
-    def _py_condense(self, multi):
-        """The native driver-side fold: ``ops.py_condense``, except that a
-        fold in which no slot survives (gauge drops falsy values) gives
-        the type's empty value, as the engine path's gap-fill does."""
-        def fold(data):
-            out = self.ops.py_condense(data)
-            return self.ops.empty_container(multi) if out is None else out
-
-        return fold
-
-    def _engine_read(self, process_row, read, *args):
-        """Engine acquisition under hooks: ``read(*args)`` with the
-        scan-side read_func suppressed when a custom process_row takes
-        over that role. This port's ``read_func`` is a Column→Column
-        cast applied at scan, so the engine's containers already carry
-        the native cast + read_func, and without a custom process_row
-        they pass through as they are.
-
-        NOTE: the suppression temporarily mutates ``self.read_func``
-        (restored in finally) — hooked reads on a shared Timeseries are
-        not reentrant/thread-safe, matching the reference library's
-        single-threaded facade contract."""
-        saved = self.read_func
-        if process_row is not None:
-            self.read_func = None
-        try:
-            return read(*args)
-        finally:
-            self.read_func = saved
-
-    def _fetch_proc(self, process_row):
-        """Per-container processing of fetched data: a custom
-        process_row, else the native ``py_process_row`` without
-        read_func (fetched data never passed through the engine, so
-        casting is the fetch callable's responsibility)."""
-        return process_row or (lambda d: self.ops.py_process_row(d, None))
-
-    def _get_base_hooked(self, name, cfg, interval, timestamp, fetch, process_row):
-        """Bucket acquisition under hooks (sql_backend.py:189-212): a
-        custom fetch replaces the read entirely for one name; otherwise
-        one engine read aggregates natively (several names joined by the
-        engine when no per-name hook needs them apart)."""
-        if fetch is not None:
-            proc = self._fetch_proc(process_row)
-            i_bucket = cfg.i_calc.to_bucket(timestamp)
-            raw = fetch(self.scan(), str(name), interval, i_bucket)
-            if cfg.coarse:
-                data = next(iter(raw.values())) if raw else None
-                payload = proc(data) if data else self.ops.empty_container()
-                return OrderedDict([(cfg.i_calc.from_bucket(i_bucket), payload)])
-            out = OrderedDict()
-            for r_bucket in sorted(raw or {}):
-                out[cfg.r_calc.from_bucket(r_bucket)] = proc(raw[r_bucket])
-            return out
-        base = self._engine_read(process_row, self.get, name, interval, timestamp)
-        if process_row is None:
-            return base
-        # gap-filled empties skip process_row (reference _get applies it
-        # only to rows that exist, sql_backend.py:203-210)
-        return OrderedDict((k, process_row(v) if v else v) for k, v in base.items())
-
-    def _series_hooked(
-        self, name, cfg, interval, start, end, steps, condense, collapse,
-        transform, join_rows, fetch, process_row,
-    ) -> OrderedDict:
-        """The driver-side `series` pipeline, in the reference's order
-        (timeseries.py:640-722): acquire → join → per-interval condense
-        → collapse → transform. Collapse implies condense, is keyed by
-        the range's first bucket and spans the whole range, as in
-        ``series_df``."""
-        buckets = self._bucket_range(cfg, start, end, steps)
-        if collapse:
-            condense = condense or True
-        if _per_name(name, join_rows, fetch, process_row):
-            per = [
-                self._series_base_hooked(n, cfg, interval, start, end, steps, buckets, fetch, process_row)
-                for n in name
-            ]
-            rval = _join_results(per, cfg.coarse, join_rows or self.ops.py_join)
-        else:
-            rval = self._series_base_hooked(
-                name, cfg, interval, start, end, steps, buckets, fetch, process_row
-            )
-        native = self._py_condense(_is_multi(name))
-        if condense and not cfg.coarse:
-            fold = condense if callable(condense) else native
-            rval = OrderedDict((k, fold(v)) for k, v in rval.items())
-        if collapse:
-            fold = (
-                collapse if callable(collapse)
-                else condense if callable(condense)
-                else native
-            )
-            rval = OrderedDict([(cfg.i_calc.from_bucket(buckets[0]), fold(rval))])
-        if transform:
-            rval = self._transform_series(
-                cfg, rval, transform, buckets, collapse, nested=not (cfg.coarse or condense)
-            )
-        return rval
-
-    def _series_base_hooked(
-        self, name, cfg, interval, start, end, steps, buckets, fetch, process_row
-    ) -> OrderedDict:
-        """Range acquisition under hooks (sql_backend.py:214-246):
-        ``fetch(df, name, interval, start_bucket, end_bucket)`` returns
-        ``{i_bucket: data}`` (coarse) or ``{i_bucket: {r_bucket: data}}``
-        (fine); coarse results gap-fill every bucket. See
-        ``_get_base_hooked`` / ``_engine_read`` for the engine read."""
-        if fetch is not None:
-            proc = self._fetch_proc(process_row)
-            raw = fetch(self.scan(), str(name), interval, buckets[0], buckets[-1]) or {}
-            rval = OrderedDict()
-            if cfg.coarse:
-                for b in buckets:
-                    data = raw.get(b)
-                    rval[cfg.i_calc.from_bucket(b)] = proc(data) if data else self.ops.empty_container()
-            else:
-                for b in sorted(raw):
-                    inner = OrderedDict()
-                    for rb in sorted(raw[b] or {}):
-                        inner[cfg.r_calc.from_bucket(rb)] = proc(raw[b][rb])
-                    rval[cfg.i_calc.from_bucket(b)] = inner
-            return rval
-        base = self._engine_read(process_row, self.series, name, interval, start, end, steps)
-        if process_row is None:
-            return base
-        if cfg.coarse:
-            return OrderedDict((k, process_row(v) if v else v) for k, v in base.items())
-        return OrderedDict(
-            (i_ts, OrderedDict((r_ts, process_row(v)) for r_ts, v in inner.items()))
-            for i_ts, inner in base.items()
+        rval = self.series(
+            name, interval, start=timestamp, steps=1, condense=condense, transform=transform,
+            join_rows=join_rows, process_row=process_row,
+            fetch=None if fetch is None else _bucket_fetch(fetch, cfg.coarse),
         )
+        if not (cfg.coarse or condense):
+            return next(iter(rval.values()), OrderedDict())
+        if not rval:
+            i_ts = cfg.i_calc.normalize(timestamp)
+            rval[i_ts] = _empty_payload(self.ops, transform, cfg.i_calc.step_size(i_ts), _is_multi(name))
+        return rval
 
     # ------------------------------------------------------------- series
 
@@ -658,10 +474,18 @@ class Timeseries:
         self, name, interval, start=None, end=None, steps=None,
         condense=False, collapse=False, transform=None,
     ) -> DataFrame:
-        """Range read (kairos/timeseries.py:619-719). Like ``get_df``,
-        the result carries populated buckets only; ``series`` gap-fills
-        coarse results while it shapes them (fine results stay sparse,
-        reference parity, sql_backend.py:228-246)."""
+        """Range read (kairos/timeseries.py:619-719). The result carries
+        populated buckets only; ``series`` gap-fills coarse results
+        while it shapes them (fine results stay sparse, reference
+        parity, sql_backend.py:228-246)."""
+        return self._series_df(name, interval, start, end, steps, condense, collapse, transform)
+
+    def _series_df(
+        self, name, interval, start, end, steps,
+        condense=False, collapse=False, transform=None, cast=True,
+    ) -> DataFrame:
+        """``series_df``; ``cast=False`` leaves out the scan-side
+        read_func (see ``_filtered``)."""
         cfg = require_interval(self.intervals, interval)
         if collapse:
             condense = True
@@ -669,7 +493,7 @@ class Timeseries:
         i_values = [cfg.i_calc.key_of(b) for b in buckets]
         # weekly %Y%U codes are not contiguous across a year end, so
         # Gregorian ranges filter on the listed keys
-        df = self._filtered(name, interval).where(
+        df = self._filtered(name, interval, cast).where(
             F.col("i_time").between(min(i_values), max(i_values))
             if not is_gregorian(cfg.step)
             else F.col("i_time").isin(i_values)
@@ -727,38 +551,38 @@ class Timeseries:
             condense = True
         buckets = self._bucket_range(cfg, start, end, steps)
         df = self.series_df(name, interval, start, end, steps, condense, collapse, df_transform)
-        rows = df.collect()
+        shaped = self._shaped(name, cfg, df.collect(), buckets, condense, collapse, df_transform)
+        if callables:
+            nested = not (cfg.coarse or condense)
+            shaped = self._transform_series(cfg, shaped, transform, buckets, collapse, nested)
+        return shaped
+
+    def _shaped(self, name, cfg, rows, buckets, condense=False, collapse=False, transform=None) -> OrderedDict:
+        """Collected ``series_df`` rows in the reference's shapes: fine
+        data nested, else one container per bucket. A condensed fine
+        range keeps its populated buckets. A coarse range gap-fills
+        every bucket and a collapsed one reads as one row keyed by the
+        range's first bucket; there a bucket without a row, with a null
+        container or with an all-null transform row reads the type's
+        empty value."""
         shaped = OrderedDict()
-        nested = not (cfg.coarse or condense)
-        if nested:
+        if not (cfg.coarse or condense):
             for row in sorted(rows, key=lambda r: (r["i_time"], r["r_time"])):
                 i_ts = cfg.i_calc.key_time(row["i_time"])
                 r_ts = cfg.r_calc.key_time(row["r_time"])
-                shaped.setdefault(i_ts, OrderedDict())[r_ts] = _row_payload(row, self.ops, df_transform, self._value_py())
-        elif cfg.coarse and not collapse:
-            # gap-fill over the bucket list: every bucket gets its row's
-            # payload, or the type's empty default when the bucket has no
-            # row, a null container or an all-null transform row
-            by_key = {row["i_time"]: row for row in rows}
-            for b in buckets:
-                row = by_key.get(cfg.i_calc.key_of(b))
-                v = None if row is None else _row_payload(row, self.ops, df_transform, self._value_py())
-                i_ts = cfg.i_calc.from_bucket(b)
-                if v is None or (isinstance(v, dict) and v and all(x is None for x in v.values())):
-                    v = _empty_payload(self.ops, df_transform, cfg.i_calc.step_size(i_ts), multi=_is_multi(name))
-                shaped[i_ts] = v
-        else:
-            for row in sorted(rows, key=lambda r: r["i_time"]):
-                shaped[cfg.i_calc.key_time(row["i_time"])] = _row_payload(row, self.ops, df_transform, self._value_py())
-            if collapse and not shaped:
-                # a collapsed range without rows still reads as one row,
-                # keyed by the range's first bucket, as the driver-side
-                # pipeline and get(condense=True) do
-                shaped[cfg.i_calc.from_bucket(buckets[0])] = _empty_payload(
-                    self.ops, df_transform, _range_span(cfg, buckets), multi=_is_multi(name)
-                )
-        if callables:
-            shaped = self._transform_series(cfg, shaped, transform, buckets, collapse, nested)
+                shaped.setdefault(i_ts, OrderedDict())[r_ts] = _row_payload(row, self.ops, transform, self._value_py())
+            return shaped
+        by_key = {row["i_time"]: row for row in rows}
+        for b in buckets[:1] if collapse else buckets:
+            row = by_key.get(cfg.i_calc.key_of(b))
+            v = None if row is None else _row_payload(row, self.ops, transform, self._value_py())
+            i_ts = cfg.i_calc.from_bucket(b)
+            if v is None or (isinstance(v, dict) and v and all(x is None for x in v.values())):
+                if not (cfg.coarse or collapse):
+                    continue
+                step = _range_span(cfg, buckets) if collapse else cfg.i_calc.step_size(i_ts)
+                v = _empty_payload(self.ops, transform, step, multi=_is_multi(name))
+            shaped[i_ts] = v
         return shaped
 
     def _transform_series(self, cfg, shaped, transform, buckets, collapse, nested):
@@ -775,6 +599,105 @@ class Timeseries:
             span = _range_span(cfg, buckets)
             return _transformed(self.ops, shaped, transform, lambda _k: span)
         return _transformed(self.ops, shaped, transform, cfg.i_calc.step_size)
+
+    # ------------------------------------------ driver-side read pipeline
+
+    def _series_hooked(
+        self, name, cfg, interval, start, end, steps, condense, collapse,
+        transform, join_rows, fetch, process_row,
+    ) -> OrderedDict:
+        """The driver-side `series` pipeline, in the reference's order
+        (timeseries.py:640-722): acquire → join → per-interval condense
+        → collapse → transform. Collapse implies condense, is keyed by
+        the range's first bucket and spans the whole range, as in
+        ``series_df``."""
+        buckets = self._bucket_range(cfg, start, end, steps)
+        if collapse:
+            condense = condense or True
+        if _per_name(name, join_rows, fetch, process_row):
+            per = [
+                self._series_base_hooked(n, cfg, interval, start, end, steps, buckets, fetch, process_row)
+                for n in name
+            ]
+            rval = _join_results(per, cfg.coarse, join_rows or self.ops.py_join, join_rows is None)
+        else:
+            rval = self._series_base_hooked(
+                name, cfg, interval, start, end, steps, buckets, fetch, process_row
+            )
+        if condense and not cfg.coarse and callable(condense):
+            rval = OrderedDict((k, condense(v)) for k, v in rval.items())
+        elif condense and not cfg.coarse:
+            # an interval in which no slot survives the native fold
+            # (gauge drops falsy values) is left out, as on the engine
+            folded = ((k, self.ops.py_condense(v)) for k, v in rval.items())
+            rval = OrderedDict((k, v) for k, v in folded if v is not None)
+        if collapse:
+            fold = (
+                collapse if callable(collapse)
+                else condense if callable(condense)
+                else self._py_condense(_is_multi(name))
+            )
+            rval = OrderedDict([(cfg.i_calc.from_bucket(buckets[0]), fold(rval))])
+        if transform:
+            rval = self._transform_series(
+                cfg, rval, transform, buckets, collapse, nested=not (cfg.coarse or condense)
+            )
+        return rval
+
+    def _py_condense(self, multi):
+        """The native driver-side collapse: ``ops.py_condense``, except
+        that a fold in which no slot survives (gauge drops falsy values)
+        gives the type's empty value, as the engine path's gap-fill
+        does."""
+        def fold(data):
+            out = self.ops.py_condense(data)
+            return self.ops.empty_container(multi) if out is None else out
+
+        return fold
+
+    def _series_base_hooked(
+        self, name, cfg, interval, start, end, steps, buckets, fetch, process_row
+    ) -> OrderedDict:
+        """Range acquisition under hooks (sql_backend.py:189-246): a
+        custom ``fetch(df, name, interval, start_bucket, end_bucket)``
+        replaces the read for one name, returning ``{i_bucket: data}``
+        (coarse, every bucket gap-filled) or ``{i_bucket: {r_bucket:
+        data}}`` (fine). Otherwise one engine read aggregates natively
+        (several names joined by the engine when no per-name hook needs
+        them apart). This port's ``read_func`` is a Column→Column cast
+        applied at scan, so the engine's containers already carry the
+        native cast + read_func; a custom process_row takes over that
+        role, so its read leaves the cast out."""
+        if fetch is not None:
+            # fetched data never passed through the engine: the native
+            # process_row runs without read_func (casting is the fetch
+            # callable's responsibility)
+            proc = process_row or (lambda d: self.ops.py_process_row(d, None))
+            raw = fetch(self.scan(), str(name), interval, buckets[0], buckets[-1]) or {}
+            rval = OrderedDict()
+            if cfg.coarse:
+                for b in buckets:
+                    data = raw.get(b)
+                    rval[cfg.i_calc.from_bucket(b)] = proc(data) if data else self.ops.empty_container()
+            else:
+                for b in sorted(raw):
+                    inner = OrderedDict()
+                    for rb in sorted(raw[b] or {}):
+                        inner[cfg.r_calc.from_bucket(rb)] = proc(raw[b][rb])
+                    rval[cfg.i_calc.from_bucket(b)] = inner
+            return rval
+        df = self._series_df(name, interval, start, end, steps, cast=process_row is None)
+        base = self._shaped(name, cfg, df.collect(), buckets)
+        if process_row is None:
+            return base
+        if cfg.coarse:
+            # gap-filled empties skip process_row (reference _get applies
+            # it only to rows that exist, sql_backend.py:203-210)
+            return OrderedDict((k, process_row(v) if v else v) for k, v in base.items())
+        return OrderedDict(
+            (i_ts, OrderedDict((r_ts, process_row(v)) for r_ts, v in inner.items()))
+            for i_ts, inner in base.items()
+        )
 
     # ----------------------------------------------------- metadata/lifecycle
 
@@ -861,19 +784,24 @@ def _hooked(name, join_rows, fetch, process_row, *folds) -> bool:
 # --------------------------------------------------------------- shaping utils
 
 
-def _join_results(results, coarse, join):
+def _join_results(results, coarse, join, native=False):
     """Join per-name result dicts (kairos/timeseries.py:726-744): union
-    of keys in sorted order; nested r-key join when not coarse."""
+    of keys in sorted order; nested r-key join when not coarse. A fine
+    slot in which no name survives the ``native`` join (gauge drops
+    falsy values) is left out, as the engine leaves it out."""
     rval = OrderedDict()
     i_keys = sorted({k for res in results for k in res})
     for i_key in i_keys:
         if coarse:
             rval[i_key] = join([res.get(i_key) for res in results])
-        else:
-            inner = OrderedDict()
-            r_keys = sorted({rk for res in results for rk in res.get(i_key, {})})
-            for r_key in r_keys:
-                inner[r_key] = join([res.get(i_key, {}).get(r_key) for res in results])
+            continue
+        inner = OrderedDict()
+        r_keys = sorted({rk for res in results for rk in res.get(i_key, {})})
+        for r_key in r_keys:
+            v = join([res.get(i_key, {}).get(r_key) for res in results])
+            if v is not None or not native:
+                inner[r_key] = v
+        if inner or not r_keys:
             rval[i_key] = inner
     return rval
 
@@ -889,6 +817,19 @@ def _transformed(ops, shaped, transform, step_of) -> OrderedDict:
     result; ``step_of(key)`` gives that bucket's step size."""
     fn = _transformer(ops, transform)
     return OrderedDict((k, fn(v, step_of(k))) for k, v in shaped.items())
+
+
+def _bucket_fetch(fetch, coarse):
+    """``get``'s ``fetch(df, name, interval, i_bucket)``, which returns
+    ``{r_bucket: data}`` (fine) or ``{None: data}`` (coarse), as
+    ``series``' fetch over a one-bucket range."""
+    def series_fetch(df, name, interval, start_bucket, _end_bucket):
+        raw = fetch(df, name, interval, start_bucket)
+        if not raw:
+            return {}
+        return {start_bucket: next(iter(raw.values())) if coarse else raw}
+
+    return series_fetch
 
 
 def _has_callables(transform) -> bool:

@@ -1,11 +1,16 @@
 import os
 import sys
+import types
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kairos_spark import configured_builder
+
+# The reference's fixture anchor (helper_helper.py:11-12): 500000 h,
+# 2027-01-15 08:00 UTC.
+FIXTURE_ANCHOR = 500000 * 3600
 
 
 @pytest.fixture(scope="session")
@@ -35,3 +40,19 @@ def _clear_spark_cache(request):
     yield
     if "spark" in request.fixturenames:
         request.getfixturevalue("spark").catalog.clearCache()
+
+
+@pytest.fixture(scope="module")
+def fixture_clock():
+    """Pin the clock kairos_spark reads (``insert``'s retention drop,
+    default timestamps and ranges) to ``FIXTURE_ANCHOR`` for a module.
+    Fixtures written near the anchor into a retention-bounded interval
+    then stay stored whatever the wall clock reads. Module-scoped, so
+    it also holds while module-scoped stores are filled."""
+    from kairos_spark import timemath, timeseries
+
+    clock = types.SimpleNamespace(time=lambda: float(FIXTURE_ANCHOR))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(timemath, "_time", clock)
+        mp.setattr(timeseries, "_time", clock)
+        yield clock

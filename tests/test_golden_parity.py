@@ -15,6 +15,9 @@ import pytest
 
 from kairos_spark import Timeseries
 
+# the library's clock reads the fixtures' anchor (tests/conftest.py)
+pytestmark = pytest.mark.usefixtures("fixture_clock")
+
 HOUR = 3600
 
 

@@ -119,21 +119,31 @@ def test_oracle_sources_stable_on_identical_source(im):
     assert a == b and len(a) > 300
 
 
-def test_changed_vs_head_commit_sees_worktree_only(im, loaded):
-    """Against HEAD, changed defs must be exactly the uncommitted
-    worktree edits (empty when the tree is clean)."""
+def test_changed_vs_head_commit_sees_worktree_only(im, tmp_path, monkeypatch):
+    """Against HEAD, changed defs are exactly the uncommitted worktree
+    edits: none on a clean tree. Runs against a throwaway repository,
+    so the suite needs no git checkout of its own."""
     import subprocess
 
-    mods, *_ = loaded
-    dirty = subprocess.check_output(
-        ["git", "-C", REPO, "status", "--porcelain", "--", "kairos_spark/"],
-        text=True,
-    ).strip()
-    changed, oracle_changed = im._changed_vs("HEAD", mods)
-    if not dirty:
-        assert changed == set() and oracle_changed == set()
-    # dirty tree: nothing to assert beyond "it ran" — promote mode is
-    # exercised against real round refs in the workflow, not here
+    pkg = tmp_path / "kairos_spark"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "util.py").write_text("def f():\n    return 1\n\n\ndef g():\n    return 2\n")
+    (pkg / "queries.py").write_text('ORACLES = {"q1": "SELECT 1", "q2": "SELECT 2"}\n')
+    for args in (["init", "-q"], ["add", "-A"], ["commit", "-q", "-m", "seed"]):
+        subprocess.run(
+            ["git", "-C", str(tmp_path), "-c", "user.name=t", "-c", "user.email=t@example.com", *args],
+            check=True, capture_output=True,
+        )
+    monkeypatch.setattr(im, "REPO", str(tmp_path))
+    monkeypatch.setattr(im, "PKG", str(pkg))
+
+    assert im._changed_vs("HEAD", im._load_modules()) == (set(), set())
+    (pkg / "util.py").write_text("def f():\n    return 1\n\n\ndef g():\n    return 3\n")
+    (pkg / "queries.py").write_text('ORACLES = {"q1": "SELECT 1", "q2": "SELECT 3"}\n')
+    changed, oracle_changed = im._changed_vs("HEAD", im._load_modules())
+    assert changed == {("kairos_spark.util", "g"), ("kairos_spark.queries", "ORACLES")}
+    assert oracle_changed == {"q2"}
 
 
 def test_oracle_builder_owners_resolved_through_imports(loaded):
