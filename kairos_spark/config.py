@@ -35,14 +35,6 @@ class IntervalConfig:
         self.i_calc = make_calculator(self.step)
         self.r_calc = make_calculator(self.resolution)
 
-    @property
-    def expire_seconds(self) -> int | None:
-        """Retention horizon in seconds, None when unbounded."""
-        if not self.steps:
-            return None
-        ttl = self.i_calc.ttl(self.steps)
-        return int(ttl) if ttl else None
-
 
 def parse_intervals(intervals: dict) -> dict[str, IntervalConfig]:
     if not intervals:

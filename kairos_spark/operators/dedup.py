@@ -103,6 +103,28 @@ def doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame
     )
 
 
+def _shingle_overlap(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """Per doc pair (id_a < id_b) sharing any n-gram: the ``shared``
+    shingle count and both docs' shingle-set sizes ``sz_a``, ``sz_b``
+    (one shingle self-join)."""
+    sh = doc_shingles(df, text_col, id_col, n)
+    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
+    a = sh.alias("a")
+    b = sh.alias("b")
+    shared = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .agg(F.count("*").alias("shared"))
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    return shared.join(sa, "id_a").join(sb, "id_b")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -115,20 +137,8 @@ def ngram_jaccard_pairs(
     |A∩B| from the join, |A∪B| = |A|+|B|-|A∩B|. Correctness oracle and
     small-set verifier; at 100 TB use minhash_lsh_pairs to generate
     candidates and this only on the candidate pairs."""
-    sh = doc_shingles(df, text_col, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    shared = (
-        a.join(b, (F.col(f"a.shingle") == F.col(f"b.shingle")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("shared"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
     return (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, text_col, id_col, n)
         .withColumn(
             "jaccard",
             _round6_ratio(
@@ -287,6 +297,23 @@ def simhash(
     return bit_sums.select(F.col(id_col), fp.alias("simhash"))
 
 
+def _simhash_segments(blocks: int, seg_bits: int) -> Column:
+    """``simhash`` cut into `blocks` slices of `seg_bits` bits, each as
+    one LONG key with its block index in the high bits, so equal slices
+    of different blocks never share a key."""
+    return F.array(
+        *[
+            (
+                F.lit(b).cast("long") * F.lit(1 << seg_bits).cast("long")
+                + F.shiftright(F.col("simhash"), b * seg_bits).bitwiseAND(
+                    F.lit((1 << seg_bits) - 1)
+                )
+            )
+            for b in range(blocks)
+        ]
+    )
+
+
 def simhash_near_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -327,17 +354,7 @@ def simhash_near_pairs(
       and the candidate-pair dedup shuffle disappears."""
     seg_bits = bits // blocks
     sh = simhash(df, text_col, id_col, bits).localCheckpoint(eager=True)
-    segments = F.array(
-        *[
-            (
-                F.lit(b).cast("long") * F.lit(1 << seg_bits).cast("long")
-                + F.shiftright(F.col("simhash"), b * seg_bits).bitwiseAND(
-                    F.lit((1 << seg_bits) - 1)
-                )
-            )
-            for b in range(blocks)
-        ]
-    )
+    segments = _simhash_segments(blocks, seg_bits)
     banded = sh.select(
         F.col(id_col), "simhash", F.posexplode(segments).alias("__j", "seg")
     )
@@ -564,24 +581,8 @@ def containment_pairs(
     Exact verification path (shingle self-join, same shape as
     ngram_jaccard_pairs); at 100 TB generate candidates with
     minhash_lsh_pairs and score containment only on the candidates."""
-    sh = doc_shingles(df, text_col, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("shared"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
     return (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, text_col, id_col, n)
         .withColumn(
             "containment",
             _round6_ratio(F.col("shared"), F.least("sz_a", "sz_b")),
@@ -2667,6 +2668,35 @@ def dup_run_lengths(
     )
 
 
+def _shared_shingles(
+    capped: DataFrame, text_col: str, id_col: str, n: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The bounded audits' exact-Jaccard inputs over a capped doc set:
+    per doc pair (id_a < id_b) sharing any n-gram its shared count
+    ``__shn``, and each doc's shingle-set size as ``(id_a, __za)`` and
+    ``(id_b, __zb)``. Every doc has >= 1 shingle (empty text yields the
+    '' shingle), so |∪| = __za + __zb - __shn is never 0."""
+    sh = doc_shingles(capped, text_col, id_col, n)
+    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
+    sa = sh.alias("sa")
+    sb = sh.alias("sb")
+    shared = (
+        sa.join(
+            sb,
+            (F.col("sa.shingle") == F.col("sb.shingle"))
+            & (F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}")),
+        )
+        .groupBy(
+            F.col(f"sa.{id_col}").alias("id_a"),
+            F.col(f"sb.{id_col}").alias("id_b"),
+        )
+        .agg(F.count("*").alias("__shn"))
+    )
+    za = sizes.select(F.col(id_col).alias("id_a"), F.col("__sz").alias("__za"))
+    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("__sz").alias("__zb"))
+    return shared, za, zb
+
+
 def minhash_scurve(
     df: DataFrame,
     text_col: str = "text",
@@ -2718,27 +2748,8 @@ def minhash_scurve(
         F.col(f"b.{id_col}").alias("id_b"),
         F.zip_with("a.sig", "b.sig", lambda x, y: x == y).alias("__eq"),
     )
-    # exact Jaccard bin over the same capped set (both docs always
-    # have >= 1 shingle — empty text yields the '' shingle — so the
-    # union denominator is never 0 in either engine)
-    sh = doc_shingles(capped, text_col, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    sa = sh.alias("sa")
-    sb = sh.alias("sb")
-    shared = (
-        sa.join(
-            sb,
-            (F.col("sa.shingle") == F.col("sb.shingle"))
-            & (F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"sa.{id_col}").alias("id_a"),
-            F.col(f"sb.{id_col}").alias("id_b"),
-        )
-        .agg(F.count("*").alias("__shn"))
-    )
-    za = sizes.select(F.col(id_col).alias("id_a"), F.col("__sz").alias("__za"))
-    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("__sz").alias("__zb"))
+    # exact Jaccard bin over the same capped set
+    shared, za, zb = _shared_shingles(capped, text_col, id_col, n)
     binned = (
         pairs.join(shared, ["id_a", "id_b"], "left")
         .join(za, "id_a")
@@ -2844,24 +2855,7 @@ def sig_size_sweep(
         F.col(f"b.{id_col}").alias("id_b"),
         F.zip_with("a.sig", "b.sig", lambda x, y: x == y).alias("__eq"),
     )
-    sh = doc_shingles(capped, text_col, id_col, n)
-    shsizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    sa = sh.alias("sa")
-    sb = sh.alias("sb")
-    shared = (
-        sa.join(
-            sb,
-            (F.col("sa.shingle") == F.col("sb.shingle"))
-            & (F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"sa.{id_col}").alias("id_a"),
-            F.col(f"sb.{id_col}").alias("id_b"),
-        )
-        .agg(F.count("*").alias("__shn"))
-    )
-    za = shsizes.select(F.col(id_col).alias("id_a"), F.col("__sz").alias("__za"))
-    zb = shsizes.select(F.col(id_col).alias("id_b"), F.col("__sz").alias("__zb"))
+    shared, za, zb = _shared_shingles(capped, text_col, id_col, n)
     base = (
         pairs.join(shared, ["id_a", "id_b"], "left")
         .join(za, "id_a")
@@ -3126,17 +3120,7 @@ def simhash_radius_sweep(
     # pair, when the token hash is narrower than ``bits``) into ONE
     # task — the bench entry read 3-17 s run-to-run; broadcast pins
     # the fast plan (measured 3.3 s → 1.9 s steady at sf0.1).
-    segments = F.array(
-        *[
-            (
-                F.lit(b).cast("long") * F.lit(1 << seg_bits).cast("long")
-                + F.shiftright(F.col("simhash"), b * seg_bits).bitwiseAND(
-                    F.lit((1 << seg_bits) - 1)
-                )
-            )
-            for b in range(blocks)
-        ]
-    )
+    segments = _simhash_segments(blocks, seg_bits)
     banded = sh.select(
         F.col(id_col), "simhash", F.posexplode(segments).alias("__j", "seg")
     )
@@ -3258,24 +3242,7 @@ def minhash_len_bias(
             F.filter(F.zip_with("a.sig", "b.sig", lambda x, y: x == y), lambda v: v)
         ).alias("__m"),
     )
-    sh = doc_shingles(capped, text_col, id_col, n)
-    shsizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    sa = sh.alias("sa")
-    sb = sh.alias("sb")
-    shared = (
-        sa.join(
-            sb,
-            (F.col("sa.shingle") == F.col("sb.shingle"))
-            & (F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"sa.{id_col}").alias("id_a"),
-            F.col(f"sb.{id_col}").alias("id_b"),
-        )
-        .agg(F.count("*").alias("__shn"))
-    )
-    za = shsizes.select(F.col(id_col).alias("id_a"), F.col("__sz").alias("__za"))
-    zb = shsizes.select(F.col(id_col).alias("id_b"), F.col("__sz").alias("__zb"))
+    shared, za, zb = _shared_shingles(capped, text_col, id_col, n)
     base = (
         pairs.join(shared, ["id_a", "id_b"], "left")
         .join(za, "id_a")
@@ -3391,22 +3358,7 @@ def lsh_br_planner(
         .orderBy(id_col)
         .limit(int(sample_docs))
     )
-    sh = doc_shingles(capped, text_col, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    sa = sh.alias("sa")
-    sb = sh.alias("sb")
-    shared = (
-        sa.join(
-            sb,
-            (F.col("sa.shingle") == F.col("sb.shingle"))
-            & (F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"sa.{id_col}").alias("id_a"),
-            F.col(f"sb.{id_col}").alias("id_b"),
-        )
-        .agg(F.count("*").alias("__shn"))
-    )
+    shared, za, zb = _shared_shingles(capped, text_col, id_col, n)
     ids = capped.select(F.col(id_col))
     ia = ids.alias("ia")
     ib = ids.alias("ib")
@@ -3414,8 +3366,6 @@ def lsh_br_planner(
         F.col(f"ia.{id_col}").alias("id_a"),
         F.col(f"ib.{id_col}").alias("id_b"),
     )
-    za = sizes.select(F.col(id_col).alias("id_a"), F.col("__sz").alias("__za"))
-    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("__sz").alias("__zb"))
     base = (
         prs.join(shared, ["id_a", "id_b"], "left")
         .join(za, "id_a")

@@ -896,6 +896,57 @@ def rfm_segments(
     )
 
 
+def _time_halves(df: DataFrame, ts_col: str, *cols) -> DataFrame:
+    """`cols` of every row plus ``__h``: 1 for rows at or before the
+    midpoint of the global `ts_col` range, 2 after. The midpoint is
+    floor((min + max) / 2) of the integer µs timestamps, carried to
+    every row by a 1-row broadcast."""
+    scal = df.agg(
+        F.floor(
+            (F.min(F.unix_micros(F.col(ts_col))) + F.max(F.unix_micros(F.col(ts_col))))
+            / 2
+        )
+        .cast("long")
+        .alias("__mid")
+    )
+    half = F.when(F.unix_micros(F.col(ts_col)) <= F.col("__mid"), 1).otherwise(2)
+    return df.crossJoin(F.broadcast(scal)).select(*cols, half.alias("__h"))
+
+
+def _half_value_counts(
+    df: DataFrame, group_col: str, value_col: str, ts_col: str
+) -> DataFrame:
+    """The two-sample drift tests' value-grain count table: per
+    (``name``, double value ``__v``) the row counts ``__c1`` / ``__c2``
+    of the two time halves (_time_halves)."""
+    return (
+        _time_halves(
+            df,
+            ts_col,
+            F.col(group_col).alias("name"),
+            F.col(value_col).cast("double").alias("__v"),
+        )
+        .groupBy("name", "__v")
+        .agg(
+            F.sum(F.when(F.col("__h") == 1, 1).otherwise(0)).alias("__c1"),
+            F.sum(F.when(F.col("__h") == 2, 1).otherwise(0)).alias("__c2"),
+        )
+    )
+
+
+def _ecdf_windows():
+    """The ECDF step tables' windows over _half_value_counts: per name
+    in value order the running frame, and the whole name."""
+    from pyspark.sql.window import Window
+
+    running = (
+        Window.partitionBy("name")
+        .orderBy("__v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return running, Window.partitionBy("name")
+
+
 def ks_drift(
     df: DataFrame,
     group_col: str = "event_type",
@@ -920,36 +971,8 @@ def ks_drift(
     (distinct values, not rows). For groups whose distinct-value count
     itself is data-sized, bin first (binned_histogram) and accept bin
     resolution — that variant is distribution_drift's territory."""
-    from pyspark.sql.window import Window
-
-    scal = df.agg(
-        F.floor(
-            (F.min(F.unix_micros(F.col(ts_col))) + F.max(F.unix_micros(F.col(ts_col))))
-            / 2
-        )
-        .cast("long")
-        .alias("__mid")
-    )
-    half = F.when(F.unix_micros(F.col(ts_col)) <= F.col("__mid"), 1).otherwise(2)
-    counts = (
-        df.crossJoin(F.broadcast(scal))
-        .select(
-            F.col(group_col).alias("name"),
-            F.col(value_col).cast("double").alias("__v"),
-            half.alias("__h"),
-        )
-        .groupBy("name", "__v")
-        .agg(
-            F.sum(F.when(F.col("__h") == 1, 1).otherwise(0)).alias("__c1"),
-            F.sum(F.when(F.col("__h") == 2, 1).otherwise(0)).alias("__c2"),
-        )
-    )
-    w = (
-        Window.partitionBy("name")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tot = Window.partitionBy("name")
+    counts = _half_value_counts(df, group_col, value_col, ts_col)
+    w, tot = _ecdf_windows()
     stepped = counts.select(
         "name",
         F.sum("__c1").over(w).alias("__cum1"),
@@ -1107,18 +1130,8 @@ def categorical_drift(
     category grain."""
     from pyspark.sql.window import Window
 
-    scal = df.agg(
-        F.floor(
-            (F.min(F.unix_micros(F.col(ts_col))) + F.max(F.unix_micros(F.col(ts_col))))
-            / 2
-        )
-        .cast("long")
-        .alias("__mid")
-    )
-    half = F.when(F.unix_micros(F.col(ts_col)) <= F.col("__mid"), 1).otherwise(2)
     counts = (
-        df.crossJoin(F.broadcast(scal))
-        .select(F.col(cat_col).alias("category"), half.alias("__h"))
+        _time_halves(df, ts_col, F.col(cat_col).alias("category"))
         .groupBy("category")
         .agg(
             F.sum(F.when(F.col("__h") == 1, 1).otherwise(0)).cast("long").alias("c1"),
@@ -2399,36 +2412,8 @@ def cvm_drift(
     (associative — identical under any partitioning and in the
     oracle). Scale shape: identical to ks_drift — value-grain count
     table, one cumulative window per group."""
-    from pyspark.sql.window import Window
-
-    scal = df.agg(
-        F.floor(
-            (F.min(F.unix_micros(F.col(ts_col))) + F.max(F.unix_micros(F.col(ts_col))))
-            / 2
-        )
-        .cast("long")
-        .alias("__mid")
-    )
-    half = F.when(F.unix_micros(F.col(ts_col)) <= F.col("__mid"), 1).otherwise(2)
-    counts = (
-        df.crossJoin(F.broadcast(scal))
-        .select(
-            F.col(group_col).alias("name"),
-            F.col(value_col).cast("double").alias("__v"),
-            half.alias("__h"),
-        )
-        .groupBy("name", "__v")
-        .agg(
-            F.sum(F.when(F.col("__h") == 1, 1).otherwise(0)).alias("__c1"),
-            F.sum(F.when(F.col("__h") == 2, 1).otherwise(0)).alias("__c2"),
-        )
-    )
-    w = (
-        Window.partitionBy("name")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tot = Window.partitionBy("name")
+    counts = _half_value_counts(df, group_col, value_col, ts_col)
+    w, tot = _ecdf_windows()
     stepped = counts.select(
         "name",
         (F.col("__c1") + F.col("__c2")).alias("__m"),
@@ -3326,35 +3311,9 @@ def wasserstein_drift(
     count table + one window per group."""
     from pyspark.sql.window import Window
 
-    scal = df.agg(
-        F.floor(
-            (F.min(F.unix_micros(F.col(ts_col))) + F.max(F.unix_micros(F.col(ts_col))))
-            / 2
-        )
-        .cast("long")
-        .alias("__mid")
-    )
-    half = F.when(F.unix_micros(F.col(ts_col)) <= F.col("__mid"), 1).otherwise(2)
-    counts = (
-        df.crossJoin(F.broadcast(scal))
-        .select(
-            F.col(group_col).alias("name"),
-            F.col(value_col).cast("double").alias("__v"),
-            half.alias("__h"),
-        )
-        .groupBy("name", "__v")
-        .agg(
-            F.sum(F.when(F.col("__h") == 1, 1).otherwise(0)).alias("__c1"),
-            F.sum(F.when(F.col("__h") == 2, 1).otherwise(0)).alias("__c2"),
-        )
-    )
-    w = (
-        Window.partitionBy("name")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    counts = _half_value_counts(df, group_col, value_col, ts_col)
+    w, tot = _ecdf_windows()
     w_lead = Window.partitionBy("name").orderBy("__v")
-    tot = Window.partitionBy("name")
     stepped = counts.select(
         "name",
         "__v",

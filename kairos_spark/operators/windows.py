@@ -19,7 +19,7 @@ Scale shape (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from kairos_spark.exact import (
@@ -725,6 +725,24 @@ def debounce_stats(
     )
 
 
+def _pearson(pairs: DataFrame, *keys: str) -> tuple[DataFrame, Column]:
+    """Pearson r of the ``(__x, __y)`` integer pairs per `keys` group,
+    from exact integer moment sums: the groups with nonzero variance on
+    both sides (count ``__n``), and r rounded to 6 over them."""
+    s = pairs.groupBy(*keys).agg(
+        F.count("*").alias("__n"),
+        F.sum("__x").alias("__sx"),
+        F.sum("__y").alias("__sy"),
+        F.sum(F.col("__x") * F.col("__y")).alias("__sxy"),
+        F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
+        F.sum(F.col("__y") * F.col("__y")).alias("__syy"),
+    )
+    num = (F.col("__n") * F.col("__sxy") - F.col("__sx") * F.col("__sy")).cast("double")
+    vx = (F.col("__n") * F.col("__sxx") - F.col("__sx") * F.col("__sx")).cast("double")
+    vy = (F.col("__n") * F.col("__syy") - F.col("__sy") * F.col("__sy")).cast("double")
+    return s.where((vx > 0) & (vy > 0)), F.round(num / F.sqrt(vx * vy), 6)
+
+
 def count_correlation(
     df: DataFrame,
     key_col: str = "event_type",
@@ -758,26 +776,8 @@ def count_correlation(
         F.col("i_time"), F.col("name").alias("key_b"), F.col("n").alias("__y")
     )
     pairs = a.join(b, "i_time").where(F.col("key_a") < F.col("key_b"))
-    s = pairs.groupBy("key_a", "key_b").agg(
-        F.count("*").alias("__n"),
-        F.sum("__x").alias("__sx"),
-        F.sum("__y").alias("__sy"),
-        F.sum(F.col("__x") * F.col("__y")).alias("__sxy"),
-        F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
-        F.sum(F.col("__y") * F.col("__y")).alias("__syy"),
-    )
-    num = (F.col("__n") * F.col("__sxy") - F.col("__sx") * F.col("__sy")).cast("double")
-    vx = (F.col("__n") * F.col("__sxx") - F.col("__sx") * F.col("__sx")).cast("double")
-    vy = (F.col("__n") * F.col("__syy") - F.col("__sy") * F.col("__sy")).cast("double")
-    return (
-        s.where((vx > 0) & (vy > 0))
-        .select(
-            "key_a",
-            "key_b",
-            F.col("__n").alias("n_buckets"),
-            F.round(num / F.sqrt(vx * vy), 6).alias("corr"),
-        )
-    )
+    s, r = _pearson(pairs, "key_a", "key_b")
+    return s.select("key_a", "key_b", F.col("__n").alias("n_buckets"), r.alias("corr"))
 
 
 def conversion_latency(
@@ -1130,26 +1130,8 @@ def spearman_correlation(
     a = ranked.select(F.col("i_time"), F.col("name").alias("key_a"), F.col("__r2").alias("__x"))
     b = ranked.select(F.col("i_time"), F.col("name").alias("key_b"), F.col("__r2").alias("__y"))
     pairs = a.join(b, "i_time").where(F.col("key_a") < F.col("key_b"))
-    s = pairs.groupBy("key_a", "key_b").agg(
-        F.count("*").alias("__n"),
-        F.sum("__x").alias("__sx"),
-        F.sum("__y").alias("__sy"),
-        F.sum(F.col("__x") * F.col("__y")).alias("__sxy"),
-        F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
-        F.sum(F.col("__y") * F.col("__y")).alias("__syy"),
-    )
-    num = (F.col("__n") * F.col("__sxy") - F.col("__sx") * F.col("__sy")).cast("double")
-    vx = (F.col("__n") * F.col("__sxx") - F.col("__sx") * F.col("__sx")).cast("double")
-    vy = (F.col("__n") * F.col("__syy") - F.col("__sy") * F.col("__sy")).cast("double")
-    return (
-        s.where((vx > 0) & (vy > 0))
-        .select(
-            "key_a",
-            "key_b",
-            F.col("__n").alias("n_buckets"),
-            F.round(num / F.sqrt(vx * vy), 6).alias("spearman"),
-        )
-    )
+    s, r = _pearson(pairs, "key_a", "key_b")
+    return s.select("key_a", "key_b", F.col("__n").alias("n_buckets"), r.alias("spearman"))
 
 
 def theilsen_trend(
@@ -1222,6 +1204,25 @@ def theilsen_trend(
     )
 
 
+def _second_sessions(df, user_col, ts_col, seq_col, type_col, gap_sec):
+    """The path operators' sessions: `df`'s user, time, seq and type
+    columns plus ``__sess``, a new session per user after a gap over
+    `gap_sec` whole seconds; and the per-session window in (time, seq)
+    order. The session id and the caller's per-session windows share
+    one per-user sort."""
+    w = Window.partitionBy(user_col).orderBy(ts_col, seq_col)
+    prev = F.lag(F.unix_timestamp(F.col(ts_col))).over(w)
+    new_sess = F.when(
+        prev.isNull()
+        | ((F.unix_timestamp(F.col(ts_col)) - prev) > F.lit(gap_sec)),
+        1,
+    ).otherwise(0)
+    sess = df.select(
+        F.col(user_col), F.col(ts_col), F.col(seq_col), F.col(type_col)
+    ).withColumn("__sess", F.sum(new_sess).over(w))
+    return sess, Window.partitionBy(user_col, "__sess").orderBy(ts_col, seq_col)
+
+
 def session_paths(
     df: DataFrame,
     user_col: str = "user_id",
@@ -1243,17 +1244,7 @@ def session_paths(
     path counts aggregate with map-side combine on the path string;
     top-k is TakeOrderedAndProject. Sequences crossing a session
     boundary are excluded by requiring all steps in one session."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, seq_col)
-    prev = F.lag(F.unix_timestamp(F.col(ts_col))).over(w)
-    new_sess = F.when(
-        prev.isNull()
-        | ((F.unix_timestamp(F.col(ts_col)) - prev) > F.lit(gap_sec)),
-        1,
-    ).otherwise(0)
-    sess = df.select(
-        F.col(user_col), F.col(ts_col), F.col(seq_col), F.col(type_col)
-    ).withColumn("__sess", F.sum(new_sess).over(w))
-    ws = Window.partitionBy(user_col, "__sess").orderBy(ts_col, seq_col)
+    sess, ws = _second_sessions(df, user_col, ts_col, seq_col, type_col, gap_sec)
     steps = [F.col(type_col)] + [
         F.lead(type_col, i).over(ws) for i in range(1, depth)
     ]
@@ -1355,25 +1346,8 @@ def autocorrelation(
     )
     b = counts.select(F.col("name"), F.col("i_time").alias("__t"), F.col("n").alias("__y"))
     pairs = a.join(b, ["name", "__t"])
-    s = pairs.groupBy("name").agg(
-        F.count("*").alias("__n"),
-        F.sum("__x").alias("__sx"),
-        F.sum("__y").alias("__sy"),
-        F.sum(F.col("__x") * F.col("__y")).alias("__sxy"),
-        F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
-        F.sum(F.col("__y") * F.col("__y")).alias("__syy"),
-    )
-    num = (F.col("__n") * F.col("__sxy") - F.col("__sx") * F.col("__sy")).cast("double")
-    vx = (F.col("__n") * F.col("__sxx") - F.col("__sx") * F.col("__sx")).cast("double")
-    vy = (F.col("__n") * F.col("__syy") - F.col("__sy") * F.col("__sy")).cast("double")
-    return (
-        s.where((vx > 0) & (vy > 0))
-        .select(
-            "name",
-            F.col("__n").cast("long").alias("n_pairs"),
-            F.round(num / F.sqrt(vx * vy), 6).alias("autocorr"),
-        )
-    )
+    s, r = _pearson(pairs, "name")
+    return s.select("name", F.col("__n").cast("long").alias("n_pairs"), r.alias("autocorr"))
 
 
 def transition_entropy(
@@ -1398,17 +1372,7 @@ def transition_entropy(
     Scale shape: sessionize + lead share one per-user sort (the
     session_paths discipline); transitions aggregate to |types|² rows
     with map-side combine; entropy folds over those aggregated rows."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, seq_col)
-    prev = F.lag(F.unix_timestamp(F.col(ts_col))).over(w)
-    new_sess = F.when(
-        prev.isNull()
-        | ((F.unix_timestamp(F.col(ts_col)) - prev) > F.lit(gap_sec)),
-        1,
-    ).otherwise(0)
-    sess = df.select(
-        F.col(user_col), F.col(ts_col), F.col(seq_col), F.col(type_col)
-    ).withColumn("__sess", F.sum(new_sess).over(w))
-    ws = Window.partitionBy(user_col, "__sess").orderBy(ts_col, seq_col)
+    sess, ws = _second_sessions(df, user_col, ts_col, seq_col, type_col, gap_sec)
     steps = sess.select(
         F.col(type_col).alias("from_type"),
         F.lead(type_col).over(ws).alias("__to"),
@@ -1483,6 +1447,28 @@ def scd2_intervals(
     )
 
 
+def _hourly_lags(df: DataFrame, group_col: str, ts_col: str, season_lag: int) -> DataFrame:
+    """Per (``grp``, hour) event count ``y`` with the naive forecast
+    ``p1`` (the previous hour's count) and the seasonal one ``ps``
+    (`season_lag` hours back); both NULL where the lag runs off the
+    group's first row."""
+    hourly = (
+        df.select(
+            F.col(group_col).alias("grp"),
+            F.date_trunc("hour", F.col(ts_col)).alias("hour"),
+        )
+        .groupBy("grp", "hour")
+        .agg(F.count("*").cast("long").alias("y"))
+    )
+    w = Window.partitionBy("grp").orderBy("hour")
+    return hourly.select(
+        "grp",
+        "y",
+        F.lag("y", 1).over(w).alias("p1"),
+        F.lag("y", season_lag).over(w).alias("ps"),
+    )
+
+
 def forecast_eval(
     df: DataFrame,
     ts_col: str = "ts",
@@ -1512,23 +1498,7 @@ def forecast_eval(
     thousand per group-year) — the window input is the AGGREGATE, so
     partition skew is bounded by the calendar, not the traffic.
     """
-    from pyspark.sql.window import Window
-
-    hourly = (
-        df.select(
-            F.col(group_col).alias("grp"),
-            F.date_trunc("hour", F.col(ts_col)).alias("hour"),
-        )
-        .groupBy("grp", "hour")
-        .agg(F.count("*").cast("long").alias("y"))
-    )
-    w = Window.partitionBy("grp").orderBy("hour")
-    with_lags = hourly.select(
-        "grp",
-        "y",
-        F.lag("y", 1).over(w).alias("p1"),
-        F.lag("y", season_lag).over(w).alias("ps"),
-    )
+    with_lags = _hourly_lags(df, group_col, ts_col, season_lag)
     def _err(pred):
         d = (F.col("y") - pred).cast("long")
         return d
@@ -1805,6 +1775,35 @@ def attribution_split(
     )
 
 
+def _us_sessions(
+    df: DataFrame,
+    user_col: str,
+    type_col: str,
+    ts_col: str,
+    seq_col: str,
+    gap_sec: float,
+) -> DataFrame:
+    """Gaps-and-islands sessions on integer µs: ``(__u, __t, __us,
+    __seq)`` plus ``__sid``, a new session per user after a gap over
+    `gap_sec`, ordered by (time, `seq_col`). Unlike sessionize (double
+    seconds, a ROWS frame), the gap test and the default RANGE frame
+    run on exact µs, which the session-shape operators' oracles mirror
+    with epoch_us."""
+    base = df.select(
+        F.col(user_col).alias("__u"),
+        F.col(type_col).alias("__t"),
+        F.unix_micros(F.col(ts_col)).alias("__us"),
+        F.col(seq_col).alias("__seq"),
+    )
+    w = Window.partitionBy("__u").orderBy("__us", "__seq")
+    new_sess = F.when(
+        F.lag("__us").over(w).isNull()
+        | ((F.col("__us") - F.lag("__us").over(w)) > int(gap_sec * 1000000)),
+        1,
+    ).otherwise(0)
+    return base.withColumn("__sid", F.sum(new_sess).over(w))
+
+
 def session_entry_exit(
     df: DataFrame,
     user_col: str = "user_id",
@@ -1828,19 +1827,7 @@ def session_entry_exit(
     min_by/max_by aggregate at session grain; the final table is
     |event types| rows. Total-session count rides a 1-row broadcast.
     """
-    base = df.select(
-        F.col(user_col).alias("__u"),
-        F.col(type_col).alias("__t"),
-        F.unix_micros(F.col(ts_col)).alias("__us"),
-        F.col(seq_col).alias("__seq"),
-    )
-    w = Window.partitionBy("__u").orderBy("__us", "__seq")
-    new_sess = F.when(
-        F.lag("__us").over(w).isNull()
-        | ((F.col("__us") - F.lag("__us").over(w)) > int(gap_sec * 1000000)),
-        1,
-    ).otherwise(0)
-    sess = base.withColumn("__sid", F.sum(new_sess).over(w))
+    sess = _us_sessions(df, user_col, type_col, ts_col, seq_col, gap_sec)
     per_sess = sess.groupBy("__u", "__sid").agg(
         F.min_by("__t", F.struct("__us", "__seq")).alias("entry_type"),
         F.max_by("__t", F.struct("__us", "__seq")).alias("exit_type"),
@@ -1945,19 +1932,7 @@ def mrr_sessions(
     by both windows; the first-target pick is a min-aggregate at
     session grain; the final row folds session-grain rows.
     """
-    base = df.select(
-        F.col(user_col).alias("__u"),
-        F.col(type_col).alias("__t"),
-        F.unix_micros(F.col(ts_col)).alias("__us"),
-        F.col(seq_col).alias("__seq"),
-    )
-    w = Window.partitionBy("__u").orderBy("__us", "__seq")
-    new_sess = F.when(
-        F.lag("__us").over(w).isNull()
-        | ((F.col("__us") - F.lag("__us").over(w)) > int(gap_sec * 1000000)),
-        1,
-    ).otherwise(0)
-    sess = base.withColumn("__sid", F.sum(new_sess).over(w))
+    sess = _us_sessions(df, user_col, type_col, ts_col, seq_col, gap_sec)
     ws = Window.partitionBy("__u", "__sid").orderBy("__us", "__seq")
     pos = sess.withColumn("__pos", F.row_number().over(ws))
     per_sess = pos.groupBy("__u", "__sid").agg(
@@ -2681,25 +2656,9 @@ def forecast_mase(
     Scale shape: identical to forecast_eval — one map-side-combined
     (group, hour) aggregate, per-group lag windows over hour-grain
     rows, one combiner rollup."""
-    from pyspark.sql.window import Window
-
     from kairos_spark.exact import _round6_ratio_dec
 
-    hourly = (
-        df.select(
-            F.col(group_col).alias("grp"),
-            F.date_trunc("hour", F.col(ts_col)).alias("hour"),
-        )
-        .groupBy("grp", "hour")
-        .agg(F.count("*").cast("long").alias("y"))
-    )
-    w = Window.partitionBy("grp").orderBy("hour")
-    with_lags = hourly.select(
-        "grp",
-        "y",
-        F.lag("y", 1).over(w).alias("p1"),
-        F.lag("y", season_lag).over(w).alias("ps"),
-    )
+    with_lags = _hourly_lags(df, group_col, ts_col, season_lag)
     e1 = (F.col("y") - F.col("p1")).cast("long")
     es = (F.col("y") - F.col("ps")).cast("long")
     agg = with_lags.groupBy("grp").agg(
@@ -2787,19 +2746,7 @@ def ndcg_sessions(
     rel = F.lit(0)
     for t, v in sorted(g.items()):
         rel = F.when(F.col("__t") == t, F.lit(int(v))).otherwise(rel)
-    base = df.select(
-        F.col(user_col).alias("__u"),
-        F.col(type_col).alias("__t"),
-        F.unix_micros(F.col(ts_col)).alias("__us"),
-        F.col(seq_col).alias("__seq"),
-    )
-    w = Window.partitionBy("__u").orderBy("__us", "__seq")
-    new_sess = F.when(
-        F.lag("__us").over(w).isNull()
-        | ((F.col("__us") - F.lag("__us").over(w)) > int(gap_sec * 1000000)),
-        1,
-    ).otherwise(0)
-    sess = base.withColumn("__sid", F.sum(new_sess).over(w))
+    sess = _us_sessions(df, user_col, type_col, ts_col, seq_col, gap_sec)
     ws = Window.partitionBy("__u", "__sid").orderBy("__us", "__seq")
     pos = sess.select(
         "__u", "__sid", rel.alias("__r"), F.col("__t"),

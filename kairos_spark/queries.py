@@ -1041,6 +1041,46 @@ def _docs_with_dups(spark, sf_dir):
     return d.unionByName(dup)
 
 
+def _link_decorated(spark, sf_dir):
+    """documents with URLs planted by doc_id (the pii_scrub decoration
+    precedent: the synthetic corpus has no URLs): doc_id % 4 gets a .com
+    link on one of 50 hosts, doc_id % 6 a .org link on one of 20, so
+    hosts really collide across docs. _LINK_DECO_SQL is its oracle twin."""
+    docs = _tbl(spark, sf_dir, "documents")
+    return docs.withColumn(
+        "text",
+        F.concat(
+            F.col("text"),
+            F.when(
+                F.col("doc_id") % 4 == 0,
+                F.concat(
+                    F.lit(" see https://example"),
+                    (F.col("doc_id") % 50).cast("string"),
+                    F.lit(".com/page"),
+                ),
+            ).otherwise(F.lit("")),
+            F.when(
+                F.col("doc_id") % 6 == 0,
+                F.concat(
+                    F.lit(" and http://mirror"),
+                    (F.col("doc_id") % 20).cast("string"),
+                    F.lit(".org/x"),
+                ),
+            ).otherwise(F.lit("")),
+        ),
+    )
+
+
+_LINK_DECO_SQL = """
+    text
+    || CASE WHEN doc_id % 4 = 0
+         THEN ' see https://example' || (doc_id % 50)::VARCHAR || '.com/page'
+         ELSE '' END
+    || CASE WHEN doc_id % 6 = 0
+         THEN ' and http://mirror' || (doc_id % 20)::VARCHAR || '.org/x'
+         ELSE '' END"""
+
+
 def q_dedup_exact_groups(spark, sf_dir):
     """Exact dedup: md5-digest groups with >1 member
     (hash-groupBy; one shuffle on the digest)."""
@@ -1876,12 +1916,11 @@ def q_lsh_recall(spark, sf_dir):
     return similarity.lsh_recall(qs, emb, dim=64, k=10, planes=8, probe_hamming=2)
 
 
-def q_fuzzy_match(spark, sf_dir):
-    """Blocked fuzzy record linkage: customer names with one character
-    deterministically deleted, matched back against the clean table
-    blocked on nation, Levenshtein <= 2, best match + ambiguity count."""
-    c = _tbl(spark, sf_dir, "customer")
-    dirty = c.select(
+def _dirty_customers(c: DataFrame) -> DataFrame:
+    """customer names with one character deterministically deleted
+    (which one by c_custkey % 8), as (d_id = c_custkey + 1e6, d_name,
+    c_nationkey): the fuzzy-linkage probes' dirty side."""
+    return c.select(
         (F.col("c_custkey") + 1000000).alias("d_id"),
         F.expr(
             "concat(substring(c_name, 1, 9 + c_custkey % 8),"
@@ -1889,6 +1928,14 @@ def q_fuzzy_match(spark, sf_dir):
         ).alias("d_name"),
         "c_nationkey",
     )
+
+
+def q_fuzzy_match(spark, sf_dir):
+    """Blocked fuzzy record linkage: customer names with one character
+    deterministically deleted, matched back against the clean table
+    blocked on nation, Levenshtein <= 2, best match + ambiguity count."""
+    c = _tbl(spark, sf_dir, "customer")
+    dirty = _dirty_customers(c)
     return joins.fuzzy_blocked_match(
         dirty, c, "d_id", "d_name", "c_custkey", "c_name",
         ["c_nationkey"], max_dist=2,
@@ -2383,14 +2430,7 @@ def q_entity_clusters(spark, sf_dir):
     edges (Levenshtein <= 2, nation-blocked perturbed customer names)
     — (node, entity_id) labels via HashMin connected components."""
     c = _tbl(spark, sf_dir, "customer")
-    dirty = c.select(
-        (F.col("c_custkey") + 1000000).alias("d_id"),
-        F.expr(
-            "concat(substring(c_name, 1, 9 + c_custkey % 8),"
-            " substring(c_name, 11 + c_custkey % 8))"
-        ).alias("d_name"),
-        "c_nationkey",
-    )
+    dirty = _dirty_customers(c)
     return joins.entity_clusters(
         dirty, c, "d_id", "d_name", "c_custkey", "c_name",
         ["c_nationkey"], max_dist=2,
@@ -3687,30 +3727,7 @@ def q_url_dedup(spark, sf_dir):
     % 20 hosts make REAL cross-doc URL collisions), first-URL
     canonicalization, global first-fetch-wins keep rule, per-source
     drop stats."""
-    docs = _tbl(spark, sf_dir, "documents")
-    deco = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 4 == 0,
-                F.concat(
-                    F.lit(" see https://example"),
-                    (F.col("doc_id") % 50).cast("string"),
-                    F.lit(".com/page"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 6 == 0,
-                F.concat(
-                    F.lit(" and http://mirror"),
-                    (F.col("doc_id") % 20).cast("string"),
-                    F.lit(".org/x"),
-                ),
-            ).otherwise(F.lit("")),
-        ),
-    )
-    return dedup.url_dedup(deco)
+    return dedup.url_dedup(_link_decorated(spark, sf_dir))
 
 
 def q_doc_disposition(spark, sf_dir):
@@ -3873,30 +3890,7 @@ def q_link_density(spark, sf_dir):
     docs (the pii_scrub decoration precedent: the synthetic corpus has
     no URLs, so a pure function of doc_id plants them identically on
     both engines)."""
-    docs = _tbl(spark, sf_dir, "documents")
-    deco = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 4 == 0,
-                F.concat(
-                    F.lit(" see https://example"),
-                    (F.col("doc_id") % 50).cast("string"),
-                    F.lit(".com/page"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 6 == 0,
-                F.concat(
-                    F.lit(" and http://mirror"),
-                    (F.col("doc_id") % 20).cast("string"),
-                    F.lit(".org/x"),
-                ),
-            ).otherwise(F.lit("")),
-        ),
-    )
-    return text.link_density(deco)
+    return text.link_density(_link_decorated(spark, sf_dir))
 
 
 def q_chunk_overlap(spark, sf_dir):
@@ -4385,30 +4379,7 @@ def q_domain_mix(spark, sf_dir):
     """Per-source TLD mix of each doc's first URL over the same
     link-decorated corpus as url_dedup (doc_id % 50 .com hosts,
     % 20 .org hosts, plus any organic links)."""
-    docs = _tbl(spark, sf_dir, "documents")
-    deco = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 4 == 0,
-                F.concat(
-                    F.lit(" see https://example"),
-                    (F.col("doc_id") % 50).cast("string"),
-                    F.lit(".com/page"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 6 == 0,
-                F.concat(
-                    F.lit(" and http://mirror"),
-                    (F.col("doc_id") % 20).cast("string"),
-                    F.lit(".org/x"),
-                ),
-            ).otherwise(F.lit("")),
-        ),
-    )
-    return dedup.domain_mix(deco)
+    return dedup.domain_mix(_link_decorated(spark, sf_dir))
 
 
 def q_bpe_merge_candidates(spark, sf_dir):
@@ -4818,6 +4789,545 @@ _STOP_HITS_SQL = (
     r"len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|for|with)\b'))"
 )
 _WORDS_SQL = r"greatest(len(regexp_split_to_array(trim(text), '\s+')), 1)"
+
+# --- shared oracle stages -------------------------------------------------
+# Each SQL stage that several oracles run lives here once, as a constant
+# or a builder returning SQL text: a CTE list (no leading WITH, no
+# trailing comma), select items, or an expression. Where a stage mirrors
+# one Spark helper, its comment names that helper.
+
+
+# SQL twins of the md5-derived pipeline operators (DuckDB: hex → BIGINT
+# via '0x'||substr(md5(...))). Shingling/tokenization formulas mirror
+# kairos_spark.operators.text exactly.
+_SHINGLE_CTE = """
+    norm AS (
+        SELECT doc_id, regexp_replace(lower(text), '\\s+', ' ', 'g') AS n
+        FROM documents
+    ),
+    idx AS (
+        SELECT doc_id, n,
+               unnest(generate_series(1, greatest(length(n) - 7, 1))) AS i
+        FROM norm
+    ),
+    sh AS (SELECT DISTINCT doc_id, substr(n, i, 8) AS s FROM idx)
+"""
+
+
+def _shingle_overlap_sql(materialized: bool = False) -> str:
+    """CTEs sz, shared: per doc its shingle count, per doc pair its
+    shared shingles — dedup._shingle_overlap, the exact n-gram Jaccard
+    and containment inputs."""
+    mat = "MATERIALIZED " if materialized else ""
+    return f"""
+    sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
+    shared AS {mat}(
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
+        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )"""
+
+
+# the bounded audits' corpus: the 64 lowest doc ids and their shingles
+# (the capped frame of dedup's minhash audits)
+_CAPPED_SHINGLES_SQL = r"""
+    ids AS MATERIALIZED (
+        SELECT doc_id FROM documents ORDER BY doc_id LIMIT 64
+    ),
+    norm AS (
+        SELECT d.doc_id, regexp_replace(lower(d.text), '\s+', ' ', 'g') AS n
+        FROM documents d JOIN ids USING (doc_id)
+    ),
+    idx AS (
+        SELECT doc_id, n,
+               unnest(generate_series(1, greatest(length(n) - 7, 1))) AS i
+        FROM norm
+    ),
+    sh AS MATERIALIZED (SELECT DISTINCT doc_id, substr(n, i, 8) AS s FROM idx)"""
+
+# per capped doc its shingle count, per capped pair its shared shingles
+# (dedup._shared_shingles)
+_SHARED_SHINGLES_SQL = """
+    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
+    shared AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shn
+        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )"""
+
+# each shingle's md5 double-hash pair (a, b)
+_MINHASH_AB_SQL = """
+    h AS (
+        SELECT doc_id,
+               ('0x' || substr(md5(s), 1, 11))::BIGINT AS a,
+               ('0x' || substr(md5(s), 12, 11))::BIGINT AS b
+        FROM sh
+    )"""
+
+
+def _minhash_sig_sql(num_hashes: int = 32, materialized: bool = False) -> str:
+    """CTEs h, sig: each doc's `num_hashes` minima of (a + i·b) mod p
+    over its shingles sh(doc_id, s) — dedup.minhash_signatures."""
+    mat = "MATERIALIZED " if materialized else ""
+    return f"""{_MINHASH_AB_SQL},
+    sig AS {mat}(
+        SELECT doc_id, i.i AS i, min((a + i.i * b) % 17592186044399) AS hv
+        FROM h CROSS JOIN (SELECT unnest(generate_series(0, {num_hashes - 1})) AS i) i
+        GROUP BY 1, 2
+    )"""
+
+
+# 16 bands of 2 rows over the 32-hash sig, and the doc pairs sharing a
+# band digest (dedup.minhash_lsh_pairs' candidates)
+_LSH_CANDIDATES_SQL = """
+    bands AS (
+        SELECT doc_id, i // 2 AS band,
+               md5(CAST(i // 2 AS VARCHAR) || ':' ||
+                   string_agg(CAST(hv AS VARCHAR), ',' ORDER BY i)) AS bucket
+        FROM sig GROUP BY doc_id, i // 2
+    ),
+    cand AS (
+        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
+    )"""
+
+# each LSH candidate's estimated Jaccard: the share of its 32 signature
+# components that agree
+_LSH_EST_SQL = f"""
+    est AS (
+        SELECT c.id_a, c.id_b,
+               {round6_ratio_sql(
+                   "sum(CASE WHEN sa.hv = sb.hv THEN 1 ELSE 0 END)",
+                   "32",
+               )} AS est_jaccard
+        FROM cand c
+        JOIN sig sa ON sa.doc_id = c.id_a
+        JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
+        GROUP BY 1, 2
+    )"""
+
+# the bounded audits' all pairs of capped docs, with each signature
+# component's agreement
+_AUDIT_PAIR_EQ_SQL = """
+    prs AS MATERIALIZED (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM ids a JOIN ids b ON a.doc_id < b.doc_id
+    ),
+    eqs AS MATERIALIZED (
+        SELECT p.id_a, p.id_b, sa.i AS i, (sa.hv = sb.hv) AS eq
+        FROM prs p
+        JOIN sig sa ON sa.doc_id = p.id_a
+        JOIN sig sb ON sb.doc_id = p.id_b AND sb.i = sa.i
+    )"""
+
+# the audits' error summary over signed 1e-12-quantized errors qs(q)
+_ERR_STATS_SQL = f"""
+    {round6_ratio_dec_sql(
+        "sum(abs(q))::HUGEINT",
+        "count(*)::HUGEINT * 1000000000000",
+    )} AS mae,
+    {round6_ratio_dec_signed_sql(
+        "sum(q)::HUGEINT",
+        "count(*)::HUGEINT * 1000000000000",
+    )} AS bias,
+    {round6_ratio_dec_sql("max(abs(q))::HUGEINT", "1000000000000")} AS max_abs_err"""
+
+# connected components of the pair set p(id_a, id_b): every node reaches
+# its component's least id as r
+_REACH_SQL = """
+    edges AS (
+        SELECT id_a AS a, id_b AS b FROM p
+        UNION
+        SELECT id_b, id_a FROM p
+    ),
+    reach(node, r) AS (
+        SELECT a, a FROM edges
+        UNION
+        SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
+    )"""
+
+# 60-bit SimHash votes over each doc's tokens tok(doc_id, t)
+_SIMHASH_BITS_SQL = """
+    h AS (
+        SELECT doc_id, ('0x' || substr(md5(t), 1, 11))::BIGINT AS h FROM tok
+    ),
+    bits AS (
+        SELECT doc_id, j.j,
+               sum(CASE WHEN ((h >> j.j) & 1) = 1 THEN 1 ELSE -1 END) AS s
+        FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) j
+        GROUP BY 1, 2
+    )"""
+
+
+def _srp_planes_sql(n_planes: int, name: str = "planes") -> str:
+    """CTEs dims, hs, `name`: `n_planes` md5-seeded random hyperplanes
+    over the 64 embedding dims (similarity's SRP planes)."""
+    return f"""
+    dims AS (SELECT unnest(generate_series(0, 63)) AS d),
+    hs AS (SELECT unnest(generate_series(0, {n_planes - 1})) AS h),
+    {name} AS (
+      SELECT hs.h, dims.d,
+             (('0x' || substr(md5('plane' || hs.h || ':' || dims.d), 1, 8))::BIGINT
+              / 4294967296.0) * 2.0 - 1.0 AS c
+      FROM hs, dims
+    )"""
+
+
+# each vector e(vec_id, v)'s SRP bucket: one bit per plane, set when the
+# dot product is >= 0
+_SRP_BUCKETS_SQL = """
+    comp AS (SELECT vec_id, dims.d, v[dims.d + 1] AS x FROM e, dims),
+    dots AS (
+      SELECT comp.vec_id, p.h, sum(comp.x * p.c) AS dp
+      FROM comp JOIN planes p ON p.d = comp.d
+      GROUP BY 1, 2
+    ),
+    buckets AS (
+      SELECT vec_id, sum(CASE WHEN dp >= 0 THEN 1 << h ELSE 0 END) AS b
+      FROM dots GROUP BY 1
+    )"""
+
+# K-means: every stage is exact — md5 seed draw, left-to-right float
+# folds (list_reduce mirrors F.aggregate), DECIMAL(38,12) mean/inertia
+# sums — so two engines reproduce identical clusters bit-for-bit. The
+# dim (64) is inlined; the Spark operator stays dimension-generic.
+_KM_DIST = """list_reduce(
+            list_prepend(CAST(0.0 AS DOUBLE),
+              list_transform(list_zip(b.v, c.cvec),
+                             s -> (s[1] - s[2]) * (s[1] - s[2]))),
+            (x, y) -> x + y)"""
+
+_KM_SEEDS_SQL = """
+    base AS (
+      SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ),
+    seeds AS (
+      SELECT id, v, md5(CAST(id AS VARCHAR)) AS h
+      FROM base ORDER BY h LIMIT 8
+    ),
+    c0 AS (
+      SELECT row_number() OVER (ORDER BY h) - 1 AS cid, v AS cvec FROM seeds
+    )"""
+
+
+def _km_assign_sql(
+    n: int, d_cols: str = "b.id, b.v", a_cols: str = "id, v, cid", mat: str = ""
+) -> str:
+    """CTEs d{n}, a{n}: every vector against the centers c{n-1}, then its
+    nearest center; `d_cols` and `a_cols` pick the carried columns."""
+    return f"""
+    d{n} AS (
+      SELECT {d_cols}, c.cid, {_KM_DIST} AS dist
+      FROM base b CROSS JOIN c{n - 1} c
+    ),
+    a{n} AS {mat}(
+      SELECT {a_cols} FROM (
+        SELECT *, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
+        FROM d{n}
+      ) WHERE rn = 1
+    )"""
+
+
+def _km_update_sql(n: int) -> str:
+    """CTEs u{n}, c{n}: the centers moved to their members' means."""
+    return f"""
+    u{n} AS (
+      SELECT cid, pos,
+             CAST(sum(CAST(v[pos] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS m
+      FROM a{n} CROSS JOIN range(1, 65) t(pos)
+      GROUP BY 1, 2
+    ),
+    c{n} AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM u{n} GROUP BY 1)"""
+
+
+def _kmeans_sql(a_cols: str = "id, v, cid") -> str:
+    """CTEs base .. c2: the seeds and two Lloyd rounds; the third
+    assignment is the caller's (_km_assign_sql(3, ...))."""
+    return ",".join(
+        [
+            _KM_SEEDS_SQL,
+            _km_assign_sql(1, a_cols=a_cols),
+            _km_update_sql(1),
+            _km_assign_sql(2, a_cols=a_cols),
+            _km_update_sql(2),
+        ]
+    )
+
+
+# text.language_id's stopword-panel scores and its pick
+_LANG_SCORES_SQL = r"""
+    scores AS (
+        SELECT doc_id, lang,
+               len(regexp_extract_all(lower(text),
+                   '\b(der|die|und|das|ist|nicht|mit|ein)\b')) * 1.0
+                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_de,
+               len(regexp_extract_all(lower(text),
+                   '\b(the|and|of|to|in|is|that|for|with)\b')) * 1.0
+                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_en,
+               len(regexp_extract_all(lower(text),
+                   '\b(el|la|los|que|es|para|con|una)\b')) * 1.0
+                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_es,
+               len(regexp_extract_all(lower(text),
+                   '\b(le|la|les|et|est|que|pour|dans)\b')) * 1.0
+                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_fr
+        FROM documents
+    )"""
+
+_LANG_PRED_SQL = """
+    CASE WHEN greatest(s_de, s_en, s_es, s_fr) <= 0 THEN 'und'
+         WHEN s_de = greatest(s_de, s_en, s_es, s_fr) THEN 'de'
+         WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
+         WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
+         ELSE 'fr' END"""
+
+# text.quality_score's per-doc ratios (select items after doc_id) and
+# the score over them
+_QUALITY_STATS_SQL = f"""
+    len(regexp_split_to_array(trim(text), '\\s+')) AS n_words,
+    {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
+    {round6_ratio_sql(
+        "len(regexp_extract_all(text, '[0-9]'))",
+        "greatest(length(text), 1)",
+    )} AS digit_ratio,
+    {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)} AS stopword_ratio"""
+
+_QUALITY_SQL = """
+    CAST(round(CAST(0.4 * least(n_words / 100.0, 1.0)
+        + 0.3 * least(stopword_ratio * 3, 1.0)
+        + 0.2 * (1.0 - least(punct_ratio * 4, 1.0))
+        + 0.1 * (1.0 - least(digit_ratio * 5, 1.0))
+        AS DECIMAL(18,7)), 6) AS DOUBLE)"""
+
+
+def _quality_cte_sql(rel: str) -> str:
+    """CTEs stats, q: text.quality_score of every doc of `rel`."""
+    return f"""
+    stats AS (
+        SELECT doc_id, {_QUALITY_STATS_SQL}
+        FROM {rel}
+    ),
+    q AS (SELECT doc_id, {_QUALITY_SQL} AS quality FROM stats)"""
+
+
+# mean µ-quality qu of all docs and of the kept ones (is_keep)
+_KEPT_QUALITY_SQL = f"""
+    {round6_ratio_dec_sql(
+        "sum(qu)::HUGEINT",
+        "count(*)::HUGEINT * 1000000",
+    )} AS mean_quality_all,
+    {round6_ratio_dec_sql(
+        "sum(CASE WHEN is_keep THEN qu ELSE 0 END)::HUGEINT",
+        "greatest(sum(CASE WHEN is_keep THEN 1 ELSE 0 END), 1)::HUGEINT * 1000000",
+    )} AS mean_quality_kept"""
+
+# text.bigram_lm_score's counts: per doc and corpus-wide bigram counts,
+# each bigram context's total and the vocabulary size
+_BIGRAM_COUNTS_SQL = r"""
+    words AS (
+      SELECT doc_id,
+             string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
+      FROM documents
+    ),
+    idx AS (
+      SELECT doc_id, w, unnest(generate_series(1, len(w) - 1)) AS i
+      FROM words WHERE len(w) >= 2
+    ),
+    grams AS (SELECT doc_id, w[i] || ' ' || w[i + 1] AS bg FROM idx),
+    per_doc AS (SELECT doc_id, bg, count(*) AS m FROM grams GROUP BY 1, 2),
+    corpus AS (SELECT bg, CAST(sum(m) AS BIGINT) AS cbg FROM per_doc GROUP BY 1),
+    ctx AS (
+      SELECT split_part(bg, ' ', 1) AS w1, CAST(sum(cbg) AS BIGINT) AS cw1
+      FROM corpus GROUP BY 1
+    ),
+    vocab AS (
+      SELECT count(DISTINCT t) AS v FROM (SELECT unnest(w) AS t FROM words)
+    )"""
+
+# each doc's bigram count and add-one-smoothed mean log-likelihood over
+# those counts
+_BIGRAM_SCORE_SQL = """
+    SELECT p.doc_id, CAST(sum(p.m) AS BIGINT) AS n_bigrams,
+           round(
+             CAST(sum(CAST(p.m * ln((c.cbg + 1) / (x.cw1 + vocab.v)) AS DECIMAL(28,12))) AS DOUBLE)
+             / sum(p.m), 6) AS lm_score
+    FROM per_doc p
+    JOIN corpus c USING (bg)
+    JOIN ctx x ON split_part(p.bg, ' ', 1) = x.w1, vocab
+    GROUP BY 1"""
+
+# the contamination oracles' word trigram sets: of three benchmark
+# "docs" (the 9 lowest doc ids, by doc_id % 3) and of every doc
+_BENCH_TRIGRAMS_SQL = r"""
+    bdocs AS (
+      SELECT 'b' || CAST(doc_id % 3 AS VARCHAR) AS benchmark, text
+      FROM documents WHERE doc_id < 9
+    ),
+    bw AS (
+      SELECT benchmark,
+             string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
+      FROM bdocs
+    ),
+    bg AS (
+      SELECT DISTINCT benchmark, array_to_string(ws[i:i+2], ' ') AS g
+      FROM bw, UNNEST(range(1, greatest(len(ws) - 2, 1) + 1)) AS t(i)
+    )"""
+
+_CORPUS_TRIGRAMS_SQL = r"""
+    cw AS (
+      SELECT doc_id,
+             string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
+      FROM documents
+    ),
+    cg AS (
+      SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS g
+      FROM cw, UNNEST(range(1, greatest(len(ws) - 2, 1) + 1)) AS t(i)
+    )"""
+
+# the global event-time midpoint (integer µs, floored) that splits the
+# drift operators' two halves
+_MIDPOINT_SQL = """
+    scal AS (
+      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
+      FROM events
+    )"""
+
+# per (event type, value): its count in each half (profiling._half_value_counts)
+_HALF_VALUE_COUNTS_SQL = """
+    counts AS (
+      SELECT event_type AS name, CAST(value AS DOUBLE) AS v,
+             sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 1 ELSE 0 END) AS c1,
+             sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 0 ELSE 1 END) AS c2
+      FROM events GROUP BY 1, 2
+    )"""
+
+# the two-sample ECDF steps over counts (_HALF_VALUE_COUNTS_SQL): each
+# half's cumulative count at every value, and each half's total
+_ECDF_STEPS_SQL = """
+    stepped AS (
+      SELECT name,
+             sum(c1) OVER (PARTITION BY name ORDER BY v
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum1,
+             sum(c2) OVER (PARTITION BY name ORDER BY v
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum2,
+             sum(c1) OVER (PARTITION BY name) AS n1,
+             sum(c2) OVER (PARTITION BY name) AS n2
+      FROM counts
+    )"""
+
+
+def _session_steps_sql(name: str) -> str:
+    """CTEs ordered, sess, `name`: windows.sessionize's sessions (a new
+    one after 1800 s), then each event's successor in its session as
+    (from_type, to_type)."""
+    return f"""
+    ordered AS (
+      SELECT user_id, event_id, event_type, epoch(ts) AS t,
+             CASE WHEN lag(epoch(ts)) OVER w IS NULL
+                    OR epoch(ts) - lag(epoch(ts)) OVER w > 1800.0
+                  THEN 1 ELSE 0 END AS new_s
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ),
+    sess AS (
+      SELECT user_id, event_id, event_type, t,
+             sum(new_s) OVER (PARTITION BY user_id ORDER BY t, event_id
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS session_id
+      FROM ordered
+    ),
+    {name} AS (
+      SELECT event_type AS from_type,
+             lead(event_type) OVER (PARTITION BY user_id, session_id
+                                    ORDER BY t, event_id) AS to_type
+      FROM sess
+    )"""
+
+
+def _secs_sessions_sql(cols: str) -> str:
+    """CTEs o, s: windows._second_sessions' sessions in whole seconds (a
+    new one after 1800 s) as s.sess; `cols` are o's columns between
+    user_id and secs."""
+    return f"""
+    o AS (
+      SELECT user_id, {cols}, epoch(ts) AS secs,
+             lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY epoch(ts), event_id) AS prev
+      FROM events
+    ),
+    s AS (
+      SELECT user_id, event_id, secs, event_type,
+             sum(CASE WHEN prev IS NULL OR secs - prev > 1800.0 THEN 1 ELSE 0 END)
+                 OVER (PARTITION BY user_id ORDER BY secs, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
+      FROM o
+    )"""
+
+
+def _us_sessions_sql(cols: str, order: str) -> str:
+    """CTEs ordered, flagged, sess: gaps-and-islands sessions in integer
+    µs (windows._us_sessions), a new `sid` after a gap over 1800 s.
+    `cols` are ordered's columns after user_id; `order` leads the
+    session-number window's sort key (ties break on event_id)."""
+    return f"""
+    ordered AS (
+      SELECT user_id, {cols},
+             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+               AS prev_us
+      FROM events
+    ),
+    flagged AS (
+      SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
+                     THEN 1 ELSE 0 END AS ns
+      FROM ordered
+    ),
+    sess AS (
+      SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY {order}, event_id
+                              ROWS UNBOUNDED PRECEDING) AS sid
+      FROM flagged
+    )"""
+
+
+# users linked by co-activity: distinct (user, event type × hour) cells,
+# cells of at most 200 users, and user pairs sharing at least 2 of them
+_COACTIVITY_EDGES_SQL = """
+    occ AS MATERIALIZED (
+      SELECT DISTINCT user_id AS u,
+             event_type || ':' ||
+                 CAST(CAST(floor(epoch(ts) / 3600) AS BIGINT) AS VARCHAR) AS cell
+      FROM events
+    ),
+    small AS (SELECT cell FROM occ GROUP BY cell HAVING count(*) <= 200),
+    edges AS MATERIALIZED (
+      SELECT a.u AS a, b.u AS b
+      FROM (SELECT occ.* FROM occ JOIN small USING (cell)) a
+      JOIN (SELECT occ.* FROM occ JOIN small USING (cell)) b
+        ON a.cell = b.cell AND a.u < b.u
+      GROUP BY 1, 2 HAVING count(*) >= 2
+    )"""
+
+
+def _pearson_sql(keys: str, n_col: str, r_col: str) -> str:
+    """CTE s and the final SELECT: per `keys` group of pairs(keys.., x,
+    y), the pair count as `n_col` and Pearson r as `r_col` from exact
+    integer moment sums, groups with zero variance dropped — the twin of
+    windows._pearson."""
+    group = ", ".join(str(i + 1) for i in range(len(keys.split(","))))
+    return f"""
+    s AS (
+      SELECT {keys},
+             CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+             CAST(sum(x * y) AS BIGINT) AS sxy,
+             CAST(sum(x * x) AS BIGINT) AS sxx,
+             CAST(sum(y * y) AS BIGINT) AS syy
+      FROM pairs GROUP BY {group}
+    )
+    SELECT {keys}, n AS {n_col},
+           round(CAST(n * sxy - sx * sy AS DOUBLE)
+                 / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
+                        * CAST(n * syy - sy * sy AS DOUBLE)), 6) AS {r_col}
+    FROM s
+    WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0"""
+
 
 ORACLES = dict(_TS_ORACLES)
 ORACLES.update(
@@ -5408,85 +5918,28 @@ ORACLES.update(
     }
 )
 
-# SQL twins of the md5-derived pipeline operators (DuckDB: hex → BIGINT
-# via '0x'||substr(md5(...))). Shingling/tokenization formulas mirror
-# kairos_spark.operators.text exactly.
-_SHINGLE_CTE = """
-    norm AS (
-        SELECT doc_id, regexp_replace(lower(text), '\\s+', ' ', 'g') AS n
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, n,
-               unnest(generate_series(1, greatest(length(n) - 7, 1))) AS i
-        FROM norm
-    ),
-    sh AS (SELECT DISTINCT doc_id, substr(n, i, 8) AS s FROM idx)
-"""
-
 ORACLES.update(
     {
         "quality_scores": f"""
-            WITH stats AS (
-                SELECT doc_id,
-                       len(regexp_split_to_array(trim(text), '\\s+')) AS n_words,
-                       {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
-                       {round6_ratio_sql(
-                           "len(regexp_extract_all(text, '[0-9]'))",
-                           "greatest(length(text), 1)",
-                       )} AS digit_ratio,
-                       {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
-                             AS stopword_ratio
-                FROM documents
-            )
-            SELECT doc_id,
-                   CAST(round(CAST(0.4 * least(n_words / 100.0, 1.0)
-                       + 0.3 * least(stopword_ratio * 3, 1.0)
-                       + 0.2 * (1.0 - least(punct_ratio * 4, 1.0))
-                       + 0.1 * (1.0 - least(digit_ratio * 5, 1.0))
-                       AS DECIMAL(18,7)), 6) AS DOUBLE) AS quality
-            FROM stats
+            WITH stats AS (SELECT doc_id, {_QUALITY_STATS_SQL} FROM documents)
+            SELECT doc_id, {_QUALITY_SQL} AS quality FROM stats
         """,
-        "lang_id": """
-            WITH scores AS (
-                SELECT doc_id, lang,
-                       len(regexp_extract_all(lower(text),
-                           '\\b(der|die|und|das|ist|nicht|mit|ein)\\b')) * 1.0
-                           / greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1) AS s_de,
-                       len(regexp_extract_all(lower(text),
-                           '\\b(the|and|of|to|in|is|that|for|with)\\b')) * 1.0
-                           / greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1) AS s_en,
-                       len(regexp_extract_all(lower(text),
-                           '\\b(el|la|los|que|es|para|con|una)\\b')) * 1.0
-                           / greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1) AS s_es,
-                       len(regexp_extract_all(lower(text),
-                           '\\b(le|la|les|et|est|que|pour|dans)\\b')) * 1.0
-                           / greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1) AS s_fr
-                FROM documents
-            ),
+        "lang_id": f"""
+            WITH {_LANG_SCORES_SQL},
             pred AS (
                 SELECT doc_id, lang,
-                       CASE WHEN greatest(s_de, s_en, s_es, s_fr) <= 0 THEN 'und'
-                            WHEN s_de = greatest(s_de, s_en, s_es, s_fr) THEN 'de'
-                            WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
-                            WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
-                            ELSE 'fr' END AS lang_pred
+                       {_LANG_PRED_SQL} AS lang_pred
                 FROM scores
             )
             SELECT lang, lang_pred, count(*) AS n FROM pred GROUP BY 1, 2
         """,
-        "doc_fingerprint": """
-            WITH """ + _SHINGLE_CTE + """
+        "doc_fingerprint": f"""
+            WITH {_SHINGLE_CTE}
             SELECT doc_id, min(md5(s)) AS fingerprint FROM sh GROUP BY 1
         """,
-        "minhash_first_hashes": """
-            WITH """ + _SHINGLE_CTE + """,
-            h AS (
-                SELECT doc_id,
-                       ('0x' || substr(md5(s), 1, 11))::BIGINT AS a,
-                       ('0x' || substr(md5(s), 12, 11))::BIGINT AS b
-                FROM sh
-            )
+        "minhash_first_hashes": f"""
+            WITH {_SHINGLE_CTE},
+            {_MINHASH_AB_SQL}
             SELECT doc_id,
                    min(a % 17592186044399) AS h0,
                    min((a + b) % 17592186044399) AS h1
@@ -5518,22 +5971,14 @@ ORACLES.update(
             ASOF JOIN (SELECT user_id, ts FROM events WHERE event_type = 'signup') s
               ON p.user_id = s.user_id AND p.ts >= s.ts
         """,
-        "simhash_near_pairs": """
+        "simhash_near_pairs": f"""
             WITH tok AS (
                 SELECT doc_id,
                        unnest(regexp_extract_all(lower(text),
                            '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS t
                 FROM documents
             ),
-            h AS (
-                SELECT doc_id, ('0x' || substr(md5(t), 1, 11))::BIGINT AS h FROM tok
-            ),
-            bits AS (
-                SELECT doc_id, j.j,
-                       sum(CASE WHEN ((h >> j.j) & 1) = 1 THEN 1 ELSE -1 END) AS s
-                FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) j
-                GROUP BY 1, 2
-            ),
+            {_SIMHASH_BITS_SQL},
             fp AS (
                 SELECT doc_id,
                        CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
@@ -5544,14 +5989,9 @@ ORACLES.update(
             FROM fp a JOIN fp b ON a.doc_id < b.doc_id
             WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
         """,
-        "dedup_ngram_jaccard": """
-            WITH """ + _SHINGLE_CTE + f""",
-            sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-            shared AS (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
-            )
+        "dedup_ngram_jaccard": f"""
+            WITH {_SHINGLE_CTE},
+            {_shingle_overlap_sql()}
             SELECT id_a, id_b,
                    {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} AS jaccard
             FROM shared
@@ -5559,30 +5999,16 @@ ORACLES.update(
             JOIN sz sb ON sb.doc_id = id_b
             WHERE {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} >= 0.25
         """,
-        "dedup_clusters": """
-            WITH RECURSIVE """ + _SHINGLE_CTE + f""",
-            sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-            shared AS (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
-            ),
+        "dedup_clusters": f"""
+            WITH RECURSIVE {_SHINGLE_CTE},
+            {_shingle_overlap_sql()},
             p AS (
                 SELECT id_a, id_b FROM shared
                 JOIN sz sa ON sa.doc_id = id_a
                 JOIN sz sb ON sb.doc_id = id_b
                 WHERE {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} >= 0.25
             ),
-            edges AS (
-                SELECT id_a AS a, id_b AS b FROM p
-                UNION
-                SELECT id_b, id_a FROM p
-            ),
-            reach(node, r) AS (
-                SELECT a, a FROM edges
-                UNION
-                SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-            )
+            {_REACH_SQL}
             SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY 1
         """,
         "training_data_prep": f"""
@@ -5596,44 +6022,25 @@ ORACLES.update(
             k AS (SELECT u.* FROM u JOIN keep USING (doc_id)),
             stats AS (
                 SELECT doc_id, lang,
-                       len(regexp_split_to_array(trim(text), '\\s+')) AS n_words,
-                       {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
-                       {round6_ratio_sql(
-                           "len(regexp_extract_all(text, '[0-9]'))",
-                           "greatest(length(text), 1)",
-                       )} AS digit_ratio,
-                       {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
-                             AS stopword_ratio
+                       {_QUALITY_STATS_SQL}
                 FROM k
             ),
             scored AS (
                 SELECT doc_id, lang,
-                       CAST(round(CAST(0.4 * least(n_words / 100.0, 1.0)
-                           + 0.3 * least(stopword_ratio * 3, 1.0)
-                           + 0.2 * (1.0 - least(punct_ratio * 4, 1.0))
-                           + 0.1 * (1.0 - least(digit_ratio * 5, 1.0))
-                           AS DECIMAL(18,7)), 6) AS DOUBLE) AS quality
+                       {_QUALITY_SQL} AS quality
                 FROM stats
             )
             SELECT doc_id, quality FROM scored
             WHERE quality >= 0.5 AND lang = 'en'
         """,
-        "simhash_sample": """
+        "simhash_sample": f"""
             WITH tok AS (
                 SELECT doc_id,
                        unnest(regexp_extract_all(lower(text),
                            '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS t
                 FROM documents WHERE doc_id < 100
             ),
-            h AS (
-                SELECT doc_id, ('0x' || substr(md5(t), 1, 11))::BIGINT AS h FROM tok
-            ),
-            bits AS (
-                SELECT doc_id, j.j,
-                       sum(CASE WHEN ((h >> j.j) & 1) = 1 THEN 1 ELSE -1 END) AS s
-                FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) j
-                GROUP BY 1, 2
-            )
+            {_SIMHASH_BITS_SQL}
             SELECT doc_id,
                    CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
             FROM bits GROUP BY 1
@@ -5644,66 +6051,21 @@ ORACLES.update(
 # MinHash+LSH pair oracle: the banding construction is deterministic
 # (md5 double-hashing, fixed band digests), so even the "approximate"
 # dedup path has an exact SQL twin.
-ORACLES["minhash_lsh_pairs"] = """
-    WITH """ + _SHINGLE_CTE + f""",
-    h AS (
-        SELECT doc_id,
-               ('0x' || substr(md5(s), 1, 11))::BIGINT AS a,
-               ('0x' || substr(md5(s), 12, 11))::BIGINT AS b
-        FROM sh
-    ),
-    sig AS (
-        SELECT doc_id, i.i AS i, min((a + i.i * b) % 17592186044399) AS hv
-        FROM h CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i) i
-        GROUP BY 1, 2
-    ),
-    bands AS (
-        SELECT doc_id, i // 2 AS band,
-               md5(CAST(i // 2 AS VARCHAR) || ':' ||
-                   string_agg(CAST(hv AS VARCHAR), ',' ORDER BY i)) AS bucket
-        FROM sig GROUP BY doc_id, i // 2
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    est AS (
-        SELECT c.id_a, c.id_b,
-               {round6_ratio_sql(
-                   "sum(CASE WHEN sa.hv = sb.hv THEN 1 ELSE 0 END)",
-                   "32",
-               )} AS est_jaccard
-        FROM cand c
-        JOIN sig sa ON sa.doc_id = c.id_a
-        JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
-        GROUP BY 1, 2
-    )
+ORACLES["minhash_lsh_pairs"] = f"""
+    WITH {_SHINGLE_CTE},
+    {_minhash_sig_sql()},
+    {_LSH_CANDIDATES_SQL},
+    {_LSH_EST_SQL}
     SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.2
 """
 
-ORACLES["embed_near_pairs_lsh"] = """
-    WITH dims AS (SELECT unnest(generate_series(0, 63)) AS d),
-    hs AS (SELECT unnest(generate_series(0, 5)) AS h),
-    planes AS (
-      SELECT hs.h, dims.d,
-             (('0x' || substr(md5('plane' || hs.h || ':' || dims.d), 1, 8))::BIGINT
-              / 4294967296.0) * 2.0 - 1.0 AS c
-      FROM hs, dims
-    ),
+ORACLES["embed_near_pairs_lsh"] = f"""
+    WITH {_srp_planes_sql(6)},
     e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
       FROM embeddings WHERE vec_id < 1000
     ),
-    comp AS (SELECT vec_id, dims.d, v[dims.d + 1] AS x FROM e, dims),
-    dots AS (
-      SELECT comp.vec_id, p.h, sum(comp.x * p.c) AS dp
-      FROM comp JOIN planes p ON p.d = comp.d
-      GROUP BY 1, 2
-    ),
-    buckets AS (
-      SELECT vec_id, sum(CASE WHEN dp >= 0 THEN 1 << h ELSE 0 END) AS b
-      FROM dots GROUP BY 1
-    ),
+    {_SRP_BUCKETS_SQL},
     pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
       FROM buckets a JOIN buckets b ON a.b = b.b AND a.vec_id < b.vec_id
@@ -5714,27 +6076,11 @@ ORACLES["embed_near_pairs_lsh"] = """
     WHERE round(list_cosine_similarity(ea.v, eb.v), 6) >= 0.35
 """
 
-ORACLES["ann_lsh_topk"] = """
+ORACLES["ann_lsh_topk"] = f"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) v FROM embeddings WHERE vec_id = 0),
-    dims AS (SELECT unnest(generate_series(0, 63)) AS d),
-    hs AS (SELECT unnest(generate_series(0, 7)) AS h),
-    planes AS (
-      SELECT hs.h, dims.d,
-             (('0x' || substr(md5('plane' || hs.h || ':' || dims.d), 1, 8))::BIGINT
-              / 4294967296.0) * 2.0 - 1.0 AS c
-      FROM hs, dims
-    ),
+    {_srp_planes_sql(8)},
     e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    comp AS (SELECT vec_id, dims.d, v[dims.d + 1] AS x FROM e, dims),
-    dots AS (
-      SELECT comp.vec_id, p.h, sum(comp.x * p.c) AS dp
-      FROM comp JOIN planes p ON p.d = comp.d
-      GROUP BY 1, 2
-    ),
-    buckets AS (
-      SELECT vec_id, sum(CASE WHEN dp >= 0 THEN 1 << h ELSE 0 END) AS b
-      FROM dots GROUP BY 1
-    ),
+    {_SRP_BUCKETS_SQL},
     qb AS (SELECT b AS qbucket FROM buckets WHERE vec_id = 0),
     probe AS (
       SELECT e.vec_id, e.v FROM e JOIN buckets USING (vec_id), qb
@@ -5767,17 +6113,8 @@ ORACLES["dedup_clusters_lsh"] = _sql_surgery(
         ORACLES["minhash_lsh_pairs"], "WITH ", "WITH RECURSIVE ", 1
     ),
         "SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.2",
-        """, p AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.2),
-    edges AS (
-        SELECT id_a AS a, id_b AS b FROM p
-        UNION
-        SELECT id_b, id_a FROM p
-    ),
-    reach(node, r) AS (
-        SELECT a, a FROM edges
-        UNION
-        SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-    )
+        f""", p AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.2),
+    {_REACH_SQL}
     SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY 1""",
 )
 
@@ -5992,36 +6329,7 @@ ORACLES["tfidf_top_terms"] = """
     FROM ranked WHERE rank <= 3
 """
 
-ORACLES["bigram_lm_score"] = r"""
-    WITH words AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
-      FROM documents
-    ),
-    idx AS (
-      SELECT doc_id, w, unnest(generate_series(1, len(w) - 1)) AS i
-      FROM words WHERE len(w) >= 2
-    ),
-    grams AS (SELECT doc_id, w[i] || ' ' || w[i + 1] AS bg FROM idx),
-    per_doc AS (SELECT doc_id, bg, count(*) AS m FROM grams GROUP BY 1, 2),
-    corpus AS (SELECT bg, CAST(sum(m) AS BIGINT) AS cbg FROM per_doc GROUP BY 1),
-    ctx AS (
-      SELECT split_part(bg, ' ', 1) AS w1, CAST(sum(cbg) AS BIGINT) AS cw1
-      FROM corpus GROUP BY 1
-    ),
-    vocab AS (
-      SELECT count(DISTINCT t) AS v
-      FROM (SELECT unnest(w) AS t FROM words)
-    )
-    SELECT p.doc_id, CAST(sum(p.m) AS BIGINT) AS n_bigrams,
-           round(
-             CAST(sum(CAST(p.m * ln((c.cbg + 1) / (x.cw1 + vocab.v)) AS DECIMAL(28,12))) AS DOUBLE)
-             / sum(p.m), 6) AS lm_score
-    FROM per_doc p
-    JOIN corpus c USING (bg)
-    JOIN ctx x ON split_part(p.bg, ' ', 1) = x.w1, vocab
-    GROUP BY 1
-"""
+ORACLES["bigram_lm_score"] = "WITH" + _BIGRAM_COUNTS_SQL + _BIGRAM_SCORE_SQL
 
 ORACLES["normalize_dedup"] = r"""
     WITH docs AS (
@@ -6057,12 +6365,7 @@ ORACLES["containment_pairs"] = rf"""
       FROM norm
     ),
     sh AS (SELECT DISTINCT doc_id, substr(n0, i, 8) AS s FROM idx),
-    sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-    shared AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    {_shingle_overlap_sql()}
     SELECT id_a, id_b, {round6_ratio_sql("shared", "least(sa.sz, sb.sz)")} AS containment
     FROM shared
     JOIN sz sa ON sa.doc_id = id_a
@@ -6070,71 +6373,9 @@ ORACLES["containment_pairs"] = rf"""
     WHERE {round6_ratio_sql("shared", "least(sa.sz, sb.sz)")} >= 0.8
 """
 
-# K-means: every stage is exact — md5 seed draw, left-to-right float
-# folds (list_reduce mirrors F.aggregate), DECIMAL(38,12) mean/inertia
-# sums — so two engines reproduce identical clusters bit-for-bit. The
-# dim (64) is inlined; the Spark operator stays dimension-generic.
-_KM_DIST = """list_reduce(
-            list_prepend(CAST(0.0 AS DOUBLE),
-              list_transform(list_zip(b.v, c.cvec),
-                             s -> (s[1] - s[2]) * (s[1] - s[2]))),
-            (x, y) -> x + y)"""
-
 ORACLES["kmeans_clusters"] = f"""
-    WITH base AS (
-      SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    seeds AS (
-      SELECT id, v, md5(CAST(id AS VARCHAR)) AS h
-      FROM base ORDER BY h LIMIT 8
-    ),
-    c0 AS (
-      SELECT row_number() OVER (ORDER BY h) - 1 AS cid, v AS cvec FROM seeds
-    ),
-    d1 AS (
-      SELECT b.id, b.v, c.cid, {_KM_DIST} AS dist
-      FROM base b CROSS JOIN c0 c
-    ),
-    a1 AS (
-      SELECT id, v, cid, dist FROM (
-        SELECT *, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        FROM d1
-      ) WHERE rn = 1
-    ),
-    u1 AS (
-      SELECT cid, pos,
-             CAST(sum(CAST(v[pos] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS m
-      FROM a1 CROSS JOIN range(1, 65) t(pos)
-      GROUP BY 1, 2
-    ),
-    c1 AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM u1 GROUP BY 1),
-    d2 AS (
-      SELECT b.id, b.v, c.cid, {_KM_DIST} AS dist
-      FROM base b CROSS JOIN c1 c
-    ),
-    a2 AS (
-      SELECT id, v, cid, dist FROM (
-        SELECT *, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        FROM d2
-      ) WHERE rn = 1
-    ),
-    u2 AS (
-      SELECT cid, pos,
-             CAST(sum(CAST(v[pos] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS m
-      FROM a2 CROSS JOIN range(1, 65) t(pos)
-      GROUP BY 1, 2
-    ),
-    c2 AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM u2 GROUP BY 1),
-    d3 AS (
-      SELECT b.id, c.cid, {_KM_DIST} AS dist
-      FROM base b CROSS JOIN c2 c
-    ),
-    a3 AS (
-      SELECT id, cid, dist FROM (
-        SELECT *, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        FROM d3
-      ) WHERE rn = 1
-    )
+    WITH {_kmeans_sql("id, v, cid, dist")},
+    {_km_assign_sql(3, "b.id", "id, cid, dist")}
     SELECT cid AS cluster_id, count(*) AS n_vecs,
            CAST(round(sum(CAST(dist AS DECIMAL(38,12))), 6) AS DOUBLE) AS inertia
     FROM a3 GROUP BY 1
@@ -6144,27 +6385,7 @@ ORACLES["kmeans_clusters"] = f"""
 # --- round-4 event-profiling oracles ---
 
 ORACLES["session_transitions"] = f"""
-    WITH ordered AS (
-      SELECT user_id, event_id, event_type, epoch(ts) AS t,
-             CASE WHEN lag(epoch(ts)) OVER w IS NULL
-                    OR epoch(ts) - lag(epoch(ts)) OVER w > 1800.0
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, event_id, event_type, t,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY t, event_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_id
-      FROM ordered
-    ),
-    pairs AS (
-      SELECT event_type AS from_type,
-             lead(event_type) OVER (PARTITION BY user_id, session_id
-                                    ORDER BY t, event_id) AS to_type
-      FROM sess
-    ),
+    WITH {_session_steps_sql("pairs")},
     cnt AS (
       SELECT from_type, to_type, count(*) AS n_transitions
       FROM pairs WHERE to_type IS NOT NULL GROUP BY 1, 2
@@ -6402,27 +6623,7 @@ ORACLES["cluster_quality"] = """
 
 ORACLES["pagerank_transitions"] = f"""
     WITH
-    ordered AS (
-      SELECT user_id, event_id, event_type, epoch(ts) AS t,
-             CASE WHEN lag(epoch(ts)) OVER w IS NULL
-                    OR epoch(ts) - lag(epoch(ts)) OVER w > 1800.0
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, event_id, event_type, t,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY t, event_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_id
-      FROM ordered
-    ),
-    prs AS (
-      SELECT event_type AS from_type,
-             lead(event_type) OVER (PARTITION BY user_id, session_id
-                                    ORDER BY t, event_id) AS to_type
-      FROM sess
-    ),
+    {_session_steps_sql("prs")},
     edges AS (
       SELECT from_type AS s, to_type AS t2, count(*) AS w
       FROM prs WHERE to_type IS NOT NULL GROUP BY 1, 2
@@ -6582,40 +6783,11 @@ ORACLES["period_delta"] = f"""
     FROM d WHERE prev_n IS NOT NULL
 """
 
-ORACLES["minhash_calibration"] = """
-    WITH """ + _SHINGLE_CTE + f""",
-    h AS (
-        SELECT doc_id,
-               ('0x' || substr(md5(s), 1, 11))::BIGINT AS a,
-               ('0x' || substr(md5(s), 12, 11))::BIGINT AS b
-        FROM sh
-    ),
-    sig AS (
-        SELECT doc_id, i.i AS i, min((a + i.i * b) % 17592186044399) AS hv
-        FROM h CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i) i
-        GROUP BY 1, 2
-    ),
-    bands AS (
-        SELECT doc_id, i // 2 AS band,
-               md5(CAST(i // 2 AS VARCHAR) || ':' ||
-                   string_agg(CAST(hv AS VARCHAR), ',' ORDER BY i)) AS bucket
-        FROM sig GROUP BY doc_id, i // 2
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    est AS (
-        SELECT c.id_a, c.id_b,
-               {round6_ratio_sql(
-                   "sum(CASE WHEN sa.hv = sb.hv THEN 1 ELSE 0 END)",
-                   "32",
-               )} AS est_jaccard
-        FROM cand c
-        JOIN sig sa ON sa.doc_id = c.id_a
-        JOIN sig sb ON sb.doc_id = c.id_b AND sb.i = sa.i
-        GROUP BY 1, 2
-    ),
+ORACLES["minhash_calibration"] = f"""
+    WITH {_SHINGLE_CTE},
+    {_minhash_sig_sql()},
+    {_LSH_CANDIDATES_SQL},
+    {_LSH_EST_SQL},
     filt AS (SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.2),
     sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
     shared AS (
@@ -6909,25 +7081,9 @@ ORACLES["label_agreement"] = f"""
 """
 
 ORACLES["lsh_recall"] = f"""
-    WITH dims AS (SELECT unnest(generate_series(0, 63)) AS d),
-    hs AS (SELECT unnest(generate_series(0, 7)) AS h),
-    planes AS (
-      SELECT hs.h, dims.d,
-             (('0x' || substr(md5('plane' || hs.h || ':' || dims.d), 1, 8))::BIGINT
-              / 4294967296.0) * 2.0 - 1.0 AS c
-      FROM hs, dims
-    ),
+    WITH {_srp_planes_sql(8)},
     e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    comp AS (SELECT vec_id, dims.d, v[dims.d + 1] AS x FROM e, dims),
-    dots AS (
-      SELECT comp.vec_id, p.h, sum(comp.x * p.c) AS dp
-      FROM comp JOIN planes p ON p.d = comp.d
-      GROUP BY 1, 2
-    ),
-    buckets AS (
-      SELECT vec_id, sum(CASE WHEN dp >= 0 THEN 1 << h ELSE 0 END) AS b
-      FROM dots GROUP BY 1
-    ),
+    {_SRP_BUCKETS_SQL},
     qs AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id % 100 = 0),
     qb AS (
       SELECT q_id, qv, b AS qbucket
@@ -7054,7 +7210,7 @@ ORACLES["event_debounce"] = f"""
     FROM flagged GROUP BY 1
 """
 
-ORACLES["count_correlation"] = """
+ORACLES["count_correlation"] = f"""
     WITH counts AS (
       SELECT event_type AS name,
              CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS i_time,
@@ -7066,21 +7222,7 @@ ORACLES["count_correlation"] = """
       FROM counts a JOIN counts b
         ON a.i_time = b.i_time AND a.name < b.name
     ),
-    s AS (
-      SELECT key_a, key_b,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x * y) AS BIGINT) AS sxy,
-             CAST(sum(x * x) AS BIGINT) AS sxx,
-             CAST(sum(y * y) AS BIGINT) AS syy
-      FROM pairs GROUP BY 1, 2
-    )
-    SELECT key_a, key_b, n AS n_buckets,
-           round(CAST(n * sxy - sx * sy AS DOUBLE)
-                 / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                        * CAST(n * syy - sy * sy AS DOUBLE)), 6) AS corr
-    FROM s
-    WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
+    {_pearson_sql("key_a, key_b", "n_buckets", "corr")}
 """
 
 ORACLES["revenue_deciles"] = """
@@ -7150,25 +7292,8 @@ ORACLES["source_scorecard"] = rf"""
     ),
     cnts AS (SELECT d, count(*) AS c FROM dg GROUP BY 1),
     q AS (
-            WITH stats AS (
-                SELECT doc_id,
-                       len(regexp_split_to_array(trim(text), '\s+')) AS n_words,
-                       {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
-                       {round6_ratio_sql(
-                           "len(regexp_extract_all(text, '[0-9]'))",
-                           "greatest(length(text), 1)",
-                       )} AS digit_ratio,
-                       {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
-                             AS stopword_ratio
-                FROM documents
-            )
-            SELECT doc_id,
-                   CAST(round(CAST(0.4 * least(n_words / 100.0, 1.0)
-                       + 0.3 * least(stopword_ratio * 3, 1.0)
-                       + 0.2 * (1.0 - least(punct_ratio * 4, 1.0))
-                       + 0.1 * (1.0 - least(digit_ratio * 5, 1.0))
-                       AS DECIMAL(18,7)), 6) AS DOUBLE) AS quality
-            FROM stats
+            WITH stats AS (SELECT doc_id, {_QUALITY_STATS_SQL} FROM documents)
+            SELECT doc_id, {_QUALITY_SQL} AS quality FROM stats
         )
     SELECT dg.source, count(*) AS n_docs,
            {round6_ratio_dec_sql("sum(nc)::HUGEINT", "count(*)")} AS mean_chars,
@@ -7184,29 +7309,10 @@ ORACLES["source_scorecard"] = rf"""
 ORACLES["langid_metrics"] = rf"""
     WITH pred AS (
       SELECT doc_id, lang AS t, lang_pred FROM (
-            WITH scores AS (
-                SELECT doc_id, lang,
-                       len(regexp_extract_all(lower(text),
-                           '\b(der|die|und|das|ist|nicht|mit|ein)\b')) * 1.0
-                           / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_de,
-                       len(regexp_extract_all(lower(text),
-                           '\b(the|and|of|to|in|is|that|for|with)\b')) * 1.0
-                           / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_en,
-                       len(regexp_extract_all(lower(text),
-                           '\b(el|la|los|que|es|para|con|una)\b')) * 1.0
-                           / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_es,
-                       len(regexp_extract_all(lower(text),
-                           '\b(le|la|les|et|est|que|pour|dans)\b')) * 1.0
-                           / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_fr
-                FROM documents
-            ),
+            WITH {_LANG_SCORES_SQL},
             pred AS (
                 SELECT doc_id, lang,
-                       CASE WHEN greatest(s_de, s_en, s_es, s_fr) <= 0 THEN 'und'
-                            WHEN s_de = greatest(s_de, s_en, s_es, s_fr) THEN 'de'
-                            WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
-                            WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
-                            ELSE 'fr' END AS lang_pred
+                       {_LANG_PRED_SQL} AS lang_pred
                 FROM scores
             )
             SELECT doc_id, lang, lang_pred FROM pred
@@ -7341,27 +7447,8 @@ ORACLES["dedup_recall"] = rf"""
       FROM norm
     ),
     sh AS (SELECT DISTINCT doc_id, substr(n, i, 8) AS s FROM idx),
-    h AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(s), 1, 11))::BIGINT AS a,
-             ('0x' || substr(md5(s), 12, 11))::BIGINT AS b
-      FROM sh
-    ),
-    sig AS (
-      SELECT doc_id, i.i AS i, min((a + i.i * b) % 17592186044399) AS hv
-      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i) i
-      GROUP BY 1, 2
-    ),
-    bands AS (
-      SELECT doc_id, i // 2 AS band,
-             md5(CAST(i // 2 AS VARCHAR) || ':' ||
-                 string_agg(CAST(hv AS VARCHAR), ',' ORDER BY i)) AS bucket
-      FROM sig GROUP BY doc_id, i // 2
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
+    {_minhash_sig_sql()},
+    {_LSH_CANDIDATES_SQL},
     est AS (
       SELECT c.id_a, c.id_b,
              round(sum(CASE WHEN sa.hv = sb.hv THEN 1 ELSE 0 END) / 32.0, 6)
@@ -7573,7 +7660,7 @@ ORACLES["winnow_pairs"] = rf"""
     WHERE {round6_ratio_sql("n_shared", "sa.sz + sb.sz - n_shared")} >= 0.2
 """
 
-ORACLES["editdist_pairs"] = r"""
+ORACLES["editdist_pairs"] = rf"""
     WITH ascii_docs AS (
       -- byte-based DuckDB levenshtein == code-point Spark levenshtein
       -- only on ASCII text; scope the certification accordingly
@@ -7585,15 +7672,7 @@ ORACLES["editdist_pairs"] = r"""
                  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS t
       FROM ascii_docs
     ),
-    h AS (
-      SELECT doc_id, ('0x' || substr(md5(t), 1, 11))::BIGINT AS h FROM tok
-    ),
-    bits AS (
-      SELECT doc_id, j.j,
-             sum(CASE WHEN ((h >> j.j) & 1) = 1 THEN 1 ELSE -1 END) AS s
-      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) j
-      GROUP BY 1, 2
-    ),
+    {_SIMHASH_BITS_SQL},
     fp AS (
       SELECT doc_id,
              CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
@@ -7682,7 +7761,7 @@ ORACLES["bpe_pairs"] = """
     LIMIT 50
 """
 
-ORACLES["spearman_activity"] = """
+ORACLES["spearman_activity"] = f"""
     WITH counts AS (
       SELECT event_type AS name,
              CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS i_time,
@@ -7700,21 +7779,7 @@ ORACLES["spearman_activity"] = """
       FROM ranked a JOIN ranked b
         ON a.i_time = b.i_time AND a.name < b.name
     ),
-    s AS (
-      SELECT key_a, key_b,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x * y) AS BIGINT) AS sxy,
-             CAST(sum(x * x) AS BIGINT) AS sxx,
-             CAST(sum(y * y) AS BIGINT) AS syy
-      FROM pairs GROUP BY 1, 2
-    )
-    SELECT key_a, key_b, n AS n_buckets,
-           round(CAST(n * sxy - sx * sy AS DOUBLE)
-                 / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                        * CAST(n * syy - sy * sy AS DOUBLE)), 6) AS spearman
-    FROM s
-    WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
+    {_pearson_sql("key_a, key_b", "n_buckets", "spearman")}
 """
 
 ORACLES["quality_auc"] = f"""
@@ -7902,19 +7967,8 @@ ORACLES["theilsen_trend"] = f"""
     FROM sz JOIN med USING (name)
 """
 
-ORACLES["session_paths"] = """
-    WITH o AS (
-      SELECT user_id, event_id, ts, event_type, epoch(ts) AS secs,
-             lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY epoch(ts), event_id) AS prev
-      FROM events
-    ),
-    s AS (
-      SELECT user_id, event_id, secs, event_type,
-             sum(CASE WHEN prev IS NULL OR secs - prev > 1800.0 THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY user_id ORDER BY secs, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-      FROM o
-    ),
+ORACLES["session_paths"] = f"""
+    WITH {_secs_sessions_sql("event_id, ts, event_type")},
     p AS (
       SELECT event_type || ' > ' ||
                  lead(event_type, 1) OVER w || ' > ' ||
@@ -7978,26 +8032,9 @@ ORACLES["rfm_segments"] = f"""
 """
 
 ORACLES["ks_drift"] = f"""
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
-    counts AS (
-      SELECT event_type AS name, CAST(value AS DOUBLE) AS v,
-             sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 1 ELSE 0 END) AS c1,
-             sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 0 ELSE 1 END) AS c2
-      FROM events GROUP BY 1, 2
-    ),
-    stepped AS (
-      SELECT name,
-             sum(c1) OVER (PARTITION BY name ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum1,
-             sum(c2) OVER (PARTITION BY name ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum2,
-             sum(c1) OVER (PARTITION BY name) AS n1,
-             sum(c2) OVER (PARTITION BY name) AS n2
-      FROM counts
-    )
+    WITH {_MIDPOINT_SQL},
+    {_HALF_VALUE_COUNTS_SQL},
+    {_ECDF_STEPS_SQL}
     , agg AS (
       -- integer gap max first, ONE exact ratio after (mirror of
       -- _round6_ratio_dec in HUGEINT — see operators/profiling.ks_drift)
@@ -8108,7 +8145,7 @@ ORACLES["norm_outliers"] = """
     FROM mom LEFT JOIN outs ON mom.label = outs.label
 """
 
-ORACLES["autocorr_hourly"] = """
+ORACLES["autocorr_hourly"] = f"""
     WITH counts AS (
       SELECT event_type AS name,
              CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS i_time,
@@ -8120,36 +8157,11 @@ ORACLES["autocorr_hourly"] = """
       FROM counts a JOIN counts b
         ON a.name = b.name AND a.i_time + 3600 = b.i_time
     ),
-    s AS (
-      SELECT name,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x * y) AS BIGINT) AS sxy,
-             CAST(sum(x * x) AS BIGINT) AS sxx,
-             CAST(sum(y * y) AS BIGINT) AS syy
-      FROM pairs GROUP BY 1
-    )
-    SELECT name, n AS n_pairs,
-           round(CAST(n * sxy - sx * sy AS DOUBLE)
-                 / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                        * CAST(n * syy - sy * sy AS DOUBLE)), 6) AS autocorr
-    FROM s
-    WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
+    {_pearson_sql("name", "n_pairs", "autocorr")}
 """
 
-ORACLES["transition_entropy"] = """
-    WITH o AS (
-      SELECT user_id, event_id, event_type, epoch(ts) AS secs,
-             lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY epoch(ts), event_id) AS prev
-      FROM events
-    ),
-    s AS (
-      SELECT user_id, event_id, secs, event_type,
-             sum(CASE WHEN prev IS NULL OR secs - prev > 1800.0 THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY user_id ORDER BY secs, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-      FROM o
-    ),
+ORACLES["transition_entropy"] = f"""
+    WITH {_secs_sessions_sql("event_id, event_type")},
     steps AS (
       SELECT event_type AS from_type,
              lead(event_type) OVER (PARTITION BY user_id, sess
@@ -8253,30 +8265,11 @@ ORACLES["weighted_median_len"] = """
     FROM st WHERE 2 * cum >= tot GROUP BY 1
 """
 
-ORACLES["langid_confusion"] = r"""
-    WITH scores AS (
-        SELECT doc_id, lang,
-               len(regexp_extract_all(lower(text),
-                   '\b(der|die|und|das|ist|nicht|mit|ein)\b')) * 1.0
-                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_de,
-               len(regexp_extract_all(lower(text),
-                   '\b(the|and|of|to|in|is|that|for|with)\b')) * 1.0
-                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_en,
-               len(regexp_extract_all(lower(text),
-                   '\b(el|la|los|que|es|para|con|una)\b')) * 1.0
-                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_es,
-               len(regexp_extract_all(lower(text),
-                   '\b(le|la|les|et|est|que|pour|dans)\b')) * 1.0
-                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_fr
-        FROM documents
-    ),
+ORACLES["langid_confusion"] = f"""
+    WITH {_LANG_SCORES_SQL},
     pred AS (
         SELECT lang AS true_lang,
-               CASE WHEN greatest(s_de, s_en, s_es, s_fr) <= 0 THEN 'und'
-                    WHEN s_de = greatest(s_de, s_en, s_es, s_fr) THEN 'de'
-                    WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
-                    WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
-                    ELSE 'fr' END AS lang_pred
+               {_LANG_PRED_SQL} AS lang_pred
         FROM scores
     )
     SELECT true_lang, lang_pred, CAST(count(*) AS BIGINT) AS n
@@ -8340,11 +8333,8 @@ ORACLES["distinctive_terms"] = """
     ) WHERE rank <= 5
 """
 
-ORACLES["categorical_drift"] = """
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
+ORACLES["categorical_drift"] = f"""
+    WITH {_MIDPOINT_SQL},
     counts AS (
       SELECT event_type AS category,
              CAST(sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal)
@@ -8678,11 +8668,8 @@ ORACLES["lift_curve"] = f"""
     FROM bins
     WINDOW wc AS (ORDER BY bin DESC ROWS UNBOUNDED PRECEDING), wt AS ()
 """
-ORACLES["topk_churn"] = """
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
+ORACLES["topk_churn"] = f"""
+    WITH {_MIDPOINT_SQL},
     counts AS (
       SELECT user_id AS key,
              CAST(sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal)
@@ -9109,22 +9096,7 @@ ORACLES["assoc_rules"] = f"""
     JOIN ic cb ON pc.item_b = cb.item, tot
 """
 ORACLES["session_entry_exit"] = f"""
-    WITH ordered AS (
-      SELECT user_id, event_type, ts, event_id, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS prev_us
-      FROM events
-    ),
-    flagged AS (
-      SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                     THEN 1 ELSE 0 END AS ns
-      FROM ordered
-    ),
-    sess AS (
-      SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM flagged
-    ),
+    WITH {_us_sessions_sql("event_type, ts, event_id, epoch_us(ts) AS us", "ts")},
     numbered AS (
       SELECT *, row_number() OVER (PARTITION BY user_id, sid
                                    ORDER BY us, event_id) AS rf,
@@ -9363,22 +9335,7 @@ ORACLES["negative_pairs"] = """
     ANTI JOIN base b ON c."user" = b."user" AND c.neg_item = b.pos_item
 """
 ORACLES["mrr_sessions"] = f"""
-    WITH ordered AS (
-      SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS prev_us
-      FROM events
-    ),
-    flagged AS (
-      SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                     THEN 1 ELSE 0 END AS ns
-      FROM ordered
-    ),
-    sess AS (
-      SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY us, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM flagged
-    ),
+    WITH {_us_sessions_sql("event_type, epoch_us(ts) AS us, event_id", "us")},
     posd AS (
       SELECT *, row_number() OVER (PARTITION BY user_id, sid
                                    ORDER BY us, event_id) AS pos
@@ -9425,11 +9382,8 @@ ORACLES["crosscorr_types"] = """
     FROM j GROUP BY 1
 """
 
-ORACLES["delta_attribution"] = """
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
+ORACLES["delta_attribution"] = f"""
+    WITH {_MIDPOINT_SQL},
     keys AS (
       SELECT user_id AS key,
              sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal)
@@ -9488,10 +9442,7 @@ ORACLES["bernoulli_ht_audit"] = """
 """
 
 ORACLES["markov_accuracy"] = f"""
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
+    WITH {_MIDPOINT_SQL},
     pairs AS (
       SELECT event_type AS f,
              lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS t,
@@ -9725,60 +9676,8 @@ ORACLES["rrf_fusion"] = """
 """
 
 ORACLES["semdedup"] = f"""
-    WITH base AS (
-      SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    seeds AS (
-      SELECT id, v, md5(CAST(id AS VARCHAR)) AS h
-      FROM base ORDER BY h LIMIT 8
-    ),
-    c0 AS (
-      SELECT row_number() OVER (ORDER BY h) - 1 AS cid, v AS cvec FROM seeds
-    ),
-    d1 AS (
-      SELECT b.id, b.v, c.cid, {_KM_DIST} AS dist
-      FROM base b CROSS JOIN c0 c
-    ),
-    a1 AS (
-      SELECT id, v, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        FROM d1
-      ) WHERE rn = 1
-    ),
-    u1 AS (
-      SELECT cid, pos,
-             CAST(sum(CAST(v[pos] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS m
-      FROM a1 CROSS JOIN range(1, 65) t(pos)
-      GROUP BY 1, 2
-    ),
-    c1 AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM u1 GROUP BY 1),
-    d2 AS (
-      SELECT b.id, b.v, c.cid, {_KM_DIST} AS dist
-      FROM base b CROSS JOIN c1 c
-    ),
-    a2 AS (
-      SELECT id, v, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        FROM d2
-      ) WHERE rn = 1
-    ),
-    u2 AS (
-      SELECT cid, pos,
-             CAST(sum(CAST(v[pos] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS m
-      FROM a2 CROSS JOIN range(1, 65) t(pos)
-      GROUP BY 1, 2
-    ),
-    c2 AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM u2 GROUP BY 1),
-    d3 AS (
-      SELECT b.id, b.v, c.cid, {_KM_DIST} AS dist
-      FROM base b CROSS JOIN c2 c
-    ),
-    a3 AS (
-      SELECT id, v, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        FROM d3
-      ) WHERE rn = 1
-    ),
+    WITH {_kmeans_sql()},
+    {_km_assign_sql(3)},
     pairs AS (
       SELECT l.cid, r.id AS id,
              round(list_cosine_similarity(l.v, r.v), 6) AS cos
@@ -9940,21 +9839,8 @@ ORACLES["media_signature_buckets"] = r"""
     FROM sigs GROUP BY 1
 """
 
-ORACLES["coactivity_kcore"] = """
-    WITH occ AS MATERIALIZED (
-      SELECT DISTINCT user_id AS u,
-             event_type || ':' ||
-                 CAST(CAST(floor(epoch(ts) / 3600) AS BIGINT) AS VARCHAR) AS cell
-      FROM events
-    ),
-    small AS (SELECT cell FROM occ GROUP BY cell HAVING count(*) <= 200),
-    edges AS MATERIALIZED (
-      SELECT a.u AS a, b.u AS b
-      FROM (SELECT occ.* FROM occ JOIN small USING (cell)) a
-      JOIN (SELECT occ.* FROM occ JOIN small USING (cell)) b
-        ON a.cell = b.cell AND a.u < b.u
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    ),
+ORACLES["coactivity_kcore"] = f"""
+    WITH {_COACTIVITY_EDGES_SQL},
     d1 AS (SELECT node, count(*) AS d FROM (
              SELECT a AS node FROM edges UNION ALL SELECT b FROM edges) GROUP BY 1),
     k1 AS (SELECT node FROM d1 WHERE d >= 40),
@@ -10006,17 +9892,9 @@ ORACLES["weight_ess"] = """
 """
 
 
-ORACLES["cvm_drift"] = """
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
-    counts AS (
-      SELECT event_type AS name, CAST(value AS DOUBLE) AS v,
-             sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 1 ELSE 0 END) AS c1,
-             sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 0 ELSE 1 END) AS c2
-      FROM events GROUP BY 1, 2
-    ),
+ORACLES["cvm_drift"] = f"""
+    WITH {_MIDPOINT_SQL},
+    {_HALF_VALUE_COUNTS_SQL},
     stepped AS (
       SELECT name, c1 + c2 AS m,
              sum(c1) OVER (PARTITION BY name ORDER BY v
@@ -10115,27 +9993,10 @@ ORACLES["srm_audit"] = """
     FROM agg
 """
 
-ORACLES["drift_fdr"] = """
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
-    counts AS (
-      SELECT event_type AS name, CAST(value AS DOUBLE) AS v,
-             sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 1 ELSE 0 END) AS c1,
-             sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 0 ELSE 1 END) AS c2
-      FROM events GROUP BY 1, 2
-    ),
-    stepped AS (
-      SELECT name,
-             sum(c1) OVER (PARTITION BY name ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum1,
-             sum(c2) OVER (PARTITION BY name ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum2,
-             sum(c1) OVER (PARTITION BY name) AS n1,
-             sum(c2) OVER (PARTITION BY name) AS n2
-      FROM counts
-    ),
+ORACLES["drift_fdr"] = f"""
+    WITH {_MIDPOINT_SQL},
+    {_HALF_VALUE_COUNTS_SQL},
+    {_ECDF_STEPS_SQL},
     ksq AS (
       SELECT name,
              CAST(min(n1) AS BIGINT) AS n1,
@@ -10404,11 +10265,8 @@ ORACLES["powerlaw_alpha"] = f"""
     FROM base
 """
 
-ORACLES["scale_drift"] = """
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
+ORACLES["scale_drift"] = f"""
+    WITH {_MIDPOINT_SQL},
     base AS (
       SELECT event_type AS name,
              CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 1 ELSE 0 END AS h,
@@ -10534,29 +10392,10 @@ ORACLES["session_gap_sweep"] = f"""
 
 
 ORACLES["langid_kappa"] = rf"""
-    WITH scores AS (
-        SELECT doc_id, lang,
-               len(regexp_extract_all(lower(text),
-                   '\b(der|die|und|das|ist|nicht|mit|ein)\b')) * 1.0
-                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_de,
-               len(regexp_extract_all(lower(text),
-                   '\b(the|and|of|to|in|is|that|for|with)\b')) * 1.0
-                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_en,
-               len(regexp_extract_all(lower(text),
-                   '\b(el|la|los|que|es|para|con|una)\b')) * 1.0
-                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_es,
-               len(regexp_extract_all(lower(text),
-                   '\b(le|la|les|et|est|que|pour|dans)\b')) * 1.0
-                   / greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS s_fr
-        FROM documents
-    ),
+    WITH {_LANG_SCORES_SQL},
     pred AS (
         SELECT lang AS a,
-               CASE WHEN greatest(s_de, s_en, s_es, s_fr) <= 0 THEN 'und'
-                    WHEN s_de = greatest(s_de, s_en, s_es, s_fr) THEN 'de'
-                    WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
-                    WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
-                    ELSE 'fr' END AS b
+               {_LANG_PRED_SQL} AS b
         FROM scores
     ),
     tot AS (
@@ -10611,12 +10450,7 @@ ORACLES["dedup_threshold_sweep"] = f"""
         FROM norm
     ),
     sh AS (SELECT DISTINCT doc_id, substr(n, i, 8) AS s FROM idx),
-    sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-    shared AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    {_shingle_overlap_sql()},
     pairs AS (
         SELECT id_a, id_b,
                {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} AS jaccard
@@ -10646,11 +10480,8 @@ ORACLES["dedup_threshold_sweep"] = f"""
 """
 
 
-ORACLES["did_estimate"] = """
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
+ORACLES["did_estimate"] = f"""
+    WITH {_MIDPOINT_SQL},
     tset AS (SELECT user_id AS tu FROM events WHERE event_type = 'error'
              GROUP BY 1 HAVING count(*) >= 15),
     base AS (
@@ -10751,21 +10582,8 @@ ORACLES["absorption_prob"] = f"""
 """
 
 
-ORACLES["bfs_reach"] = """
-    WITH occ AS MATERIALIZED (
-      SELECT DISTINCT user_id AS u,
-             event_type || ':' ||
-                 CAST(CAST(floor(epoch(ts) / 3600) AS BIGINT) AS VARCHAR) AS cell
-      FROM events
-    ),
-    small AS (SELECT cell FROM occ GROUP BY cell HAVING count(*) <= 200),
-    edges AS MATERIALIZED (
-      SELECT a.u AS a, b.u AS b
-      FROM (SELECT occ.* FROM occ JOIN small USING (cell)) a
-      JOIN (SELECT occ.* FROM occ JOIN small USING (cell)) b
-        ON a.cell = b.cell AND a.u < b.u
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    ),
+ORACLES["bfs_reach"] = f"""
+    WITH {_COACTIVITY_EDGES_SQL},
     nodes AS (SELECT DISTINCT node FROM
               (SELECT a AS node FROM edges UNION SELECT b FROM edges)),
     seeds AS (SELECT node AS seed FROM nodes
@@ -10948,17 +10766,9 @@ ORACLES["theil_decomposition"] = """
 """
 
 
-ORACLES["wasserstein_drift"] = """
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
-    counts AS (
-      SELECT event_type AS name, CAST(value AS DOUBLE) AS v,
-             sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 1 ELSE 0 END) AS c1,
-             sum(CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 0 ELSE 1 END) AS c2
-      FROM events GROUP BY 1, 2
-    ),
+ORACLES["wasserstein_drift"] = f"""
+    WITH {_MIDPOINT_SQL},
+    {_HALF_VALUE_COUNTS_SQL},
     stepped AS (
       SELECT name, v,
              sum(c1) OVER (PARTITION BY name ORDER BY v
@@ -11191,10 +11001,7 @@ ORACLES["path_conformance"] = f"""
 """
 
 ORACLES["schema_drift"] = f"""
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
+    WITH {_MIDPOINT_SQL},
     base AS (
       SELECT CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 1 ELSE 2 END AS h,
              props AS j
@@ -11317,11 +11124,8 @@ ORACLES["logrank_test"] = """
 """
 
 
-ORACLES["qq_shift_fit"] = """
-    WITH scal AS (
-      SELECT CAST(floor((min(epoch_us(ts)) + max(epoch_us(ts))) / 2) AS BIGINT) AS mid
-      FROM events
-    ),
+ORACLES["qq_shift_fit"] = f"""
+    WITH {_MIDPOINT_SQL},
     base AS (
       SELECT event_type AS name,
              CASE WHEN epoch_us(ts) <= (SELECT mid FROM scal) THEN 1 ELSE 2 END AS h,
@@ -11726,35 +11530,8 @@ ORACLES["crossdoc_spans"] = rf"""
 """
 
 ORACLES["ppl_bucket_mix"] = rf"""
-    WITH words AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
-      FROM documents
-    ),
-    idx AS (
-      SELECT doc_id, w, unnest(generate_series(1, len(w) - 1)) AS i
-      FROM words WHERE len(w) >= 2
-    ),
-    grams AS (SELECT doc_id, w[i] || ' ' || w[i + 1] AS bg FROM idx),
-    per_doc AS (SELECT doc_id, bg, count(*) AS m FROM grams GROUP BY 1, 2),
-    corpus AS (SELECT bg, CAST(sum(m) AS BIGINT) AS cbg FROM per_doc GROUP BY 1),
-    ctx AS (
-      SELECT split_part(bg, ' ', 1) AS w1, CAST(sum(cbg) AS BIGINT) AS cw1
-      FROM corpus GROUP BY 1
-    ),
-    vocab AS (
-      SELECT count(DISTINCT t) AS v FROM (SELECT unnest(w) AS t FROM words)
-    ),
-    score AS (
-      SELECT p.doc_id, CAST(sum(p.m) AS BIGINT) AS n_bigrams,
-             round(
-               CAST(sum(CAST(p.m * ln((c.cbg + 1) / (x.cw1 + vocab.v)) AS DECIMAL(28,12))) AS DOUBLE)
-               / sum(p.m), 6) AS lm_score
-      FROM per_doc p
-      JOIN corpus c USING (bg)
-      JOIN ctx x ON split_part(p.bg, ' ', 1) = x.w1, vocab
-      GROUP BY 1
-    ),
+    WITH {_BIGRAM_COUNTS_SQL},
+    score AS ({_BIGRAM_SCORE_SQL}),
     lab AS (
       SELECT s.doc_id, d.lang AS grp, n_bigrams, lm_score
       FROM score s JOIN documents d ON s.doc_id = d.doc_id
@@ -11800,29 +11577,9 @@ ORACLES["tokenizer_drift"] = f"""
 """
 
 ORACLES["eval_contamination"] = rf"""
-    WITH bdocs AS (
-      SELECT 'b' || CAST(doc_id % 3 AS VARCHAR) AS benchmark, text
-      FROM documents WHERE doc_id < 9
-    ),
-    bw AS (
-      SELECT benchmark,
-             string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM bdocs
-    ),
-    bg AS (
-      SELECT DISTINCT benchmark, array_to_string(ws[i:i+2], ' ') AS g
-      FROM bw, UNNEST(range(1, greatest(len(ws) - 2, 1) + 1)) AS t(i)
-    ),
+    WITH {_BENCH_TRIGRAMS_SQL},
     bsz AS (SELECT benchmark, CAST(count(*) AS BIGINT) AS nbg FROM bg GROUP BY 1),
-    cw AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents
-    ),
-    cg AS (
-      SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS g
-      FROM cw, UNNEST(range(1, greatest(len(ws) - 2, 1) + 1)) AS t(i)
-    ),
+    {_CORPUS_TRIGRAMS_SQL},
     nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
     hits AS (
       SELECT benchmark, CAST(count(DISTINCT doc_id) AS BIGINT) AS dh,
@@ -11836,52 +11593,18 @@ ORACLES["eval_contamination"] = rf"""
     FROM bsz b LEFT JOIN hits USING (benchmark), nd
 """
 
-ORACLES["cluster_keep_best"] = """
-    WITH RECURSIVE """ + _SHINGLE_CTE + f""",
-    sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-    shared AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+ORACLES["cluster_keep_best"] = f"""
+    WITH RECURSIVE {_SHINGLE_CTE},
+    {_shingle_overlap_sql()},
     p AS (
         SELECT id_a, id_b FROM shared
         JOIN sz sa ON sa.doc_id = id_a
         JOIN sz sb ON sb.doc_id = id_b
         WHERE {round6_ratio_sql("shared", "sa.sz + sb.sz - shared")} >= 0.25
     ),
-    edges AS (
-        SELECT id_a AS a, id_b AS b FROM p
-        UNION
-        SELECT id_b, id_a FROM p
-    ),
-    reach(node, r) AS (
-        SELECT a, a FROM edges
-        UNION
-        SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.node
-    ),
+    {_REACH_SQL},
     cl AS (SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY 1),
-    stats AS (
-        SELECT doc_id,
-               len(regexp_split_to_array(trim(text), '\\s+')) AS n_words,
-               {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
-               {round6_ratio_sql(
-                   "len(regexp_extract_all(text, '[0-9]'))",
-                   "greatest(length(text), 1)",
-               )} AS digit_ratio,
-               {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
-                     AS stopword_ratio
-        FROM documents
-    ),
-    q AS (
-        SELECT doc_id,
-               CAST(round(CAST(0.4 * least(n_words / 100.0, 1.0)
-                   + 0.3 * least(stopword_ratio * 3, 1.0)
-                   + 0.2 * (1.0 - least(punct_ratio * 4, 1.0))
-                   + 0.1 * (1.0 - least(digit_ratio * 5, 1.0))
-                   AS DECIMAL(18,7)), 6) AS DOUBLE) AS quality
-        FROM stats
-    ),
+    {_quality_cte_sql("documents")},
     rk AS (
         SELECT cl.cluster_id, cl.doc_id, q.quality,
                row_number() OVER (PARTITION BY cl.cluster_id
@@ -11990,34 +11713,6 @@ ORACLES["cluster_keep_best_lsh"] = _sql_surgery(
 
 # --- round-10 oracles ---
 
-# shared per-doc quality mirror (identical to the cluster_keep_best
-# oracle's stats/q CTEs), parameterized on the source relation so the
-# injected-union queries can reuse it verbatim
-def _quality_cte_sql(rel: str) -> str:
-    return f"""
-    stats AS (
-        SELECT doc_id,
-               len(regexp_split_to_array(trim(text), '\\s+')) AS n_words,
-               {round6_ratio_sql(_PUNCT_SQL, "greatest(length(text), 1)")} AS punct_ratio,
-               {round6_ratio_sql(
-                   "len(regexp_extract_all(text, '[0-9]'))",
-                   "greatest(length(text), 1)",
-               )} AS digit_ratio,
-               {round6_ratio_sql(_STOP_HITS_SQL, _WORDS_SQL)}
-                     AS stopword_ratio
-        FROM """ + rel + """
-    ),
-    q AS (
-        SELECT doc_id,
-               CAST(round(CAST(0.4 * least(n_words / 100.0, 1.0)
-                   + 0.3 * least(stopword_ratio * 3, 1.0)
-                   + 0.2 * (1.0 - least(punct_ratio * 4, 1.0))
-                   + 0.1 * (1.0 - least(digit_ratio * 5, 1.0))
-                   AS DECIMAL(18,7)), 6) AS DOUBLE) AS quality
-        FROM stats
-    )"""
-
-
 ORACLES["dup_line_stats"] = f"""
     WITH deco AS (
       SELECT doc_id,
@@ -12054,8 +11749,8 @@ ORACLES["dup_line_stats"] = f"""
     FROM deco d LEFT JOIN ag ON d.doc_id = ag.doc_id
 """
 
-ORACLES["quality_threshold_sweep"] = ("""
-    WITH""" + _quality_cte_sql("documents") + f""",
+ORACLES["quality_threshold_sweep"] = (f"""
+    WITH{_quality_cte_sql("documents")},
     tok AS (
       SELECT doc_id,
              len(regexp_extract_all(text,
@@ -12173,12 +11868,12 @@ ORACLES["boundary_overlap"] = """
     WHERE id_a <> id_b
 """
 
-ORACLES["pipeline_roi"] = ("""
+ORACLES["pipeline_roi"] = (f"""
     WITH u AS (
       SELECT doc_id, text, source FROM documents
       UNION ALL
       SELECT doc_id + 6000000, text, source FROM documents WHERE doc_id % 6 = 0
-    ),""" + _quality_cte_sql("u") + f""",
+    ),{_quality_cte_sql("u")},
     tok AS (
       SELECT doc_id, source, md5(text) AS d,
              len(regexp_extract_all(text,
@@ -12242,16 +11937,16 @@ _BL_VALUES = ",\n           ".join(
     + _re_bl.escape(p).replace("'", "''") + "')"
     for p in _BL
 )
-ORACLES["blocklist_audit"] = ("""
+ORACLES["blocklist_audit"] = (f"""
     WITH deco AS (
       SELECT doc_id, source,
              CASE WHEN doc_id % 13 = 0
-                  THEN text || ' All Rights Reserved. See our Privacy Policy, click here {'
+                  THEN text || ' All Rights Reserved. See our Privacy Policy, click here {{'
                   ELSE text END AS t
       FROM documents
     ),
     ph(phrase, pat) AS (
-      VALUES """ + _BL_VALUES + f"""
+      VALUES {_BL_VALUES}
     ),
     per AS (
       SELECT source, phrase,
@@ -12269,12 +11964,10 @@ ORACLES["blocklist_audit"] = ("""
     FROM per GROUP BY 1, 2
 """)
 
-# k-means surgery twins: reuse the proven assignment CTE chain
-# (seeds -> 2 Lloyd updates -> final assignment a3) and swap only the
-# reporting tail, so the three kmeans-family oracles cannot drift.
-_KM_ASSIGN_PREFIX = ORACLES["kmeans_clusters"].split("SELECT cid AS cluster_id", 1)[0]
-
-ORACLES["cluster_balanced_sample"] = _KM_ASSIGN_PREFIX + """, rk AS (
+ORACLES["cluster_balanced_sample"] = f"""
+    WITH {_kmeans_sql("id, v, cid, dist")},
+    {_km_assign_sql(3, "b.id", "id, cid, dist")},
+    rk AS (
       SELECT cid, id, md5(CAST(id AS VARCHAR)) AS h FROM a3
     ),
     pick AS (
@@ -12290,7 +11983,10 @@ ORACLES["cluster_balanced_sample"] = _KM_ASSIGN_PREFIX + """, rk AS (
     FROM pick WHERE rn <= 10
 """
 
-ORACLES["ivf_list_balance"] = _KM_ASSIGN_PREFIX + f""", sizes AS (
+ORACLES["ivf_list_balance"] = f"""
+    WITH {_kmeans_sql("id, v, cid, dist")},
+    {_km_assign_sql(3, "b.id", "id, cid, dist")},
+    sizes AS (
       SELECT cid, count(*) AS n_vecs FROM a3 GROUP BY 1
     ),
     tot AS (SELECT sum(n_vecs) AS n FROM sizes)
@@ -12304,14 +12000,14 @@ ORACLES["ivf_list_balance"] = _KM_ASSIGN_PREFIX + f""", sizes AS (
 
 # --- late round-10 oracles ---
 
-ORACLES["dup_quality_bias"] = ("""
+ORACLES["dup_quality_bias"] = (f"""
     WITH u AS (
       SELECT doc_id, text FROM documents
       UNION ALL
       SELECT doc_id + 5000000, text FROM documents WHERE doc_id % 5 = 0
       UNION ALL
       SELECT doc_id + 15000000, text FROM documents WHERE doc_id % 15 = 0
-    ),""" + _quality_cte_sql("u") + f""",
+    ),{_quality_cte_sql("u")},
     dg AS (SELECT doc_id, md5(text) AS d FROM u),
     sz AS (SELECT d, count(*) AS s, min(doc_id) AS keep FROM dg GROUP BY 1),
     j AS (
@@ -12323,14 +12019,7 @@ ORACLES["dup_quality_bias"] = ("""
     SELECT CAST(b AS BIGINT) AS group_size_bucket,
            CAST(count(DISTINCT d) AS BIGINT) AS n_groups,
            CAST(count(*) AS BIGINT) AS n_docs,
-           {round6_ratio_dec_sql(
-               "sum(qu)::HUGEINT",
-               "count(*)::HUGEINT * 1000000",
-           )} AS mean_quality_all,
-           {round6_ratio_dec_sql(
-               "sum(CASE WHEN is_keep THEN qu ELSE 0 END)::HUGEINT",
-               "greatest(sum(CASE WHEN is_keep THEN 1 ELSE 0 END), 1)::HUGEINT * 1000000",
-           )} AS mean_quality_kept
+           {_KEPT_QUALITY_SQL}
     FROM j GROUP BY 1
 """)
 
@@ -12498,28 +12187,12 @@ ORACLES["fim_split_audit"] = f"""
 
 
 ORACLES["rp_distortion"] = f"""
-    WITH dims AS (SELECT unnest(generate_series(0, 63)) AS d),
-    hs AS (SELECT unnest(generate_series(0, 15)) AS h),
-    planes AS (
-      SELECT hs.h, dims.d,
-             (('0x' || substr(md5('plane' || hs.h || ':' || dims.d), 1, 8))::BIGINT
-              / 4294967296.0) * 2.0 - 1.0 AS c
-      FROM hs, dims
-    ),
+    WITH {_srp_planes_sql(16)},
     e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
       FROM embeddings WHERE vec_id < 192
     ),
-    comp AS (SELECT vec_id, dims.d, v[dims.d + 1] AS x FROM e, dims),
-    dots AS (
-      SELECT comp.vec_id, p.h, sum(comp.x * p.c) AS dp
-      FROM comp JOIN planes p ON p.d = comp.d
-      GROUP BY 1, 2
-    ),
-    buckets AS (
-      SELECT vec_id, sum(CASE WHEN dp >= 0 THEN 1 << h ELSE 0 END) AS b
-      FROM dots GROUP BY 1
-    ),
+    {_SRP_BUCKETS_SQL},
     pairs AS (
       SELECT bit_count(xor(CAST(ba.b AS BIGINT), CAST(bb.b AS BIGINT)))::BIGINT AS hamming,
              CASE WHEN list_dot_product(ea.v, ea.v) * list_dot_product(eb.v, eb.v) > 0
@@ -12789,14 +12462,7 @@ ORACLES["cluster_quality_bias"] = _sql_surgery(
     SELECT CAST(b AS BIGINT) AS cluster_size_bucket,
            CAST(count(DISTINCT cluster_id) AS BIGINT) AS n_clusters,
            CAST(count(*) AS BIGINT) AS n_docs,
-           {round6_ratio_dec_sql(
-               "sum(qu)::HUGEINT",
-               "count(*)::HUGEINT * 1000000",
-           )} AS mean_quality_all,
-           {round6_ratio_dec_sql(
-               "sum(CASE WHEN is_keep THEN qu ELSE 0 END)::HUGEINT",
-               "greatest(sum(CASE WHEN is_keep THEN 1 ELSE 0 END), 1)::HUGEINT * 1000000",
-           )} AS mean_quality_kept
+           {_KEPT_QUALITY_SQL}
     FROM jj GROUP BY 1""",
 )
 
@@ -13494,20 +13160,7 @@ ORACLES["t_closeness"] = f"""
 """
 
 ORACLES["degree_assortativity"] = f"""
-    WITH occ AS MATERIALIZED (
-      SELECT DISTINCT user_id AS u,
-             event_type || ':' ||
-                 CAST(CAST(floor(epoch(ts) / 3600) AS BIGINT) AS VARCHAR) AS cell
-      FROM events
-    ),
-    small AS (SELECT cell FROM occ GROUP BY cell HAVING count(*) <= 200),
-    edges AS MATERIALIZED (
-      SELECT a.u AS a, b.u AS b
-      FROM (SELECT occ.* FROM occ JOIN small USING (cell)) a
-      JOIN (SELECT occ.* FROM occ JOIN small USING (cell)) b
-        ON a.cell = b.cell AND a.u < b.u
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    ),
+    WITH {_COACTIVITY_EDGES_SQL},
     deg AS MATERIALIZED (
       SELECT node, count(*) AS d FROM (
         SELECT a AS node FROM edges UNION ALL SELECT b FROM edges
@@ -13582,13 +13235,7 @@ ORACLES["chunk_overlap"] = """
 ORACLES["link_density"] = f"""
     WITH deco AS (
       SELECT source,
-             text
-             || CASE WHEN doc_id % 4 = 0
-                  THEN ' see https://example' || (doc_id % 50)::VARCHAR || '.com/page'
-                  ELSE '' END
-             || CASE WHEN doc_id % 6 = 0
-                  THEN ' and http://mirror' || (doc_id % 20)::VARCHAR || '.org/x'
-                  ELSE '' END AS t
+             {_LINK_DECO_SQL} AS t
       FROM documents
     ),
     per AS MATERIALIZED (
@@ -13716,11 +13363,7 @@ ORACLES["language_mix"] = f"""
     ),
     pred AS (
       SELECT grp, id,
-             CASE WHEN greatest(s_de, s_en, s_es, s_fr) <= 0 THEN 'und'
-                  WHEN s_de = greatest(s_de, s_en, s_es, s_fr) THEN 'de'
-                  WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
-                  WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
-                  ELSE 'fr' END AS pr
+             {_LANG_PRED_SQL} AS pr
       FROM sc
     ),
     per_doc AS (
@@ -13850,13 +13493,7 @@ ORACLES["char_rep_rate"] = f"""
 ORACLES["url_dedup"] = f"""
     WITH deco AS (
       SELECT doc_id, source,
-             text
-             || CASE WHEN doc_id % 4 = 0
-                  THEN ' see https://example' || (doc_id % 50)::VARCHAR || '.com/page'
-                  ELSE '' END
-             || CASE WHEN doc_id % 6 = 0
-                  THEN ' and http://mirror' || (doc_id % 20)::VARCHAR || '.org/x'
-                  ELSE '' END AS t
+             {_LINK_DECO_SQL} AS t
       FROM documents
     ),
     ext AS (
@@ -13890,11 +13527,11 @@ ORACLES["url_dedup"] = f"""
     FROM ad LEFT JOIN per ON per.grp = ad.grp
 """
 
-ORACLES["doc_disposition"] = """
+ORACLES["doc_disposition"] = f"""
     WITH deco AS MATERIALIZED (
       SELECT doc_id, source,
              CASE WHEN doc_id % 13 = 0
-                  THEN text || ' All Rights Reserved. See our Privacy Policy, click here {'
+                  THEN text || ' All Rights Reserved. See our Privacy Policy, click here {{'
                   ELSE text END AS text
       FROM documents
     ),
@@ -13904,7 +13541,7 @@ ORACLES["doc_disposition"] = """
               OR text LIKE '%Privacy Policy%') AS blk
       FROM deco
     ),
-    keep AS (SELECT dg, min(doc_id) AS k FROM d0 GROUP BY 1),""" + _quality_cte_sql("deco") + f""",
+    keep AS (SELECT dg, min(doc_id) AS k FROM d0 GROUP BY 1),{_quality_cte_sql("deco")},
     j AS (
       SELECT d0.source AS grp,
              CASE WHEN d0.doc_id <> keep.k THEN 'dup'
@@ -13920,15 +13557,8 @@ ORACLES["doc_disposition"] = """
     GROUP BY 1, 2, n
 """
 
-ORACLES["knn_stability"] = """
-    WITH dims AS (SELECT unnest(generate_series(0, 63)) AS d),
-    hs AS (SELECT unnest(generate_series(0, 15)) AS h),
-    planes_t AS (
-      SELECT hs.h, dims.d,
-             (('0x' || substr(md5('plane' || hs.h || ':' || dims.d), 1, 8))::BIGINT
-              / 4294967296.0) * 2.0 - 1.0 AS c
-      FROM hs, dims
-    ),
+ORACLES["knn_stability"] = f"""
+    WITH {_srp_planes_sql(16, "planes_t")},
     pl AS MATERIALIZED (
       SELECT h, list(c ORDER BY d) AS plv FROM planes_t GROUP BY 1
     ),
@@ -14077,8 +13707,8 @@ ORACLES["near_dup_family_agreement"] = _sql_surgery(
     FROM agg""",
 )
 
-ORACLES["source_containment"] = """
-    WITH """ + _SHINGLE_CTE + f""",
+ORACLES["source_containment"] = f"""
+    WITH {_SHINGLE_CTE},
     sg AS MATERIALIZED (
       SELECT DISTINCT d.source AS grp, sh.s
       FROM sh JOIN documents d USING (doc_id)
@@ -14131,40 +13761,9 @@ ORACLES["dup_run_lengths"] = """
 """
 
 ORACLES["minhash_scurve"] = f"""
-    WITH ids AS MATERIALIZED (
-        SELECT doc_id FROM documents ORDER BY doc_id LIMIT 64
-    ),
-    norm AS (
-        SELECT d.doc_id, regexp_replace(lower(d.text), '\\s+', ' ', 'g') AS n
-        FROM documents d JOIN ids USING (doc_id)
-    ),
-    idx AS (
-        SELECT doc_id, n,
-               unnest(generate_series(1, greatest(length(n) - 7, 1))) AS i
-        FROM norm
-    ),
-    sh AS MATERIALIZED (SELECT DISTINCT doc_id, substr(n, i, 8) AS s FROM idx),
-    h AS (
-        SELECT doc_id,
-               ('0x' || substr(md5(s), 1, 11))::BIGINT AS a,
-               ('0x' || substr(md5(s), 12, 11))::BIGINT AS b
-        FROM sh
-    ),
-    sig AS MATERIALIZED (
-        SELECT doc_id, i.i AS i, min((a + i.i * b) % 17592186044399) AS hv
-        FROM h CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i) i
-        GROUP BY 1, 2
-    ),
-    prs AS MATERIALIZED (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM ids a JOIN ids b ON a.doc_id < b.doc_id
-    ),
-    eqs AS MATERIALIZED (
-        SELECT p.id_a, p.id_b, sa.i AS i, (sa.hv = sb.hv) AS eq
-        FROM prs p
-        JOIN sig sa ON sa.doc_id = p.id_a
-        JOIN sig sb ON sb.doc_id = p.id_b AND sb.i = sa.i
-    ),
+    WITH {_CAPPED_SHINGLES_SQL},
+    {_minhash_sig_sql(32, materialized=True)},
+    {_AUDIT_PAIR_EQ_SQL},
     cfg AS (SELECT * FROM (VALUES (32, 1), (16, 2), (8, 4), (4, 8)) AS t(b, r)),
     bnd AS (
         SELECT c.b, c.r, e.id_a, e.id_b, e.i // c.r AS band,
@@ -14177,12 +13776,7 @@ ORACLES["minhash_scurve"] = f"""
                max(CASE WHEN hit THEN 1 ELSE 0 END) AS is_cand
         FROM bnd GROUP BY 1, 2, 3, 4
     ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-    shared AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shn
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    {_SHARED_SHINGLES_SQL},
     jb AS MATERIALIZED (
         -- integer division: the bin boundary never touches the float
         -- grid (mirrors the Spark side's `div`)
@@ -14300,28 +13894,8 @@ ORACLES["oov_rate"] = f"""
 """
 
 ORACLES["contamination_matrix"] = rf"""
-    WITH bdocs AS (
-        SELECT 'b' || CAST(doc_id % 3 AS VARCHAR) AS benchmark, text
-        FROM documents WHERE doc_id < 9
-    ),
-    bw AS (
-        SELECT benchmark,
-               string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
-        FROM bdocs
-    ),
-    bg AS (
-        SELECT DISTINCT benchmark, array_to_string(ws[i:i+2], ' ') AS g
-        FROM bw, UNNEST(range(1, greatest(len(ws) - 2, 1) + 1)) AS t(i)
-    ),
-    cw AS (
-        SELECT doc_id,
-               string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
-        FROM documents
-    ),
-    cg AS (
-        SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS g
-        FROM cw, UNNEST(range(1, greatest(len(ws) - 2, 1) + 1)) AS t(i)
-    ),
+    WITH {_BENCH_TRIGRAMS_SQL},
+    {_CORPUS_TRIGRAMS_SQL},
     hits AS MATERIALIZED (
         SELECT DISTINCT benchmark, doc_id FROM cg JOIN bg USING (g)
     ),
@@ -14425,52 +13999,16 @@ ORACLES["quant_bits_sweep"] = (
 )
 
 ORACLES["sig_size_sweep"] = f"""
-    WITH ids AS MATERIALIZED (
-        SELECT doc_id FROM documents ORDER BY doc_id LIMIT 64
-    ),
-    norm AS (
-        SELECT d.doc_id, regexp_replace(lower(d.text), '\\s+', ' ', 'g') AS n
-        FROM documents d JOIN ids USING (doc_id)
-    ),
-    idx AS (
-        SELECT doc_id, n,
-               unnest(generate_series(1, greatest(length(n) - 7, 1))) AS i
-        FROM norm
-    ),
-    sh AS MATERIALIZED (SELECT DISTINCT doc_id, substr(n, i, 8) AS s FROM idx),
-    h AS (
-        SELECT doc_id,
-               ('0x' || substr(md5(s), 1, 11))::BIGINT AS a,
-               ('0x' || substr(md5(s), 12, 11))::BIGINT AS b
-        FROM sh
-    ),
-    sig AS MATERIALIZED (
-        SELECT doc_id, i.i AS i, min((a + i.i * b) % 17592186044399) AS hv
-        FROM h CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS i) i
-        GROUP BY 1, 2
-    ),
-    prs AS MATERIALIZED (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM ids a JOIN ids b ON a.doc_id < b.doc_id
-    ),
-    eqs AS MATERIALIZED (
-        SELECT p.id_a, p.id_b, sa.i AS i, (sa.hv = sb.hv) AS eq
-        FROM prs p
-        JOIN sig sa ON sa.doc_id = p.id_a
-        JOIN sig sb ON sb.doc_id = p.id_b AND sb.i = sa.i
-    ),
+    WITH {_CAPPED_SHINGLES_SQL},
+    {_minhash_sig_sql(64, materialized=True)},
+    {_AUDIT_PAIR_EQ_SQL},
     mm AS (
         SELECT c.h, e.id_a, e.id_b,
                sum(CASE WHEN e.eq AND e.i < c.h THEN 1 ELSE 0 END) AS m
         FROM eqs e CROSS JOIN (VALUES (16), (32), (64)) AS c(h)
         GROUP BY 1, 2, 3
     ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-    shared AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shn
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    {_SHARED_SHINGLES_SQL},
     base AS MATERIALIZED (
         SELECT p.id_a, p.id_b,
                coalesce(shn, 0) AS shn,
@@ -14501,15 +14039,7 @@ ORACLES["sig_size_sweep"] = f"""
     SELECT CAST(h AS BIGINT) AS sig_size,
            CAST(j_bin AS BIGINT) AS j_bin,
            CAST(count(*) AS BIGINT) AS n_pairs,
-           {round6_ratio_dec_sql(
-               "sum(abs(q))::HUGEINT",
-               "count(*)::HUGEINT * 1000000000000",
-           )} AS mae,
-           {round6_ratio_dec_signed_sql(
-               "sum(q)::HUGEINT",
-               "count(*)::HUGEINT * 1000000000000",
-           )} AS bias,
-           {round6_ratio_dec_sql("max(abs(q))::HUGEINT", "1000000000000")} AS max_abs_err
+           {_ERR_STATS_SQL}
     FROM qs GROUP BY 1, 2
 """
 
@@ -14577,13 +14107,7 @@ ORACLES["instruction_detect"] = f"""
 ORACLES["domain_mix"] = f"""
     WITH deco AS (
       SELECT source,
-             text
-             || CASE WHEN doc_id % 4 = 0
-                  THEN ' see https://example' || (doc_id % 50)::VARCHAR || '.com/page'
-                  ELSE '' END
-             || CASE WHEN doc_id % 6 = 0
-                  THEN ' and http://mirror' || (doc_id % 20)::VARCHAR || '.org/x'
-                  ELSE '' END AS t
+             {_LINK_DECO_SQL} AS t
       FROM documents
     ),
     ext AS (
@@ -14855,22 +14379,14 @@ ORACLES["unimax_alloc"] = f"""
     FROM flagged CROSS JOIN totals
 """
 
-ORACLES["simhash_radius_sweep"] = r"""
+ORACLES["simhash_radius_sweep"] = rf"""
     WITH tok AS (
         SELECT doc_id,
                unnest(regexp_extract_all(lower(text),
                    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS t
         FROM documents
     ),
-    h AS (
-        SELECT doc_id, ('0x' || substr(md5(t), 1, 11))::BIGINT AS h FROM tok
-    ),
-    bits AS (
-        SELECT doc_id, j.j,
-               sum(CASE WHEN ((h >> j.j) & 1) = 1 THEN 1 ELSE -1 END) AS s
-        FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) j
-        GROUP BY 1, 2
-    ),
+    {_SIMHASH_BITS_SQL},
     fp AS MATERIALIZED (
         SELECT doc_id,
                CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
@@ -15120,60 +14636,8 @@ def _contam_sweep_oracle(ns=(2, 3, 4)) -> str:
 ORACLES["contamination_ngram_sweep"] = _contam_sweep_oracle((2, 3, 4))
 
 ORACLES["prototypicality"] = f"""
-    WITH base AS (
-      SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    seeds AS (
-      SELECT id, v, md5(CAST(id AS VARCHAR)) AS h
-      FROM base ORDER BY h LIMIT 8
-    ),
-    c0 AS (
-      SELECT row_number() OVER (ORDER BY h) - 1 AS cid, v AS cvec FROM seeds
-    ),
-    d1 AS (
-      SELECT b.id, b.v, c.cid, {_KM_DIST} AS dist
-      FROM base b CROSS JOIN c0 c
-    ),
-    a1 AS (
-      SELECT id, v, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        FROM d1
-      ) WHERE rn = 1
-    ),
-    u1 AS (
-      SELECT cid, pos,
-             CAST(sum(CAST(v[pos] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS m
-      FROM a1 CROSS JOIN range(1, 65) t(pos)
-      GROUP BY 1, 2
-    ),
-    c1 AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM u1 GROUP BY 1),
-    d2 AS (
-      SELECT b.id, b.v, c.cid, {_KM_DIST} AS dist
-      FROM base b CROSS JOIN c1 c
-    ),
-    a2 AS (
-      SELECT id, v, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        FROM d2
-      ) WHERE rn = 1
-    ),
-    u2 AS (
-      SELECT cid, pos,
-             CAST(sum(CAST(v[pos] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS m
-      FROM a2 CROSS JOIN range(1, 65) t(pos)
-      GROUP BY 1, 2
-    ),
-    c2 AS (SELECT cid, list(m ORDER BY pos) AS cvec FROM u2 GROUP BY 1),
-    d3 AS (
-      SELECT b.id, b.v, c.cid, {_KM_DIST} AS dist
-      FROM base b CROSS JOIN c2 c
-    ),
-    a3 AS MATERIALIZED (
-      SELECT id, cid, round(dist, 6) AS d6 FROM (
-        SELECT *, row_number() OVER (PARTITION BY id ORDER BY dist, cid) AS rn
-        FROM d3
-      ) WHERE rn = 1
-    ),
+    WITH {_kmeans_sql()},
+    {_km_assign_sql(3, a_cols="id, cid, round(dist, 6) AS d6", mat="MATERIALIZED ")},
     q6 AS (
       SELECT cid AS cluster_id, id, d6,
              CAST(floor(d6 * 1000000.0 + 0.5) AS BIGINT) AS m6,
@@ -15204,30 +14668,8 @@ ORACLES["prototypicality"] = f"""
 """
 
 ORACLES["minhash_len_bias"] = f"""
-    WITH ids AS MATERIALIZED (
-        SELECT doc_id FROM documents ORDER BY doc_id LIMIT 64
-    ),
-    norm AS (
-        SELECT d.doc_id, regexp_replace(lower(d.text), '\\s+', ' ', 'g') AS n
-        FROM documents d JOIN ids USING (doc_id)
-    ),
-    idx AS (
-        SELECT doc_id, n,
-               unnest(generate_series(1, greatest(length(n) - 7, 1))) AS i
-        FROM norm
-    ),
-    sh AS MATERIALIZED (SELECT DISTINCT doc_id, substr(n, i, 8) AS s FROM idx),
-    h AS (
-        SELECT doc_id,
-               ('0x' || substr(md5(s), 1, 11))::BIGINT AS a,
-               ('0x' || substr(md5(s), 12, 11))::BIGINT AS b
-        FROM sh
-    ),
-    sig AS MATERIALIZED (
-        SELECT doc_id, i.i AS i, min((a + i.i * b) % 17592186044399) AS hv
-        FROM h CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i) i
-        GROUP BY 1, 2
-    ),
+    WITH {_CAPPED_SHINGLES_SQL},
+    {_minhash_sig_sql(32, materialized=True)},
     prs AS MATERIALIZED (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
         FROM ids a JOIN ids b ON a.doc_id < b.doc_id
@@ -15240,12 +14682,7 @@ ORACLES["minhash_len_bias"] = f"""
         JOIN sig sb ON sb.doc_id = p.id_b AND sb.i = sa.i
         GROUP BY 1, 2
     ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-    shared AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shn
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    {_SHARED_SHINGLES_SQL},
     base AS MATERIALIZED (
         SELECT p.id_a, p.id_b,
                coalesce(shn, 0) AS shn,
@@ -15272,38 +14709,13 @@ ORACLES["minhash_len_bias"] = f"""
     )
     SELECT CAST(len_bin AS BIGINT) AS len_bin,
            CAST(count(*) AS BIGINT) AS n_pairs,
-           {round6_ratio_dec_sql(
-               "sum(abs(q))::HUGEINT",
-               "count(*)::HUGEINT * 1000000000000",
-           )} AS mae,
-           {round6_ratio_dec_signed_sql(
-               "sum(q)::HUGEINT",
-               "count(*)::HUGEINT * 1000000000000",
-           )} AS bias,
-           {round6_ratio_dec_sql("max(abs(q))::HUGEINT", "1000000000000")} AS max_abs_err
+           {_ERR_STATS_SQL}
     FROM qs GROUP BY 1
 """
 
 ORACLES["lsh_br_planner"] = f"""
-    WITH ids AS MATERIALIZED (
-        SELECT doc_id FROM documents ORDER BY doc_id LIMIT 64
-    ),
-    norm AS (
-        SELECT d.doc_id, regexp_replace(lower(d.text), '\\s+', ' ', 'g') AS n
-        FROM documents d JOIN ids USING (doc_id)
-    ),
-    idx AS (
-        SELECT doc_id, n,
-               unnest(generate_series(1, greatest(length(n) - 7, 1))) AS i
-        FROM norm
-    ),
-    sh AS MATERIALIZED (SELECT DISTINCT doc_id, substr(n, i, 8) AS s FROM idx),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-    shared AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shn
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    WITH {_CAPPED_SHINGLES_SQL},
+    {_SHARED_SHINGLES_SQL},
     prs AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
         FROM ids a JOIN ids b ON a.doc_id < b.doc_id
@@ -15560,27 +14972,7 @@ ORACLES["kcenter_coreset"] = """
 
 ORACLES["hits_scores"] = f"""
     WITH
-    ordered AS (
-      SELECT user_id, event_id, event_type, epoch(ts) AS t,
-             CASE WHEN lag(epoch(ts)) OVER w IS NULL
-                    OR epoch(ts) - lag(epoch(ts)) OVER w > 1800.0
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, event_id, event_type, t,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY t, event_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_id
-      FROM ordered
-    ),
-    prs AS (
-      SELECT event_type AS from_type,
-             lead(event_type) OVER (PARTITION BY user_id, session_id
-                                    ORDER BY t, event_id) AS to_type
-      FROM sess
-    ),
+    {_session_steps_sql("prs")},
     edges AS MATERIALIZED (
       SELECT from_type AS s, to_type AS t2, count(*) AS w
       FROM prs WHERE to_type IS NOT NULL GROUP BY 1, 2
@@ -15729,22 +15121,7 @@ ORACLES["data_constrained_epochs"] = f"""
 """
 
 ORACLES["ndcg_sessions"] = f"""
-    WITH ordered AS (
-      SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS prev_us
-      FROM events
-    ),
-    flagged AS (
-      SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                     THEN 1 ELSE 0 END AS ns
-      FROM ordered
-    ),
-    sess AS (
-      SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY us, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM flagged
-    ),
+    WITH {_us_sessions_sql("event_type, epoch_us(ts) AS us, event_id", "us")},
     posd AS (
       SELECT *,
              row_number() OVER (PARTITION BY user_id, sid
@@ -15880,12 +15257,7 @@ ORACLES["cluster_stability_ari"] = f"""
         FROM norm
     ),
     sh AS MATERIALIZED (SELECT DISTINCT doc_id, substr(n, i, 8) AS s FROM idx),
-    sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-    shared AS MATERIALIZED (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    {_shingle_overlap_sql(materialized=True)},
     plo AS (
         SELECT id_a, id_b FROM shared
         JOIN sz sa ON sa.doc_id = id_a

@@ -335,8 +335,27 @@ class Timeseries:
 
     def ingest_df(self, df: DataFrame, name_col="name", ts_col="ts", value_col="value", fanout=0):
         """Scale-path bulk ingest: bucketize an event DataFrame (map-only,
-        no driver loop) and append."""
-        self._store.append_df(bucketize(df, self.intervals, name_col, ts_col, value_col, fanout))
+        no driver loop) and append. Rows already past an interval's
+        ``steps`` retention are dropped, as ``insert`` drops them."""
+        out = bucketize(df, self.intervals, name_col, ts_col, value_col, fanout)
+        now = _time.time()
+        expired = []
+        for iname, cfg in self.intervals.items():
+            if not cfg.steps:
+                continue
+            # the oldest bucket whose ttl is not 0: insert's test, so the
+            # rule (and its Gregorian day approximation) has one home
+            calc, back = cfg.i_calc, cfg.steps
+            while back > 0 and calc.ttl(cfg.steps, calc.normalize(now, -back)) == 0:
+                back -= 1
+            while calc.ttl(cfg.steps, calc.normalize(now, -back - 1)) != 0:
+                back += 1
+            expired.append(
+                (F.col("interval") == iname) & (F.col("i_time") < calc.key(now, -back))
+            )
+        if expired:
+            out = out.where(~functools.reduce(operator.or_, expired))
+        self._store.append_df(out)
 
     # ------------------------------------------------------------------- scan
 

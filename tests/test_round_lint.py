@@ -1,5 +1,6 @@
-"""tools/round_lint.py runs clean over the tree, and its oracle rule
-catches a hand-typed kernel mirror however the literal is split."""
+"""tools/round_lint.py runs clean over the tree, its oracle rule catches
+a hand-typed kernel mirror however the literal is split, and its block
+rule catches a stage pasted three times however it is indented."""
 
 import importlib.util
 import os
@@ -36,3 +37,22 @@ def test_hand_typed_mirrors_flagged(lint):
         "# floor((2000000 * n + d) in a comment is not oracle SQL\n"
     )
     assert [line for line, _hit in lint.hand_typed_mirrors(src)] == [2, 3, 5, 7]
+
+
+def test_repeated_block_flagged(lint):
+    stage = "\n".join(f"    x{i} = step(x{i - 1}, {i})" for i in range(1, 10))
+
+    def copy(indent):
+        return "\n".join(indent + line.strip() for line in stage.split("\n"))
+
+    sources = {
+        # the same 9-line stage three times: re-indented, with a comment,
+        # a blank line and a short line inside one copy (none of which count)
+        "a.py": "def f():\n" + stage + "\n",
+        "b.py": "def g():\n" + copy("        ").replace("x4 =", "# why\n\n)\nx4 ="),
+        "c.py": "import os\n" + copy(""),
+        # two copies only: below the rule's threshold
+        "d.py": "\n".join(f"y{i} = other({i})" for i in range(12)),
+        "e.py": "\n".join(f"y{i} = other({i})" for i in range(12)),
+    }
+    assert lint.repeated_blocks(sources) == [(9, [("a.py", 2), ("b.py", 2), ("c.py", 2)])]

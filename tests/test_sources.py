@@ -114,7 +114,7 @@ def test_parquet_scan_pushdown(spark, tmp_path):
 
 
 @pytest.mark.parametrize("store", ["memory", "parquet"])
-def test_parquet_expire(spark, tmp_path, store):
+def test_parquet_expire(spark, tmp_path, store, monkeypatch):
     # delete / delete_all / expire behave the same on both stores, for
     # relative and Gregorian (strftime-keyed) intervals
     t = Timeseries(
@@ -136,10 +136,18 @@ def test_parquet_expire(spark, tmp_path, store):
             .withColumnRenamed("count", "n").collect()
         }
 
-    # ingest_df keeps rows already past retention (insert drops them at
-    # write time), so expire has something to drop: the minute interval
+    # written while the library's clock reads the oldest row's time, every
+    # row is inside retention (ingest_df, like insert, drops the rest);
+    # back at `now` expire has something to drop: the minute interval
     # keeps only `now`, the daily one `now` and `now - 1h`
+    from types import SimpleNamespace
+
+    from kairos_spark import timemath, timeseries
+
     now = _time.time()
+    then = SimpleNamespace(time=lambda: now - 5 * 86400)
+    monkeypatch.setattr(timemath, "_time", then)
+    monkeypatch.setattr(timeseries, "_time", then)
     t.ingest_df(
         spark.createDataFrame(
             [(n, float(ts), 1.0) for n in ("web", "api")
@@ -147,6 +155,7 @@ def test_parquet_expire(spark, tmp_path, store):
             "name string, ts_sec double, value double",
         ).withColumn("ts", F.timestamp_seconds("ts_sec"))
     )
+    monkeypatch.undo()
     assert stored() == {("web", "minute"): 3, ("web", "daily"): 3,
                         ("api", "minute"): 3, ("api", "daily"): 3}
     t.expire("web")

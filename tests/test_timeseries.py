@@ -327,6 +327,55 @@ def test_ingest_df_scale_path(spark):
     assert got == {_time(0): 6.0, _time(60): 6.0, _time(120): 6.0}
 
 
+def test_ingest_df_drops_past_retention_like_insert(spark):
+    """A point already past an interval's retention is not stored,
+    whichever path writes it: one hour old is past the minute
+    interval's 5 steps but inside the daily interval's 2."""
+    from pyspark.sql import functions as F
+
+    intervals = {"minute": {"step": 60, "steps": 5}, "daily": {"step": "daily", "steps": 2}}
+    ts = _time(-HOUR)  # the clock reads _time(0)
+    by_insert = make_ts(spark, "count", intervals=intervals)
+    by_insert.insert("a", timestamp=ts)
+    by_ingest = make_ts(spark, "count", intervals=intervals)
+    by_ingest.ingest_df(
+        spark.createDataFrame([("a", float(ts), 1.0)], "name string, ts_sec double, value double")
+        .withColumn("ts", F.timestamp_seconds("ts_sec"))
+    )
+
+    def stored(t):
+        cols = ["name", "interval", "i_time", "r_time", "value"]
+        return sorted(tuple(r) for r in t.scan().select(*cols).collect())
+
+    assert [r[1] for r in stored(by_insert)] == ["daily"]
+    assert stored(by_ingest) == stored(by_insert)
+    assert by_ingest.get("a", "minute", timestamp=ts) == {_time(-HOUR): 0}
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="insert_seq is a per-object counter (ingest_df uses "
+    "monotonically_increasing_id), so writes through two Timeseries on one "
+    "store have no common order; see ROADMAP, Carried",
+)
+@pytest.mark.parametrize(
+    "type_, writes, expected",
+    [
+        ("gauge", [("a", 5, 0), ("a", 7, 0), ("b", 3, 1)], 3.0),
+        ("series", [("a", 1, 0), ("a", 2, 0), ("b", 3, 1)], [1.0, 2.0, 3.0]),
+    ],
+)
+def test_write_order_across_objects_on_one_store(spark, tmp_path, type_, writes, expected):
+    """Two Timeseries objects on one parquet path: the store's read order
+    is the order the writes happened in, as the reference's last-write-
+    wins gauge and append-order series read it."""
+    path = str(tmp_path / "store")
+    ts = {k: Timeseries(spark, type=type_, intervals=DAILY, path=path) for k in "ab"}
+    for who, value, dt in writes:
+        ts[who].insert("x", value, timestamp=_time(dt))
+    assert ts["a"].get("x", "day", timestamp=_time(0)) == {_time(0) // DAY * DAY: expected}
+
+
 def test_gregorian_daily(spark):
     t = make_ts(spark, "count", intervals={"daily": {"step": "daily"}})
     t.insert("test", 1, timestamp=_time(0))

@@ -29,6 +29,14 @@ literal of ``kairos_spark/queries.py`` (adjacent literals joined) must
 not spell one out by hand — an opened ratio expansion (``((2000000``,
 ``((-2000000``, with or without ``::HUGEINT``), the bridge's
 ``DECIMAL(27,12)), 6)`` or the signed-cents ``floor(-CAST(``.
+
+A third rule keeps each pipeline stage in one home: no block of
+``BLOCK_LINES`` code lines may occur ``BLOCK_COPIES`` or more times
+under ``kairos_spark/``. Lines are compared stripped; blank,
+comment-only, import and <= 3-character lines (``),``, closing quotes)
+are skipped, so a copy re-indented or re-wrapped around a comment is
+still a copy. A repeated stage belongs in one builder: a private helper
+in its operator module, or an oracle-stage builder in ``queries.py``.
 """
 
 from __future__ import annotations
@@ -37,6 +45,7 @@ import io
 import re
 import sys
 import tokenize
+from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent / "kairos_spark"
@@ -64,6 +73,9 @@ HAND_TYPED = re.compile(
 )
 # a string token: prefix, quotes, body
 LITERAL = re.compile(r"([rRfFbBuU]*)('''|\"\"\"|'|\")(.*)\2\Z", re.S)
+# the repeated-block rule (see the module docstring)
+BLOCK_LINES = 8
+BLOCK_COPIES = 3
 
 
 def call_extent(text: str, start: int) -> str:
@@ -121,7 +133,53 @@ def hand_typed_mirrors(text: str) -> list[tuple[int, str]]:
     return out
 
 
+def code_lines(text: str) -> list[tuple[int, str]]:
+    """(line number, stripped text) of each line the block rule compares."""
+    out = []
+    for lineno, raw in enumerate(text.splitlines(), 1):
+        line = raw.strip()
+        if len(line) <= 3 or line.startswith(("#", "import ", "from ")):
+            continue
+        out.append((lineno, line))
+    return out
+
+
+def repeated_blocks(sources: dict[str, str]) -> list[tuple[int, list[tuple[str, int]]]]:
+    """Each maximal block of >= BLOCK_LINES code lines that occurs
+    BLOCK_COPIES or more times in `sources` ({name: text}), as
+    (block length in code lines, [(name, first line) of each copy])."""
+    code = {name: code_lines(text) for name, text in sources.items()}
+    where = defaultdict(list)
+    for name, lines in code.items():
+        for k in range(len(lines) - BLOCK_LINES + 1):
+            window = tuple(line for _lineno, line in lines[k : k + BLOCK_LINES])
+            where[window].append((name, k))
+    copies = {tuple(occ) for occ in where.values() if len(occ) >= BLOCK_COPIES}
+    blocks = []
+    for occ in copies:
+        if tuple((name, k - 1) for name, k in occ) in copies:
+            continue  # not the first window of its run
+        run = 1
+        while tuple((name, k + run) for name, k in occ) in copies:
+            run += 1
+        blocks.append(
+            (run + BLOCK_LINES - 1, [(name, code[name][k][0]) for name, k in occ])
+        )
+    return sorted(blocks, key=lambda block: block[1])
+
+
 def main() -> int:
+    sources = {
+        str(path.relative_to(ROOT.parent)): path.read_text()
+        for path in sorted(ROOT.rglob("*.py"))
+    }
+    blocks = repeated_blocks(sources)
+    if blocks:
+        print(f"round_lint: blocks of >= {BLOCK_LINES} code lines repeated "
+              f">= {BLOCK_COPIES} times (give the stage one builder):")
+        for size, occ in blocks:
+            print(f"  {size} lines x {len(occ)}: "
+                  + ", ".join(f"{name}:{line}" for name, line in occ))
     rel = ORACLES_PY.relative_to(ROOT.parent)
     mirrors = [
         f"{rel}:{line}: {hit}" for line, hit in hand_typed_mirrors(ORACLES_PY.read_text())
@@ -171,11 +229,12 @@ def main() -> int:
               "'exempt' comment with the reason within 6 lines above):")
         for f in findings:
             print(" ", f)
-    if findings or mirrors:
+    if findings or mirrors or blocks:
         return 1
     print("round_lint: clean — every F.round(F.avg|F.sum) site is "
-          "scale<6, DECIMAL-routed, or carries an exempt annotation, and "
-          "every oracle calls the kairos_spark.exact SQL builders")
+          "scale<6, DECIMAL-routed, or carries an exempt annotation, "
+          "every oracle calls the kairos_spark.exact SQL builders, and "
+          "no code block is repeated")
     return 0
 
 
