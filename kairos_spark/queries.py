@@ -46,6 +46,7 @@ from kairos_spark.operators import (
     text,
     windows,
 )
+from kairos_spark.sources.tables import read_table, resolved
 from kairos_spark.types import type_ops
 
 HOUR = 3600
@@ -70,8 +71,16 @@ def _utc(spark: SparkSession) -> None:
 
 
 def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` of ``sf_dir``, resolved (schema read, columns
+    normalized, scan spread) once per session while its file is
+    unchanged; see ``sources.tables.resolved``."""
     _utc(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    return resolved(spark, path, "table", lambda: _table(spark, path, name))
+
+
+def _table(spark: SparkSession, path: str, name: str) -> DataFrame:
+    df = read_table(spark, path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -103,7 +112,7 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         try:
             import pathlib
 
-            p = pathlib.Path(f"{sf_dir}/{name}.parquet")
+            p = pathlib.Path(path)
             nbytes = (
                 sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
                 if p.is_dir()

@@ -16,17 +16,99 @@ Scale notes:
 - ``write_long_table`` sorts within partitions by (name, i_time) before
   writing so those stats are tight (the poor man's Z-order; on Delta
   use OPTIMIZE ZORDER).
+- a relation is resolved (its files listed, its schema read) once per
+  session and path, not once per read: see ``resolved``. Every
+  ``spark.read`` of the package lives in this module.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import stat
+import threading
+import weakref
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 _FORMATS = {"parquet", "orc", "json", "csv"}
+
+# Each session's held relations, {(path, what): (stamp, relation)}, live
+# in an attribute of the session object, so they die with it: every held
+# DataFrame references its session, so a dict keyed by the session
+# (weakly or not) would keep it alive. _SESSIONS finds them for forget().
+_HELD_ATTR = "_kairos_held_relations"
+_SESSIONS: weakref.WeakSet = weakref.WeakSet()
+_HELD_LOCK = threading.Lock()
+
+
+def _held(spark: SparkSession) -> dict:
+    """``spark``'s held relations (call under ``_HELD_LOCK``)."""
+    held = vars(spark).get(_HELD_ATTR)
+    if held is None:
+        held = vars(spark)[_HELD_ATTR] = {}
+        _SESSIONS.add(spark)
+    return held
+
+
+def _stamp(path: str):
+    """The (path, inode, mtime_ns) of ``path`` and of every directory
+    under it, or None when the driver cannot stat them (a remote URL, a
+    path not written yet, a directory removed during the walk). A file
+    added to or removed from a directory moves that directory's mtime;
+    a directory removed and written again has a new inode."""
+    try:
+        st = os.stat(path)
+        out = [(path, st.st_ino, st.st_mtime_ns)]
+        todo = [path] if stat.S_ISDIR(st.st_mode) else []
+        while todo:
+            with os.scandir(todo.pop()) as entries:
+                for e in entries:
+                    if e.is_dir(follow_symlinks=False):
+                        s = e.stat(follow_symlinks=False)
+                        out.append((e.path, s.st_ino, s.st_mtime_ns))
+                        todo.append(e.path)
+    except OSError:
+        return None
+    return frozenset(out)
+
+
+def resolved(spark: SparkSession, path: str, what, resolve):
+    """``resolve()``'s relation for ``path``, held by ``spark`` under
+    ``(path, what)`` so later calls skip the file listing, schema
+    inference and analysis it pays. ``what`` names what the caller
+    resolves (a schema, an interval scan). A held relation is a plan,
+    never data.
+
+    An entry stays valid while the inode and mtime_ns of ``path`` and
+    of every directory under it are unchanged, so a write from outside
+    the library is seen on the next call; writes through this package
+    also ``forget`` the path. That check needs a filesystem the driver
+    can ``os.stat``: any other path is resolved on every call."""
+    path = os.path.abspath(path)
+    stamp = _stamp(path)  # taken first: a write during resolve() shows next call
+    if stamp is None:
+        return resolve()
+    key = (path, what)
+    with _HELD_LOCK:
+        hit = _held(spark).get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    relation = resolve()
+    with _HELD_LOCK:
+        _held(spark)[key] = (stamp, relation)
+    return relation
+
+
+def forget(path: str) -> None:
+    """Drop every session's held relations of ``path`` (it was written)."""
+    path = os.path.abspath(path)
+    with _HELD_LOCK:
+        for spark in _SESSIONS:
+            held = _held(spark)
+            for key in [k for k in held if k[0] == path]:
+                del held[key]
 
 
 def read_table(
@@ -62,6 +144,7 @@ def write_long_table(
         out = out.repartition(target_partitions, "interval", "name")
     out = out.sortWithinPartitions("interval", "name", "i_time")
     out.write.mode(mode).partitionBy("interval").format(fmt).save(path)
+    forget(path)
 
 
 class ParquetStoreHandle:
@@ -95,7 +178,8 @@ def replace_directory(path: str, write) -> None:
     is in place. If the write or the swap fails, the staging directory
     is removed and the old one comes back, so ``path`` is never left
     missing or holding a mix of old and new files. ``path`` need not
-    exist yet."""
+    exist yet. Relations held for ``path`` are dropped once the new
+    contents are in place."""
     path = path.rstrip("/")
     staging, backup = path + ".__staging__", path + ".__old__"
     try:
@@ -118,6 +202,7 @@ def replace_directory(path: str, write) -> None:
         raise
     if had_path:
         shutil.rmtree(backup)
+    forget(path)
 
 
 def write_bucketed_long_table(
@@ -146,6 +231,7 @@ def write_bucketed_long_table(
         .option("path", path)
         .saveAsTable(table)
     )
+    forget(path)
 
 
 def compact_long_table(

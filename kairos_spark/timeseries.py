@@ -66,7 +66,7 @@ from pyspark.sql.types import _make_type_verifier
 from kairos_spark.config import IntervalConfig, parse_intervals, require_interval
 from kairos_spark.functions.buckets import step_size_expr
 from kairos_spark.ingest import COARSE_SENTINEL, bucketize
-from kairos_spark.sources.tables import open_store, replace_directory
+from kairos_spark.sources.tables import forget, open_store, read_table, replace_directory, resolved
 from kairos_spark.timemath import is_gregorian
 from kairos_spark.types import type_ops
 
@@ -159,8 +159,9 @@ class _MemoryStore:
     def append_df(self, df: DataFrame):
         self.rows.extend(tuple(r) for r in df.collect())
 
-    def scan(self) -> DataFrame:
-        return _local_frame(self.spark, self.rows, self.schema)
+    def scan(self, interval=None) -> DataFrame:
+        df = _local_frame(self.spark, self.rows, self.schema)
+        return df if interval is None else df.where(F.col("interval") == interval)
 
     def rewrite(self, predicate):
         """Keep the rows matching ``predicate`` (one small Spark job)."""
@@ -173,7 +174,25 @@ class _ParquetStore:
     local relation in one task: one file per interval per append.
     delete/expire rewrite; on a real deployment this store is a Delta
     table and those become ``DELETE WHERE`` + ``OPTIMIZE ZORDER BY
-    (name, i_time)``."""
+    (name, i_time)``.
+
+    Reads go through the session's held relations
+    (``sources.tables.resolved``): the path is listed and the relation
+    analysed once per session, not once per read. Every write through
+    the library drops the path's entries, whichever store object on the
+    path wrote; a write from outside it shows through the entries'
+    staleness check on a local filesystem.
+
+    ``scan(interval)`` is the interval-pruned scan. When Spark plans it
+    as exactly one input partition (its own split logic, asked once per
+    held relation through ``getNumPartitions``, which runs no job), the
+    scan is ``coalesce(1)``: the planner then sees ``SinglePartition``
+    and every type's aggregate runs in that one task with no exchange,
+    so a read is one job of one task. An interval of several splits
+    keeps the shuffle plan; a store fed by many ``insert`` calls holds
+    several files per interval and stays there until it is compacted.
+    A change to ``spark.sql.files.*`` during a session takes effect on
+    the next write to the path."""
 
     def __init__(self, spark: SparkSession, schema: T.StructType, path: str):
         self.spark, self.schema, self.path = spark, schema, path
@@ -183,17 +202,29 @@ class _ParquetStore:
 
     def append_df(self, df: DataFrame):
         df.write.mode("append").partitionBy("interval").parquet(self.path)
+        forget(self.path)
 
-    def scan(self) -> DataFrame:
-        """The stored rows; a store never written to reads empty. Any
-        other failure (an unknown filesystem scheme, a permission
-        error) raises rather than reading as an empty store."""
+    def scan(self, interval=None) -> DataFrame:
+        """The stored rows, or those of ``interval``; a store never
+        written to reads empty. Any other failure (an unknown filesystem
+        scheme, a permission error) raises rather than reading as an
+        empty store."""
+        what = self.schema.simpleString()
         try:
-            return self.spark.read.schema(self.schema).parquet(self.path)
+            rows = resolved(
+                self.spark, self.path, what,
+                lambda: read_table(self.spark, self.path, schema=self.schema),
+            )
         except AnalysisException as e:
             if e.getCondition() != "PATH_NOT_FOUND":
                 raise
             return _local_frame(self.spark, [], self.schema)
+        if interval is None:
+            return rows
+        return resolved(
+            self.spark, self.path, (what, interval),
+            lambda: _one_split(rows.where(F.col("interval") == interval)),
+        )
 
     def rewrite(self, predicate):
         """Keep the rows matching ``predicate``: write them aside, then
@@ -204,6 +235,13 @@ class _ParquetStore:
             self.path,
             lambda tmp: df.write.mode("overwrite").partitionBy("interval").parquet(tmp),
         )
+
+
+def _one_split(df: DataFrame) -> DataFrame:
+    """``df`` as ``coalesce(1)`` when Spark plans its scan as exactly one
+    input partition, so no aggregate over it needs an exchange; as it
+    is otherwise."""
+    return df.coalesce(1) if df.rdd.getNumPartitions() == 1 else df
 
 
 class Timeseries:
@@ -338,13 +376,22 @@ class Timeseries:
         no driver loop) and append. Rows already past an interval's
         ``steps`` retention are dropped, as ``insert`` drops them."""
         out = bucketize(df, self.intervals, name_col, ts_col, value_col, fanout)
+        expired = self._expired()
+        if expired is not None:
+            out = out.where(~expired)
+        self._store.append_df(out)
+
+    def _expired(self):
+        """The rows already past their interval's ``steps`` retention, as
+        one predicate (None when no interval has one). A row is past it
+        when its bucket is older than the oldest bucket whose ``ttl`` is
+        not 0: ``insert``'s test, so the rule (and its Gregorian day
+        approximation) has one home."""
         now = _time.time()
         expired = []
         for iname, cfg in self.intervals.items():
             if not cfg.steps:
                 continue
-            # the oldest bucket whose ttl is not 0: insert's test, so the
-            # rule (and its Gregorian day approximation) has one home
             calc, back = cfg.i_calc, cfg.steps
             while back > 0 and calc.ttl(cfg.steps, calc.normalize(now, -back)) == 0:
                 back -= 1
@@ -353,19 +400,18 @@ class Timeseries:
             expired.append(
                 (F.col("interval") == iname) & (F.col("i_time") < calc.key(now, -back))
             )
-        if expired:
-            out = out.where(~functools.reduce(operator.or_, expired))
-        self._store.append_df(out)
+        return functools.reduce(operator.or_, expired) if expired else None
 
     # ------------------------------------------------------------------- scan
 
-    def scan(self) -> DataFrame:
-        return self._store.scan()
+    def scan(self, interval=None) -> DataFrame:
+        """The stored rows, or those of ``interval``."""
+        return self._store.scan(interval)
 
     def _filtered(self, names, interval, cast=True) -> DataFrame:
         """The rows of ``names`` in ``interval``, each tagged with its
         name's ``__prio``; ``cast=False`` leaves out the read_func."""
-        df = self.scan().where(F.col("interval") == interval)
+        df = self.scan(interval)
         if cast and self.read_func:
             # read-side cast applied at scan, before any aggregation —
             # the reference applies read_func per row read in every
@@ -518,14 +564,22 @@ class Timeseries:
             else F.col("i_time").isin(i_values)
         )
 
+        # a named transform's step size: the whole range for a collapse
+        # (kairos/timeseries.py:706-713), else the bucket of its grain
+        if transform is None:
+            step_size = None
+        elif collapse:
+            step_size = F.lit(_range_span(cfg, buckets))
+        else:
+            step_size = self._step_size_col(cfg, "i" if cfg.coarse or condense else "r")
+
         if collapse:
-            # one output row keyed by the first bucket; step_size spans the
-            # whole range (kairos/timeseries.py:706-713)
+            # one output row keyed by the first bucket; its slots are
+            # (i_time, r_time, name), whatever the interval's grain
             keyed = df.withColumn("__collapse", F.lit(i_values[0]))
             out = self._aggregate(
                 keyed, ["__collapse"], ["i_time", "r_time", "__prio", "insert_seq"],
-                condense=not cfg.coarse,
-                transform=transform, step_size=F.lit(_range_span(cfg, buckets)),
+                condense=True, transform=transform, step_size=step_size,
             )
             return out.withColumnRenamed("__collapse", "i_time")
 
@@ -534,11 +588,11 @@ class Timeseries:
                 df, ["i_time"], ["r_time", "__prio", "insert_seq"],
                 condense=condense and not cfg.coarse,
                 join=cfg.coarse and _is_multi(name),
-                transform=transform, step_size=self._step_size_col(cfg, "i"),
+                transform=transform, step_size=step_size,
             )
         return self._aggregate(
             df, ["i_time", "r_time"], ["__prio", "insert_seq"], join=_is_multi(name),
-            transform=transform, step_size=self._step_size_col(cfg, "r"),
+            transform=transform, step_size=step_size,
         )
 
     def series(
@@ -756,16 +810,11 @@ class Timeseries:
 
     def expire(self, name=None):
         """Drop rows past each interval's ``steps`` retention
-        (kairos/sql_backend.py:161-178)."""
-        now = _time.time()
-        expired = [
-            (F.col("interval") == iname) & (F.col("i_time") <= cfg.i_calc.key(now, -cfg.steps))
-            for iname, cfg in self.intervals.items()
-            if cfg.steps
-        ]
-        if not expired:
+        (kairos/sql_backend.py:161-178), by the rule writes drop them by."""
+        expired = self._expired()
+        if expired is None:
             return
-        keep = ~functools.reduce(operator.or_, expired)
+        keep = ~expired
         if name is not None:
             keep = (F.col("name") != str(name)) | keep
         self._store.rewrite(keep)

@@ -338,17 +338,19 @@ class GaugeOps(TypeOps):
         return df.groupBy(*keys).agg(F.max_by(VALUE, order_expr).alias(VALUE))
 
     def aggregate(self, df, keys, order, value_type, condense=False, join=False):
-        """Condense is two-stage: the last write per (resolution slot,
-        name), falsy-filtered, then the last slot wins
-        (kairos/timeseries.py:971-979). The reference joins names per
-        SLOT before condensing (:588-605), so slot time dominates name
-        priority: the last populated ``r_time`` wins, ties broken by
-        name-argument order (``__prio``). A join without condense takes
-        the last non-falsy name's value per slot (:981-988): the last
-        write per name, falsy-filtered, then name-argument order."""
+        """Condense is two-stage: the last write per slot, falsy-filtered,
+        then the last slot wins (kairos/timeseries.py:971-979). A slot is
+        ``order`` without ``insert_seq``: (``r_time``, name) within one
+        interval, (``i_time``, ``r_time``, name) across a collapsed
+        range. The reference joins names per SLOT before condensing
+        (:588-605), so slot time dominates name priority: the last
+        populated slot wins, ties broken by name-argument order
+        (``__prio``). A join without condense takes the last non-falsy
+        name's value per slot (:981-988): the last write per name,
+        falsy-filtered, then name-argument order."""
         if not (condense or join):
             return self.container_agg(df, keys, order)
-        slot = ["r_time", "__prio"] if condense else ["__prio"]
+        slot = [c for c in order if c != SEQ] if condense else ["__prio"]
         fine = self.container_agg(df, keys + slot, [SEQ])
         kept = fine.where(_nonfalsy(F.col(VALUE), value_type))
         last = F.struct(*slot) if condense else F.col("__prio")

@@ -1,6 +1,7 @@
 """tools/round_lint.py runs clean over the tree, its oracle rule catches
-a hand-typed kernel mirror however the literal is split, and its block
-rule catches a stage pasted three times however it is indented."""
+a hand-typed kernel mirror however the literal is split, its block
+rule catches a stage pasted three times however it is indented, and its
+read rule catches a session's ``.read`` outside sources/tables.py."""
 
 import importlib.util
 import os
@@ -56,3 +57,22 @@ def test_repeated_block_flagged(lint):
         "e.py": "\n".join(f"y{i} = other({i})" for i in range(12)),
     }
     assert lint.repeated_blocks(sources) == [(9, [("a.py", 2), ("b.py", 2), ("c.py", 2)])]
+
+
+def test_stray_read_flagged(lint):
+    sources = {
+        lint.READ_HOME: "df = spark.read.parquet(p)\n",
+        "kairos_spark/a.py": (
+            "df = self.spark.read.schema(s).parquet(p)\n"
+            "reader = (spark\n"
+            "          .read)\n"
+        ),
+        # a file handle's read(), a comment, a string and readStream pass
+        "kairos_spark/b.py": (
+            "text = fh.read()\n"
+            "# spark.read in a comment\n"
+            "s = 'spark.read'\n"
+            "q = spark.readStream.load(p)\n"
+        ),
+    }
+    assert lint.stray_reads(sources) == [("kairos_spark/a.py", 1), ("kairos_spark/a.py", 3)]

@@ -377,3 +377,126 @@ def test_non_str_interval_name_is_stored_as_text(spark, tmp_path, store):
     t.bulk_insert({BASE: {"x": [3]}})
     assert t.get("x", 60, timestamp=BASE) == {BASE: 5.0}
     assert {r["interval"] for r in t.scan().collect()} == {"60"}
+
+
+def test_expire_keeps_what_a_write_keeps(spark, tmp_path, monkeypatch):
+    # a monthly interval keeping 2 steps, on 2025-03-01: January is 59
+    # days back, inside the day-approximated 2 x 30 days, so a write
+    # stores it and expire keeps it; December (90 days) goes. A second
+    # store object on the path, which read before, sees the expire.
+    import calendar
+    from types import SimpleNamespace
+
+    from kairos_spark import timemath, timeseries
+
+    def at(*ymd):
+        return float(calendar.timegm((*ymd, 0, 0, 0)))
+
+    def clock(ts):
+        for mod in (timemath, timeseries):
+            monkeypatch.setattr(mod, "_time", SimpleNamespace(time=lambda: ts))
+
+    intervals = {"monthly": {"step": "monthly", "steps": 2}}
+    path = str(tmp_path / "store")
+    writer, reader = (Timeseries(spark, type="count", intervals=intervals, path=path) for _ in "wr")
+    dec, jan, feb = at(2024, 12, 1), at(2025, 1, 1), at(2025, 2, 1)
+    read = lambda: reader.series("x", "monthly", start=dec, steps=3)
+    clock(at(2025, 1, 20))
+    writer.bulk_insert({dec: {"x": [1]}, jan: {"x": [2]}, feb: {"x": [4]}})
+    assert read() == {dec: 1.0, jan: 2.0, feb: 4.0}
+    clock(at(2025, 3, 1))
+    writer.insert("x", 8, timestamp=jan)
+    writer.insert("x", 16, timestamp=dec)  # past retention: not stored
+    assert read() == {dec: 1.0, jan: 10.0, feb: 4.0}
+    writer.expire()
+    assert read() == {dec: 0, jan: 10.0, feb: 4.0}
+
+
+def test_held_relations_are_per_session(spark, tmp_path):
+    # two sessions hold their own relations of one path, and a write
+    # through either session drops the path's entries in both
+    intervals = {"minute": {"step": 60}}
+    path = str(tmp_path / "store")
+    t = Timeseries(spark, type="count", intervals=intervals, path=path)
+    t.insert("web", 1, timestamp=BASE)
+    other = spark.newSession()
+    u = Timeseries(other, type="count", intervals=intervals, path=path)
+    held_t, held_u = t.scan(), u.scan()
+    assert t.scan() is held_t and u.scan() is held_u and held_u is not held_t
+    assert held_u.sparkSession is other
+    t.insert("web", 2, timestamp=BASE)
+    assert u.scan() is not held_u
+    assert u.get("web", "minute", timestamp=BASE) == {BASE: 3.0}
+
+
+def test_tbl_is_resolved_once_per_file_version(spark, tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kairos_spark.queries import _tbl
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["a", "b"]}), path)
+    first = _tbl(spark, str(tmp_path), "region")
+    assert _tbl(spark, str(tmp_path), "region") is first
+    st = path.stat()
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    fresh = _tbl(spark, str(tmp_path), "region")
+    assert fresh is not first and _tbl(spark, str(tmp_path), "region") is fresh
+    assert sorted(map(tuple, fresh.collect())) == [(0, "a"), (1, "b")]
+
+
+def test_unstattable_path_is_resolved_every_call(spark, tmp_path):
+    from kairos_spark.sources.tables import resolved
+
+    calls = []
+
+    def resolve():
+        calls.append(1)
+        return len(calls)
+
+    assert [resolved(spark, str(tmp_path / "missing"), "x", resolve) for _ in range(2)] == [1, 2]
+    assert [resolved(spark, str(tmp_path), "x", resolve) for _ in range(2)] == [3, 3]
+
+
+def test_held_relations_survive_concurrent_reads_and_writes(tmp_path):
+    # readers and writers of two paths on more threads than cores: no
+    # lookup fails, and once the writes stop each path holds one entry
+    # (resolved again if a forget came last)
+    import sys
+    import threading
+
+    from kairos_spark.sources.tables import forget, resolved
+
+    session = type("Session", (), {})()  # stands in for a SparkSession
+    paths = [str(tmp_path / p) for p in "ab"]
+    for p in paths:
+        (tmp_path / p).mkdir()
+    errors, made = [], []
+
+    def work(k):
+        try:
+            for i in range(300):
+                p = paths[(k + i) % 2]
+                if (k + i) % 7 == 0:
+                    forget(p)
+                else:
+                    resolved(session, p, "x", lambda: made.append(p) or len(made))
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(k,)) for k in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads) and errors == []
+    held = [resolved(session, p, "x", lambda: -1) for p in paths]
+    assert [resolved(session, p, "x", lambda: -2) for p in paths] == held

@@ -1021,15 +1021,8 @@ def grid(spark):
     return stores
 
 
-# the engine's collapse of a coarse gauge keeps the range's last write
-# even when it is falsy; the name join and the driver-side fold drop it
-KNOWN_DIVERGENCE = {("gauge", "collapse", "two_names"): pytest.mark.xfail(
-    strict=True, reason="engine collapse of a coarse gauge does not drop falsy writes")}
-
-
 @pytest.mark.parametrize("type_,mode,names", [
-    pytest.param(type_, mode, names, id=f"{type_}-{mode}-{tag}",
-                 marks=KNOWN_DIVERGENCE.get((type_, mode, tag), ()))
+    pytest.param(type_, mode, names, id=f"{type_}-{mode}-{tag}")
     for type_ in sorted(SUPPORTED_TRANSFORMS)
     for mode in sorted(GRID_MODES)
     for tag, names in (("one_name", "a"), ("two_names", ["a", "b"]))
@@ -1052,3 +1045,122 @@ def test_get_is_a_one_bucket_series(grid, type_, mode, names):
                 assert got == next(iter(series.values()), {})
             else:
                 assert got == (series or t.series(names, interval, start=ts, steps=1, collapse=True))
+
+
+def test_coarse_gauge_collapse_keeps_the_last_real_value(spark):
+    # a collapsed coarse range folds its buckets as condense folds slots:
+    # the last write per bucket and name, falsy ones dropped, then the
+    # last bucket wins; the range's last write (0) does not shadow 3
+    t = make_ts(spark, "gauge")
+    t.insert("a", 3, timestamp=_time(0))
+    t.insert("a", 0, timestamp=_time(60))
+    same = lambda row: row
+    for names in ("a", ["a", "b"]):
+        got = t.series(names, "minute", start=_time(0), steps=2, collapse=True)
+        assert got == {_time(0): 3.0}
+        assert t.series(names, "minute", start=_time(0), steps=2, collapse=True, process_row=same) == got
+
+
+# -------------------------------------- parquet reads: held relations
+
+
+def _explained(df) -> str:
+    """``df``'s physical plan as ``explain()`` prints it."""
+    import contextlib
+    import io
+
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        df.explain()
+    return out.getvalue()
+
+
+# one bulk_insert: one append, so one file per interval
+SPLIT_WRITES = {
+    _time(at): {"a": [float(v)], "b": [float(v + 1)]}
+    for at, v in ((0, 1), (30, 0), (70, 3), (130, 4), (HOUR + 5, 2))
+}
+# a read of each aggregate form: fine, condensed, coarse, collapsed
+SPLIT_READS = {
+    "fine": lambda t: t.get(["a", "b"], "hour", timestamp=_time(0)),
+    "condense": lambda t: t.series(["a", "b"], "hour", start=_time(0), steps=2, condense=True),
+    "coarse": lambda t: t.series("a", "minute", start=_time(0), steps=3),
+    "collapse": lambda t: t.series(["a", "b"], "minute", start=_time(0), steps=3, collapse=True),
+}
+
+
+@pytest.mark.parametrize("type_", sorted(SUPPORTED_TRANSFORMS))
+def test_one_split_parquet_read_is_one_task(spark, tmp_path, type_):
+    # an interval stored as one file is one input split: the scan is
+    # coalesced to one partition, so every aggregate form of every type
+    # (the two-stage set, histogram and gauge ones too) needs no exchange
+    # and a read is one job of one task, reading as the memory store does
+    disk = Timeseries(spark, type=type_, intervals=INTERVALS, path=str(tmp_path / "store"))
+    mem = make_ts(spark, type_)
+    for t in (disk, mem):
+        t.bulk_insert(SPLIT_WRITES)
+    for shape, read in SPLIT_READS.items():
+        tag, got = f"one_split_{type_}_{shape}", []
+        assert jobs(spark, tag, lambda: got.append(read(disk))) == 1
+        assert tasks(spark, tag) == 1
+        assert got == [read(mem)]
+    df = disk.series_df(["a", "b"], "hour", start=_time(0), steps=2, condense=True)
+    assert "Exchange" not in _explained(df)
+
+
+def test_interval_of_two_files_keeps_the_exchange(spark, tmp_path):
+    # two inserts store two files in the interval, two input splits: the
+    # read keeps its shuffle; compacting the store to one file per
+    # interval makes the next read one task
+    from kairos_spark.sources.tables import compact_long_table
+
+    path = tmp_path / "store"
+    disk = Timeseries(spark, type="histogram", intervals=INTERVALS, path=str(path))
+    mem = make_ts(spark, "histogram")
+    for t in (disk, mem):
+        t.insert("a", 1, timestamp=_time(0))
+        t.insert("a", 2, timestamp=_time(30))
+    assert len(list(path.glob("interval=hour/*.parquet"))) == 2
+    read = lambda t: t.series("a", "hour", start=_time(0), steps=1, condense=True)
+    df = disk.series_df("a", "hour", start=_time(0), steps=1, condense=True)
+    assert "Exchange" in _explained(df)
+    got = []
+    jobs(spark, "two_files", lambda: got.append(read(disk)))
+    assert tasks(spark, "two_files") > 1
+    assert got == [read(mem)] == [{_time(0): {1.0: 1, 2.0: 1}}]
+
+    compact_long_table(spark, str(path))
+    assert len(list(path.glob("interval=hour/*.parquet"))) == 1
+    got = []
+    assert jobs(spark, "compacted", lambda: got.append(read(disk))) == 1
+    assert tasks(spark, "compacted") == 1
+    assert got == [read(mem)]
+
+
+def test_held_relations_follow_every_write(spark, tmp_path):
+    # a read holds its relation per path; whatever writes the path next
+    # (another store object, a writer outside the library, a delete),
+    # the next read through any store object on it sees the new rows
+    import shutil
+
+    from kairos_spark.ingest import COARSE_SENTINEL
+    from kairos_spark.timeseries import long_schema
+
+    path = str(tmp_path / "store")
+    a, b = (Timeseries(spark, type="count", intervals=INTERVALS, path=path) for _ in "ab")
+    read = lambda t: t.get("x", "minute", timestamp=_time(0))
+    a.insert("x", 1, timestamp=_time(0))
+    assert read(a) == read(b) == {_time(0): 1.0}
+    assert a.scan("minute") is b.scan("minute")
+
+    shutil.rmtree(path)
+    b.insert("x", 5, timestamp=_time(0))
+    assert read(a) == {_time(0): 5.0}
+
+    row = ("x", "minute", int(_time(0)), COARSE_SENTINEL, 0, 2.0)
+    outside = spark.createDataFrame([row], long_schema())
+    outside.write.mode("append").partitionBy("interval").parquet(path)
+    assert read(a) == read(b) == {_time(0): 7.0}
+
+    b.delete("x")
+    assert read(a) == {_time(0): 0}

@@ -37,6 +37,13 @@ comment-only, import and <= 3-character lines (``),``, closing quotes)
 are skipped, so a copy re-indented or re-wrapped around a comment is
 still a copy. A repeated stage belongs in one builder: a private helper
 in its operator module, or an oracle-stage builder in ``queries.py``.
+
+A fourth rule keeps relation resolution in one home: a ``.read``
+attribute (``spark.read``, ``self.spark.read``) appears under
+``kairos_spark/`` only in ``READ_HOME``, whose ``resolved`` holds each
+relation once per session, so no new path lists files and infers a
+schema again on every call. Comments, strings and ``.read(...)`` calls
+(a file handle's) do not count.
 """
 
 from __future__ import annotations
@@ -76,6 +83,8 @@ LITERAL = re.compile(r"([rRfFbBuU]*)('''|\"\"\"|'|\")(.*)\2\Z", re.S)
 # the repeated-block rule (see the module docstring)
 BLOCK_LINES = 8
 BLOCK_COPIES = 3
+# the one module allowed a session's .read (see the module docstring)
+READ_HOME = "kairos_spark/sources/tables.py"
 
 
 def call_extent(text: str, start: int) -> str:
@@ -168,11 +177,32 @@ def repeated_blocks(sources: dict[str, str]) -> list[tuple[int, list[tuple[str, 
     return sorted(blocks, key=lambda block: block[1])
 
 
+def stray_reads(sources: dict[str, str]) -> list[tuple[str, int]]:
+    """(name, line) of each ``.read`` attribute in `sources` ({name:
+    text}) outside READ_HOME; a call ``.read(...)`` is not one."""
+    skip = {tokenize.NL, tokenize.NEWLINE, tokenize.COMMENT, tokenize.INDENT, tokenize.DEDENT}
+    out = []
+    for name, text in sources.items():
+        if name == READ_HOME:
+            continue
+        toks = [t for t in tokenize.generate_tokens(io.StringIO(text).readline) if t.type not in skip]
+        for dot, attr, after in zip(toks, toks[1:], toks[2:]):
+            if dot.string == "." and attr.type == tokenize.NAME and attr.string == "read" and after.string != "(":
+                out.append((name, attr.start[0]))
+    return out
+
+
 def main() -> int:
     sources = {
         str(path.relative_to(ROOT.parent)): path.read_text()
         for path in sorted(ROOT.rglob("*.py"))
     }
+    reads = stray_reads(sources)
+    if reads:
+        print(f"round_lint: a session's .read outside {READ_HOME} (resolve the "
+              "relation through its held-relation registry instead):")
+        for name, line in reads:
+            print(f"  {name}:{line}")
     blocks = repeated_blocks(sources)
     if blocks:
         print(f"round_lint: blocks of >= {BLOCK_LINES} code lines repeated "
@@ -229,12 +259,12 @@ def main() -> int:
               "'exempt' comment with the reason within 6 lines above):")
         for f in findings:
             print(" ", f)
-    if findings or mirrors or blocks:
+    if findings or mirrors or blocks or reads:
         return 1
     print("round_lint: clean — every F.round(F.avg|F.sum) site is "
           "scale<6, DECIMAL-routed, or carries an exempt annotation, "
-          "every oracle calls the kairos_spark.exact SQL builders, and "
-          "no code block is repeated")
+          "every oracle calls the kairos_spark.exact SQL builders, "
+          f"no code block is repeated, and only {READ_HOME} reads")
     return 0
 
 
